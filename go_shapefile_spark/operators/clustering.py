@@ -147,11 +147,9 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
     harness passes a named one-shot slot so reruns recycle.
     """
     from .graph import connected_components
-    from .pinning import fresh_pins
+    from .pinning import fresh_pins, pin_ctes
 
     spark = points.sparkSession
-    pts_v = "dbscan_pts_in"
-    points.selectExpr("id", "lon", "lat").createOrReplaceTempView(pts_v)
     pinf = fresh_pins(spark, slot, strategy=pin)
 
     # r6 optimization: generate each unordered candidate pair ONCE —
@@ -163,56 +161,55 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
     # a cheap view: up ∪ mirror(up) ∪ self-pairs (one per point — the
     # (0,0) offset's p=q rows).  Identical row set to the template's.
     e = _eps_lit(eps)
-    gcells = pinf(spark.sql(f"""
-SELECT id, lon, lat,
-       CAST(FLOOR(lon / {e}) AS BIGINT) AS cx,
-       CAST(FLOOR(lat / {e}) AS BIGINT) AS cy
-FROM {pts_v}"""))
-    gcells.createOrReplaceTempView("dbscan_gcells")
     d2 = ("(p.lon - q.lon) * (p.lon - q.lon) "
           f"+ (p.lat - q.lat) * (p.lat - q.lat) <= {e} * {e}")
-    up = pinf(spark.sql(f"""
-SELECT p.id AS a, q.id AS b
-FROM dbscan_gcells p JOIN dbscan_gcells q
-  ON q.cx = p.cx AND q.cy = p.cy AND p.id < q.id
-WHERE {d2}
-UNION ALL
-SELECT LEAST(p.id, q.id) AS a, GREATEST(p.id, q.id) AS b
-FROM (SELECT g.id, g.lon, g.lat, g.cx + o.dx AS gx, g.cy + o.dy AS gy
-      FROM dbscan_gcells g
-      CROSS JOIN (SELECT * FROM (VALUES (0,1),(1,-1),(1,0),(1,1))
-                  AS t(dx, dy)) o) p
-JOIN dbscan_gcells q ON q.cx = p.gx AND q.cy = p.gy
-WHERE {d2}"""))
-    up.createOrReplaceTempView("dbscan_up")
-    spark.sql("SELECT a, b FROM dbscan_up "
-              "UNION ALL SELECT b AS a, a AS b FROM dbscan_up "
-              "UNION ALL SELECT id AS a, id AS b FROM dbscan_gcells") \
-        .createOrReplaceTempView("npairs")
-    pinf(spark.sql(f"SELECT a AS id FROM npairs GROUP BY a "
-                   f"HAVING COUNT(*) >= {int(min_pts)}")) \
-        .createOrReplaceTempView("cores")
-    core_edges = spark.sql(
-        "SELECT u.a AS src, u.b AS dst FROM dbscan_up u "
-        "JOIN cores ca ON u.a = ca.id JOIN cores cb ON u.b = cb.id")
+    npairs = """npairs AS (
+  SELECT a, b FROM up UNION ALL SELECT b AS a, a AS b FROM up
+  UNION ALL SELECT id AS a, id AS b FROM gcells)"""
+    core_edges, p = pin_ctes(spark, f"""
+WITH gcells AS (
+  SELECT id, lon, lat,
+         CAST(FLOOR(lon / {e}) AS BIGINT) AS cx,
+         CAST(FLOOR(lat / {e}) AS BIGINT) AS cy
+  FROM pts),
+up AS (
+  SELECT p.id AS a, q.id AS b
+  FROM gcells p JOIN gcells q
+    ON q.cx = p.cx AND q.cy = p.cy AND p.id < q.id
+  WHERE {d2}
+  UNION ALL
+  SELECT LEAST(p.id, q.id) AS a, GREATEST(p.id, q.id) AS b
+  FROM (SELECT g.id, g.lon, g.lat, g.cx + o.dx AS gx, g.cy + o.dy AS gy
+        FROM gcells g
+        CROSS JOIN (SELECT * FROM (VALUES (0,1),(1,-1),(1,0),(1,1))
+                    AS t(dx, dy)) o) p
+  JOIN gcells q ON q.cx = p.gx AND q.cy = p.gy
+  WHERE {d2}),
+{npairs},
+cores AS (
+  SELECT a AS id FROM npairs GROUP BY a HAVING COUNT(*) >= {int(min_pts)})
+SELECT u.a AS src, u.b AS dst FROM up u
+JOIN cores ca ON u.a = ca.id JOIN cores cb ON u.b = cb.id""",
+        ["gcells", "up", "cores"], pinf,
+        pts=points.selectExpr("id", "lon", "lat"))
     # up is distinct with a < b by construction, so the core-core edge
     # set is already normalized — CC can skip its dedup shuffle
     cc = connected_components(core_edges, pin=pin,
                               slot=None if slot is None else f"{slot}_cc",
                               assume_normalized=True)
-    cc.createOrReplaceTempView("dbscan_cc")
     # isolated cores never appear in an edge: they are their own
     # cluster.  core_labels pins (r6): the tail references it twice
     # (direct label + border join), and each reference would re-run the
-    # components operator's final label join-back chain
-    pinf(spark.sql(
-        "SELECT c.id, COALESCE(x.component, c.id) AS label "
-        "FROM cores c LEFT JOIN dbscan_cc x ON c.id = x.node")) \
-        .createOrReplaceTempView("core_labels")
-    # the tail only needs the point ids; reading the pinned cell
-    # relation instead of {pts} skips one more md5-geotag pass (r6)
-    return spark.sql(
-        "WITH " + dbscan_tail_sql(H.SPARK, pts="dbscan_gcells").lstrip())
+    # components operator's final label join-back chain.  The tail only
+    # needs the point ids; reading the pinned cell relation instead of
+    # the input points skips one more md5-geotag pass (r6)
+    return pin_ctes(spark, f"""
+WITH {npairs},
+core_labels AS (
+  SELECT c.id, COALESCE(x.component, c.id) AS label
+  FROM cores c LEFT JOIN cc x ON c.id = x.node),
+{dbscan_tail_sql(H.SPARK, pts="gcells").lstrip()}""",
+        ["core_labels"], pinf, **p, cc=cc)[0]
 
 
 # --- grid distance transform (multi-source BFS) ---------------------------
@@ -400,49 +397,56 @@ def grid_distance_transform(points: DataFrame, rounds: int = 8,
     unchanged.  A fixed round count means NO per-round driver action
     (no count(), no convergence collect).
     """
+    return _grid_minplus(
+        points, rounds, pin, slot, local_iterate, "dist",
+        [(-1, -1, 1), (-1, 0, 1), (-1, 1, 1), (0, -1, 1),
+         (0, 1, 1), (1, -1, 1), (1, 0, 1), (1, 1, 1)])
+
+
+def _grid_minplus(points: DataFrame, rounds: int, pin: str | None,
+                  slot: str | None, local_iterate: bool | None,
+                  out_col: str, offsets) -> DataFrame:
+    """Shared runner of the distance transform and the cost distance:
+    ``rounds`` min-plus rounds over the occupied grid with weighted
+    queen ``offsets`` ``(dx, dy, w)`` — driver-local when the grid is
+    bounded, else one lazy distributed plan over pinned relations."""
     from pyspark.sql import functions as F
 
-    from .pinning import fresh_pins
+    from .pinning import fresh_pins, pin_ctes
 
     spark = points.sparkSession
     pinf = fresh_pins(spark, slot, strategy=pin)
-    v = "dtx_pts_in"
-    points.selectExpr("lon", "lat",
-                      "CAST(is_src AS BIGINT) AS is_src") \
-        .createOrReplaceTempView(v)
-    cte = distance_transform_base_cte(H.SPARK, pts=v)
-    # split the chain: materialize dbase once, edges once
-    base_sql = cte[:cte.index("doffs AS (")].rstrip().rstrip(",")
-    base = pinf(spark.sql("WITH " + base_sql.lstrip() +
-                          "\nSELECT * FROM dbase"))
+    # materialize dbase once, edges once (both base templates share
+    # the dpx/dbase prefix)
+    base = pin_ctes(
+        spark, "WITH" + distance_transform_base_cte(H.SPARK), ["dbase"],
+        pinf, pts=points.selectExpr("lon", "lat",
+                                    "CAST(is_src AS BIGINT) AS is_src")
+    )[1]["dbase"]
     st = _grid_local_stats(base)
     if _grid_local_ok(st) if local_iterate is None else local_iterate:
         # bounded grid: run the identical recurrence on the driver
         # (see the section comment above) — the edge relation is never
-        # built, and the 8 shuffle rounds collapse into vectorized
-        # numpy passes
-        return _minplus_local_df(
-            spark, base, st,
-            [(-1, -1, 1), (-1, 0, 1), (-1, 1, 1), (0, -1, 1),
-             (0, 1, 1), (1, -1, 1), (1, 0, 1), (1, 1, 1)],
-            rounds, out_col="dist")
-    base.createOrReplaceTempView("dtx_base")
-    edges = pinf(spark.sql(f"""
-WITH doffs AS (SELECT * FROM (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),
-                                     (0,1),(1,-1),(1,0),(1,1)) AS t(dx, dy))
-SELECT b.x, b.y, n.x AS nx, n.y AS ny, CAST(1 AS BIGINT) AS w
-FROM dtx_base b CROSS JOIN doffs o
-JOIN dtx_base n ON n.x = b.x + o.dx AND n.y = b.y + o.dy
+        # built, and the shuffle rounds collapse into vectorized numpy
+        # passes
+        return _minplus_local_df(spark, base, st, offsets, rounds, out_col)
+    vals = ",".join(f"({dx},{dy},{w})" for dx, dy, w in offsets)
+    edges = pinf(pin_ctes(spark, f"""
+WITH doffs AS (SELECT * FROM (VALUES {vals}) AS t(dx, dy, w))
+SELECT b.x, b.y, n.x AS nx, n.y AS ny, CAST(o.w AS BIGINT) AS w
+FROM dbase b CROSS JOIN doffs o
+JOIN dbase n ON n.x = b.x + o.dx AND n.y = b.y + o.dy
 UNION ALL
-SELECT x, y, x AS nx, y AS ny, CAST(0 AS BIGINT) AS w FROM dtx_base"""))
+SELECT x, y, x AS nx, y AS ny, CAST(0 AS BIGINT) AS w FROM dbase""",
+                          [], dbase=base)[0])
 
     dist = base.where("is_src = 1") \
-        .selectExpr("x", "y", "CAST(0 AS BIGINT) AS dist")
+        .selectExpr("x", "y", f"CAST(0 AS BIGINT) AS {out_col}")
     for _ in range(int(rounds)):
         dist = (dist.join(edges, ["x", "y"])
                 .selectExpr("nx AS x", "ny AS y",
-                            "CAST(dist + w AS BIGINT) AS dist")
-                .groupBy("x", "y").agg(F.min("dist").alias("dist")))
+                            f"CAST({out_col} + w AS BIGINT) AS {out_col}")
+                .groupBy("x", "y").agg(F.min(out_col).alias(out_col)))
     return dist
 
 
@@ -500,31 +504,21 @@ def label_blobs(pixels: DataFrame, tau: int,
     upstream raster per reference.
     """
     from .graph import connected_components
-    from .pinning import fresh_pins
+    from .pinning import fresh_pins, pin_ctes
 
     spark = pixels.sparkSession
-    pinf = fresh_pins(spark, slot, strategy=pin)
-    v = "blob_pix_in"
-    pixels.selectExpr("x", "y", "CAST(v AS BIGINT) AS v") \
-        .createOrReplaceTempView(v)
-    hot = pinf(spark.sql(f"WITH {blob_base_cte(tau, pixels=v).lstrip()} "
-                         "SELECT * FROM bhot"))
-    hot.createOrReplaceTempView("blob_hot")
-    edges = spark.sql(
-        "SELECT a.pid AS src, b.pid AS dst FROM blob_hot a "
-        "JOIN blob_hot b ON b.x = a.x + 1 AND b.y = a.y "
-        "UNION ALL "
-        "SELECT a.pid AS src, b.pid AS dst FROM blob_hot a "
-        "JOIN blob_hot b ON b.x = a.x AND b.y = a.y + 1")
+    edges, p = pin_ctes(
+        spark, f"WITH {blob_base_cte(tau).lstrip()} "
+        "SELECT ea AS src, eb AS dst FROM bedges",
+        ["bhot"], fresh_pins(spark, slot, strategy=pin),
+        bpix=pixels.selectExpr("x", "y", "CAST(v AS BIGINT) AS v"))
     cc = connected_components(edges, pin=pin)
-    cc.createOrReplaceTempView("blob_cc")
     # isolated hot cells never enter an edge: they are their own region
-    spark.sql("SELECT h.pid, h.x, h.y, h.v, "
-              "COALESCE(c.component, h.pid) AS blob "
-              "FROM blob_hot h LEFT JOIN blob_cc c ON h.pid = c.node") \
-        .createOrReplaceTempView("blabels")
-    return spark.sql("WITH blabels AS (SELECT * FROM blabels) "
-                     + blob_tail_sql().lstrip())
+    return pin_ctes(spark, """
+WITH blabels AS (
+  SELECT h.pid, h.x, h.y, h.v, COALESCE(c.component, h.pid) AS blob
+  FROM bhot h LEFT JOIN cc c ON h.pid = c.node)""" + blob_tail_sql(),
+                    [], bhot=p["bhot"], cc=cc)[0]
 
 
 def blob_oracle_sql(tau: int, pixels_cte: str,
@@ -636,7 +630,7 @@ def grid_flow_accumulation(points: DataFrame, rounds: int = 8,
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from .pinning import fresh_pins
+    from .pinning import fresh_pins, pin_ctes
 
     spark = points.sparkSession
     pinf = fresh_pins(spark, slot, strategy=pin)
@@ -651,24 +645,25 @@ def grid_flow_accumulation(points: DataFrame, rounds: int = 8,
         # driver (see the bounded-grid section comment) — the dirs
         # relation is never built distributively
         return _flow_local_df(spark, grid, st, rounds, k)
-    grid.createOrReplaceTempView("fa_grid_v")
     # the neighbor coordinates are PRECOMPUTED in a subquery before
     # the b join: with `b.n > a.n` written directly against the
     # 3-relation join, Catalyst has an a–b join edge with only that
     # inequality and picks a quadratic BroadcastNestedLoopJoin (43M
     # rows, 68 s at sf0.1); staged, the only a–b edge is the clean
     # (bx, by) equi-join (~0.5 s)
-    dirs = pinf(spark.sql("""
-SELECT x, y, tx, ty FROM (
-  SELECT c.x AS x, c.y AS y, b.x AS tx, b.y AS ty,
-         ROW_NUMBER() OVER (PARTITION BY c.x, c.y
-                            ORDER BY b.n DESC, b.x, b.y) AS rk
-  FROM (SELECT a.x, a.y, a.n, a.x + o.dx AS bx, a.y + o.dy AS by
-        FROM fa_grid_v a
-        CROSS JOIN (SELECT * FROM (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),
-                           (0,1),(1,-1),(1,0),(1,1)) AS o(dx, dy)) o) c
-  JOIN fa_grid_v b ON b.x = c.bx AND b.y = c.by
-  WHERE b.n > c.n) r WHERE rk = 1"""))
+    dirs = pin_ctes(spark, """
+WITH dirs AS (
+  SELECT x, y, tx, ty FROM (
+    SELECT c.x AS x, c.y AS y, b.x AS tx, b.y AS ty,
+           ROW_NUMBER() OVER (PARTITION BY c.x, c.y
+                              ORDER BY b.n DESC, b.x, b.y) AS rk
+    FROM (SELECT a.x, a.y, a.n, a.x + o.dx AS bx, a.y + o.dy AS by
+          FROM grid a
+          CROSS JOIN (SELECT * FROM (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),
+                             (0,1),(1,-1),(1,0),(1,1)) AS o(dx, dy)) o) c
+    JOIN grid b ON b.x = c.bx AND b.y = c.by
+    WHERE b.n > c.n) r WHERE rk = 1)""", ["dirs"], pinf,
+                    grid=grid)[1]["dirs"]
 
     # Each round references the previous iterate exactly ONCE (the
     # inflow join), so the loop chains lazily without per-round pins —
@@ -757,47 +752,10 @@ def grid_cost_distance(points: DataFrame, rounds: int = 8,
     is the Bellman-Ford round, so after R rounds the result is the
     min over ≤R-edge paths — the oracle's definition, unchanged.
     Every relation is grid-bounded; no per-round driver action."""
-    from pyspark.sql import functions as F
-
-    from .pinning import fresh_pins
-
-    spark = points.sparkSession
-    pinf = fresh_pins(spark, slot, strategy=pin)
-    v = "cdx_pts_in"
-    points.selectExpr("lon", "lat",
-                      "CAST(is_src AS BIGINT) AS is_src") \
-        .createOrReplaceTempView(v)
-    cte = cost_distance_base_cte(H.SPARK, pts=v)
-    base_sql = cte[:cte.index("doffs AS (")].rstrip().rstrip(",")
-    base = pinf(spark.sql("WITH " + base_sql.lstrip() +
-                          "\nSELECT * FROM dbase"))
-    st = _grid_local_stats(base)
-    if _grid_local_ok(st) if local_iterate is None else local_iterate:
-        # chamfer 2-3 weights through the same bounded driver path
-        return _minplus_local_df(
-            spark, base, st,
-            [(-1, -1, 3), (-1, 0, 2), (-1, 1, 3), (0, -1, 2),
-             (0, 1, 2), (1, -1, 3), (1, 0, 2), (1, 1, 3)],
-            rounds, out_col="cost")
-    base.createOrReplaceTempView("cdx_base")
-    edges = pinf(spark.sql("""
-WITH doffs AS (SELECT * FROM (VALUES (-1,-1,3),(-1,0,2),(-1,1,3),(0,-1,2),
-                                     (0,1,2),(1,-1,3),(1,1,3),(1,0,2))
-               AS t(dx, dy, w))
-SELECT b.x, b.y, n.x AS nx, n.y AS ny, CAST(o.w AS BIGINT) AS w
-FROM cdx_base b CROSS JOIN doffs o
-JOIN cdx_base n ON n.x = b.x + o.dx AND n.y = b.y + o.dy
-UNION ALL
-SELECT x, y, x AS nx, y AS ny, CAST(0 AS BIGINT) AS w FROM cdx_base"""))
-
-    dist = base.where("is_src = 1") \
-        .selectExpr("x", "y", "CAST(0 AS BIGINT) AS cost")
-    for _ in range(int(rounds)):
-        dist = (dist.join(edges, ["x", "y"])
-                .selectExpr("nx AS x", "ny AS y",
-                            "CAST(cost + w AS BIGINT) AS cost")
-                .groupBy("x", "y").agg(F.min("cost").alias("cost")))
-    return dist
+    return _grid_minplus(
+        points, rounds, pin, slot, local_iterate, "cost",
+        [(-1, -1, 3), (-1, 0, 2), (-1, 1, 3), (0, -1, 2),
+         (0, 1, 2), (1, -1, 3), (1, 0, 2), (1, 1, 3)])
 
 
 def kmeans_lloyd(points: DataFrame, k: int = 8, rounds: int = 3,
@@ -823,17 +781,26 @@ def kmeans_lloyd(points: DataFrame, k: int = 8, rounds: int = 3,
     k-row centroid relation was referenced twice per round, which
     forced two checkpoint jobs per round to stop exponential
     re-evaluation; a ≤k-row collect is bounded at any input scale)."""
-    from .pinning import fresh_pins
+    from .pinning import fresh_pins, pin_ctes
 
     spark = points.sparkSession
-    pinf = fresh_pins(spark, slot, strategy=pin)
-    pts = pinf(points.selectExpr("id", "x", "y"))
-    pts.createOrReplaceTempView("km_pts_v")
-    cent = [(int(r.ck), int(r.x), int(r.y)) for r in spark.sql(f"""
+    pts = fresh_pins(spark, slot, strategy=pin)(
+        points.selectExpr("id", "x", "y"))
+
+    def km_sql(sql):
+        return pin_ctes(spark, sql, [], km_pts=pts)[0]
+
+    cent = [(int(r.ck), int(r.x), int(r.y)) for r in km_sql(f"""
+WITH seeds AS (
+  SELECT CAST(CONV(SUBSTRING(MD5(CAST(id AS STRING)), 1, 8), 16, 10)
+              AS BIGINT) AS h, id, x, y
+  FROM km_pts ORDER BY 1, 2 LIMIT {int(k)})
 SELECT ROW_NUMBER() OVER (ORDER BY h, id) AS ck, x, y
-FROM (SELECT CAST(CONV(SUBSTRING(MD5(CAST(id AS STRING)), 1, 8), 16, 10)
-             AS BIGINT) AS h, id, x, y
-      FROM km_pts_v ORDER BY 1, 2 LIMIT {int(k)}) seeds""").collect()]
+FROM seeds""").collect()]
+    if not cent:
+        # no points: no seeds, and an empty VALUES list does not parse
+        return spark.createDataFrame(
+            [], "ck INT, n BIGINT, cx BIGINT, cy BIGINT, inertia_e6 BIGINT")
 
     def cent_values(cs):
         return ", ".join(
@@ -850,7 +817,7 @@ FROM (SELECT CAST(CONV(SUBSTRING(MD5(CAST(id AS STRING)), 1, 8), 16, 10)
   SELECT p.id, p.x, p.y,
          MIN(STRUCT((p.x - c.x) * (p.x - c.x)
                     + (p.y - c.y) * (p.y - c.y) AS d2, c.ck AS ck)) AS m
-  FROM km_pts_v p
+  FROM km_pts p
   CROSS JOIN (SELECT * FROM (VALUES {cent_values(cs)})
               AS t(ck, x, y)) c
   GROUP BY p.id, p.x, p.y"""
@@ -858,11 +825,12 @@ FROM (SELECT CAST(CONV(SUBSTRING(MD5(CAST(id AS STRING)), 1, 8), 16, 10)
     assign_cent = cent
     for _ in range(int(rounds)):
         assign_cent = cent
-        sums = {int(r.ck): r for r in spark.sql(f"""
+        sums = {int(r.ck): r for r in km_sql(f"""
+WITH a AS ({argmin_sql(cent)})
 SELECT a.m.ck AS ck,
        CAST(SUM(a.x) AS BIGINT) AS sx, CAST(SUM(a.y) AS BIGINT) AS sy,
        CAST(COUNT(*) AS BIGINT) AS n
-FROM ({argmin_sql(cent)}) a
+FROM a
 GROUP BY a.m.ck""").collect()}
         cent = [(ck,
                  int(sums[ck].sx) // int(sums[ck].n) if ck in sums else x,
@@ -871,13 +839,14 @@ GROUP BY a.m.ck""").collect()}
     # final rollup: assignment against the centroids that ENTERED the
     # last round (the template's km_picked_v), centroid coords from
     # the post-update set (its km_cent_v) — same relations, one job
-    return spark.sql(f"""
+    return km_sql(f"""
+WITH a AS ({argmin_sql(assign_cent)})
 SELECT a.m.ck AS ck,
        CAST(COUNT(*) AS BIGINT) AS n,
        CAST(MIN(c2.x) AS BIGINT) AS cx,
        CAST(MIN(c2.y) AS BIGINT) AS cy,
        CAST(SUM(a.m.d2 DIV 1000000) AS BIGINT) AS inertia_e6
-FROM ({argmin_sql(assign_cent)}) a
+FROM a
 JOIN (SELECT * FROM (VALUES {cent_values(cent)}) AS t(ck, x, y)) c2
   ON c2.ck = a.m.ck
 GROUP BY a.m.ck""")

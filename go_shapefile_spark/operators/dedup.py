@@ -71,19 +71,6 @@ def stop_shingle_filter_cte(rel: str, max_doc_freq: float,
 )"""
 
 
-def minhash_mh_sql(num_hashes: int = 8) -> str:
-    """The signature aggregation alone (over a ``shingles`` relation) —
-    exposed so the Spark runner can materialize it once: the full query
-    references ``mh`` once per band and Spark inlines CTEs, so without
-    a cache the 1M+-row aggregation re-runs per band.  (Dialect-free:
-    ``minhash_expr`` is plain integer arithmetic in both engines.)"""
-    mins = ",\n  ".join(
-        f"{H.minhash_expr('x', j, num_hashes)} AS m{j}"
-        for j in range(num_hashes))
-    return f"SELECT doc_id, COUNT(*) AS n,\n  {mins}\n" \
-           f"FROM shingles GROUP BY doc_id"
-
-
 def minhash_lsh_sql(dialect: str, rel: str = "documents", k: int = 9,
                     num_hashes: int = 8, bands: int = 4,
                     threshold: float = 0.5,
@@ -116,13 +103,15 @@ def minhash_lsh_sql(dialect: str, rel: str = "documents", k: int = 9,
         stop = f""",
 {stop_shingle_filter_cte(rel, max_doc_freq, "shingles", "x",
                          "shingles_kept")}"""
-        mh_body = minhash_mh_sql(num_hashes).replace(
-            "FROM shingles", "FROM shingles_kept")
         verify_rel = "shingles_kept"
     else:
         stop = ""
-        mh_body = minhash_mh_sql(num_hashes)
         verify_rel = "shingles"
+    # signature aggregation (dialect-free integer arithmetic); the Spark
+    # runner pins ``mh``, which the bands reference once each
+    mins = ",\n  ".join(
+        f"{H.minhash_expr('x', j, num_hashes)} AS m{j}"
+        for j in range(num_hashes))
     if dialect == H.SPARK:
         # Spark-only verify spelling (the oracle text must stay stable,
         # so DuckDB keeps the plain joins): semi-filter each shingle
@@ -155,7 +144,9 @@ def minhash_lsh_sql(dialect: str, rel: str = "documents", k: int = 9,
     return f"""
 WITH {shingle_cte(dialect, rel, k)}{stop},
 mh AS (
-{mh_body}
+SELECT doc_id, COUNT(*) AS n,
+  {mins}
+FROM {verify_rel} GROUP BY doc_id
 ),
 band_keys AS (
 {bands_sql}

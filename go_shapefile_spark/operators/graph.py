@@ -133,11 +133,11 @@ def _local_components(edges: DataFrame) -> DataFrame:
     node_t = edges.schema["src"].dataType
     schema = T.StructType([T.StructField("node", node_t, True),
                            T.StructField("component", node_t, True)])
-    pdf = edges.toPandas()
+    pdf = edges.select("src", "dst").toPandas()
     if len(pdf) == 0:
         return edges.sparkSession.createDataFrame([], schema)
-    sa = pdf.iloc[:, 0].to_numpy()
-    sb = pdf.iloc[:, 1].to_numpy()
+    sa = pdf["src"].to_numpy()
+    sb = pdf["dst"].to_numpy()
     nodes, idx = np.unique(np.concatenate([sa, sb]), return_inverse=True)
     roots = _np_min_hook(idx[:len(sa)], idx[len(sa):], len(nodes))
     out = pd.DataFrame({"node": nodes, "component": nodes[roots]})

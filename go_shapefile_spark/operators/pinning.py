@@ -40,12 +40,22 @@ releases the PREVIOUS call's blocks/files for that slot — without this,
 every gate/bench invocation pins fresh blocks forever (measured round
 4: +2 persistent RDDs per call; ContextCleaner never reclaims them
 while the session lives).
+
+:func:`pin_ctes` is the one way to pin CTEs of a SQL template: it
+parses the template's top-level ``WITH`` list, pins the named CTEs in
+order through a caller's :func:`fresh_pins` factory and re-points each
+pinned CTE's BODY at the materialized relation, so no reference in the
+template is ever rewritten.  DataFrame inputs bind the same way, as
+leading CTEs; both go through ``spark.sql``'s DataFrame arguments, whose
+generated view names are unique per call and dropped once the query is
+analyzed (no session-global temp-view names).
 """
 
 from __future__ import annotations
 
 import os
 import posixpath
+import re
 import tempfile
 from typing import Callable
 
@@ -210,3 +220,87 @@ def release_pins(spark: SparkSession, slot: str | None = None) -> None:
                 release()
             except Exception:
                 pass
+
+
+_SPACE = re.compile(r"(?:\s+|--[^\n]*|/\*.*?\*/)*", re.S)
+_TOKEN = re.compile(r"'(?:\\.|[^'\\])*'|\"(?:\\.|[^\"\\])*\"|`[^`]*`"
+                    r"|--[^\n]*|/\*.*?\*/|[()]", re.S)
+_HEAD = re.compile(r"(\w+)\s+AS\s*\(", re.I)
+
+
+def _with_list(sql: str) -> tuple[list[tuple[str, str]], str]:
+    """Split ``WITH a AS (...), b AS (...) <query>`` into its CTEs
+    ``(name, body)`` and the trailing query text.  Parentheses match
+    outside quoted literals (Spark backslash escapes) and comments."""
+    m = re.compile(r"WITH\b", re.I).match(sql, _SPACE.match(sql).end())
+    if m is None:
+        raise ValueError("SQL does not start with a WITH list")
+    ctes, i = [], m.end()
+    while True:
+        head = _HEAD.match(sql, _SPACE.match(sql, i).end())
+        if head is None:
+            raise ValueError(f"expected 'name AS (' at offset {i}")
+        depth, close = 0, None
+        for tok in _TOKEN.finditer(sql, head.end() - 1):
+            depth += {"(": 1, ")": -1}.get(tok.group(), 0)
+            if depth == 0:
+                close = tok.start()
+                break
+        if close is None:
+            raise ValueError(f"unbalanced parentheses in CTE {head[1]}")
+        ctes.append((head[1], sql[head.end():close]))
+        i = _SPACE.match(sql, close + 1).end()
+        if not sql.startswith(",", i):
+            return ctes, sql[close + 1:]
+        i += 1
+
+
+def pin_ctes(spark: SparkSession, sql: str, names: list[str],
+             pin: Callable[[DataFrame], DataFrame] | None = None,
+             **inputs: DataFrame
+             ) -> tuple[DataFrame | None, dict[str, DataFrame]]:
+    """Run ``sql`` (a ``WITH`` list and a final query) with the CTEs in
+    ``names`` materialized once each, in order, through ``pin`` (a
+    :func:`fresh_pins` factory).
+
+    Spark inlines a CTE at every reference.  A pinned CTE keeps its
+    name but its body becomes ``SELECT * FROM <pinned relation>``, so
+    every reference, later pinned CTEs included, reads one plan leaf.
+    Each pin runs the WITH list only up to its own CTE.  ``inputs``
+    bind DataFrames as leading CTEs under their keyword names.
+
+    Returns ``(final, pinned)``: the final query's DataFrame (``None``
+    for a bare WITH list, so a caller that needs only the pinned
+    relations pays no analysis for a query it never runs) and the
+    pinned DataFrames by CTE name."""
+    ctes, tail = _with_list(sql)
+    order = [name for name, _ in ctes]
+    missing = [name for name in names if name not in order]
+    if missing:
+        raise ValueError(f"no CTE named {missing} in WITH list {order}")
+    pinned: dict[str, DataFrame] = {}
+
+    def run(upto: int, query: str) -> DataFrame:
+        defs = [(n, ["SELECT * FROM ", df]) for n, df in inputs.items()]
+        defs += [(n, ["SELECT * FROM ", pinned[n]] if n in pinned else [b])
+                 for n, b in ctes[:upto]]
+        parts: list = []
+        for k, (name, body) in enumerate(defs):
+            parts += [("WITH " if k == 0 else ",\n") + f"{name} AS (",
+                      *body, ")"]
+        parts.append(query)
+        frames = {f"p{k}": p for k, p in enumerate(parts)
+                  if isinstance(p, DataFrame)}
+        if not frames:
+            return spark.sql("".join(parts))
+        # DataFrame arguments bind through generated per-call views
+        return spark.sql("".join(
+            "{p%d}" % k if isinstance(p, DataFrame)
+            else p.replace("{", "{{").replace("}", "}}")
+            for k, p in enumerate(parts)), **frames)
+
+    for name in names:
+        pinned[name] = pin(run(order.index(name) + 1,
+                               f"\nSELECT * FROM {name}"))
+    has_query = _SPACE.match(tail).end() < len(tail)
+    return (run(len(ctes), tail) if has_query else None), pinned

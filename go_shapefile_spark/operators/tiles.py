@@ -212,12 +212,11 @@ def heatmap(points: DataFrame, ppd: int = 1, lon_col: str = "lon",
             lat_col: str = "lat") -> DataFrame:
     """DataFrame wrapper over :func:`heatmap_body` — KDE-style heatmap
     raster of a point table, one shuffle, no Python nodes."""
-    spark = points.sparkSession
-    points.selectExpr(f"{lon_col} AS lon", f"{lat_col} AS lat") \
-        .createOrReplaceTempView("heatmap_pts_in")
-    return spark.sql(
-        "WITH " + heatmap_body("spark", pts="heatmap_pts_in", ppd=ppd)
-        .lstrip())
+    from .pinning import pin_ctes
+
+    return pin_ctes(
+        points.sparkSession, "WITH" + heatmap_body("spark", ppd=ppd), [],
+        pts=points.selectExpr(f"{lon_col} AS lon", f"{lat_col} AS lat"))[0]
 
 
 def parent_cell_sql(cell: str) -> str:

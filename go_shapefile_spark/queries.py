@@ -35,6 +35,7 @@ _REGISTERED: dict[int, str] = {}  # id(session) -> sf_dir last registered
 # executor-local strategy; a multi-hour cluster run sets
 # SPARK_GRAFT_PIN=storage / spark.graft.pin.strategy for durable pins.
 from .operators.pinning import fresh_pins as _fresh_checkpoints  # noqa: E402
+from .operators.pinning import pin_ctes  # noqa: E402
 
 
 def register_tables(spark: SparkSession, sf_dir: str) -> None:
@@ -512,9 +513,17 @@ GROUP BY cu.cohort_day, ce.day_num - cu.cohort_day
 # precedent).  Per-node triangle participation via a 3-corner
 # union; all-integer.
 def q_triangles(dialect: str, res: int = 5) -> str:
-    w = "PARTITION BY user_id ORDER BY ts, id"
     return f"""
-WITH tg_pts AS (
+WITH {_triangle_edges_ctes(dialect, res)},
+{triangle_count_sql('tg_e', dialect)}
+"""
+
+
+def _triangle_edges_ctes(dialect: str, res: int = 5) -> str:
+    """The undirected-distinct transition edge relation ``tg_e(a, b)``
+    of :func:`q_triangles` (consecutive per-user res-``res`` cells)."""
+    w = "PARTITION BY user_id ORDER BY ts, id"
+    return f"""tg_pts AS (
   SELECT event_id AS id, user_id, ts,
      {GT.lon_sql('event_id', dialect)} AS lon,
      {GT.lat_sql('event_id', dialect)} AS lat
@@ -527,15 +536,17 @@ tg_tr AS (
   FROM tg_seq),
 tg_e AS (
   SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-  FROM tg_tr WHERE src IS NOT NULL AND src <> dst),
-{triangle_count_sql('tg_e')}
-"""
+  FROM tg_tr WHERE src IS NOT NULL AND src <> dst)"""
 
 
-def triangle_count_sql(edges_rel: str) -> str:
+def triangle_count_sql(edges_rel: str, dialect: str) -> str:
     """Counting core over an undirected-distinct edge relation (a, b)
-    with a < b: orient by (degree, node), wedge join, close.  Dialect
-    -free (both engines accept this subset).
+    with a < b: orient by (degree, node), wedge join, close.
+
+    Only the corner spelling differs by dialect: Spark explodes
+    ``array(u, v, w)`` in one pass, because the 3-branch UNION inlines
+    ``tg_tri`` (the dominant wedge join) once per corner; the multiset
+    is the same.
 
     The REPARTITION hint on tg_oe is load-bearing: tg_ord's global
     ROW_NUMBER leaves the oriented-edge relation single-partition, and
@@ -543,6 +554,10 @@ def triangle_count_sql(edges_rel: str) -> str:
     sf0.1's dense res-5 graph) inherits that ONE partition and runs on
     one core (~220 s); hinted it fans across the cluster (~6 s).
     DuckDB reads the hint as a comment (the /*+ MERGE */ precedent)."""
+    corners = ("(SELECT explode(array(u, v, w)) AS node FROM tg_tri)"
+               if dialect == SPARK else """(SELECT u AS node FROM tg_tri
+      UNION ALL SELECT v AS node FROM tg_tri
+      UNION ALL SELECT w AS node FROM tg_tri)""")
     return f"""tg_deg AS (
   SELECT node, CAST(COUNT(*) AS BIGINT) AS deg
   FROM (SELECT a AS node FROM {edges_rel}
@@ -565,9 +580,7 @@ tg_tri AS (
   JOIN tg_oe e2 ON e2.u = e1.u AND e2.rk_v > e1.rk_v
   JOIN tg_oe e3 ON e3.u = e1.v AND e3.v = e2.v)
 SELECT node, CAST(COUNT(*) AS BIGINT) AS n_tri
-FROM (SELECT u AS node FROM tg_tri
-      UNION ALL SELECT v AS node FROM tg_tri
-      UNION ALL SELECT w AS node FROM tg_tri) corners
+FROM {corners} corners
 GROUP BY node"""
 
 
@@ -1488,11 +1501,10 @@ def asof_join_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.temporal import asof_join
 
     register_tables(spark, sf_dir)
-    spark.sql(f"WITH {_asof_events_ctes(SPARK)} SELECT * FROM probe") \
-        .createOrReplaceTempView("asof_probe")
-    spark.sql(f"WITH {_asof_events_ctes(SPARK)} SELECT * FROM dim") \
-        .createOrReplaceTempView("asof_dim")
-    out = asof_join(spark.table("asof_probe"), spark.table("asof_dim"),
+    out = asof_join(spark.sql(f"WITH {_asof_events_ctes(SPARK)} "
+                              "SELECT * FROM probe"),
+                    spark.sql(f"WITH {_asof_events_ctes(SPARK)} "
+                              "SELECT * FROM dim"),
                     on=["user_id"], ts_col="ts_s", value_col="rate",
                     out_col="asof_rate", tiebreak_col="event_id")
     return out.select("event_id", "user_id", "ts_s",
@@ -3305,19 +3317,14 @@ def areal_interpolation_spark(spark: SparkSession,
     proportional to clipped area.  Geometry is the proven clip kernel
     (oracle pins the same driver-twin areas); the transfer math is
     dual-engine SQL."""
-    import uuid
-
     from .operators.vector_tiles import vector_tiles
     from .sources.shapefile import read_shapefile_df
 
     df = read_shapefile_df(
         spark, os.path.join(REF_TESTDATA, "110m-admin-0-countries.zip"))
-    view = f"areal_tiles_{uuid.uuid4().hex[:8]}"
-    vector_tiles(df, res=4).select("fid", "cell", "area") \
-        .createOrReplaceTempView(view)
-    return spark.sql(
-        f"WITH tiles AS (SELECT fid, cell, area FROM {view}),"
-        f"{_areal_interp_tail()}")
+    return pin_ctes(
+        spark, "WITH" + _areal_interp_tail(), [],
+        tiles=vector_tiles(df, res=4).select("fid", "cell", "area"))[0]
 
 
 def q_areal_interpolation_oracle() -> str:
@@ -3857,11 +3864,7 @@ def build_registry():
         # subtree inlined per band), so pin the signatures as a
         # LogicalRDD leaf that cannot recompute.
         pin = _fresh_checkpoints(spark, "simhash_pairs")
-        sig = pin(spark.sql(D.simhash_sql(SPARK)))
-        sig.createOrReplaceTempView("sig")
-        body = D.simhash_pairs_sql(SPARK)
-        body = body[body.index("band_keys AS ("):]  # drop "WITH sig AS (...),"
-        return spark.sql("WITH " + body)
+        return pin_ctes(spark, D.simhash_pairs_sql(SPARK), ["sig"], pin)[0]
     queries["simhash_pairs"] = simhash_pairs_cached
 
     def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3905,12 +3908,8 @@ FROM reach GROUP BY src
         # shingle subtree is referenced by sizes + both sides of the
         # intersection self-join (4 inlined copies otherwise)
         pin = _fresh_checkpoints(spark, "ngram_jaccard_pairs")
-        full = D.ngram_jaccard_sql(SPARK)
-        head = full[:full.index("sizes AS (")].rstrip()
-        assert head.endswith(",")
-        pin(spark.sql(head[:-1] + "\nSELECT * FROM shingles")) \
-            .createOrReplaceTempView("shingles")
-        return spark.sql("WITH " + full[full.index("sizes AS ("):])
+        return pin_ctes(spark, D.ngram_jaccard_sql(SPARK), ["shingles"],
+                        pin)[0]
     queries["ngram_jaccard_pairs"] = ngram_jaccard_cached
 
     def embedding_neardup_bucketed_cached(spark: SparkSession,
@@ -3922,20 +3921,13 @@ FROM reach GROUP BY src
         # CacheManager failure as minhash_cached — cache() silently
         # does not substitute into the self-joined composition)
         pin = _fresh_checkpoints(spark, "embedding_neardup_bucketed")
-        full = SIM.embedding_neardup_bucketed_sql(SPARK, threshold=0.25)
-        head = full[:full.index("cands AS (")].rstrip()
-        assert head.endswith(",")
-        pin(spark.sql(head[:-1] + "\nSELECT * FROM buckets")) \
-            .createOrReplaceTempView("buckets")
-        return spark.sql("WITH " + full[full.index("cands AS ("):])
+        return pin_ctes(
+            spark, SIM.embedding_neardup_bucketed_sql(SPARK, threshold=0.25),
+            ["buckets"], pin)[0]
     queries["embedding_neardup_bucketed"] = embedding_neardup_bucketed_cached
 
     def minhash_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_tables(spark, sf_dir)
-        # the documents table is a single parquet file at small SFs —
-        # spread the shingle/md5 chain across tasks before exploding
-        spark.table("documents").repartition(32) \
-            .createOrReplaceTempView("documents_rep")
         # localCheckpoint, NOT cache(): in this composed query (band
         # union over mh over shingles, then a self-join, then two more
         # shingle joins) CacheManager substitution silently fails — the
@@ -3944,21 +3936,15 @@ FROM reach GROUP BY src
         # isCached() reported true for every view.  A checkpointed
         # DataFrame is a LogicalRDD leaf: references physically cannot
         # recompute the subtree.
+        # The candidate pairs pin too (r6): the Spark verify spelling
+        # references cand three times (join side + two semi filters).
+        # The documents table is a single parquet file at small SFs —
+        # spread the shingle/md5 chain across tasks before exploding.
         pin = _fresh_checkpoints(spark, "dedup_minhash_lsh")
-        pin(spark.sql(
-            f"WITH {D.shingle_cte(SPARK, 'documents_rep', 9)} "
-            f"SELECT * FROM shingles")).createOrReplaceTempView("shingles")
-        pin(spark.sql(D.minhash_mh_sql())).createOrReplaceTempView("mh")
-        full = D.minhash_lsh_sql(SPARK)
-        # pin the candidate pairs too (r6): the Spark verify spelling
-        # references cand three times (join side + two semi filters)
-        band_body = full[full.index("band_keys AS ("):
-                         full.index("inter AS (")].rstrip().rstrip(",")
-        pin(spark.sql("WITH " + band_body + "\nSELECT * FROM cand")) \
-            .createOrReplaceTempView("mh_cand_pin")
-        tail = "WITH " + full[full.index("inter AS ("):] \
-            .replace("FROM cand", "FROM mh_cand_pin")
-        return spark.sql(tail)
+        return pin_ctes(
+            spark, D.minhash_lsh_sql(SPARK, rel="documents_rep"),
+            ["shingles", "mh", "cand"], pin,
+            documents_rep=spark.table("documents").repartition(32))[0]
     queries["dedup_minhash_lsh"] = minhash_cached
 
     def minhash_stopfiltered_cached(spark: SparkSession,
@@ -3968,28 +3954,12 @@ FROM reach GROUP BY src
         signature aggregation per band reference): pin the shingles,
         the df-filtered shingles, and the signatures as plan leaves."""
         register_tables(spark, sf_dir)
-        spark.table("documents").repartition(32) \
-            .createOrReplaceTempView("documents_rep")
         pin = _fresh_checkpoints(spark, "dedup_minhash_stopfiltered")
-        pin(spark.sql(
-            f"WITH {D.shingle_cte(SPARK, 'documents_rep', 9)} "
-            f"SELECT * FROM shingles")).createOrReplaceTempView("shingles")
-        pin(spark.sql(
-            "WITH " + D.stop_shingle_filter_cte(
-                "documents", 0.5, "shingles", "x", "shingles_kept") +
-            " SELECT * FROM shingles_kept")) \
-            .createOrReplaceTempView("shingles_kept")
-        pin(spark.sql(D.minhash_mh_sql().replace(
-            "FROM shingles", "FROM shingles_kept"))) \
-            .createOrReplaceTempView("mh")
-        full = D.minhash_lsh_sql(SPARK, max_doc_freq=0.5)
-        band_body = full[full.index("band_keys AS ("):
-                         full.index("inter AS (")].rstrip().rstrip(",")
-        pin(spark.sql("WITH " + band_body + "\nSELECT * FROM cand")) \
-            .createOrReplaceTempView("mhs_cand_pin")
-        tail = "WITH " + full[full.index("inter AS ("):] \
-            .replace("FROM cand", "FROM mhs_cand_pin")
-        return spark.sql(tail)
+        return pin_ctes(
+            spark, D.minhash_lsh_sql(SPARK, rel="documents_rep",
+                                     max_doc_freq=0.5),
+            ["shingles", "shingles_kept", "mh", "cand"], pin,
+            documents_rep=spark.table("documents").repartition(32))[0]
     queries["dedup_minhash_stopfiltered"] = minhash_stopfiltered_cached
 
     def duplicate_spans_pinned(spark: SparkSession,
@@ -4000,15 +3970,8 @@ FROM reach GROUP BY src
         reference (r6 optimization).  Oracle unchanged."""
         register_tables(spark, sf_dir)
         pin = _fresh_checkpoints(spark, "duplicate_spans")
-        full = TX.duplicate_spans_sql(SPARK)
-        i_pos = full.index("ds_pos AS (")
-        i_dup = full.index("ds_dup AS (")
-        head_meta = full[full.index("WITH ") + 5:i_pos].rstrip().rstrip(",")
-        head_pos = full[full.index("WITH ") + 5:i_dup].rstrip().rstrip(",")
-        pin(spark.sql("WITH " + head_pos + "\nSELECT * FROM ds_pos")) \
-            .createOrReplaceTempView("ds_pos_pin")
-        tail = full[i_dup:].replace("FROM ds_pos", "FROM ds_pos_pin")
-        return spark.sql("WITH " + head_meta + ",\n" + tail)
+        return pin_ctes(spark, TX.duplicate_spans_sql(SPARK), ["ds_pos"],
+                        pin)[0]
     queries["duplicate_spans"] = duplicate_spans_pinned
 
     def boilerplate_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4016,13 +3979,8 @@ FROM reach GROUP BY src
         join both re-ran the tokenize/md5 explode).  Oracle unchanged."""
         register_tables(spark, sf_dir)
         pin = _fresh_checkpoints(spark, "boilerplate_ngrams")
-        full = TX.boilerplate_ngrams_sql(SPARK)
-        i_hot = full.index("bp_hot AS (")
-        head = full[full.index("WITH ") + 5:i_hot].rstrip().rstrip(",")
-        pin(spark.sql("WITH " + head + "\nSELECT * FROM bp_pos")) \
-            .createOrReplaceTempView("bp_pos_pin")
-        tail = full[i_hot:].replace("FROM bp_pos", "FROM bp_pos_pin")
-        return spark.sql("WITH " + tail)
+        return pin_ctes(spark, TX.boilerplate_ngrams_sql(SPARK), ["bp_pos"],
+                        pin)[0]
     queries["boilerplate_ngrams"] = boilerplate_pinned
 
     def overlap_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4035,15 +3993,11 @@ FROM reach GROUP BY src
         still broadcast the build side and OOM'd an 8g JVM; the MERGE
         hint baked into the shared template forces the shuffle join."""
         register_tables(spark, sf_dir)
-        full = TX.fingerprint_overlap_pairs_sql(
-            SPARK, min_shared=4, max_doc_freq=0.02, chunk=4096)
         pin = _fresh_checkpoints(spark, "fingerprint_overlap_pairs")
-        tail_at = full.index("SELECT /*+ MERGE(a, b) */ a.doc_id")
-        head = full[:tail_at].rstrip()
-        assert head.startswith("\nWITH ")
-        pin(spark.sql(head + " SELECT * FROM fps_j")) \
-            .createOrReplaceTempView("fps_j")
-        return spark.sql(full[tail_at:])
+        return pin_ctes(
+            spark, TX.fingerprint_overlap_pairs_sql(
+                SPARK, min_shared=4, max_doc_freq=0.02, chunk=4096),
+            ["fps_j"], pin)[0]
     queries["fingerprint_overlap_pairs"] = overlap_pairs_cached
 
     def dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4927,11 +4881,8 @@ WHERE lon >= CAST('{ZQ[0]!r}' AS DOUBLE) AND lon <= CAST('{ZQ[2]!r}' AS DOUBLE)
     def sparse_cosine_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_tables(spark, sf_dir)
         pin = _fresh_checkpoints(spark, "sparse_cosine_pairs")
-        full = TX.sparse_cosine_pairs_sql(SPARK, min_cosine=0.95)
-        head = full[:full.index("sc_norms AS (")].rstrip().rstrip(",")
-        pin(spark.sql("WITH " + head + "\nSELECT * FROM kept_tf")) \
-            .createOrReplaceTempView("kept_tf")
-        return spark.sql("WITH " + full[full.index("sc_norms AS ("):])
+        return pin_ctes(spark, "WITH " + TX.sparse_cosine_pairs_sql(
+            SPARK, min_cosine=0.95), ["kept_tf"], pin)[0]
     queries["sparse_cosine_pairs"] = sparse_cosine_cached
     oracles["sparse_cosine_pairs"] = \
         "WITH " + TX.sparse_cosine_pairs_sql(DUCK, min_cosine=0.95)
@@ -5192,14 +5143,7 @@ FROM dd GROUP BY u, v
         reference (r6 optimization).  Oracle unchanged."""
         register_tables(spark, sf_dir)
         pin = _fresh_checkpoints(spark, "trajectory_hausdorff")
-        full = q_traj_hausdorff(H.SPARK)
-        idx = full.index("anch AS (")
-        head = full[full.index("WITH ") + 5:idx].rstrip().rstrip(",")
-        pin(spark.sql("WITH " + head + "\nSELECT * FROM tr")) \
-            .createOrReplaceTempView("th_tr_pin")
-        tail = full[idx:].replace("FROM tr ", "FROM th_tr_pin ") \
-            .replace("JOIN tr ", "JOIN th_tr_pin ")
-        return spark.sql("WITH " + tail)
+        return pin_ctes(spark, q_traj_hausdorff(H.SPARK), ["tr"], pin)[0]
     queries["trajectory_hausdorff"] = trajectory_hausdorff
     oracles["trajectory_hausdorff"] = q_traj_hausdorff(H.DUCK)
 
@@ -5264,7 +5208,6 @@ GROUP BY t.u
         from .operators.graph import triangle_counts_local
 
         pin = _fresh_checkpoints(spark, "triangle_counts")
-        full = q_triangles(SPARK)
         # r6 second pass: pin the distinct edge relation (the part
         # that scales with input) and, when its exact edge AND wedge
         # counts are bounded, run the identical orient/wedge/close
@@ -5272,30 +5215,13 @@ GROUP BY t.u
         # the global-rank window and the 4.8M-row wedge join were
         # ~1.6 s of shuffle latency at sf0.1.  Unbounded graphs keep
         # the distributed wedge join below.
-        core_idx = full.index("tg_deg AS (")
-        e_head = full[full.index("WITH ") + 5:core_idx].rstrip().rstrip(",")
-        tg_e = pin(spark.sql("WITH " + e_head + "\nSELECT a, b FROM tg_e"))
+        tg_e = pin_ctes(spark, "WITH " + _triangle_edges_ctes(SPARK),
+                        ["tg_e"], pin)[1]["tg_e"]
         local = triangle_counts_local(tg_e)
         if local is not None:
             return local
-        tg_e.createOrReplaceTempView("tg_e_pin")
-        core = triangle_count_sql("tg_e_pin")
-        idx = core.index("tg_tri AS (")
-        head = core[:idx].rstrip().rstrip(",")
-        pin(spark.sql("WITH " + head + "\nSELECT * FROM tg_oe")) \
-            .createOrReplaceTempView("tg_oe_pin")
-        tail = "WITH " + core[idx:].replace("tg_oe e", "tg_oe_pin e")
-        # single-pass corner explode: the template's 3-branch UNION
-        # inlines tg_tri (the wedge join) once per corner — 3× the
-        # dominant join; explode(array(u, v, w)) is the same multiset
-        # in one evaluation
-        tail = tail.replace(
-            """FROM (SELECT u AS node FROM tg_tri
-      UNION ALL SELECT v AS node FROM tg_tri
-      UNION ALL SELECT w AS node FROM tg_tri) corners""",
-            "FROM (SELECT explode(array(u, v, w)) AS node "
-            "FROM tg_tri) corners")
-        return spark.sql(tail)
+        return pin_ctes(spark, "WITH " + triangle_count_sql("tg_e", SPARK),
+                        ["tg_oe"], pin, tg_e=tg_e)[0]
     queries["triangle_counts"] = triangles_pinned
     oracles["triangle_counts"] = q_triangles(DUCK)
 
@@ -5348,9 +5274,6 @@ WITH rs_src AS (
         optimization).  Oracle unchanged."""
         register_tables(spark, sf_dir)
         pin = _fresh_checkpoints(spark, "viewshed_cells")
-        full = q_viewshed(SPARK)
-        idx = full.index("vs_org AS (")
-        head = full[full.index("WITH ") + 5:idx].rstrip().rstrip(",")
         # NOTE (r6 second pass): a driver-side numpy LOS evaluator
         # (CL.viewshed_grid_los) was tried here and REVERTED for the
         # gate: row-identical and ~0.5 s faster in quiet windows, but
@@ -5358,9 +5281,7 @@ WITH rs_src AS (
         # single-core noise bursts (measured 1.9 s quiet vs 6.5 s in
         # a degraded window where the 32-way SQL path held ~2.7 s) —
         # the distributed template has the better worst case.
-        pin(spark.sql("WITH " + head + "\nSELECT * FROM vs_grid")) \
-            .createOrReplaceTempView("vs_grid_pin")
-        return spark.sql("WITH " + viewshed_sql("vs_grid_pin", SPARK))
+        return pin_ctes(spark, q_viewshed(SPARK), ["vs_grid"], pin)[0]
     queries["viewshed_cells"] = viewshed_pinned
     oracles["viewshed_cells"] = q_viewshed(DUCK)
 

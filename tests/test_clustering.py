@@ -205,3 +205,14 @@ def test_label_blobs_matches_union_find(spark):
 
     assert got == expect
     assert len(got) == 4  # L-blob + two diagonal singletons + isolated
+
+
+def test_kmeans_lloyd_empty_input(spark):
+    """No points: an empty result with the output schema, not a SQL
+    parse error from an empty centroid VALUES list."""
+    from go_shapefile_spark.operators.clustering import kmeans_lloyd
+
+    pts = spark.createDataFrame([], "id long, x long, y long")
+    out = kmeans_lloyd(pts, k=4, rounds=2)
+    assert out.collect() == []
+    assert out.columns == ["ck", "n", "cx", "cy", "inertia_e6"]

@@ -149,7 +149,7 @@ def test_triangle_count_matches_bruteforce():
     import duckdb
     import itertools
 
-    from go_shapefile_spark.queries import triangle_count_sql
+    from go_shapefile_spark.queries import DUCK, triangle_count_sql
 
     rng = np.random.default_rng(21)
     for trial, (n, m) in enumerate([(30, 120), (60, 300), (12, 66)]):
@@ -162,7 +162,7 @@ def test_triangle_count_matches_bruteforce():
         con.execute("CREATE TABLE ge (a BIGINT, b BIGINT)")
         con.executemany("INSERT INTO ge VALUES (?, ?)", sorted(pairs))
         got = dict(con.sql(
-            "WITH " + triangle_count_sql("ge")).fetchall())
+            "WITH " + triangle_count_sql("ge", DUCK)).fetchall())
 
         adj: dict = {}
         for a, b in pairs:
@@ -177,7 +177,7 @@ def test_triangle_count_matches_bruteforce():
 
         # orientation fan-out bound: out-degree <= sqrt(2m) + 1 slack
         fan = dict(con.sql(
-            "WITH " + triangle_count_sql("ge").split("tg_tri AS")[0]
+            "WITH " + triangle_count_sql("ge", DUCK).split("tg_tri AS")[0]
             .rstrip().rstrip(",")
             + " SELECT u, COUNT(*) FROM tg_oe GROUP BY u").fetchall())
         assert max(fan.values()) <= int((2 * len(pairs)) ** 0.5) + 1
@@ -219,7 +219,7 @@ def test_triangle_count_spark_matches_duckdb(spark):
     """The same SQL subset runs in Spark; identical per-node counts."""
     import duckdb
 
-    from go_shapefile_spark.queries import triangle_count_sql
+    from go_shapefile_spark.queries import DUCK, SPARK, triangle_count_sql
 
     rng = np.random.default_rng(33)
     pairs = sorted({(int(min(a, b)), int(max(a, b)))
@@ -227,9 +227,21 @@ def test_triangle_count_spark_matches_duckdb(spark):
     spark.createDataFrame(pairs, "a long, b long") \
         .createOrReplaceTempView("tge")
     got = dict((r.node, r.n_tri) for r in
-               spark.sql("WITH " + triangle_count_sql("tge")).collect())
+               spark.sql("WITH " + triangle_count_sql("tge", SPARK)).collect())
     con = duckdb.connect()
     con.execute("CREATE TABLE tge (a BIGINT, b BIGINT)")
     con.executemany("INSERT INTO tge VALUES (?, ?)", pairs)
-    want = dict(con.sql("WITH " + triangle_count_sql("tge")).fetchall())
+    want = dict(con.sql("WITH " + triangle_count_sql("tge", DUCK))
+                .fetchall())
     assert got == want and sum(got.values()) % 3 == 0 and got
+
+
+def test_local_components_selects_edge_columns_by_name(spark):
+    """The bounded driver finish reads ``src``/``dst`` by name: an extra
+    leading column must not be mistaken for an edge endpoint."""
+    from go_shapefile_spark.operators.graph import _local_components
+
+    df = spark.createDataFrame([(7, 1, 2), (8, 2, 3), (9, 5, 6)],
+                               "w long, src long, dst long")
+    got = sorted(map(tuple, _local_components(df).collect()))
+    assert got == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)]

@@ -143,3 +143,117 @@ def test_release_pins_frees_session(spark):
     assert any(k[0] == id(spark) for k in _PINS)
     release_pins(spark)
     assert not any(k[0] == id(spark) for k in _PINS)
+
+
+def _recording_pin(spark):
+    """A local pin factory that also records each pinned relation's
+    rows, in pin order."""
+    pin = fresh_pins(spark, None, "local")
+    seen = []
+
+    def rec(df):
+        out = pin(df)
+        seen.append(sorted(map(tuple, out.collect())))
+        return out
+
+    return rec, seen
+
+
+def test_pin_ctes_parses_literals_hints_and_comments(spark):
+    """Parentheses inside string literals, a ``/*+ ... */`` hint and a
+    ``--`` comment must not derail the WITH-list parse; pinned CTEs
+    keep their names, so the final query and later CTEs read them
+    unchanged."""
+    from go_shapefile_spark.operators.pinning import pin_ctes
+
+    pin, seen = _recording_pin(spark)
+    sql = """
+WITH base AS (
+  SELECT id, 'x AS (' AS tag, ')' AS close   -- ) not a close, x AS (
+  FROM range(6)),
+part AS (
+  SELECT /*+ REPARTITION(64, u) */ id AS u, tag FROM base WHERE id % 2 = 0),
+agg AS (SELECT COUNT(*) AS n, MIN(tag) AS t FROM part)
+SELECT n, t, (SELECT MAX(close) FROM base) AS c FROM agg
+"""
+    final, pinned = pin_ctes(spark, sql, ["base", "part"], pin)
+    assert list(pinned) == ["base", "part"]
+    assert seen[0] == [(i, "x AS (", ")") for i in range(6)]
+    assert seen[1] == [(0, "x AS ("), (2, "x AS ("), (4, "x AS (")]
+    assert [tuple(r) for r in final.collect()] == [(3, "x AS (", ")")]
+    plan = final._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan and "Range" not in plan
+
+
+def test_pin_ctes_pins_exact_name_only(spark):
+    """Pinning ``cand`` must leave ``cand2`` (a name with ``cand`` as
+    prefix) computed from the original text."""
+    from go_shapefile_spark.operators.pinning import pin_ctes
+
+    pin, seen = _recording_pin(spark)
+    sql = """WITH cand AS (SELECT id FROM range(3)),
+cand2 AS (SELECT id + 10 AS id FROM range(2))
+SELECT id FROM cand UNION ALL SELECT id FROM cand2"""
+    final, pinned = pin_ctes(spark, sql, ["cand"], pin)
+    assert list(pinned) == ["cand"] and len(seen) == 1
+    assert sorted(r.id for r in final.collect()) == [0, 1, 2, 10, 11]
+    plan = final._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LogicalRDD") == 1 and plan.count("Range") == 1
+
+
+def test_pin_ctes_binds_inputs_and_bare_list(spark):
+    """DataFrame inputs bind as leading CTEs under generated view names
+    that are gone after the call; a bare WITH list has no final query."""
+    from go_shapefile_spark.operators.pinning import pin_ctes
+
+    pin, seen = _recording_pin(spark)
+    views = {t.name for t in spark.catalog.listTables()}
+    final, pinned = pin_ctes(
+        spark, "WITH doubled AS (SELECT v * 2 AS v FROM src)", ["doubled"],
+        pin, src=spark.range(4).selectExpr("id AS v"))
+    assert final is None and seen == [[(0,), (2,), (4,), (6,)]]
+    assert {t.name for t in spark.catalog.listTables()} == views
+
+
+def test_pin_ctes_unknown_name_raises(spark):
+    from go_shapefile_spark.operators.pinning import pin_ctes
+
+    pin, seen = _recording_pin(spark)
+    with pytest.raises(ValueError, match="no CTE named"):
+        pin_ctes(spark, "WITH cand AS (SELECT 1 AS x) SELECT * FROM cand",
+                 ["cand2"], pin)
+    assert seen == []
+
+
+def test_pinned_runners_run_concurrently(spark):
+    """Pinned grid runners running at once in one session, on two
+    threads and over different inputs, return exactly their serial
+    results — no shared view names for one call to overwrite."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import numpy as np
+    import pandas as pd
+
+    from go_shapefile_spark.operators.clustering import (
+        grid_cost_distance, grid_distance_transform)
+
+    def points(seed, span):
+        rng = np.random.default_rng(seed)
+        pdf = pd.DataFrame({"lon": rng.uniform(-span, span, 1500),
+                            "lat": rng.uniform(-span, span, 1500)})
+        pdf["is_src"] = (rng.random(1500) < 0.03).astype(int)
+        return spark.createDataFrame(pdf)
+
+    a, b = points(5, 12), points(6, 7)
+    runs = [(grid_distance_transform, a), (grid_cost_distance, b),
+            (grid_distance_transform, b), (grid_cost_distance, a)]
+
+    def run(job):
+        op, pts = job
+        return sorted(map(tuple, op(pts, rounds=4,
+                                    local_iterate=False).collect()))
+
+    serial = [run(j) for j in runs]
+    with ThreadPoolExecutor(2) as ex:
+        threaded = list(ex.map(run, runs))
+    assert threaded == serial and all(serial)

@@ -22,6 +22,13 @@ import pandas as pd  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 
+def local_root(plan: str) -> bool:
+    """The bounded driver-local finish: the whole executed plan is one
+    local result relation.  A distributed plan that merely CONTAINS a
+    LocalTableScan (a VALUES offset table) does not qualify."""
+    return plan.startswith("LocalTableScan")
+
+
 def formatted(df, max_lines: int = 60) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -591,7 +598,7 @@ def main() -> None:
              # plan is the local result relation; unbounded inputs
              # show the pinned distributed chain instead
              [("local result relation or pinned leaves",
-               lambda p: "LocalTableScan" in p
+               lambda p: local_root(p)
                or "Scan ExistingRDD" in p or "LogicalRDD" in p
                or "Scan parquet" in p)]),
             # r5 sixth wave: all dialect-free relational templates
@@ -629,15 +636,13 @@ def main() -> None:
                and "CartesianProduct" not in p)]),
             ("viewshed_cells",
              "Viewshed (integer line-of-sight, grid-bounded samples)",
-             # r6: the bounded occupancy grid evaluates on the driver
-             # (local result relation); above the cutoff the SQL
-             # template runs and the per-sample elevation lookup must
-             # be a hash equi-join (the 1-row observer cross-joins
-             # via BNLJ by design)
-             [("local result relation or hash equi-join lookup",
-               lambda p: "LocalTableScan" in p
-               or (("SortMergeJoin" in p or "BroadcastHashJoin" in p)
-                   and "LeftOuter" in p))]),
+             # the SQL template always runs (a driver-side evaluator
+             # was tried and reverted in r6): the per-sample elevation
+             # lookup must be a hash equi-join (the 1-row observer
+             # cross-joins via BNLJ by design)
+             [("hash equi-join elevation lookup",
+               lambda p: ("SortMergeJoin" in p or "BroadcastHashJoin" in p)
+               and "LeftOuter" in p)]),
             ("exact_percentiles",
              "Exact grouped percentiles (cumulative-count windows)",
              []),
@@ -673,7 +678,7 @@ def main() -> None:
              "Chamfer cost distance (bounded-grid driver min-plus; "
              "distributed self-loop chain above the cutoff)",
              [("local result relation or pinned leaves",
-               lambda p: "LocalTableScan" in p
+               lambda p: local_root(p)
                or "Scan ExistingRDD" in p or "LogicalRDD" in p
                or "Scan parquet" in p)]),
             ("kmeans_events",

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..functions import hashes as H
+from . import local
 
 
 def _eps_lit(eps: float) -> str:
@@ -265,26 +266,16 @@ SELECT x, y, CAST(MIN(d) AS BIGINT) AS dist FROM walk GROUP BY x, y"""
 #
 # The three fixed-round grid runners below (distance transform, cost
 # distance, flow accumulation) iterate over an AGGREGATED degree-grid
-# relation whose size is bounded by the grid itself (FLOOR(lon) ×
-# FLOOR(lat) over geographic inputs is ≤ 360×180 = 64 800 cells no
-# matter how many input rows fed the aggregation).  Distributed, each
-# round is a join + aggregate over a few-thousand-row relation — pure
-# shuffle-stage latency (~0.25 s/round measured, 2.2 s of a 3.1 s
-# query).  So after the distributed aggregation the runners check the
-# EXACT cell count and coordinate spans (one tiny agg on the pinned
-# grid) and, when bounded, collect the grid through Arrow and run the
-# identical integer recurrence vectorized in numpy on the driver —
-# the same two-level discipline as connected_components' local finish
-# (shrink distributively, iterate where per-round latency is free).
-# The fallback keeps the fully distributed chain; tests force it.
-
-_GRID_LOCAL_MAX_CELLS = 1_000_000
+# relation bounded by the grid itself, where each distributed round is
+# pure shuffle latency (~0.25 s/round, 2.2 s of a 3.1 s query).  After
+# the aggregation they check the EXACT cell count and spans and, when
+# operators/local.py allows, run the identical integer recurrence in
+# numpy on the driver; otherwise the fully distributed chain.
 
 
 def _grid_local_stats(base: DataFrame):
-    """Exact cell count + coordinate spans of the aggregated grid —
-    the auto-gate for the driver-side iterate path (one 1-row agg on
-    the pinned relation, which doubles as the pin materialization)."""
+    """Exact cell count + coordinate spans of the aggregated grid (one
+    1-row agg, which doubles as the pin materialization)."""
     from pyspark.sql import functions as F
 
     return base.agg(
@@ -294,10 +285,10 @@ def _grid_local_stats(base: DataFrame):
 
 
 def _grid_local_ok(st) -> bool:
-    """Bounded for the driver path: cell count under the cap and the
-    (span+2)-padded pack key fits int64 (sparse adversarial coords
-    fall back to the distributed chain)."""
-    if st.n == 0 or st.n > _GRID_LOCAL_MAX_CELLS:
+    """Bounded for the driver path: cell count within
+    ``local.GRID_CELLS`` and the (span+2)-padded pack key fits int64
+    (sparse adversarial coords fall back to the distributed chain)."""
+    if st.n == 0 or not local.within(st.n, local.GRID_CELLS):
         return False
     spanx = int(st.x1) - int(st.x0) + 3
     spany = int(st.y1) - int(st.y0) + 3
@@ -346,15 +337,12 @@ def _minplus_local_df(spark, base: DataFrame, st, offsets,
     are int64, so the result is bit-identical.  Unreached cells stay
     at the sentinel and are dropped (the oracle's absent-cells cap)."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType([T.StructField("x", T.LongType(), True),
                            T.StructField("y", T.LongType(), True),
                            T.StructField(out_col, T.LongType(), True)])
     pdf = base.toPandas()
-    if len(pdf) == 0:
-        return spark.createDataFrame([], schema)
     order, key_sorted, spany = _grid_pack(pdf, st)
     x = pdf["x"].to_numpy(np.int64)[order]
     y = pdf["y"].to_numpy(np.int64)[order]
@@ -368,17 +356,13 @@ def _minplus_local_df(spark, base: DataFrame, st, offsets,
             np.minimum.at(nd, j_idx, dist[i_idx] + w)
         dist = nd
     keep = dist < inf
-    out = pd.DataFrame({"x": x[keep], "y": y[keep], out_col: dist[keep]})
-    if len(out) == 0:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(out, schema)
+    return local.to_spark(
+        spark, {"x": x[keep], "y": y[keep], out_col: dist[keep]}, schema)
 
 
 def grid_distance_transform(points: DataFrame, rounds: int = 8,
                             pin: str | None = None,
-                            slot: str | None = None,
-                            local_iterate: bool | None = None
-                            ) -> DataFrame:
+                            slot: str | None = None) -> DataFrame:
     """Multi-source BFS distance over the occupied pixel grid:
     ``points(lon, lat, is_src)`` → ``(x, y, dist)`` for every cell
     reachable from a source cell within ``rounds`` queen-steps through
@@ -398,14 +382,13 @@ def grid_distance_transform(points: DataFrame, rounds: int = 8,
     (no count(), no convergence collect).
     """
     return _grid_minplus(
-        points, rounds, pin, slot, local_iterate, "dist",
+        points, rounds, pin, slot, "dist",
         [(-1, -1, 1), (-1, 0, 1), (-1, 1, 1), (0, -1, 1),
          (0, 1, 1), (1, -1, 1), (1, 0, 1), (1, 1, 1)])
 
 
 def _grid_minplus(points: DataFrame, rounds: int, pin: str | None,
-                  slot: str | None, local_iterate: bool | None,
-                  out_col: str, offsets) -> DataFrame:
+                  slot: str | None, out_col: str, offsets) -> DataFrame:
     """Shared runner of the distance transform and the cost distance:
     ``rounds`` min-plus rounds over the occupied grid with weighted
     queen ``offsets`` ``(dx, dy, w)`` — driver-local when the grid is
@@ -424,7 +407,7 @@ def _grid_minplus(points: DataFrame, rounds: int, pin: str | None,
                                     "CAST(is_src AS BIGINT) AS is_src")
     )[1]["dbase"]
     st = _grid_local_stats(base)
-    if _grid_local_ok(st) if local_iterate is None else local_iterate:
+    if _grid_local_ok(st):
         # bounded grid: run the identical recurrence on the driver
         # (see the section comment above) — the edge relation is never
         # built, and the shuffle rounds collapse into vectorized numpy
@@ -553,7 +536,6 @@ def _flow_local_df(spark, grid: DataFrame, st, rounds: int,
     integer sums are order-free), then the top-``k`` ranking by
     (acc DESC, x, y).  All int64 end to end."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType([T.StructField("x", T.LongType(), True),
@@ -562,8 +544,6 @@ def _flow_local_df(spark, grid: DataFrame, st, rounds: int,
                            T.StructField("acc", T.LongType(), True),
                            T.StructField("rk", T.LongType(), True)])
     pdf = grid.toPandas()
-    if len(pdf) == 0:
-        return spark.createDataFrame([], schema)
     order, key_sorted, spany = _grid_pack(pdf, st)
     x = pdf["x"].to_numpy(np.int64)[order]
     y = pdf["y"].to_numpy(np.int64)[order]
@@ -601,17 +581,14 @@ def _flow_local_df(spark, grid: DataFrame, st, rounds: int,
         np.add.at(inflow, tgt, u[src])
         u = 1 + inflow
     topk = np.lexsort((y, x, -u))[:int(k)]
-    out = pd.DataFrame({
+    return local.to_spark(spark, {
         "x": x[topk], "y": y[topk], "n": n[topk], "acc": u[topk],
-        "rk": np.arange(1, len(topk) + 1, dtype=np.int64)})
-    return spark.createDataFrame(out, schema)
+        "rk": np.arange(1, len(topk) + 1, dtype=np.int64)}, schema)
 
 
 def grid_flow_accumulation(points: DataFrame, rounds: int = 8,
                            k: int = 50, pin: str | None = None,
-                           slot: str | None = None,
-                           local_iterate: bool | None = None
-                           ) -> DataFrame:
+                           slot: str | None = None) -> DataFrame:
     """D8 uphill flow accumulation over the occupied 1-degree grid:
     ``points(lon, lat)`` → top-``k`` ``(x, y, n, acc, rk)`` — the
     runner twin of queries.flow_acc_sql (identical integer algebra,
@@ -640,7 +617,7 @@ def grid_flow_accumulation(points: DataFrame, rounds: int = 8,
                 .groupBy("x", "y")
                 .agg(F.count(F.lit(1)).cast("long").alias("n")))
     st = _grid_local_stats(grid)
-    if _grid_local_ok(st) if local_iterate is None else local_iterate:
+    if _grid_local_ok(st):
         # bounded grid: steepest-neighbor pick + inflow rounds on the
         # driver (see the bounded-grid section comment) — the dirs
         # relation is never built distributively
@@ -733,8 +710,7 @@ SELECT x, y, CAST(MIN(d) AS BIGINT) AS cost FROM walk GROUP BY x, y"""
 
 def grid_cost_distance(points: DataFrame, rounds: int = 8,
                        pin: str | None = None,
-                       slot: str | None = None,
-                       local_iterate: bool | None = None) -> DataFrame:
+                       slot: str | None = None) -> DataFrame:
     """Weighted (chamfer 2-3) cost distance: ``points(lon, lat,
     is_src)`` → ``(x, y, cost)`` = min path weight from any source
     within ``rounds`` edges through occupied cells — the
@@ -753,7 +729,7 @@ def grid_cost_distance(points: DataFrame, rounds: int = 8,
     min over ≤R-edge paths — the oracle's definition, unchanged.
     Every relation is grid-bounded; no per-round driver action."""
     return _grid_minplus(
-        points, rounds, pin, slot, local_iterate, "cost",
+        points, rounds, pin, slot, "cost",
         [(-1, -1, 3), (-1, 0, 2), (-1, 1, 3), (0, -1, 2),
          (0, 1, 2), (1, -1, 3), (1, 0, 2), (1, 1, 3)])
 

@@ -28,26 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import local
+
 # Star-loop broadcast cutoff (rows in the live edge set): below this the
 # per-node minima relations are hinted broadcast — ~1M two-long rows is
 # tens of MB built, far under the session's 64 MB auto threshold and the
 # 8 GB hard cap; above it the stars keep scale-correct shuffle joins.
 _BROADCAST_EDGES = 1_000_000
-
-# Driver-finish cutoff (rows in the live edge set, known EXACTLY from the
-# convergence checksum before the decision): at or below this the
-# remaining components are solved by one bounded Arrow collect + a
-# vectorized numpy union-find on the driver instead of contraction
-# passes and ~log(n) star iterations whose cost at this size is pure
-# job latency (~0.5 s/iteration of scheduling, near-zero data).  2M
-# two-long rows is ~32 MB through Arrow (string ids ~2-100x that worst
-# case, still far under the 8g driver) and the numpy hook/jump solve is
-# ~0.2 s — bounded at ANY input scale because the gate is the exact
-# live count, not a guess; bigger graphs keep the distributed
-# contraction + star loop.  This is the standard two-level finish for
-# iterative graph algorithms (shrink distributively while large, solve
-# the remainder where per-round latency dominates data).
-_LOCAL_FINISH_EDGES = 2_000_000
 
 
 def _large_star(edges: DataFrame, small: bool = False) -> DataFrame:
@@ -116,8 +103,8 @@ def _np_min_hook(a, b, n_nodes: int):
 
 def _local_components(edges: DataFrame) -> DataFrame:
     """(node, component) for a live edge set the caller has PROVEN
-    bounded (≤ ``_LOCAL_FINISH_EDGES`` rows, exact count from the
-    convergence checksum): one Arrow collect, a vectorized numpy
+    bounded (``local.CC_EDGES``, exact count from the convergence
+    checksum): one Arrow collect, a vectorized numpy
     union-find (:func:`_np_min_hook` — ids factorized through
     ``np.unique``, whose sorted output makes index order coincide with
     id order, so the min-index root IS the min-id label; works for any
@@ -127,21 +114,18 @@ def _local_components(edges: DataFrame) -> DataFrame:
     minimum id — and ``np.unique``'s sorted node order makes the
     emitted rows independent of collect partition order."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     node_t = edges.schema["src"].dataType
     schema = T.StructType([T.StructField("node", node_t, True),
                            T.StructField("component", node_t, True)])
     pdf = edges.select("src", "dst").toPandas()
-    if len(pdf) == 0:
-        return edges.sparkSession.createDataFrame([], schema)
     sa = pdf["src"].to_numpy()
     sb = pdf["dst"].to_numpy()
     nodes, idx = np.unique(np.concatenate([sa, sb]), return_inverse=True)
     roots = _np_min_hook(idx[:len(sa)], idx[len(sa):], len(nodes))
-    out = pd.DataFrame({"node": nodes, "component": nodes[roots]})
-    return edges.sparkSession.createDataFrame(out, schema)
+    return local.to_spark(edges.sparkSession,
+                          {"node": nodes, "component": nodes[roots]}, schema)
 
 
 def _checksum(edges: DataFrame) -> tuple[int, int]:
@@ -159,8 +143,7 @@ def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst", max_iter: int = 25,
                          pin: str | None = None,
                          slot: str | None = None,
-                         assume_normalized: bool = False,
-                         local_finish: int | None = None) -> DataFrame:
+                         assume_normalized: bool = False) -> DataFrame:
     """Undirected edge list → (node, component) with component = the
     smallest node id in each connected component.  Nodes are every
     distinct endpoint (isolated nodes don't appear — they were never in
@@ -187,17 +170,11 @@ def connected_components(edges: DataFrame, src: str = "src",
     O(log n); 25 covers any realistic graph) — non-convergence raises
     rather than returning partial labels.
 
-    Once the live edge set is at or below ``local_finish`` rows
-    (default ``_LOCAL_FINISH_EDGES``; the count is EXACT, read from the
-    convergence checksum that runs anyway), the remainder is solved by
-    one bounded collect + union-find on the driver (r6): at that size
-    the star iterations are pure job latency (~0.5 s each of
-    scheduling over a few thousand rows), and contraction passes past
-    the cutoff are equally pointless, so the contraction loop also
-    stops early.  The gate is scale-safe — a graph that is still large
-    after contraction keeps the fully distributed star loop — and the
-    collected bytes are bounded by the cutoff at any input scale.
-    Tests force ``local_finish=0`` to exercise the star loop.
+    Once the live edge set is within ``local.CC_EDGES`` (the EXACT
+    count from the convergence checksum that runs anyway), contraction
+    stops and the remainder is solved by one bounded collect +
+    union-find on the driver (r6) instead of star iterations that are
+    pure job latency at that size; larger graphs keep the star loop.
     """
     from .pinning import fresh_pins, rolling_pins
 
@@ -224,11 +201,10 @@ def connected_components(edges: DataFrame, src: str = "src",
     # worst case.  The convergence checksum doubles as the pass's
     # shrink measurement — no extra jobs.
     hookf = fresh_pins(spark, slot, strategy=pin)
-    local_max = _LOCAL_FINISH_EDGES if local_finish is None else local_finish
     m_total = None
     prev = _checksum(cur)
     for _ in range(3):
-        if prev[0] == 0 or prev[0] <= local_max:
+        if local.within(prev[0], local.CC_EDGES):
             # empty, or already small enough for the driver finish
             # below — further contraction passes would only add jobs
             break
@@ -264,7 +240,7 @@ def connected_components(edges: DataFrame, src: str = "src",
         prev = n
         if not shrunk:
             break
-    if prev[0] <= local_max:
+    if local.within(prev[0], local.CC_EDGES):
         # bounded driver finish: the live set is provably tiny (exact
         # count above); union-find replaces the remaining ~log(n) star
         # iterations, whose cost at this size is pure job latency
@@ -301,9 +277,7 @@ def connected_components(edges: DataFrame, src: str = "src",
                     .alias("component")))
 
 
-def triangle_counts_local(edges: DataFrame,
-                          max_edges: int = 2_000_000,
-                          max_wedges: int = 25_000_000):
+def triangle_counts_local(edges: DataFrame):
     """Driver-side per-node triangle counts over an undirected-distinct
     edge relation ``edges(a, b)`` with a < b — the vectorized twin of
     ``queries.triangle_count_sql``'s orient-by-(degree, node) wedge
@@ -313,16 +287,14 @@ def triangle_counts_local(edges: DataFrame,
     Returns None unless BOTH the exact edge count (one 1-row agg, which
     doubles as the pin materialization) and the exact wedge count
     (Σ od·(od−1)/2, computed from degrees before materializing
-    anything quadratic) are under their caps — larger graphs keep the
-    caller's distributed wedge join.  The bounded collect discipline of
-    ``_local_components``: the cutoffs bound driver memory at ANY
-    input scale."""
+    anything quadratic) are within ``local.TRIANGLE_EDGES`` /
+    ``local.TRIANGLE_WEDGES`` — larger graphs keep the caller's
+    distributed wedge join."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     n_edges = edges.count()
-    if n_edges == 0 or n_edges > max_edges:
+    if n_edges == 0 or not local.within(n_edges, local.TRIANGLE_EDGES):
         return None
     spark = edges.sparkSession
     node_t = edges.schema[0].dataType
@@ -346,7 +318,7 @@ def triangle_counts_local(edges: DataFrame,
     v = np.where(ra < rb, db, da)
     od = np.bincount(u, minlength=n)
     n_wedges = int((od.astype(np.int64) * (od - 1) // 2).sum())
-    if n_wedges > max_wedges:
+    if not local.within(n_wedges, local.TRIANGLE_WEDGES):
         return None
     # out-neighbors sorted by (u, rk[v]): within each u-group every
     # ordered following-pair is exactly one wedge (e2.rk_v > e1.rk_v)
@@ -369,10 +341,8 @@ def triangle_counts_local(edges: DataFrame,
              + np.bincount(wv[tri], minlength=n)
              + np.bincount(ww[tri], minlength=n)).astype(np.int64)
     keep = n_tri > 0
-    out = pd.DataFrame({"node": nodes[keep], "n_tri": n_tri[keep]})
-    if len(out) == 0:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(out, schema)
+    return local.to_spark(spark, {"node": nodes[keep], "n_tri": n_tri[keep]},
+                          schema)
 
 
 def dedup_keep_representatives(edges: DataFrame, src: str = "src",

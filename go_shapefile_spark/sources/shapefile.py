@@ -733,8 +733,14 @@ def read_shapefile_df(spark: SparkSession, path: str, options: dict | None = Non
     record headers BEFORE geometry decode (the same machinery as the
     DataSource's ``bbox.*`` predicate pushdown); zip members filter
     after parse — same rows either way.
+
+    Each component is optional, but finding none (a missing path, or a
+    zip ``basename`` matching no member) raises ShapefileError.
     """
     plan = plan_shapefile(path, options, basename)
+    if not (plan.has_shp or plan.has_dbf or plan.shx_offsets is not None):
+        where = path if basename is None else f"{path} [{basename}]"
+        raise core.ShapefileError(f"no .shp, .shx or .dbf found: {where}")
     pruned = (bbox is not None
               and not _header_intersects(plan.header_bounds, bbox))
     if flat_points:

@@ -21,9 +21,32 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
+def sf01_dir():
+    path = os.path.join(DRIVER_TESTDATA, "sf0.01")
+    if not os.path.isdir(path):
+        pytest.skip(f"fixture absent: {path}")
+    return path
+
+
+@pytest.fixture(scope="session")
 def spark():
     from go_shapefile_spark.session import get_spark
 
     spark = get_spark(app_name="tests", cores=4, shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def local_caps(monkeypatch):
+    """Set ``operators.local`` caps for one test (restored after it):
+    ``local_caps(0)`` sets every cap — every driver-local finish takes
+    its distributed path — and ``local_caps(CC_EDGES=50)`` sets one."""
+    from go_shapefile_spark.operators import local
+
+    def set_caps(value=None, **caps):
+        if value is not None:
+            caps = {**dict.fromkeys(local.CAPS, value), **caps}
+        for name, cap in caps.items():
+            monkeypatch.setattr(local, name, cap)
+    return set_caps

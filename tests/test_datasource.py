@@ -19,12 +19,23 @@ def ds_spark(spark):
     return spark
 
 
-def test_format_matches_function_reader(ds_spark, ref_testdata):
-    base = os.path.join(ref_testdata, "poly")
+def test_format_matches_function_reader(ds_spark, tmp_path):
+    """Both readers over a written polygon file with C, N and
+    N-with-decimals columns (a file that exists, so a reader returning
+    0 rows cannot pass)."""
+    from go_shapefile_spark.sources.shapefile_writer import write_polygons
+
+    base = str(tmp_path / "polys")
+    write_polygons(
+        base,
+        [{"coords": [i, 0, i, 1, i + 1, 1, i + 1, 0, i, 0], "ends": [10]}
+         for i in range(10)],
+        fields=[("NAME", "C", 8), ("AREA", "N", 12, 3), ("EAS_ID", "N", 6)],
+        rows=[[f"p{i}", i * 1.5, 100 + i] for i in range(10)])
     via_format = (ds_spark.read.format("shapefile").option("path", base)
                   .load().orderBy("fid").collect())
     via_fn = read_shapefile_df(ds_spark, base).orderBy("fid").collect()
-    assert via_format == via_fn
+    assert via_format == via_fn and len(via_fn) == 10
 
 
 def test_attribute_pushdown_results(ds_spark, ref_testdata):

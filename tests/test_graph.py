@@ -35,42 +35,45 @@ def _union_find(n_edges):
     return out
 
 
-@pytest.mark.parametrize("local_finish", [None, 0])
-def test_cc_matches_union_find_random(spark, local_finish):
-    """local_finish=None takes the r6 bounded driver finish (gate-size
-    graphs are under the cutoff); local_finish=0 forces the distributed
-    star loop — both must equal the independent oracle."""
+@pytest.mark.parametrize("cc_cap", [None, 0])
+def test_cc_matches_union_find_random(spark, local_caps, cc_cap):
+    """The default cap takes the r6 bounded driver finish (gate-size
+    graphs are under the cutoff); a 0 cap forces the distributed star
+    loop — both must equal the independent oracle."""
+    if cc_cap is not None:
+        local_caps(CC_EDGES=cc_cap)
     rng = np.random.default_rng(9)
     edges = [(int(a), int(b)) for a, b in
              rng.integers(0, 400, size=(600, 2)) if a != b]
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {r.node: r.component
-           for r in connected_components(
-               df, local_finish=local_finish).collect()}
+           for r in connected_components(df).collect()}
     assert got == _union_find(edges)
 
 
-def test_cc_path_graph_worst_case_converges(spark):
+def test_cc_path_graph_worst_case_converges(spark, local_caps):
     """A 200-node path has diameter 199 — label propagation would need
     ~200 rounds; star-contraction must finish within the 25-iteration
     bound and label everything with node 0."""
+    local_caps(CC_EDGES=0)
     edges = [(i, i + 1) for i in range(199)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    out = connected_components(df, local_finish=0).collect()
+    out = connected_components(df).collect()
     assert len(out) == 200
     assert all(r.component == 0 for r in out)
 
 
-def test_cc_local_finish_after_contraction(spark):
+def test_cc_driver_finish_after_contraction(spark, local_caps):
     """A cutoff between the raw and contracted sizes forces the r6
     composition under test: ≥1 distributed contraction pass, then the
     bounded driver finish, then the hook-map join-back."""
+    local_caps(CC_EDGES=50)
     rng = np.random.default_rng(11)
     edges = [(int(a), int(b)) for a, b in
              rng.integers(0, 100, size=(600, 2)) if a != b]
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {r.node: r.component
-           for r in connected_components(df, local_finish=50).collect()}
+           for r in connected_components(df).collect()}
     assert got == _union_find(edges)
 
 
@@ -101,11 +104,12 @@ def test_cc_string_ids(spark):
                    ("img-c", "img-a"), ("x", "x"), ("y", "x")]
 
 
-def test_cc_nonconvergence_raises(spark):
+def test_cc_nonconvergence_raises(spark, local_caps):
+    local_caps(CC_EDGES=0)
     df = spark.createDataFrame([(i, i + 1) for i in range(64)],
                                "src long, dst long")
     with pytest.raises(RuntimeError, match="converge"):
-        connected_components(df, max_iter=1, local_finish=0)
+        connected_components(df, max_iter=1)
 
 
 def test_pagerank_cells_matches_python_power_iteration():
@@ -183,7 +187,7 @@ def test_triangle_count_matches_bruteforce():
         assert max(fan.values()) <= int((2 * len(pairs)) ** 0.5) + 1
 
 
-def test_triangle_counts_local_matches_bruteforce(spark):
+def test_triangle_counts_local_matches_bruteforce(spark, local_caps):
     """The r6 driver-side triangle counter (graph.triangle_counts_local)
     equals the O(n^3) brute force on random graphs, and respects its
     bounded-collect gates (None above either cap)."""
@@ -192,6 +196,7 @@ def test_triangle_counts_local_matches_bruteforce(spark):
     from go_shapefile_spark.operators.graph import triangle_counts_local
 
     rng = np.random.default_rng(41)
+    dfs = []
     for n, m in [(30, 120), (60, 300), (12, 66)]:
         pairs = set()
         while len(pairs) < m:
@@ -199,6 +204,7 @@ def test_triangle_counts_local_matches_bruteforce(spark):
             if x != y:
                 pairs.add((int(min(x, y)), int(max(x, y))))
         df = spark.createDataFrame(sorted(pairs), "a long, b long")
+        dfs.append(df)
         got = {r.node: r.n_tri
                for r in triangle_counts_local(df).collect()}
         adj: dict = {}
@@ -211,8 +217,11 @@ def test_triangle_counts_local_matches_bruteforce(spark):
                 for z in (uu, vv, wW):
                     want[z] = want.get(z, 0) + 1
         assert got == want
-        assert triangle_counts_local(df, max_edges=1) is None
-        assert triangle_counts_local(df, max_wedges=1) is None
+    # the wedge cap first (the edge gate still passes), then the edge cap
+    local_caps(TRIANGLE_WEDGES=1)
+    assert all(triangle_counts_local(df) is None for df in dfs)
+    local_caps(TRIANGLE_EDGES=1)
+    assert all(triangle_counts_local(df) is None for df in dfs)
 
 
 def test_triangle_count_spark_matches_duckdb(spark):

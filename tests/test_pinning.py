@@ -225,7 +225,7 @@ def test_pin_ctes_unknown_name_raises(spark):
     assert seen == []
 
 
-def test_pinned_runners_run_concurrently(spark):
+def test_pinned_runners_run_concurrently(spark, local_caps):
     """Pinned grid runners running at once in one session, on two
     threads and over different inputs, return exactly their serial
     results — no shared view names for one call to overwrite."""
@@ -244,14 +244,14 @@ def test_pinned_runners_run_concurrently(spark):
         pdf["is_src"] = (rng.random(1500) < 0.03).astype(int)
         return spark.createDataFrame(pdf)
 
+    local_caps(GRID_CELLS=0)    # the distributed chain pins relations
     a, b = points(5, 12), points(6, 7)
     runs = [(grid_distance_transform, a), (grid_cost_distance, b),
             (grid_distance_transform, b), (grid_cost_distance, a)]
 
     def run(job):
         op, pts = job
-        return sorted(map(tuple, op(pts, rounds=4,
-                                    local_iterate=False).collect()))
+        return sorted(map(tuple, op(pts, rounds=4).collect()))
 
     serial = [run(j) for j in runs]
     with ThreadPoolExecutor(2) as ex:

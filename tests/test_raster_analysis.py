@@ -462,7 +462,8 @@ def test_cost_distance_matches_dijkstra_reference(spark):
     assert got[(5, 1)] == got[(4, 0)] + 3
 
 
-def test_grid_runners_local_iterate_matches_distributed(spark):
+def test_grid_runners_driver_iterate_matches_distributed(spark,
+                                                        local_caps):
     """The r6 bounded-grid driver iterate (auto-gated on the exact cell
     count) is row-identical to the distributed join-per-round chain for
     all three grid runners — the same recurrence, two engines.  The
@@ -481,13 +482,14 @@ def test_grid_runners_local_iterate_matches_distributed(spark):
     pdf["is_src"] = (rng.random(3000) < 0.03).astype(int)
     pts = spark.createDataFrame(pdf)
 
-    for op, args in ((grid_distance_transform, {"rounds": 5}),
-                     (grid_cost_distance, {"rounds": 5}),
-                     (grid_flow_accumulation, {"rounds": 5, "k": 30})):
-        a = sorted(map(tuple, op(pts, local_iterate=True,
-                                 **args).collect()))
-        b = sorted(map(tuple, op(pts, local_iterate=False,
-                                 **args).collect()))
+    runs = ((grid_distance_transform, {"rounds": 5}),
+            (grid_cost_distance, {"rounds": 5}),
+            (grid_flow_accumulation, {"rounds": 5, "k": 30}))
+    driver = [sorted(map(tuple, op(pts, **args).collect()))
+              for op, args in runs]
+    local_caps(0)
+    for (op, args), a in zip(runs, driver):
+        b = sorted(map(tuple, op(pts, **args).collect()))
         assert a == b and a, op.__name__
 
 

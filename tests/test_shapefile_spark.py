@@ -313,3 +313,34 @@ def test_unknown_record_count_read(spark, tmp_path):
     os.remove(gbase + ".shx")
     bare = read_shapefile_df(spark, gbase).collect()
     assert [r.fid for r in bare] == [r.fid for r in with_shx] == list(range(1, 8))
+
+
+def test_missing_shapefile_raises(spark, tmp_path):
+    """A path with no .shp/.shx/.dbf, or a zip basename matching no
+    member, raises instead of reading as a 0-row frame; a lone .shp
+    (every other component absent) still reads."""
+    import zipfile
+
+    import numpy as np
+
+    from go_shapefile_spark.sources.shapefile_core import ShapefileError
+    from go_shapefile_spark.sources.shapefile_writer import write_points
+
+    with pytest.raises(ShapefileError, match="no .shp, .shx or .dbf"):
+        read_shapefile_df(spark, str(tmp_path / "no_such_file"))
+    with pytest.raises(ShapefileError, match="no .shp, .shx or .dbf"):
+        read_shapefile_df(spark, str(tmp_path / "no_such_file"),
+                          flat_points=True)
+
+    base = str(tmp_path / "pts")
+    write_points(base, np.arange(5.0), np.arange(5.0))
+    zpath = str(tmp_path / "pts.zip")
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for ext in ("shp", "shx"):
+            zf.write(f"{base}.{ext}", f"pts.{ext}")
+    assert read_shapefile_df(spark, zpath, basename="pts").count() == 5
+    with pytest.raises(ShapefileError, match="other"):
+        read_shapefile_df(spark, zpath, basename="other")
+
+    os.remove(base + ".shx")
+    assert read_shapefile_df(spark, base).count() == 5

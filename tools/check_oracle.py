@@ -4,7 +4,10 @@ Runs each ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same parquet tables, then compares row count, sorted
 column names, and order-insensitive per-column values.
 
-Usage: python tools/check_oracle.py [query ...] [--sf-dir DIR]
+``--distributed`` sets every ``operators.local`` cap to 0, so each
+operator with a driver-local finish replays its distributed path.
+
+Usage: python tools/check_oracle.py [query ...] [--sf-dir DIR] [--distributed]
 """
 
 from __future__ import annotations
@@ -73,7 +76,12 @@ def main() -> int:
             sf_dir = a.split("=", 1)[1]
 
     import __spark_entry__ as entry
+    from go_shapefile_spark.operators import local
     from go_shapefile_spark.session import get_spark
+
+    if "--distributed" in sys.argv[1:]:
+        for cap in local.CAPS:
+            setattr(local, cap, 0)
 
     queries = entry.queries()
     oracles = entry.oracle_sql()

@@ -43,8 +43,8 @@ def entry(spark: SparkSession) -> DataFrame:
     countries_zip = "/root/reference/testdata/110m-admin-0-countries.zip"
     if os.path.exists(countries_zip):
         features = read_shapefile_df(spark, countries_zip)
-        # cover builds distributed (mapInPandas over polygons) — nothing
-        # is collected to the driver
+        # 177 countries are within local.COVER_FEATURES: one bounded
+        # collect, the cover builds on the driver
         cover = PreparedCover.from_features(
             features.select("fid", "geometry"), res=6)
         names = features.select("fid", "NAME")

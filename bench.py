@@ -117,8 +117,8 @@ def headline_job(spark, points_path: str, cover=None) -> int:
 
 
 def build_cover(spark):
-    """Session index artifact: distributed cover build from the countries
-    shapefile (no .collect() of polygons on the driver)."""
+    """Session index artifact: cover build from the countries shapefile
+    (within local.COVER_FEATURES, so built on the driver)."""
     from go_shapefile_spark.operators.spatial_join import PreparedCover
     from go_shapefile_spark.sources.shapefile import read_shapefile_df
     features = read_shapefile_df(spark, COUNTRIES_ZIP)

@@ -1,16 +1,28 @@
-"""The one bounded-local seam: when an iterative operator finishes on
-the driver instead of on the cluster.
+"""The one bounded-local seam: when an operator finishes on the driver
+instead of on the cluster.
 
 An operator that knows the EXACT size of its remaining work (a
-convergence checksum, a 1-row agg on a pinned relation) finishes with
-one bounded Arrow collect plus vectorized numpy when that size is
-within its cap; at that size the distributed rounds are pure job
-latency.  Larger inputs keep the distributed path, so the collected
-bytes are bounded by the cap at any input scale.
+convergence checksum, a 1-row agg on a pinned relation, a bounded
+collect) finishes with one bounded Arrow collect plus vectorized numpy
+when that size is within its cap; at that size the distributed rounds
+are pure job latency.  Larger inputs keep the distributed path, so the
+collected bytes are bounded by the cap at any input scale.
 
 Sizing rule: driver numpy is SINGLE-THREADED, so a cap must keep the
 numpy pass small next to the shuffle latency it removes (a viewshed
 evaluator lost 2x to the parallel SQL path that way and was reverted).
+
+``COVER_FEATURES`` follows it.  The driver cell cover of ~400-vertex
+polygons at res 8 costs ~3.2 ms of numpy per polygon (0.65 s for 180,
+19,439 cover rows), against ~1.2 s of job latency it removes from the
+distributed mapInPandas build (9 jobs -> 1).  Cover build plus one
+per-polygon join count over 200k points, local[4], range of warm runs:
+180 polygons 3.3-4.7 s driver vs 5.2-6.2 s distributed, 350 3.3-4.1 vs
+3.9-4.6, 500 3.7-4.1 vs 4.0-4.6, 1,000 6.9-7.5 vs 5.0-6.0 — so the cap
+sits at the 500-polygon break-even.
+
+``BROADCAST_ROWS`` bounds the cover a join broadcasts: a bigger cover
+joins by shuffling both sides on ``cell``.
 
 The caps are read at call time; setting every name in :data:`CAPS` to
 0 sends every operator down its distributed path.
@@ -22,8 +34,11 @@ CC_EDGES = 2_000_000          # connected_components live edges (~32 MB)
 GRID_CELLS = 1_000_000        # distance / cost / flow occupied grid cells
 TRIANGLE_EDGES = 2_000_000    # triangle_counts distinct edges
 TRIANGLE_WEDGES = 25_000_000  # ... and oriented wedges, from degrees
+COVER_FEATURES = 500          # polygons whose cell cover builds on the driver
+BROADCAST_ROWS = 4_000_000    # cover rows a spatial join still broadcasts
 
-CAPS = ("CC_EDGES", "GRID_CELLS", "TRIANGLE_EDGES", "TRIANGLE_WEDGES")
+CAPS = ("CC_EDGES", "GRID_CELLS", "TRIANGLE_EDGES", "TRIANGLE_WEDGES",
+        "COVER_FEATURES", "BROADCAST_ROWS")
 
 
 def within(n: int, cap: int) -> bool:

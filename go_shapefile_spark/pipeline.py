@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.lineage import LineageLog, run_stage, stage_output
-from .operators.spatial_join import polygon_cell_cover, spatial_join
+from .operators.spatial_join import PreparedCover, spatial_join_prepared
 
 STAGE_JOIN = "spatial_join"
 
@@ -37,13 +37,12 @@ def spatial_pipeline(spark: SparkSession, points_for_bucket: Callable[[int], Dat
     skipped — pass ``lineage.input_snapshot_id(...)`` of the point table
     so input changes invalidate the resume)."""
     lineage = LineageLog(f"{out_root}/_lineage")
-    cover = polygon_cell_cover(polygons, res, with_edges=True)
+    cover = PreparedCover(spark, polygons, res)
 
     def build(key: str) -> DataFrame:
         pts = points_for_bucket(int(key))
-        joined = spatial_join(spark, pts, polygons, res=res,
-                              lon_col=lon_col, lat_col=lat_col,
-                              cover_pdf=cover)
+        joined = spatial_join_prepared(pts, cover, lon_col=lon_col,
+                                       lat_col=lat_col)
         # partial per-polygon counts: the durable unit is small and the
         # final rollup never touches point-level rows again
         return joined.groupBy("polygon_fid").agg(

@@ -708,6 +708,26 @@ def _arrow_split_batch(plan: ShapefilePlan, fid_start: int, fid_end: int,
     return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
+def _scan_splits(spark: SparkSession, bounds: list[tuple[int, int]],
+                 schema: T.StructType, read_split) -> DataFrame:
+    """One task per fid range: ``mapInArrow`` over ``spark.range`` with
+    one id per partition, each task reading ``bounds[id]`` through
+    ``read_split(fid_start, fid_end)`` → RecordBatch.  The split rows
+    are JVM-generated — no Python-built split frame, no shuffle — and
+    partition i reads split i, so rows come back in fid order."""
+    bounds = [(int(a), int(b)) for a, b in bounds]
+
+    def parse(batches):
+        for rb in batches:
+            for i in rb.column("id").to_pylist():
+                out = read_split(*bounds[i])
+                if out.num_rows:
+                    yield out
+
+    k = len(bounds)
+    return spark.range(0, k, 1, k).mapInArrow(parse, schema=schema)
+
+
 def read_shapefile_df(spark: SparkSession, path: str, options: dict | None = None,
                       basename: str | None = None,
                       target_records_per_split: int = 100_000,
@@ -775,27 +795,15 @@ def read_shapefile_df(spark: SparkSession, path: str, options: dict | None = Non
         bounds = [(1, n + 1)]
         can_pretest = False
 
-    splits_df = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in bounds], "fid_start long, fid_end long")
-
     from pyspark.sql.pandas.types import to_arrow_schema
     arrow_schema = to_arrow_schema(schema)
     window = None if bbox is None else tuple(float(v) for v in bbox)
     pretest = window is not None and can_pretest
+    bbox_fn = (lambda buf, rel: _bbox_window_mask(buf, rel, window)) \
+        if pretest else None
 
-    def parse(batches):
-        bbox_fn = (lambda buf, rel: _bbox_window_mask(buf, rel, window)) \
-            if pretest else None
-        for rb in batches:
-            for a, b in zip(rb.column("fid_start").to_pylist(),
-                            rb.column("fid_end").to_pylist()):
-                out = _arrow_split_batch(plan, int(a), int(b), arrow_schema,
-                                         bbox_mask_fn=bbox_fn)
-                if out.num_rows:
-                    yield out
-
-    ndf = splits_df.repartition(len(bounds), "fid_start")
-    df = ndf.mapInArrow(parse, schema=schema)
+    df = _scan_splits(spark, bounds, schema, lambda a, b: _arrow_split_batch(
+        plan, a, b, arrow_schema, bbox_mask_fn=bbox_fn))
     if window is not None and not pretest:
         qx0, qy0, qx1, qy1 = window
         df = df.where((F.col("bbox.xmax") >= qx0) &
@@ -1031,23 +1039,10 @@ def _read_points_flat(spark: SparkSession, plan: ShapefilePlan,
         # unknown count (no SHX/DBF) → single sequential split with the
         # same large-sentinel fallback as read_shapefile_df
         bounds = sequential_split_bounds(plan, target_records_per_split)
-    splits_df = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in bounds], "fid_start long, fid_end long")
-
     from pyspark.sql.pandas.types import to_arrow_schema
     arrow_schema = to_arrow_schema(schema)
-
-    def parse(batches):
-        for rb in batches:
-            for a, b in zip(rb.column("fid_start").to_pylist(),
-                            rb.column("fid_end").to_pylist()):
-                out = _arrow_points_flat_batch(plan, int(a), int(b),
-                                               arrow_schema)
-                if out.num_rows:
-                    yield out
-
-    return splits_df.repartition(len(bounds), "fid_start") \
-        .mapInArrow(parse, schema=schema)
+    return _scan_splits(spark, bounds, schema, lambda a, b:
+                        _arrow_points_flat_batch(plan, a, b, arrow_schema))
 
 
 def file_metadata(path: str, options: dict | None = None,

@@ -253,6 +253,54 @@ def test_vectorized_polyline_kernel_parity(spark, tmp_path, monkeypatch):
         assert row.shape_type == 3
 
 
+def _job_count(spark, action) -> int:
+    """Spark jobs started by ``action()``, counted under its own job
+    group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_scan_is_one_job_in_fid_order(spark, tmp_path):
+    """Splits come from ``spark.range``, one per task, with no shuffle:
+    counting a one-split file runs exactly one Spark job, and a 3-split
+    read returns the same fids in the same order as a single-split read
+    (flat-point path too)."""
+    import numpy as np
+
+    from go_shapefile_spark.sources.shapefile_writer import (write_points,
+                                                             write_polygons)
+
+    ring = [0.0, 0.0, 0.0, 1.0, 1.0, 1.0, 1.0, 0.0, 0.0, 0.0]
+    base = str(tmp_path / "sq")
+    write_polygons(base, [{"coords": [v + i for v in ring], "ends": [10]}
+                          for i in range(10)])
+    assert _job_count(spark, read_shapefile_df(spark, base).count) == 1
+
+    whole = read_shapefile_df(spark, base).collect()
+    split = read_shapefile_df(spark, base, target_records_per_split=4)
+    assert split.rdd.getNumPartitions() == 3
+    split = split.collect()
+    assert [r.fid for r in split] == [r.fid for r in whole] == \
+        list(range(1, 11))
+    assert [r.bbox.xmin for r in split] == [float(i) for i in range(10)]
+
+    pbase = str(tmp_path / "pts")
+    write_points(pbase, np.arange(10.0), np.arange(10.0))
+    flat = read_shapefile_df(spark, pbase, flat_points=True,
+                             target_records_per_split=4)
+    assert flat.rdd.getNumPartitions() == 3
+    assert [(r.fid, r.x) for r in flat.collect()] == \
+        [(i + 1, float(i)) for i in range(10)]
+
+
 def test_read_shapefile_df_bbox_window(spark, ref_testdata):
     """bbox window on the function front door: pre-decode pushdown on the
     SHX path, post-parse filter on zips — identical rows either way, and

@@ -145,20 +145,12 @@ def test_knn_no_python_udf(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_distributed_cover_matches_driver_cover(spark):
-    """PreparedCover.from_features (mapInPandas build, no driver collect)
-    must produce the same join output as the driver-side PreparedCover."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from go_shapefile_spark.operators.geotag import with_lonlat_jvm
-    from go_shapefile_spark.operators.spatial_join import (
-        PreparedCover, spatial_join_prepared)
-
-    rng = np.random.default_rng(21)
+def _rect_features(spark, n=8, seed=21):
+    """``n`` random lon/lat rectangles as polygon dicts and as a
+    (fid, geometry) features DataFrame."""
+    rng = np.random.default_rng(seed)
     polys, rows = [], []
-    for fid in range(8):
+    for fid in range(n):
         x0 = float(rng.uniform(-160, 110))
         y0 = float(rng.uniform(-70, 40))
         w, h = float(rng.uniform(15, 45)), float(rng.uniform(10, 30))
@@ -169,11 +161,27 @@ def test_distributed_cover_matches_driver_cover(spark):
     features = spark.createDataFrame(
         rows, "fid long, geometry struct<layout:string, "
               "coords:array<double>, ends:array<int>, rings:array<int>>")
+    return polys, features
+
+
+def test_distributed_cover_matches_driver_cover(spark, local_caps):
+    """PreparedCover.from_features (mapInPandas build, no driver collect)
+    must produce the same join output as the driver-side PreparedCover."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from go_shapefile_spark.operators.geotag import with_lonlat_jvm
+    from go_shapefile_spark.operators.spatial_join import (
+        PreparedCover, spatial_join_prepared)
+
+    polys, features = _rect_features(spark)
     pts = with_lonlat_jvm(
         spark.range(20000).select(F.col("id").alias("idx"),
                                   F.xxhash64("id").alias("phash")))
 
     driver_cover = PreparedCover(spark, polys, res=6)
+    local_caps(COVER_FEATURES=0)   # 8 features would build on the driver
     dist_cover = PreparedCover.from_features(features, res=6)
     assert dist_cover.broadcast is True
     a = (spatial_join_prepared(pts, driver_cover,
@@ -186,11 +194,68 @@ def test_distributed_cover_matches_driver_cover(spark):
     assert len(a) > 0
 
     # past the broadcast threshold the join flips to shuffle-on-cell
-    small = PreparedCover.from_features(features, res=6, max_broadcast_rows=1)
+    local_caps(BROADCAST_ROWS=1)
+    small = PreparedCover.from_features(features, res=6)
     assert small.broadcast is False
-    c = (spatial_join_prepared(pts, small, keep_cols=["idx", "polygon_fid"])
-         .toPandas().sort_values(["idx", "polygon_fid"]).reset_index(drop=True))
+    shuffled = spatial_join_prepared(pts, small,
+                                     keep_cols=["idx", "polygon_fid"])
+    c = (shuffled.toPandas().sort_values(["idx", "polygon_fid"])
+         .reset_index(drop=True))
     pd.testing.assert_frame_equal(a, c)
+    plan = shuffled._jdf.queryExecution().executedPlan().toString()
+    assert "ShuffledHashJoin" in plan and "BroadcastHashJoin" not in plan
+
+
+def test_small_polygon_side_covers_on_driver(spark, local_caps):
+    """Within local.COVER_FEATURES, from_features builds the cover on the
+    driver: full / narrow / wide are bare LocalRelations (columns named
+    in pandas, no Project to plan through on every join), and the join
+    equals the distributed build's."""
+    from go_shapefile_spark.operators.geotag import with_lonlat_jvm
+    from go_shapefile_spark.operators.spatial_join import (
+        PreparedCover, spatial_join_prepared)
+
+    _, features = _rect_features(spark)
+    # a dense 240-vertex ring puts > UNROLL_K clipped edges in some cells
+    t = np.linspace(0, 2 * np.pi, 241)
+    ring = np.column_stack([30 + 25 * np.cos(-t), 10 + 25 * np.sin(-t)])
+    features = features.unionByName(spark.createDataFrame(
+        [(99, {"layout": "XY", "coords": ring.ravel().tolist(),
+               "ends": [482], "rings": [1]})], features.schema))
+
+    cover = PreparedCover.from_features(features, res=4)
+    assert cover.broadcast is True
+    for side in ("full", "narrow", "wide"):
+        df = getattr(cover, side)
+        assert df is not None, side
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.nodeName() == "LocalRelation", (side, plan.toString())
+
+    pts = with_lonlat_jvm(
+        spark.range(20000).select(F.col("id").alias("idx"),
+                                  F.xxhash64("id").alias("phash")))
+    a = (spatial_join_prepared(pts, cover, keep_cols=["idx", "polygon_fid"])
+         .toPandas().sort_values(["idx", "polygon_fid"]).reset_index(drop=True))
+    local_caps(COVER_FEATURES=0)
+    dist = PreparedCover.from_features(features, res=4)
+    assert dist.narrow.columns == cover.narrow.columns
+    b = (spatial_join_prepared(pts, dist, keep_cols=["idx", "polygon_fid"])
+         .toPandas().sort_values(["idx", "polygon_fid"]).reset_index(drop=True))
+    pd.testing.assert_frame_equal(a, b)
+    assert a["polygon_fid"].eq(99).any()
+
+
+def test_empty_polygon_side_joins_nothing(spark):
+    """An empty features frame (e.g. a bbox read that prunes the whole
+    file) builds an empty driver cover, and the join returns no rows."""
+    from go_shapefile_spark.operators.spatial_join import (
+        PreparedCover, spatial_join_prepared)
+
+    _, features = _rect_features(spark)
+    cover = PreparedCover.from_features(features.where("fid < 0"), res=6)
+    assert cover.narrow is None and cover.wide is None
+    pts = spark.createDataFrame(_points(100))
+    assert spatial_join_prepared(pts, cover).count() == 0
 
 
 def test_knn_exact_plan_no_cartesian(spark):

@@ -104,10 +104,17 @@ def main() -> None:
     sections.append(("Parquet pushdown/pruning", checks, formatted(li)))
 
     # distributed-cover join: same predicate shape, cover built via
-    # mapInPandas (no driver collect), then broadcast
+    # mapInPandas (no driver collect), then broadcast — forced, since
+    # 177 countries are within local.COVER_FEATURES
+    from go_shapefile_spark.operators import local
     from go_shapefile_spark.operators.spatial_join import (
         PreparedCover, spatial_join_prepared)
-    cover = PreparedCover.from_features(feats.select("fid", "geometry"), res=7)
+    cap, local.COVER_FEATURES = local.COVER_FEATURES, 0
+    try:
+        cover = PreparedCover.from_features(feats.select("fid", "geometry"),
+                                            res=7)
+    finally:
+        local.COVER_FEATURES = cap
     joined2 = spatial_join_prepared(pts, cover,
                                     keep_cols=["idx", "polygon_fid"])
     plan = audit.executed_plan(joined2)

@@ -36,12 +36,13 @@ def point_in_polygon(px: np.ndarray, py: np.ndarray,
     for x, y in rings_of(np.asarray(coords, dtype=np.float64), ends, stride):
         x1, y1 = x[:-1], y[:-1]
         x2, y2 = x[1:], y[1:]
-        # for each point, edges whose y-span straddles the point's y
-        straddle = (y1[None, :] > py[:, None]) != (y2[None, :] > py[:, None])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xs = x1[None, :] + (py[:, None] - y1[None, :]) / \
-                (y2[None, :] - y1[None, :]) * (x2[None, :] - x1[None, :])
-        crossings = (straddle & (px[:, None] < xs)).sum(axis=1)
+        # for each point, edges whose y-span straddles the point's y; the
+        # crossing abscissa is computed for those pairs only (a few per
+        # point), so no division ever sees y1 == y2
+        pi, ei = np.nonzero(
+            (y1[None, :] > py[:, None]) != (y2[None, :] > py[:, None]))
+        xs = x1[ei] + (py[pi] - y1[ei]) / (y2 - y1)[ei] * (x2 - x1)[ei]
+        crossings = np.bincount(pi[px[pi] < xs], minlength=len(px))
         inside ^= (crossings % 2).astype(bool)
     return inside
 

@@ -26,6 +26,11 @@ from pyspark.sql import functions as F
 from ..functions import cells as C
 from ..functions import geom_np as G
 
+# Edge columns the rasterizer's widest unrolled predicate reads.  Its
+# predicate runs in a Filter over the exploded pixel stage, not in a
+# join condition; tiered at 6/24 it measured 2x faster than one width.
+RASTER_UNROLL_K = 24
+
 
 def tile_counts(points: DataFrame, res: int, lon_col: str = "lon",
                 lat_col: str = "lat", extra_aggs: list | None = None) -> DataFrame:
@@ -297,8 +302,7 @@ def rasterize_cover(cover: DataFrame, res: int, tile_px: int = 16,
       the interpreted aggregate() form (rare boundary-dense tiles).
     """
     from .spatial_join import (
-        UNROLL_K, _crossing_filter_sql, _crossing_filter_unrolled_sql,
-    )
+        aggregate_crossings_sql, parity_sql, unrolled_crossings_sql)
 
     t = tile_px
     n = 1 << res
@@ -329,7 +333,7 @@ def rasterize_cover(cover: DataFrame, res: int, tile_px: int = 16,
     # would be ~200 py4j round trips — ~0.5 s of driver latency per call)
     ecols = [f"try_element_at(try_element_at(edges, {j + 1}), {c + 1}) "
              f"AS e{j}_{x}"
-             for j in range(UNROLL_K)
+             for j in range(RASTER_UNROLL_K)
              for c, x in enumerate(("ax", "ay", "bx", "by"))]
     # ONE scan of the cover (no per-branch union, which would re-run the
     # cover build once per branch): spread tiles across tasks — cover rows
@@ -341,17 +345,21 @@ def rasterize_cover(cover: DataFrame, res: int, tile_px: int = 16,
             .selectExpr("cell", "polygon_fid", "full", "rx", "ry",
                         "ref_inside", "lon0", "lat0",
                         "size(edges) AS n_edges", "edges", *ecols))
-    # tiered unroll (r6): NaN-padded terms contribute zero crossings but
-    # still COST ~8 flops each per pixel, so sparse cells (the common
-    # case — a small feature clips to a handful of edges) take a 6-term
-    # predicate instead of paying all 24 (rasterize_200k: most pixels
-    # run 4-edge cells; the short form is value-identical on n_edges ≤ 6
-    # because the padded tail is exactly the terms being dropped)
-    keep = (f"full OR (CASE WHEN n_edges <= 6 "
-            f"THEN {_crossing_filter_unrolled_sql('cx', 'cy', 6)} "
-            f"WHEN n_edges <= {UNROLL_K} "
-            f"THEN {_crossing_filter_unrolled_sql('cx', 'cy', UNROLL_K)} "
-            f"ELSE {_crossing_filter_sql('cx', 'cy')} END)")
+    # tiered unroll (r6): NULL-padded terms (try_element_at past the
+    # edge list) contribute zero crossings but still COST ~8 flops each
+    # per pixel, so sparse cells (the common case — a small feature
+    # clips to a handful of edges) take a 6-term predicate instead of
+    # paying all 24 (rasterize_200k: most pixels run 4-edge cells; the
+    # short form is value-identical on n_edges ≤ 6 because the padded
+    # tail is exactly the terms being dropped)
+    def inside(crossings: str) -> str:
+        return parity_sql("ref_inside", crossings)
+
+    keep = (f"full OR (CASE WHEN n_edges <= 6 THEN "
+            f"{inside(unrolled_crossings_sql('cx', 'cy', 'rx', 'ry', 6, 'e'))} "
+            f"WHEN n_edges <= {RASTER_UNROLL_K} THEN "
+            f"{inside(unrolled_crossings_sql('cx', 'cy', 'rx', 'ry', RASTER_UNROLL_K, 'e'))} "
+            f"ELSE {inside(aggregate_crossings_sql('cx', 'cy', 'rx', 'ry', 'edges'))} END)")
     return (pixels(base).where(F.expr(keep))
             .selectExpr("cell", "polygon_fid AS fid", "px", "py"))
 

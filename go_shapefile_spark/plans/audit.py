@@ -8,7 +8,10 @@ accidental Python UDF creeps into a JVM-only operator.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import re
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 def executed_plan(df: DataFrame) -> str:
@@ -61,3 +64,40 @@ def in_wholestage_codegen(df: DataFrame) -> bool:
     """Codegen'd operators print as '*(n) Op' in the executed plan."""
     plan = executed_plan(df)
     return "WholeStageCodegen" in plan or "*(" in plan
+
+
+HUGE_METHOD_BYTES = 8000   # HotSpot does not JIT a larger method
+
+
+@contextmanager
+def aqe_off(spark: SparkSession):
+    """AQE off inside the block, the previous setting restored after:
+    the codegen checks below read the executed plan, and AQE's initial
+    plan has no codegen stages yet."""
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def broadcast_joins_in_codegen(df: DataFrame) -> bool:
+    """Every BroadcastHashJoin of the executed plan prints as
+    '*(n) BroadcastHashJoin', i.e. runs inside whole-stage codegen.
+    Read with AQE off: AQE's initial plan has no codegen stages yet."""
+    joins = [ln for ln in executed_plan(df).splitlines()
+             if "BroadcastHashJoin" in ln]
+    return bool(joins) and all(
+        re.search(r"\*\(\d+\) BroadcastHashJoin", ln) for ln in joins)
+
+
+def max_generated_method_bytes(df: DataFrame) -> int:
+    """The largest generated method, in bytecode bytes, over the
+    executed plan's whole-stage codegen subtrees (compiles them)."""
+    debug = df.sparkSession.sparkContext._jvm \
+        .org.apache.spark.sql.execution.debug.package
+    stats = debug.codegenStringSeq(df._jdf.queryExecution().executedPlan())
+    return max((stats.apply(i)._3().maxMethodCodeSize()
+                for i in range(stats.size())), default=0)

@@ -1925,15 +1925,8 @@ def zonal_image_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_tables(spark, sf_dir)
     imgs = spark.read.parquet(_ensure_images_gate(spark))
-    # pin the decoded point relation (r6): the engine's two-branch
-    # spatial join (full-cell + narrow-cell) scans its point side
-    # twice, and unpinned each scan re-runs BOTH Python stages (the
-    # decode mapInPandas and the geotag) plus their image_id join —
-    # measured 5.0 s → 2.0 s for the gate.  The pin is tiny (one row
-    # per image, five scalar columns)
-    pin = _fresh_checkpoints(spark, "zonal_image_stats")
-    pts = pin(geotag_images(imgs.select("image_id", "phash", "fmt"))
-              .join(image_pixel_sums(imgs), "image_id"))
+    pts = (geotag_images(imgs.select("image_id", "phash", "fmt"))
+           .join(image_pixel_sums(imgs), "image_id"))
     rect_rows = spark.sql(
         f"WITH {nation_rects_cte(SPARK)} SELECT * FROM rects").collect()
     polygons = []

@@ -47,8 +47,9 @@ def streaming_spatial_join_counts(spark: SparkSession, source_dir: str,
                                   id_col: str = "event_id") -> DataFrame:
     """Streaming twin of the headline spatial join: readStream → JVM
     geotag → Morton cell → stream-static broadcast join against a
-    PreparedCover (full/unrolled/wide branches all work on streams —
-    stream-static equi-joins are stateless) → per-polygon counts.
+    PreparedCover (its one codegen'd join and the depth-cap ``wide``
+    join both work on streams — stream-static equi-joins are stateless)
+    → per-polygon counts.
 
     The aggregation keyed on polygon_fid is the only stateful operator;
     with a complete-mode sink a streaming backfill equals the batch

@@ -55,6 +55,37 @@ def convex_polygon(draw):
     return ring
 
 
+def _pip_dense(px, py, ring):
+    """The dense ray cast: every edge's crossing abscissa for every
+    point, then masked — the reference ``G.point_in_polygon`` (which
+    computes it for straddling pairs only) must equal bit for bit."""
+    x, y = ring[0::2], ring[1::2]
+    x1, y1, x2, y2 = x[:-1], y[:-1], x[1:], y[1:]
+    straddle = (y1[None, :] > py[:, None]) != (y2[None, :] > py[:, None])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xs = x1[None, :] + (py[:, None] - y1[None, :]) / \
+            (y2[None, :] - y1[None, :]) * (x2[None, :] - x1[None, :])
+    return ((straddle & (px[:, None] < xs)).sum(axis=1) % 2).astype(bool)
+
+
+@given(st.lists(st.tuples(st.integers(-20, 20), st.integers(-20, 20)),
+                min_size=3, max_size=30),
+       st.lists(st.tuples(st.integers(-42, 42), st.integers(-42, 42)),
+                min_size=1, max_size=60),
+       st.floats(min_value=0.1, max_value=3.0))
+@settings(max_examples=200, deadline=None)
+def test_point_in_polygon_matches_dense_ray_cast(verts, points, scale):
+    """Any ring (self-intersecting, horizontal edges, repeated vertices)
+    and points on its vertices, edges and grid lines: same parity as the
+    dense ray cast."""
+    ring = np.array([c for v in verts + verts[:1] for c in v]) * scale
+    px = np.array([p[0] for p in points]) * scale / 2
+    py = np.array([p[1] for p in points]) * scale / 2
+    np.testing.assert_array_equal(
+        G.point_in_polygon(px, py, ring, [len(ring)]),
+        _pip_dense(px, py, ring))
+
+
 def _on_boundary(px, py, ring, eps=1e-12):
     """True where (px,py) lies exactly on a ring edge (or vertex) — the
     measure-zero set where inside/outside is convention-dependent and the
@@ -118,7 +149,7 @@ def _segments_cross(rx, ry, px, py, ax, ay, bx, by) -> int:
     d2 = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
     d3 = (px - rx) * (ay - ry) - (py - ry) * (ax - rx)
     d4 = (px - rx) * (by - ry) - (py - ry) * (bx - rx)
-    # half-open sign rule — must match _crossing_filter_unrolled_sql
+    # half-open sign rule — must match spatial_join._crossing_sql
     return 1 if ((d1 > 0) != (d2 > 0) and (d3 > 0) != (d4 > 0)) else 0
 
 

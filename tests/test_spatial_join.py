@@ -73,14 +73,13 @@ def test_spatial_join_res_invariance(spark, countries):
     pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
 
 
-def test_jvm_and_pandas_methods_agree(spark, countries):
+def test_jvm_join_agrees_with_bruteforce(spark, countries):
     pts = _points(1200, seed=21)
     points_df = spark.createDataFrame(pts)
-    a = (spatial_join(spark, points_df, countries, res=6, method="jvm")
+    a = (spatial_join(spark, points_df, countries, res=6)
          .select("id", "polygon_fid").toPandas()
          .sort_values(["id", "polygon_fid"]).reset_index(drop=True))
-    b = (spatial_join(spark, points_df, countries, res=6, method="pandas")
-         .select("id", "polygon_fid").toPandas()
+    b = (spatial_join_bruteforce(pts, countries)[["id", "polygon_fid"]]
          .sort_values(["id", "polygon_fid"]).reset_index(drop=True))
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
@@ -88,7 +87,7 @@ def test_jvm_and_pandas_methods_agree(spark, countries):
 def test_jvm_join_plan_is_python_free(spark, countries):
     from go_shapefile_spark.plans.audit import assert_no_python_udf
     pts = spark.createDataFrame(_points(100))
-    joined = spatial_join(spark, pts, countries[:30], res=6, method="jvm")
+    joined = spatial_join(spark, pts, countries[:30], res=6)
     assert_no_python_udf(joined)
 
 
@@ -206,30 +205,53 @@ def test_distributed_cover_matches_driver_cover(spark, local_caps):
     assert "ShuffledHashJoin" in plan and "BroadcastHashJoin" not in plan
 
 
+def _ring(cx=30.0, cy=10.0, r=25.0, n=240) -> np.ndarray:
+    """A dense ``n``-vertex clockwise ring (flat x, y coords): at res 4
+    its cells hold far more than UNROLL_K clipped edges."""
+    t = np.linspace(0, 2 * np.pi, n + 1)
+    return np.column_stack([cx + r * np.cos(-t), cy + r * np.sin(-t)]).ravel()
+
+
+def _staircase() -> np.ndarray:
+    """A clockwise ring whose downward east edge x = 5.625 runs exactly
+    through (5.625, 2.8125), the depth-1 centre of cell (0..22.5,
+    0..11.25) at res 4; the teeth along y = 1..3 east of it put more
+    than UNROLL_K edges in that cell, so it splits."""
+    ring = [-10.0, 20.0, 5.625, 20.0, 5.625, 1.0]
+    for x in np.arange(12.0, 19.5, 0.5):
+        ring += [x, 1.0, x + 0.25, 3.0]
+    return np.array(ring + [20.0, 1.0, 20.0, -20.0, -10.0, -20.0,
+                            -10.0, 20.0])
+
+
+def _with_polygon(spark, features, fid, coords):
+    return features.unionByName(spark.createDataFrame(
+        [(fid, {"layout": "XY", "coords": [float(c) for c in coords],
+                "ends": [len(coords)], "rings": [1]})], features.schema))
+
+
+def _pairs(df, cols=("idx", "polygon_fid")):
+    return (df.select(*cols).toPandas().sort_values(list(cols))
+            .reset_index(drop=True))
+
+
 def test_small_polygon_side_covers_on_driver(spark, local_caps):
     """Within local.COVER_FEATURES, from_features builds the cover on the
-    driver: full / narrow / wide are bare LocalRelations (columns named
-    in pandas, no Project to plan through on every join), and the join
+    driver: the join relation is a bare LocalRelation (columns named in
+    pandas, no Project to plan through on every join), and the join
     equals the distributed build's."""
     from go_shapefile_spark.operators.geotag import with_lonlat_jvm
     from go_shapefile_spark.operators.spatial_join import (
         PreparedCover, spatial_join_prepared)
 
     _, features = _rect_features(spark)
-    # a dense 240-vertex ring puts > UNROLL_K clipped edges in some cells
-    t = np.linspace(0, 2 * np.pi, 241)
-    ring = np.column_stack([30 + 25 * np.cos(-t), 10 + 25 * np.sin(-t)])
-    features = features.unionByName(spark.createDataFrame(
-        [(99, {"layout": "XY", "coords": ring.ravel().tolist(),
-               "ends": [482], "rings": [1]})], features.schema))
+    features = _with_polygon(spark, features, 99, _ring())
 
     cover = PreparedCover.from_features(features, res=4)
     assert cover.broadcast is True
-    for side in ("full", "narrow", "wide"):
-        df = getattr(cover, side)
-        assert df is not None, side
-        plan = df._jdf.queryExecution().analyzed()
-        assert plan.nodeName() == "LocalRelation", (side, plan.toString())
+    assert cover.full is not None and cover.narrow is not None
+    plan = cover.rows._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "LocalRelation", plan.toString()
 
     pts = with_lonlat_jvm(
         spark.range(20000).select(F.col("id").alias("idx"),
@@ -243,6 +265,190 @@ def test_small_polygon_side_covers_on_driver(spark, local_caps):
          .toPandas().sort_values(["idx", "polygon_fid"]).reset_index(drop=True))
     pd.testing.assert_frame_equal(a, b)
     assert a["polygon_fid"].eq(99).any()
+
+
+def test_split_cover_matches_bruteforce(spark):
+    """Partial cells above UNROLL_K edges split into half-open
+    sub-rectangles; points exactly on split lines of every depth (cell
+    edges among them) and at their crossings land in exactly one."""
+    from go_shapefile_spark.operators.spatial_join import (
+        SPLIT_DEPTH, PreparedCover, join_cover, spatial_join_prepared)
+
+    res = 4
+    polys = [{"fid": 99, "coords": _ring(), "ends": [482]},
+             {"fid": 5, "coords": _ring(40.3, 20.1, 6.0, 90), "ends": [182]}]
+    cover_pdf = join_cover(polys, res)
+    assert np.isfinite(cover_pdf["_sj_x0"]).any()      # some cell split
+    assert cover_pdf["_sj_edges"].isna().all()         # none hit the cap
+
+    # split lines at depth SPLIT_DEPTH are multiples of the cell size
+    # over 2^SPLIT_DEPTH, exact in binary
+    sx = 360.0 / (1 << res) / (1 << SPLIT_DEPTH)
+    sy = 180.0 / (1 << res) / (1 << SPLIT_DEPTH)
+    rng = np.random.default_rng(11)
+    n = 6000
+    on_x = -180.0 + rng.integers(100, 200, n) * sx
+    on_y = -90.0 + rng.integers(80, 200, n) * sy
+    free_x = rng.uniform(0, 60, n)
+    free_y = rng.uniform(-20, 40, n)
+    pts = pd.DataFrame({
+        "idx": np.arange(4 * n, dtype=np.int64),
+        "lon": np.concatenate([on_x, free_x, on_x, free_x]),
+        "lat": np.concatenate([free_y, on_y, on_y, free_y])})
+    got = _pairs(spatial_join_prepared(
+        spark.createDataFrame(pts), PreparedCover(spark, polys, res)))
+    exp = spatial_join_bruteforce(pts, polys)[["idx", "polygon_fid"]] \
+        .sort_values(["idx", "polygon_fid"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    assert len(got) > 1000
+
+
+def test_split_reference_off_edges(spark):
+    """A sub-rectangle centre lying on an edge is not used as its row's
+    reference: there the ray cast that gives the reference its parity
+    and the SQL predicate's sign rule disagree about its side, and the
+    whole sub-rectangle would get the inverted answer."""
+    from go_shapefile_spark.operators.spatial_join import (
+        PreparedCover, join_cover, spatial_join_prepared)
+
+    stairs = _staircase()
+    polys = [{"fid": 6, "coords": stairs, "ends": [len(stairs)]}]
+    cover_pdf = join_cover(polys, 4)
+    assert (cover_pdf["_sj_x1"] == 11.25).any()       # the cell split
+    on_edge = (cover_pdf["_sj_rx"] == 5.625) & (cover_pdf["_sj_ry"] == 2.8125)
+    assert not on_edge.any()
+
+    rng = np.random.default_rng(5)
+    n = 20000
+    pts = pd.DataFrame({"idx": np.arange(n, dtype=np.int64),
+                        "lon": rng.uniform(-5, 25, n),
+                        "lat": rng.uniform(-5, 15, n)})
+    got = _pairs(spatial_join_prepared(
+        spark.createDataFrame(pts), PreparedCover(spark, polys, 4)))
+    exp = spatial_join_bruteforce(pts, polys)[["idx", "polygon_fid"]] \
+        .sort_values(["idx", "polygon_fid"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+
+
+def test_depth_cap_rows_join_through_wide(spark, local_caps):
+    """A vertex shared by more than UNROLL_K edges keeps its sub-rectangle
+    above UNROLL_K at every depth: those rows take the aggregate()
+    ``wide`` path, in both builds, and the join still equals the
+    brute-force PIP."""
+    from go_shapefile_spark.operators.spatial_join import (
+        UNROLL_K, PreparedCover, spatial_join_prepared)
+
+    # six triangular petals around one centre: 12 edges meet there
+    cx, cy = 10.3, 20.7
+    ring = []
+    for a in np.radians(np.arange(0, 360, 60)):
+        ring += [cx, cy,
+                 cx + 5 * np.cos(a - 0.17), cy + 5 * np.sin(a - 0.17),
+                 cx + 5 * np.cos(a + 0.17), cy + 5 * np.sin(a + 0.17)]
+    ring = np.array(ring + [cx, cy])
+    assert 12 > UNROLL_K
+    polys, features = _rect_features(spark)
+    polys.append({"fid": 77, "coords": ring, "ends": [len(ring)]})
+    features = _with_polygon(spark, features, 77, ring)
+
+    rng = np.random.default_rng(4)
+    n = 20000
+    pts = pd.DataFrame({
+        "idx": np.arange(2 * n, dtype=np.int64),
+        "lon": np.concatenate([cx + rng.uniform(-6, 6, n),
+                               rng.uniform(-180, 180, n)]),
+        "lat": np.concatenate([cy + rng.uniform(-6, 6, n),
+                               rng.uniform(-90, 90, n)])})
+    exp = spatial_join_bruteforce(pts, polys)[["idx", "polygon_fid"]] \
+        .sort_values(["idx", "polygon_fid"]).reset_index(drop=True)
+    assert exp["polygon_fid"].eq(77).sum() > 100
+    points = spark.createDataFrame(pts)
+    driver = PreparedCover.from_features(features, res=6)
+    # the driver-built wide side is a bare LocalRelation too
+    plan = driver.wide._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "LocalRelation", plan.toString()
+    local_caps(COVER_FEATURES=0)
+    dist = PreparedCover.from_features(features, res=6)
+    for cover in (driver, dist):
+        assert cover.wide is not None
+        got = _pairs(spatial_join_prepared(points, cover))
+        pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+
+
+def test_null_coordinates_join_nothing(spark):
+    """A NULL lon or lat must not join: ``cell_sql``'s GREATEST/LEAST
+    skip NULLs and clamp the point into an edge cell, where a full cell
+    has no predicate to reject it."""
+    from go_shapefile_spark.operators.spatial_join import (
+        PreparedCover, spatial_join_prepared)
+
+    rect = [150.0, -80.0, 150.0, 80.0, 180.0, 80.0, 180.0, -80.0,
+            150.0, -80.0]
+    cover = PreparedCover(
+        spark, [{"fid": 7, "coords": np.array(rect), "ends": [10]}], res=4)
+    pts = spark.createDataFrame(
+        [(1, None, 10.0), (2, 179.9, None), (3, None, None),
+         (4, 170.0, 10.0)], "idx long, lon double, lat double")
+    got = spatial_join_prepared(pts, cover).select("idx", "polygon_fid")
+    assert [tuple(r) for r in got.collect()] == [(4, 7)]
+
+
+def test_point_columns_named_like_cover_columns(spark):
+    """Point columns named like the cover's layout (``rx``, ``ry``,
+    ``ref_inside``, the sub-rectangle bounds, the edge columns) pass
+    through the join untouched."""
+    polys = [{"fid": 99, "coords": _ring(), "ends": [482]},
+             {"fid": 5, "coords": np.array(
+                 [-20.0, -10.0, -20.0, 5.0, 3.0, 5.0, 3.0, -10.0,
+                  -20.0, -10.0]), "ends": [10]}]
+    pdf = _points(3000, seed=3).rename(columns={"id": "idx"})
+    extra = ["rx", "ry", "ref_inside", "x0", "y1", "full", "edges",
+             "e0_ax", "e0_s"]
+    for i, c in enumerate(extra):
+        pdf[c] = pdf["idx"] * (i + 2)
+    out = spatial_join(spark, spark.createDataFrame(pdf), polys, res=4)
+    assert out.columns == ["cell", *pdf.columns, "polygon_fid"]
+    got = out.toPandas()
+    for i, c in enumerate(extra):
+        assert (got[c] == got["idx"] * (i + 2)).all(), c
+    exp = spatial_join_bruteforce(pdf, polys)[["idx", "polygon_fid"]] \
+        .sort_values(["idx", "polygon_fid"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(
+        got[["idx", "polygon_fid"]].sort_values(["idx", "polygon_fid"])
+        .reset_index(drop=True), exp, check_dtype=False)
+
+
+def test_join_stage_stays_in_codegen(spark, local_caps):
+    """The refine runs inside whole-stage codegen, in a method HotSpot
+    compiles: with AQE off the join is ``*(n) BroadcastHashJoin`` and no
+    generated method exceeds 8,000 bytecode bytes — for both cover
+    builds and a wide point side."""
+    from go_shapefile_spark.operators.geotag import with_lonlat_jvm
+    from go_shapefile_spark.operators.spatial_join import (
+        PreparedCover, spatial_join_prepared)
+    from go_shapefile_spark.plans.audit import (
+        HUGE_METHOD_BYTES, aqe_off, broadcast_joins_in_codegen,
+        max_generated_method_bytes)
+
+    _, features = _rect_features(spark)
+    features = _with_polygon(spark, features, 99, _ring())
+    pts = with_lonlat_jvm(
+        spark.range(1000).select(F.col("id").alias("idx"),
+                                 F.xxhash64("id").alias("phash")))
+    wide_pts = pts.select(
+        "*", *[(F.col("idx") + i).alias(f"c{i}") for i in range(24)])
+    driver = PreparedCover.from_features(features, res=4)
+    local_caps(COVER_FEATURES=0)
+    dist = PreparedCover.from_features(features, res=4)
+    with aqe_off(spark):
+        for cover, points, keep in (
+                (driver, pts, ["idx", "polygon_fid"]),
+                (dist, pts, ["idx", "polygon_fid"]),
+                (driver, wide_pts, [*wide_pts.columns, "polygon_fid"])):
+            joined = spatial_join_prepared(points, cover, keep_cols=keep)
+            assert broadcast_joins_in_codegen(joined), \
+                joined._jdf.queryExecution().executedPlan().toString()
+            assert max_generated_method_bytes(joined) <= HUGE_METHOD_BYTES
 
 
 def test_empty_polygon_side_joins_nothing(spark):

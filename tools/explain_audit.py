@@ -37,6 +37,22 @@ def formatted(df, max_lines: int = 60) -> str:
     return "\n".join(lines[:max_lines])
 
 
+def codegen_checks(spark, build) -> list[tuple[str, bool]]:
+    """The join stage runs compiled: its BroadcastHashJoin sits inside
+    whole-stage codegen and no generated method is too big for HotSpot
+    to JIT.  ``build`` makes the DataFrame with AQE off, whose initial
+    plan would show no codegen stages."""
+    from go_shapefile_spark.plans import audit
+
+    with audit.aqe_off(spark):
+        df = build()
+        return [("BroadcastHashJoin inside whole-stage codegen",
+                 audit.broadcast_joins_in_codegen(df)),
+                (f"largest generated method <= {audit.HUGE_METHOD_BYTES} B",
+                 audit.max_generated_method_bytes(df)
+                 <= audit.HUGE_METHOD_BYTES)]
+
+
 def main() -> None:
     from go_shapefile_spark.operators.geotag import with_lonlat_jvm
     from go_shapefile_spark.operators.knn import knn_radius
@@ -65,6 +81,8 @@ def main() -> None:
     plan = audit.executed_plan(joined)
     checks.append(("BroadcastHashJoin used", "BroadcastHashJoin" in plan))
     checks.append(("no SortMergeJoin", "SortMergeJoin" not in plan))
+    checks += codegen_checks(spark, lambda: spatial_join(
+        spark, pts, polys, res=7, keep_cols=["idx", "polygon_fid"]))
     try:
         audit.assert_no_python_udf(joined)
         checks.append(("no Python nodes", True))
@@ -123,6 +141,8 @@ def main() -> None:
         ("no CartesianProduct/BNLJ",
          "CartesianProduct" not in plan
          and "BroadcastNestedLoopJoin" not in plan),
+        *codegen_checks(spark, lambda: spatial_join_prepared(
+            pts, cover, keep_cols=["idx", "polygon_fid"])),
     ]
     sections.append(("Spatial join against DISTRIBUTED-built cover "
                      "(PreparedCover.from_features)", checks, formatted(joined2)))

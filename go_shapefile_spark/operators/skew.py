@@ -36,13 +36,3 @@ def salted_count(df: DataFrame, key_cols: list[str], n_salts: int = 16,
     return (partial.groupBy(*key_cols)
             .agg(F.sum("_partial_n").alias("n")))
 
-
-def salted_agg(df: DataFrame, key_cols: list[str], n_salts: int,
-               salt_src: str, partial_aggs: list[Column],
-               final_aggs: list[Column]) -> DataFrame:
-    """General two-phase agg: caller supplies decomposable partial/final
-    agg pairs (sum/sum, count/sum, min/min, max/max, ...)."""
-    salt = F.pmod(F.xxhash64(F.col(salt_src)), F.lit(n_salts))
-    partial = (df.withColumn("_salt", salt)
-               .groupBy(*key_cols, "_salt").agg(*partial_aggs))
-    return partial.groupBy(*key_cols).agg(*final_aggs)

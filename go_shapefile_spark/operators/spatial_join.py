@@ -315,8 +315,7 @@ def _cover_arrays(polygons: list[dict], res: int, edge_chunk: int,
     rx = np.where(whole, plon0[owner] + w / 2, (box[:, 0] + box[:, 1]) * 0.5)
     ry = np.where(whole, plat0[owner] + h / 2, (box[:, 2] + box[:, 3]) * 0.5)
     seg = np.concatenate(seg_l)[pe] if seg_l else np.zeros((0, 4))
-    if split_k is not None:
-        _move_refs_off_edges(box, rx, ry, prow, seg)
+    _move_refs_off_edges(box, rx, ry, prow, seg)
 
     # Pass 2, per polygon: ONE pointwise PIP of every reference point —
     # interior cell centres (full or outside) and the partial cells'

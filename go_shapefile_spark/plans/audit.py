@@ -18,10 +18,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def assert_broadcast_join(df: DataFrame) -> None:
     plan = executed_plan(df)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, \
@@ -54,10 +50,6 @@ def assert_pruned_schema(df: DataFrame, max_cols: int) -> None:
             assert n <= max_cols, f"scan reads {n} columns (> {max_cols}): {schema}"
             return
     raise AssertionError("no ReadSchema found in plan")
-
-
-def count_shuffles(df: DataFrame) -> int:
-    return executed_plan(df).count("Exchange")
 
 
 def in_wholestage_codegen(df: DataFrame) -> bool:

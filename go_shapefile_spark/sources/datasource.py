@@ -1,9 +1,11 @@
 """Spark DataSource ("shapefile" format) with filter pushdown.
 
-The DataFrame-function front door is ``read_shapefile_df``; this module
-exposes the same scan as a registered Spark data source so it composes
-with ``spark.read.format("shapefile")`` and — the point — participates
-in Catalyst's filter pushdown (SURVEY §4's ``SupportsPushDownFilters``
+A thin adapter over the scan core in ``shapefile.py``, the same one
+``read_shapefile_df`` / ``read_shapefile_dir`` call: ``pushFilters``
+classifies Catalyst's filters, ``partitions`` cuts splits with
+``split_bounds`` (or ``file_groups`` in directory mode), and ``read``
+calls ``read_split`` (or ``read_file``).  What the format adds is
+Catalyst's filter pushdown (SURVEY §4's ``SupportsPushDownFilters``
 follow-on, via the Python DataSource API of Spark 4):
 
 * predicates on ``fid`` prune whole partitions exactly (record-range
@@ -11,8 +13,13 @@ follow-on, via the Python DataSource API of Spark 4):
   arithmetic — the Scanner.Discard analog at plan time);
 * predicates on DBF attribute columns are evaluated on the decoded
   attribute columns BEFORE any geometry parsing — on the SHX path a
-  record whose attributes fail the filter is never byte-decoded at all
-  (``_parse_split(attr_mask_fn=...)``).
+  record whose attributes fail the filter is never byte-decoded at all;
+* comparisons on ``bbox.xmin/ymin/xmax/ymax`` prune whole files by
+  their header bounds and records by their record-header bounds.
+
+Pushdown needs ``spark.sql.python.filterPushdown.enabled=true``, which
+``session.get_spark`` sets; on a session without it, a read raises
+``DATA_SOURCE_PUSHDOWN_DISABLED``.
 
 Usage::
 
@@ -22,9 +29,10 @@ Usage::
           .load()
           .where("CONTINENT = 'Africa' AND fid > 10"))
 
-    # directory mode: one partition per shapefile, header planning inside
-    # tasks (driver O(1) in file count), a source_basename column, and
-    # file-level pruning from source_basename equality / bbox predicates
+    # directory mode: one job over ``file_groups`` (at most DIR_TASKS
+    # contiguous groups of files), header planning inside tasks (driver
+    # O(1) in file count), a source_basename column, and file-level
+    # pruning from source_basename equality / bbox predicates
     tiles = (spark.read.format("shapefile").option("path", "/data/tiles")
              .load().where("bbox.xmin > 5.0 AND bbox.xmax < 15.0"))
 """
@@ -32,16 +40,15 @@ Usage::
 from __future__ import annotations
 
 import math
-import operator
+import posixpath
+from functools import cached_property
 from typing import Iterator
-
-import numpy as np
 
 from pyspark.sql.datasource import (
     DataSource, DataSourceReader, EqualTo, Filter, GreaterThan,
-    GreaterThanOrEqual, InputPartition, IsNotNull, IsNull, LessThan,
-    LessThanOrEqual,
+    GreaterThanOrEqual, InputPartition, LessThan, LessThanOrEqual,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import shapefile as sf
 
@@ -61,9 +68,9 @@ class ShapefileDataSource(DataSource):
     Arrow-direct scan path ``read_shapefile_df(flat_points=True)`` uses
     (per-row struct materialization dominates wall time at
     billions-of-points scale; BENCH.md round 4).  In flat mode every
-    pushed filter is yielded back to Spark: x/y comparisons are
-    whole-stage-codegen'd over the flat columns, which beats selective
-    decode on this path by design."""
+    pushed filter but ``fid`` (and ``source_basename``) is yielded back to
+    Spark: x/y comparisons are whole-stage-codegen'd over the flat
+    columns, which beats selective decode on this path by design."""
 
     @classmethod
     def name(cls) -> str:
@@ -80,97 +87,52 @@ class ShapefileDataSource(DataSource):
             opts.setdefault("dbf", {})["skip_broken_fields"] = True
         return opts or None
 
+    @cached_property
     def _bases(self) -> list[str] | None:
         """Directory mode: shapefile basenames/zips under option path
         (one driver listing); None when path is a single file/bundle."""
-        cached = getattr(self, "_cached_bases", False)
-        if cached is not False:
-            return cached
         from . import fsio
         path = self.options.get("path")
         if not path:
             raise ValueError("shapefile source requires option 'path'")
-        bases = None
-        if fsio.is_dir(path):
-            bases = sf.discover_shapefile_bases(path)
-            if not bases:
-                raise ValueError(f"no shapefiles under {path}")
-        self._cached_bases = bases
+        if not fsio.is_dir(path):
+            return None
+        bases = sf.discover_shapefile_bases(path)
+        if not bases:
+            raise ValueError(f"no shapefiles under {path}")
         return bases
 
+    @cached_property
     def _plan(self) -> sf.ShapefilePlan:
         # Spark calls schema() and reader() separately — cache the header
         # pre-pass so a zip bundle isn't re-read/decompressed per call.
         # Directory mode plans ONE representative file (schema only);
         # per-file headers are read inside tasks.
-        cached = getattr(self, "_cached_plan", None)
-        if cached is not None:
-            return cached
-        bases = self._bases()
-        path = bases[0] if bases else self.options.get("path")
-        self._cached_plan = sf.plan_shapefile(path, self._opts(),
-                                              self.options.get("basename"))
-        return self._cached_plan
+        path = self._bases[0] if self._bases else self.options.get("path")
+        return sf.plan_shapefile(path, self._opts(),
+                                 self.options.get("basename"))
 
     def schema(self):
+        plan = self._plan
         if self._flat():
-            import go_shapefile_spark.sources.shapefile_core as core
-            plan = self._plan()
-            if plan.shape_type not in core.POINT_TYPES:
+            if plan.shape_type not in sf.core.POINT_TYPES:
                 raise ValueError(
                     "flat_points requires a Point-type shapefile corpus")
             base = sf.flat_points_schema(plan)
         else:
-            base = sf.features_schema(self._plan())
-        if self._bases() is not None:
-            from pyspark.sql import types as T
-            return T.StructType(list(base.fields) + [
-                T.StructField("source_basename", T.StringType())])
-        return base
+            base = sf.features_schema(plan)
+        return base if self._bases is None else sf.dir_schema(base)
 
     def reader(self, schema):
-        bases = self._bases()
-        rps = int(self.options.get("records_per_split", 100_000))
+        bases = self._bases
+        rps = int(self.options.get("records_per_split", sf.RECORDS_PER_SPLIT))
         if bases is not None:
-            return ShapefileDirReader(bases, self._plan(), schema, rps,
+            return ShapefileDirReader(bases, self._plan, schema, rps,
                                       self._opts(),
                                       self.options.get("basename"),
                                       flat=self._flat())
-        return ShapefileReader(self._plan(), schema, rps,
+        return ShapefileReader(self._plan, schema, rps,
                                flat=self._flat())
-
-
-# pushable comparison filters on scalar attribute columns
-_CMP = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual)
-
-# shared comparison semantics for every pushed-filter evaluation site —
-# one map instead of per-site isinstance ladders that could drift apart
-_CMP_OP = {EqualTo: operator.eq, GreaterThan: operator.gt,
-           GreaterThanOrEqual: operator.ge, LessThan: operator.lt,
-           LessThanOrEqual: operator.le}
-
-
-_BBOX_COL = {"xmin": 0, "ymin": 1, "xmax": 2, "ymax": 3}
-
-
-def _try_accept_row_filter(f: Filter, attr, col, attr_cols: set,
-                           has_dbf: bool, bbox_ok: bool,
-                           attr_filters: list,
-                           bbox_filters: list) -> bool:
-    """Shared attr/bbox filter classification for both readers; returns
-    False when the caller must yield the filter back to Spark."""
-    if (col in attr_cols and has_dbf
-            and (isinstance(f, _CMP) or isinstance(f, (IsNull, IsNotNull)))):
-        attr_filters.append(f)
-        return True
-    if (bbox_ok and isinstance(f, _CMP) and attr and len(attr) == 2
-            and attr[0] == "bbox" and attr[1] in _BBOX_COL):
-        try:
-            bbox_filters.append((f, float(f.value)))
-            return True
-        except (TypeError, ValueError):
-            return False
-    return False
 
 
 class ShapefileReader(DataSourceReader):
@@ -181,15 +143,11 @@ class ShapefileReader(DataSourceReader):
         self.records_per_split = records_per_split
         self.flat = flat
         # fid interval [lo, hi) narrowed by pushed fid predicates
-        n = plan.n_records if plan.n_records >= 0 else (1 << 40)
-        self.fid_lo, self.fid_hi = 1, n + 1
+        self.fid_lo, self.fid_hi = 1, math.inf
         self.attr_filters: list[Filter] = []
-        self._attr_cols = {name for name, *_ in plan.dbf_fields} | {"deleted"}
-        # bbox predicates are testable before decode only on the SHX
-        # range-read path (zip members decompress whole anyway)
-        self.bbox_filters: list[tuple[Filter, float]] = []
-        self._bbox_ok = (not plan.is_zip and plan.shx_offsets is not None
-                         and plan.has_shp)
+        # bbox predicates are accepted only where they test before decode
+        # (the SHX range-read path); on zip members they stay in Spark
+        self.bbox_filters: list[Filter] = []
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         """Accept fid-range predicates (exact partition pruning), scalar
@@ -204,165 +162,63 @@ class ShapefileReader(DataSourceReader):
         splits at zero decode cost — the emitted fids are exactly the
         split's arange, so the accepted range is exact) but pushes no
         row masks: there is no bbox struct, and x/y predicates codegen
-        over the flat columns faster than a selective decode (see the
-        DataSource docstring)."""
+        over the flat columns faster than a selective decode."""
         for f in filters:
-            attr = getattr(f, "attribute", None)
-            col = attr[0] if attr and len(attr) == 1 else None
-            if self.flat and col != "fid":
-                yield f
-                continue
-            if col == "fid" and isinstance(f, _CMP):
-                try:
-                    v = int(f.value)
-                except (TypeError, ValueError):
+            if getattr(f, "attribute", None) == ("fid",) \
+                    and isinstance(f, sf._CMP):
+                if not self._narrow_fid(f):
                     yield f   # non-integer literal → let Spark evaluate
-                    continue
-                if isinstance(f, EqualTo):
-                    self.fid_lo = max(self.fid_lo, v)
-                    self.fid_hi = min(self.fid_hi, v + 1)
-                elif isinstance(f, GreaterThan):
-                    self.fid_lo = max(self.fid_lo, v + 1)
-                elif isinstance(f, GreaterThanOrEqual):
-                    self.fid_lo = max(self.fid_lo, v)
-                elif isinstance(f, LessThan):
-                    self.fid_hi = min(self.fid_hi, v + 1 - 1)
-                else:
-                    self.fid_hi = min(self.fid_hi, v + 1)
-            elif not _try_accept_row_filter(
-                    f, attr, col, self._attr_cols, self.plan.has_dbf,
-                    self._bbox_ok, self.attr_filters, self.bbox_filters):
+            elif self.flat or not sf._try_accept_row_filter(
+                    f, self.plan, sf._range_reads(self.plan),
+                    self.attr_filters, self.bbox_filters):
                 yield f
 
-    def _header_prunes_all(self) -> bool:
-        return _header_prunes(self.plan.header_bounds, self.bbox_filters)
+    def _narrow_fid(self, f: Filter) -> bool:
+        try:
+            v = int(f.value)
+        except (TypeError, ValueError):
+            return False
+        lo, hi = {EqualTo: (v, v + 1), GreaterThan: (v + 1, math.inf),
+                  GreaterThanOrEqual: (v, math.inf), LessThan: (1, v),
+                  LessThanOrEqual: (1, v + 1)}[type(f)]
+        self.fid_lo, self.fid_hi = max(self.fid_lo, lo), min(self.fid_hi, hi)
+        return True
 
     def partitions(self) -> list[_Split]:
-        lo, hi = self.fid_lo, min(self.fid_hi,
-                                  (self.plan.n_records + 1
-                                   if self.plan.n_records >= 0 else self.fid_hi))
-        if hi <= lo or self._header_prunes_all():
+        if sf._header_prunes(self.plan.header_bounds, self.bbox_filters):
             return [_Split(1, 1)]  # fully pruned → one empty split
-        if self.plan.is_zip or self.plan.shx_offsets is None:
-            return [_Split(lo, hi)]
-        n = hi - lo
-        k = max(1, math.ceil(n / self.records_per_split))
-        return [_Split(lo + i * n // k, lo + (i + 1) * n // k)
-                for i in range(k)]
-
-    def _mask(self, adf) -> np.ndarray:
-        return _attr_keep(adf, self.attr_filters)
-
-    def _bbox_mask(self, buf: bytes, rel: np.ndarray) -> np.ndarray:
-        return _bbox_keep(buf, rel, self.bbox_filters)
+        return [_Split(a, b) for a, b in sf.split_bounds(
+            self.plan, self.records_per_split, self.fid_lo, self.fid_hi)]
 
     def read(self, partition: _Split):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         if partition.fid_end <= partition.fid_start:
             return
-        if self.flat:
-            # Arrow-direct flat-point emit: numpy columns straight into
-            # a RecordBatch, no struct materialization (BENCH.md r4)
-            rb = sf._arrow_points_flat_batch(self.plan,
-                                             partition.fid_start,
-                                             partition.fid_end,
-                                             to_arrow_schema(self.schema))
-            if rb.num_rows:
-                yield rb
-            return
-        mask_fn = self._mask if self.attr_filters else None
-        bbox_fn = self._bbox_mask if self.bbox_filters else None
-        # columnar Arrow emit (vectorized geometry kernel) when no
-        # row mask is pushed; selective-decode pandas path otherwise
-        rb = sf._arrow_split_batch(self.plan, partition.fid_start,
-                                   partition.fid_end,
-                                   to_arrow_schema(self.schema),
-                                   attr_mask_fn=mask_fn,
-                                   bbox_mask_fn=bbox_fn)
+        rb = sf.read_split(self.plan, partition.fid_start, partition.fid_end,
+                           to_arrow_schema(self.schema), self.flat,
+                           self.attr_filters, self.bbox_filters)
         if rb.num_rows:
             yield rb
 
 
-def _attr_keep(adf, filters: list[Filter]) -> np.ndarray:
-    """Keep-mask over decoded attribute columns (SQL NULL-fails-predicate
-    semantics)."""
-    keep = np.ones(len(adf), dtype=bool)
-    for f in filters:
-        col = adf[f.attribute[0]]
-        if isinstance(f, IsNull):
-            m = col.isna()
-        elif isinstance(f, IsNotNull):
-            m = ~col.isna()
-        else:
-            m = _CMP_OP[type(f)](col, f.value)
-            m = m.fillna(False) if hasattr(m, "fillna") else m
-        keep &= np.asarray(m, dtype=bool)
-    return keep
-
-
-def _bbox_keep(buf: bytes, rel: np.ndarray,
-               filters: list[tuple[Filter, float]]) -> np.ndarray:
-    """Keep-mask from record-header bounds — evaluated BEFORE any decode.
-    NaN bounds (Null shapes) fail every comparison, matching SQL NULL
-    predicate semantics."""
-    bb = sf.record_bounds_quick(buf, rel)
-    keep = np.ones(len(rel), dtype=bool)
-    for f, v in filters:
-        c = bb[:, _BBOX_COL[f.attribute[1]]]
-        keep &= _CMP_OP[type(f)](c, v)
-    return keep
-
-
-def _header_prunes(header_bounds: tuple | None,
-                   bbox_filters: list[tuple[Filter, float]]) -> bool:
-    """True when a pushed bbox predicate is unsatisfiable given the
-    file-header bounds: every record bbox ordinate lies within the
-    header's [min, max] for its axis, so a comparison that excludes
-    that whole interval excludes every record (file-level pruning)."""
-    hb = header_bounds
-    if hb is None or not bbox_filters:
-        return False
-    # bounds tuple is (mins..., maxs...) per layout: XY (x,y | x,y),
-    # XYM (x,y,m | x,y,m), XYZM (x,y,z,m | x,y,z,m)
-    half = len(hb) // 2
-    x_rng, y_rng = (hb[0], hb[half]), (hb[1], hb[half + 1])
-    if x_rng[0] > x_rng[1] or y_rng[0] > y_rng[1]:
-        return False   # NoData-scrubbed header bounds → unknown
-    axis_rng = {"xmin": x_rng, "xmax": x_rng,
-                "ymin": y_rng, "ymax": y_rng}
-    for f, v in bbox_filters:
-        lo, hi = axis_rng[f.attribute[1]]
-        if isinstance(f, EqualTo) and (v < lo or v > hi):
-            return True
-        if isinstance(f, GreaterThan) and hi <= v:
-            return True
-        if isinstance(f, GreaterThanOrEqual) and hi < v:
-            return True
-        if isinstance(f, LessThan) and lo >= v:
-            return True
-        if isinstance(f, LessThanOrEqual) and lo > v:
-            return True
-    return False
-
-
 class _FileSplit(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+    def __init__(self, paths: list[str]):
+        self.paths = paths
 
 
 class ShapefileDirReader(DataSourceReader):
     """Directory mode of ``format("shapefile")``: one input partition per
-    shapefile; ALL header reads (split planning, bbox file pruning)
-    happen inside tasks, so the driver does exactly one directory
-    listing no matter the corpus size — the DataSource twin of
-    ``read_shapefile_dir``.
+    ``file_groups`` group; ALL header reads (split planning, bbox file
+    pruning) happen inside tasks (``read_file``), so the driver does
+    exactly one directory listing no matter the corpus size — the same
+    scan as ``read_shapefile_dir``.
 
     Pushdown: attribute masks and bbox predicates work per file exactly
     as in single-file mode (bbox pre-tested on the SHX range-read path,
     applied post-parse — still exact — on zip members); equality on
     ``source_basename`` prunes whole files at plan time; bbox predicates
-    prune whole files by header bounds inside the task.
+    prune whole files by header bounds inside the task.  ``fid``
+    predicates are not globally meaningful across files and stay in
+    Spark.
     """
 
     def __init__(self, bases: list[str], rep_plan: sf.ShapefilePlan,
@@ -378,107 +234,29 @@ class ShapefileDirReader(DataSourceReader):
         # task plans too, or multi-layer bundles parse the wrong member
         self.member_basename = member_basename
         self.attr_filters: list[Filter] = []
-        self.bbox_filters: list[tuple[Filter, float]] = []
+        self.bbox_filters: list[Filter] = []
         self.basename_eqs: list[str] = []
-        self._attr_cols = {name for name, *_ in rep_plan.dbf_fields} | {"deleted"}
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         for f in filters:
-            attr = getattr(f, "attribute", None)
-            col = attr[0] if attr and len(attr) == 1 else None
-            if (col == "source_basename" and isinstance(f, EqualTo)
-                    and isinstance(f.value, str)):
-                self.basename_eqs.append(f.value)   # file pruning works
-            elif self.flat:                         # in flat mode too
-                yield f     # x/y predicates codegen over flat columns
-            elif not _try_accept_row_filter(
-                    f, attr, col, self._attr_cols, self.rep_plan.has_dbf,
-                    True, self.attr_filters, self.bbox_filters):
-                # (fid predicates are not globally meaningful across files
-                # and fall through here)
+            if (getattr(f, "attribute", None) == ("source_basename",)
+                    and isinstance(f, EqualTo) and isinstance(f.value, str)):
+                self.basename_eqs.append(f.value)   # flat mode too
+            elif self.flat or not sf._try_accept_row_filter(
+                    f, self.rep_plan, True, self.attr_filters,
+                    self.bbox_filters):
                 yield f
 
     def partitions(self) -> list[_FileSplit]:
-        import posixpath
-        bases = self.bases
-        for v in self.basename_eqs:
-            bases = [b for b in bases if posixpath.basename(b) == v]
-        return [_FileSplit(b) for b in bases] or [_FileSplit("")]
+        bases = [b for b in self.bases
+                 if all(posixpath.basename(b) == v for v in self.basename_eqs)]
+        return [_FileSplit(g) for g in sf.file_groups(bases)] \
+            or [_FileSplit([])]
 
     def read(self, partition: _FileSplit):
-        import posixpath
-
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        if not partition.path:
-            return
-        plan = sf.plan_shapefile(partition.path, self.sf_options,
-                                 self.member_basename)
-        if _header_prunes(plan.header_bounds, self.bbox_filters):
-            return   # whole file outside the query window
-        full = to_arrow_schema(self.schema)
-        base_schema = pa.schema(
-            [f for f in full if f.name != "source_basename"])
-        if self.flat:
-            yield from self._read_flat(partition, plan, full, base_schema)
-            return
-        can_pretest = (not plan.is_zip and plan.shx_offsets is not None
-                       and plan.has_shp)
-        mask_fn = (lambda adf: _attr_keep(adf, self.attr_filters)) \
-            if self.attr_filters else None
-        bbox_fn = (lambda buf, rel: _bbox_keep(buf, rel, self.bbox_filters)) \
-            if (self.bbox_filters and can_pretest) else None
-        bounds = sf.sequential_split_bounds(plan, self.records_per_split)
-        name = posixpath.basename(partition.path)
-        for a, b in bounds:
-            rb = sf._arrow_split_batch(plan, a, b, base_schema,
-                                       attr_mask_fn=mask_fn,
-                                       bbox_mask_fn=bbox_fn)
-            if self.bbox_filters and bbox_fn is None and rb.num_rows:
-                rb = _bbox_postfilter(rb, self.bbox_filters)
-            if rb.num_rows:
-                yield pa.RecordBatch.from_arrays(
-                    list(rb.columns) +
-                    [pa.array([name] * rb.num_rows, pa.string())],
-                    schema=full)
-
-
-    def _read_flat(self, partition: _FileSplit, plan: sf.ShapefilePlan,
-                   full, base_schema):
-        """Flat-point emit per file: same Arrow-direct batches as the
-        single-file fast path, plus the source_basename column."""
-        import posixpath
-
-        import pyarrow as pa
-
-        import go_shapefile_spark.sources.shapefile_core as core
-
-        if plan.shape_type not in core.POINT_TYPES:
-            raise ValueError(
-                f"flat_points dir scan hit non-Point file "
-                f"{partition.path!r} (shape type {plan.shape_type})")
-        bounds = sf.sequential_split_bounds(plan, self.records_per_split)
-        name = posixpath.basename(partition.path)
-        for a, b in bounds:
-            rb = sf._arrow_points_flat_batch(plan, a, b, base_schema)
-            if rb.num_rows:
-                yield pa.RecordBatch.from_arrays(
-                    list(rb.columns) +
-                    [pa.array([name] * rb.num_rows, pa.string())],
-                    schema=full)
-
-
-def _bbox_postfilter(rb, filters: list[tuple[Filter, float]]):
-    """Exact bbox filtering AFTER parse, for files that cannot range-read
-    (zip members): same comparisons, applied to the decoded bbox struct."""
-    import pyarrow as pa
-
-    bbox = rb.column(rb.schema.get_field_index("bbox"))
-    keep = np.ones(rb.num_rows, dtype=bool)
-    for f, v in filters:
-        # nulls → NaN, which fails every comparison (SQL semantics)
-        c = bbox.field(f.attribute[1]).to_numpy(zero_copy_only=False) \
-            .astype(np.float64)
-        keep &= _CMP_OP[type(f)](c, v)
-    return rb.filter(pa.array(keep))
+        arrow_schema = to_arrow_schema(self.schema)
+        for path in partition.paths:
+            yield from sf.read_file(path, self.sf_options,
+                                    self.member_basename, arrow_schema,
+                                    self.records_per_split, self.flat,
+                                    self.attr_filters, self.bbox_filters)

@@ -174,11 +174,6 @@ def _to_blocks(plane: np.ndarray) -> np.ndarray:
             .transpose(0, 2, 1, 3).reshape(-1, 8, 8))
 
 
-def _from_blocks(blocks: np.ndarray, h8: int, w8: int) -> np.ndarray:
-    return (blocks.reshape(h8 // 8, w8 // 8, 8, 8)
-            .transpose(0, 2, 1, 3).reshape(h8, w8))
-
-
 def _huff_encode_table(bits: list[int], vals: list[int]) -> dict:
     """symbol → (code, length) by canonical assignment (T.81 C.2)."""
     table, code, i = {}, 0, 0

@@ -13,11 +13,17 @@ Spark-first restatement of the reference's two read paths
   .shx is not splittable and gets a single sequential task, mirroring
   scanner.go:511-513.
 * Executors parse their byte ranges with the vectorized parsers in
-  ``shapefile_core`` inside ``mapInPandas`` — records flow through Arrow
+  ``shapefile_core`` inside ``mapInArrow`` — records flow through Arrow
   batches, never fully materialized per executor.
 * Zip bundles (.zip/.shz/.exe) are not splittable → one task ingests and
   re-emits as ``features`` rows (fine for the polygon side; the large
   side of every join in this engine is parquet/Iceberg and splittable).
+
+This module is the one scan core: the split rule (``split_bounds``),
+the pushed-filter evaluators, the per-split reader (``read_split``) and
+the per-file reader of directory scans (``read_file``).  The function
+front doors below and ``format("shapefile")`` (``datasource.py``) are
+thin callers of them.
 
 The 3-way positional zip of SHP⋈SHX⋈DBF (scanner.go:400-451) happens
 inside each task by batch index; the record-count consistency check
@@ -28,6 +34,7 @@ counts and re-checked per split.
 from __future__ import annotations
 
 import math
+import operator
 import posixpath
 from dataclasses import dataclass
 from typing import Any, Iterator
@@ -35,6 +42,10 @@ from typing import Any, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import (
+    EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull,
+    LessThan, LessThanOrEqual,
+)
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -100,76 +111,56 @@ class ShapefilePlan:
 
 def plan_shapefile(path: str, options: dict | None = None,
                    basename: str | None = None) -> ShapefilePlan:
-    """Header pre-pass on the driver. Reads only headers + the SHX index."""
+    """Header pre-pass on the driver. Reads only headers + the SHX index.
+
+    Each component is optional, but finding none (a missing path, or a
+    zip ``basename`` matching no member) raises ShapefileError."""
     options = options or {}
     is_zip = path.lower().endswith((".zip", ".shz", ".exe"))
-    charset = None
-    crs = None
-    dbf_fields: list[tuple[str, str, int, int]] = []
-    dbf_header_size = dbf_record_size = 0
-    shx_offsets = shx_lengths = None
-    n_dbf = n_shx = None
-    shape_type = 0
-    header_bounds = None
-    has_shp = has_dbf = False
-
     if is_zip:
-        members = core.zip_members(fsio.open_seekable(path))
-        if basename is not None:
-            members = {ext: (n, d) for ext, (n, d) in members.items()
-                       if n.rsplit("/", 1)[-1].rsplit(".", 1)[0] == basename}
-        if "cpg" in members:
-            charset = core.parse_cpg(members["cpg"][1])
-        if "prj" in members:
-            crs = core.parse_prj(members["prj"][1])
-        if "dbf" in members:
-            hdr, fields, pos = core.parse_dbf_fields(members["dbf"][1])
-            raw = members["dbf"][1]
-            dbf_fields = _fields_with_decimals(raw, fields)
-            dbf_header_size, dbf_record_size, n_dbf = pos, hdr.record_size, hdr.records
-            has_dbf = True
-        if "shx" in members:
-            shx = core.parse_shx(members["shx"][1])
-            shx_offsets, shx_lengths = shx.offsets, shx.content_lengths
-            n_shx = len(shx.offsets)
-            shape_type, header_bounds = shx.header.shape_type, shx.header.bounds
-        if "shp" in members:
-            data = members["shp"][1]
-            h = core.parse_shx_header(data[:100], len(data))
-            shape_type, header_bounds = h.shape_type, h.bounds
-            has_shp = True
+        members = _zip_members(path, basename)
+
+        def read_head(ext: str, nbytes: int | None = None) -> bytes | None:
+            got = members.get(ext)
+            return None if got is None else got[1][:nbytes]
+
+        def size(ext: str) -> int:
+            return len(members[ext][1])
     else:
         def read_head(ext: str, nbytes: int | None = None) -> bytes | None:
             p = f"{path}.{ext}"
-            if not fsio.exists(p):
-                return None
-            return fsio.read_bytes(p, 0, nbytes)
+            return fsio.read_bytes(p, 0, nbytes) if fsio.exists(p) else None
 
-        cpg = read_head("cpg")
-        if cpg is not None:
-            charset = core.parse_cpg(cpg)
-        prj = read_head("prj")
-        if prj is not None:
-            crs = core.parse_prj(prj)
-        shx_bytes = read_head("shx")
-        if shx_bytes is not None:
-            shx = core.parse_shx(shx_bytes)
-            shx_offsets, shx_lengths = shx.offsets, shx.content_lengths
-            n_shx = len(shx.offsets)
-            shape_type, header_bounds = shx.header.shape_type, shx.header.bounds
-        dbf_head = read_head("dbf", 65536)
-        if dbf_head is not None:
-            hdr, fields, pos = core.parse_dbf_fields(dbf_head)
-            dbf_fields = _fields_with_decimals(dbf_head, fields)
-            dbf_header_size, dbf_record_size, n_dbf = pos, hdr.record_size, hdr.records
-            has_dbf = True
-        shp_path = f"{path}.shp"
-        if fsio.exists(shp_path):
-            head = fsio.read_bytes(shp_path, 0, 100)
-            h = core.parse_shx_header(head, fsio.getsize(shp_path))
-            shape_type, header_bounds = h.shape_type, h.bounds
-            has_shp = True
+        def size(ext: str) -> int:
+            return fsio.getsize(f"{path}.{ext}")
 
+    cpg, prj = read_head("cpg"), read_head("prj")
+    charset = None if cpg is None else core.parse_cpg(cpg)
+    crs = None if prj is None else core.parse_prj(prj)
+    shape_type, header_bounds = 0, None
+    shx_offsets = shx_lengths = n_shx = n_dbf = None
+    shx_bytes = read_head("shx")
+    if shx_bytes is not None:
+        shx = core.parse_shx(shx_bytes)
+        shx_offsets, shx_lengths = shx.offsets, shx.content_lengths
+        n_shx = len(shx.offsets)
+        shape_type, header_bounds = shx.header.shape_type, shx.header.bounds
+    dbf_fields: list[tuple[str, str, int, int]] = []
+    dbf_header_size = dbf_record_size = 0
+    dbf_head = read_head("dbf", 65536)
+    if dbf_head is not None:
+        hdr, fields, pos = core.parse_dbf_fields(dbf_head)
+        dbf_fields = _fields_with_decimals(dbf_head, fields)
+        dbf_header_size, dbf_record_size, n_dbf = pos, hdr.record_size, hdr.records
+    shp_head = read_head("shp", 100)
+    if shp_head is not None:
+        h = core.parse_shx_header(shp_head, size("shp"))
+        shape_type, header_bounds = h.shape_type, h.bounds
+    has_shp, has_dbf = shp_head is not None, dbf_head is not None
+
+    if not (has_shp or has_dbf or shx_offsets is not None):
+        where = path if basename is None else f"{path} [{basename}]"
+        raise core.ShapefileError(f"no .shp, .shx or .dbf found: {where}")
     # Record-count consistency (shapefile.go:192-196); SHP count only known
     # after parse when no SHX, re-checked per split then.
     counts = {c for c in (n_dbf, n_shx) if c is not None}
@@ -190,6 +181,16 @@ def plan_shapefile(path: str, options: dict | None = None,
         has_shp=has_shp, has_dbf=has_dbf)
 
 
+def _zip_members(path: str, basename: str | None) -> dict:
+    """The bundle's components by extension, restricted to ``basename``'s
+    members when one is given."""
+    members = core.zip_members(fsio.open_seekable(path))
+    if basename is None:
+        return members
+    return {ext: (n, d) for ext, (n, d) in members.items()
+            if n.rsplit("/", 1)[-1].rsplit(".", 1)[0] == basename}
+
+
 def _fields_with_decimals(raw: bytes, fields: list[core.DBFField]) -> list[tuple[str, str, int, int]]:
     """Re-read descriptor byte 17 (decimal count) for column typing; the
     reference ignores it at parse time but real DBF files set it."""
@@ -202,37 +203,40 @@ def _fields_with_decimals(raw: bytes, fields: list[core.DBFField]) -> list[tuple
     return out
 
 
+def _attr_fields(plan: ShapefilePlan) -> list[T.StructField]:
+    """fid, deleted and the DBF columns: the head of every scan schema."""
+    return [T.StructField("fid", T.LongType(), False),
+            T.StructField("deleted", T.BooleanType(), False)] + [
+        T.StructField(name, _dbf_spark_type(
+            core.DBFField(name, ftype, length, 0, 0), decimals))
+        for name, ftype, length, decimals in plan.dbf_fields]
+
+
 def features_schema(plan: ShapefilePlan) -> T.StructType:
-    fields = [
-        T.StructField("fid", T.LongType(), False),
-        T.StructField("deleted", T.BooleanType(), False),
-    ]
-    for name, ftype, length, decimals in plan.dbf_fields:
-        fields.append(T.StructField(
-            name, _dbf_spark_type(core.DBFField(name, ftype, length, 0, 0), decimals)))
-    fields += [
+    return T.StructType(_attr_fields(plan) + [
         T.StructField("shape_type", T.IntegerType()),
         T.StructField("geometry", GEOMETRY_TYPE),
         T.StructField("bbox", BBOX_TYPE),
-    ]
-    return T.StructType(fields)
+    ])
+
+
+def _point_bbox(layout: str, r) -> dict[str, float | None]:
+    """The degenerate bbox of one point's ordinates ``r`` (x, y[, z][, m])."""
+    b = dict.fromkeys(BBOX_TYPE.names)
+    b.update(xmin=r[0], ymin=r[1], xmax=r[0], ymax=r[1])
+    if layout == "XYM":
+        b.update(mmin=r[2], mmax=r[2])
+    elif layout == "XYZM":
+        b.update(zmin=r[2], zmax=r[2], mmin=r[3], mmax=r[3])
+    return b
 
 
 def _record_bbox(rec: core.SHPRecord) -> dict[str, float | None]:
-    b: dict[str, float | None] = dict(xmin=None, ymin=None, xmax=None, ymax=None,
-                                      zmin=None, zmax=None, mmin=None, mmax=None)
+    b: dict[str, float | None] = dict.fromkeys(BBOX_TYPE.names)
     if rec.layout is None:
         return b
-    stride = core.STRIDES[rec.layout]
     if rec.shape_type in core.POINT_TYPES:
-        x, y = float(rec.coords[0]), float(rec.coords[1])
-        b.update(xmin=x, ymin=y, xmax=x, ymax=y)
-        if rec.layout == "XYM":
-            b.update(mmin=float(rec.coords[2]), mmax=float(rec.coords[2]))
-        elif rec.layout == "XYZM":
-            b.update(zmin=float(rec.coords[2]), zmax=float(rec.coords[2]),
-                     mmin=float(rec.coords[3]), mmax=float(rec.coords[3]))
-        return b
+        return _point_bbox(rec.layout, [float(v) for v in rec.coords])
     bounds = rec.bounds
     if bounds is None:
         return b
@@ -360,32 +364,16 @@ def _parse_split(plan: ShapefilePlan, fid_start: int, fid_end: int,
     the record-header bounds (``record_bounds_quick``) — records outside
     the query window are never geometry-decoded.
     """
-    if plan.is_zip:
-        members = core.zip_members(fsio.open_seekable(plan.path))
-        if plan.basename is not None:
-            members = {ext: (n, d) for ext, (n, d) in members.items()
-                       if n.rsplit("/", 1)[-1].rsplit(".", 1)[0] == plan.basename}
-        shp_bytes = members.get("shp", (None, None))[1]
-        dbf_bytes = members.get("dbf", (None, None))[1]
-    else:
-        shp_bytes = dbf_bytes = None
+    members = _zip_members(plan.path, plan.basename) if plan.is_zip else {}
+    shp_bytes = members.get("shp", (None, None))[1]
+    dbf_bytes = members.get("dbf", (None, None))[1]
 
-    n = fid_end - fid_start
     # --- attribute side (column-vectorized, native dtypes) ------------------
     dbf_cols: list[tuple[str, np.ndarray, np.ndarray | None]] | None = None
     deleted: np.ndarray | None = None
-    if plan.dbf_record_size:
-        fields = [core.DBFField(n_, t, l, 0, 0) for n_, t, l, d in plan.dbf_fields]
-        decimals = [d for n_, t, l, d in plan.dbf_fields]
-        hdr = core.DBFHeader(3, None, plan.n_records, 0, plan.dbf_record_size)  # type: ignore[arg-type]
-        skip = (plan.dbf_options or {}).get("skip_broken_fields", False)
-        if plan.is_zip and dbf_bytes is not None:
-            dbf_cols, deleted = core.parse_dbf_native_columns(
-                dbf_bytes, hdr, fields, plan.dbf_header_size, decimals,
-                charset=plan.charset, skip_broken_fields=skip,
-                first_record=fid_start - 1, num_records=n)
-        elif not plan.is_zip and plan.has_dbf:
-            dbf_cols, deleted = _read_split_dbf(plan, fid_start, n)
+    if plan.dbf_record_size and plan.has_dbf:
+        dbf_cols, deleted = _read_split_dbf(plan, fid_start,
+                                            fid_end - fid_start, dbf_bytes)
     n_attr = len(deleted) if deleted is not None else 0
 
     # pushed-down attribute mask: evaluated before any geometry work
@@ -491,22 +479,8 @@ def _parse_split(plan: ShapefilePlan, fid_start: int, fid_end: int,
         out["geometry"] = pd.Series(
             [{"layout": layout, "coords": row, "ends": [], "rings": []}
              for row in fast_ords.tolist()], dtype="object")
-        none8 = {"zmin": None, "zmax": None, "mmin": None, "mmax": None}
-        if layout == "XYM":
-            out["bbox"] = pd.Series(
-                [{"xmin": r[0], "ymin": r[1], "xmax": r[0], "ymax": r[1],
-                  **none8, "mmin": r[2], "mmax": r[2]}
-                 for r in fast_ords.tolist()], dtype="object")
-        elif layout == "XYZM":
-            out["bbox"] = pd.Series(
-                [{"xmin": r[0], "ymin": r[1], "xmax": r[0], "ymax": r[1],
-                  "zmin": r[2], "zmax": r[2], "mmin": r[3], "mmax": r[3]}
-                 for r in fast_ords.tolist()], dtype="object")
-        else:
-            out["bbox"] = pd.Series(
-                [{"xmin": r[0], "ymin": r[1], "xmax": r[0], "ymax": r[1],
-                  **none8}
-                 for r in fast_ords.tolist()], dtype="object")
+        out["bbox"] = pd.Series([_point_bbox(layout, r)
+                                 for r in fast_ords.tolist()], dtype="object")
     elif shp_records:
         out["shape_type"] = pd.array([r.shape_type for r in shp_records], dtype="int32")
         out["geometry"] = pd.Series([_geom_dict(r) for r in shp_records], dtype="object")
@@ -553,19 +527,25 @@ def _parse_points_vectorized(buf: bytes, rel_offsets: np.ndarray,
     return arr["ords"]
 
 
-def _read_split_dbf(plan: ShapefilePlan, fid_start: int, n: int):
-    """Decode this split's DBF byte range into native columns (shared by
-    the pandas and Arrow emit paths)."""
+def _read_split_dbf(plan: ShapefilePlan, fid_start: int, n: int,
+                    member: bytes | None = None):
+    """Decode this split's DBF records into native columns (shared by
+    the pandas and Arrow emit paths): one range read of the ``.dbf``, or
+    a slice of a zip bundle's whole ``member``."""
     fields = [core.DBFField(n_, t, l, 0, 0) for n_, t, l, d in plan.dbf_fields]
     decimals = [d for n_, t, l, d in plan.dbf_fields]
     hdr = core.DBFHeader(3, None, plan.n_records, 0, plan.dbf_record_size)  # type: ignore[arg-type]
-    start = plan.dbf_header_size + (fid_start - 1) * plan.dbf_record_size
-    buf = fsio.read_bytes(f"{plan.path}.dbf", start, n * plan.dbf_record_size)
+    if member is None:
+        start = plan.dbf_header_size + (fid_start - 1) * plan.dbf_record_size
+        buf, pos, first = fsio.read_bytes(
+            f"{plan.path}.dbf", start, n * plan.dbf_record_size), 0, 0
+    else:
+        buf, pos, first = member, plan.dbf_header_size, fid_start - 1
     return core.parse_dbf_native_columns(
-        buf, hdr, fields, 0, decimals, charset=plan.charset,
+        buf, hdr, fields, pos, decimals, charset=plan.charset,
         skip_broken_fields=(plan.dbf_options or {}).get(
             "skip_broken_fields", False),
-        first_record=0, num_records=n)
+        first_record=first, num_records=n)
 
 
 def _read_split_shp(plan: ShapefilePlan, fid_start: int,
@@ -708,37 +688,252 @@ def _arrow_split_batch(plan: ShapefilePlan, fid_start: int, fid_end: int,
     return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
-def _scan_splits(spark: SparkSession, bounds: list[tuple[int, int]],
-                 schema: T.StructType, read_split) -> DataFrame:
-    """One task per fid range: ``mapInArrow`` over ``spark.range`` with
-    one id per partition, each task reading ``bounds[id]`` through
-    ``read_split(fid_start, fid_end)`` → RecordBatch.  The split rows
-    are JVM-generated — no Python-built split frame, no shuffle — and
-    partition i reads split i, so rows come back in fid order."""
-    bounds = [(int(a), int(b)) for a, b in bounds]
+RECORDS_PER_SPLIT = 100_000   # default split size of every front door
+DIR_TASKS = 8                 # directory scans: Spark tasks per read
+_UNKNOWN_END = (1 << 40) + 1  # fid_end of a file with no SHX and no DBF
+
+
+def split_bounds(plan: ShapefilePlan, records_per_split: int, lo: int = 1,
+                 hi: float = math.inf) -> list[tuple[int, int]]:
+    """The one split rule: fid ranges ``[a, b)`` over the file's records
+    in ``[lo, hi)``.  A file that range-reads (SHX present, not a zip
+    member) is cut into ``ceil(n / records_per_split)`` balanced splits
+    ``lo + i*n//k``; any other is one sequential split (scanner.go:511-513),
+    ending at a large sentinel when the record count is unknown.  Nothing
+    left → one empty split."""
+    end = plan.n_records + 1 if plan.n_records >= 0 else _UNKNOWN_END
+    hi = min(hi, end)
+    if hi <= lo:
+        return [(1, 1)]
+    if plan.is_zip or plan.shx_offsets is None:
+        return [(lo, hi)]
+    n = hi - lo
+    k = max(1, math.ceil(n / records_per_split))
+    return [(lo + i * n // k, lo + (i + 1) * n // k) for i in range(k)]
+
+
+def file_groups(bases: list[str]) -> list[list[str]]:
+    """A directory scan's tasks: ``min(len(bases), DIR_TASKS)`` contiguous
+    groups of files.  Each Python task pays a fixed worker start-up, so a
+    task per file is slow for many small files."""
+    n = len(bases)
+    p = min(n, DIR_TASKS)
+    return [bases[i * n // p:(i + 1) * n // p] for i in range(p)]
+
+
+# --- pushed filters: ``pyspark.sql.datasource`` Filter lists ------------------
+# Every front door states its predicates this way: ``format("shapefile")``
+# gets them from Catalyst, the function readers turn a ``bbox`` window into
+# them (``_window_filters``).
+
+_CMP = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual)
+_CMP_OP = {EqualTo: operator.eq, GreaterThan: operator.gt,
+           GreaterThanOrEqual: operator.ge, LessThan: operator.lt,
+           LessThanOrEqual: operator.le}
+_BBOX_COL = {"xmin": 0, "ymin": 1, "xmax": 2, "ymax": 3}
+
+
+def _window_filters(bbox: tuple | None) -> list[Filter]:
+    """``bbox=(x0, y0, x1, y1)`` as the four comparisons a record bbox
+    INTERSECTING the window satisfies."""
+    if bbox is None:
+        return []
+    x0, y0, x1, y1 = (float(v) for v in bbox)
+    return [GreaterThanOrEqual(("bbox", "xmax"), x0),
+            LessThanOrEqual(("bbox", "xmin"), x1),
+            GreaterThanOrEqual(("bbox", "ymax"), y0),
+            LessThanOrEqual(("bbox", "ymin"), y1)]
+
+
+def _range_reads(plan: ShapefilePlan) -> bool:
+    """Can a split range-read its records' .shp bytes (and so test
+    record-header bounds before decode)?"""
+    return not plan.is_zip and plan.shx_offsets is not None and plan.has_shp
+
+
+def _try_accept_row_filter(f: Filter, plan: ShapefilePlan, bbox_ok: bool,
+                           attr_filters: list, bbox_filters: list) -> bool:
+    """Classify one pushed filter: a comparison or null test on a DBF
+    column (or ``deleted``) joins ``attr_filters``, a numeric comparison
+    on ``bbox.xmin/ymin/xmax/ymax`` joins ``bbox_filters`` when
+    ``bbox_ok``.  False when Spark must evaluate it."""
+    attr = getattr(f, "attribute", None) or ()
+    attr_cols = {name for name, *_ in plan.dbf_fields} | {"deleted"}
+    if (len(attr) == 1 and attr[0] in attr_cols and plan.has_dbf
+            and isinstance(f, _CMP + (IsNull, IsNotNull))):
+        attr_filters.append(f)
+        return True
+    if (bbox_ok and isinstance(f, _CMP) and len(attr) == 2
+            and attr[0] == "bbox" and attr[1] in _BBOX_COL):
+        try:
+            float(f.value)
+        except (TypeError, ValueError):
+            return False
+        bbox_filters.append(f)
+        return True
+    return False
+
+
+def _attr_keep(adf: pd.DataFrame, filters: list[Filter]) -> np.ndarray:
+    """Keep-mask over decoded attribute columns (SQL NULL-fails-predicate
+    semantics)."""
+    keep = np.ones(len(adf), dtype=bool)
+    for f in filters:
+        col = adf[f.attribute[0]]
+        if isinstance(f, IsNull):
+            m = col.isna()
+        elif isinstance(f, IsNotNull):
+            m = ~col.isna()
+        else:
+            m = _CMP_OP[type(f)](col, f.value)
+            m = m.fillna(False) if hasattr(m, "fillna") else m
+        keep &= np.asarray(m, dtype=bool)
+    return keep
+
+
+def _bbox_keep(buf: bytes, rel: np.ndarray,
+               filters: list[Filter]) -> np.ndarray:
+    """Keep-mask from record-header bounds — evaluated BEFORE any decode.
+    NaN bounds (Null shapes) fail every comparison, matching SQL NULL
+    predicate semantics."""
+    bb = record_bounds_quick(buf, rel)
+    keep = np.ones(len(rel), dtype=bool)
+    for f in filters:
+        keep &= _CMP_OP[type(f)](bb[:, _BBOX_COL[f.attribute[1]]],
+                                 float(f.value))
+    return keep
+
+
+def _bbox_postfilter(rb, filters: list[Filter]):
+    """Exact bbox filtering AFTER parse, for files that cannot range-read
+    (zip members, no SHX): the same comparisons on the bbox struct."""
+    import pyarrow as pa
+
+    bbox = rb.column(rb.schema.get_field_index("bbox"))
+    keep = np.ones(rb.num_rows, dtype=bool)
+    for f in filters:
+        # nulls → NaN, which fails every comparison (SQL semantics)
+        c = bbox.field(f.attribute[1]).to_numpy(zero_copy_only=False) \
+            .astype(np.float64)
+        keep &= _CMP_OP[type(f)](c, float(f.value))
+    return rb.filter(pa.array(keep))
+
+
+def _header_prunes(header_bounds: tuple | None,
+                   bbox_filters: list[Filter]) -> bool:
+    """True when a pushed bbox predicate is unsatisfiable given the
+    file-header bounds: every record bbox ordinate lies within the
+    header's [min, max] for its axis, so a comparison that excludes
+    that whole interval excludes every record (file-level pruning,
+    shxheader.go:53-102)."""
+    hb = header_bounds
+    if hb is None or not bbox_filters:
+        return False
+    # bounds tuple is (mins..., maxs...) per layout: XY (x,y | x,y),
+    # XYM (x,y,m | x,y,m), XYZM (x,y,z,m | x,y,z,m)
+    half = len(hb) // 2
+    x_rng, y_rng = (hb[0], hb[half]), (hb[1], hb[half + 1])
+    if x_rng[0] > x_rng[1] or y_rng[0] > y_rng[1]:
+        return False   # NoData-scrubbed header bounds → unknown
+    axis_rng = {"xmin": x_rng, "xmax": x_rng,
+                "ymin": y_rng, "ymax": y_rng}
+    for f in bbox_filters:
+        lo, hi = axis_rng[f.attribute[1]]
+        v = float(f.value)
+        if isinstance(f, EqualTo) and (v < lo or v > hi):
+            return True
+        if isinstance(f, GreaterThan) and hi <= v:
+            return True
+        if isinstance(f, GreaterThanOrEqual) and hi < v:
+            return True
+        if isinstance(f, LessThan) and lo >= v:
+            return True
+        if isinstance(f, LessThanOrEqual) and lo > v:
+            return True
+    return False
+
+
+# --- the readers every front door calls --------------------------------------
+
+def read_split(plan: ShapefilePlan, fid_start: int, fid_end: int,
+               arrow_schema, flat: bool = False, attr_filters=(),
+               bbox_filters=()):
+    """Records ``[fid_start, fid_end)`` → one Arrow RecordBatch.
+
+    ``flat`` takes the flat-point emit (no filters: its ``x``/``y``
+    predicates are codegen'd in Spark).  Otherwise ``attr_filters`` mask
+    records before geometry decode, and ``bbox_filters`` are tested
+    against the record headers before decode where the file range-reads,
+    or on the parsed bbox struct where it cannot."""
+    if flat:
+        return _arrow_points_flat_batch(plan, fid_start, fid_end, arrow_schema)
+    pretest = bool(bbox_filters) and _range_reads(plan)
+    rb = _arrow_split_batch(
+        plan, fid_start, fid_end, arrow_schema,
+        attr_mask_fn=(lambda adf: _attr_keep(adf, attr_filters))
+        if attr_filters else None,
+        bbox_mask_fn=(lambda buf, rel: _bbox_keep(buf, rel, bbox_filters))
+        if pretest else None)
+    if bbox_filters and not pretest:
+        rb = _bbox_postfilter(rb, bbox_filters)
+    return rb
+
+
+def read_file(path: str, options: dict | None, basename: str | None,
+              arrow_schema, records_per_split: int, flat: bool = False,
+              attr_filters=(), bbox_filters=()) -> Iterator:
+    """One file of a directory scan → RecordBatches of ``arrow_schema``
+    (the file's columns plus ``source_basename``).  The header pre-pass
+    runs here, inside the task, so the driver plans one file per
+    directory; a file whose header bounds fail a bbox filter is skipped
+    whole."""
+    import pyarrow as pa
+
+    plan = plan_shapefile(path, options, basename)
+    if flat and plan.shape_type not in core.POINT_TYPES:
+        raise core.ShapefileError(
+            f"flat_points requires a Point-type shapefile: {path}")
+    if _header_prunes(plan.header_bounds, bbox_filters):
+        return
+    base = arrow_schema.remove(arrow_schema.get_field_index("source_basename"))
+    name = posixpath.basename(path)
+    for a, b in split_bounds(plan, records_per_split):
+        rb = read_split(plan, a, b, base, flat, attr_filters, bbox_filters)
+        if rb.num_rows:
+            yield pa.RecordBatch.from_arrays(
+                list(rb.columns) + [pa.array([name] * rb.num_rows, pa.string())],
+                schema=arrow_schema)
+
+
+def _scan_splits(spark: SparkSession, tasks: list, schema: T.StructType,
+                 read) -> DataFrame:
+    """One Spark task per element of ``tasks`` (a split's fid bounds, or
+    a group of files): ``mapInArrow`` over ``spark.range`` with one id per
+    partition, task i yielding the RecordBatches of ``read(tasks[i])``.
+    The task rows are JVM-generated — no Python-built plan frame, no
+    shuffle — and partition i reads task i, so rows come back in order."""
 
     def parse(batches):
         for rb in batches:
             for i in rb.column("id").to_pylist():
-                out = read_split(*bounds[i])
-                if out.num_rows:
-                    yield out
+                for out in read(tasks[i]):
+                    if out.num_rows:
+                        yield out
 
-    k = len(bounds)
+    k = len(tasks)
     return spark.range(0, k, 1, k).mapInArrow(parse, schema=schema)
 
 
 def read_shapefile_df(spark: SparkSession, path: str, options: dict | None = None,
                       basename: str | None = None,
-                      target_records_per_split: int = 100_000,
+                      target_records_per_split: int = RECORDS_PER_SPLIT,
                       flat_points: bool = False,
                       bbox: tuple[float, float, float, float] | None = None
                       ) -> DataFrame:
     """Read a shapefile (basename or zip bundle) as a ``features`` DataFrame.
 
-    Splittable when a .shx is present and the source is not a zip: the
-    planner cuts [1..n] into contiguous fid ranges of
-    ``target_records_per_split`` and each task seeks independently.
+    Splittable when a .shx is present and the source is not a zip
+    (``split_bounds``): each task seeks to its own fid range.
 
     ``flat_points=True`` (Point-type files only): emit plain ``x``/``y``
     (+``z``/``m``) double columns instead of the nested geometry struct.
@@ -747,80 +942,36 @@ def read_shapefile_df(spark: SparkSession, path: str, options: dict | None = Non
     (~10x throughput difference measured at 2M points).
 
     ``bbox=(x0, y0, x1, y1)``: keep only records whose bbox INTERSECTS
-    the window (degenerate point bboxes included).  Pushed all the way
-    down: the whole file is skipped when the header bounds miss the
-    window, and on the SHX path records are bounds-tested from their
-    record headers BEFORE geometry decode (the same machinery as the
-    DataSource's ``bbox.*`` predicate pushdown); zip members filter
-    after parse — same rows either way.
+    the window (degenerate point bboxes included), pushed down as the
+    same filters ``format("shapefile")`` receives: the whole file is
+    skipped when the header bounds miss the window, and on the SHX path
+    records are bounds-tested from their record headers BEFORE geometry
+    decode; zip members and no-SHX files filter after parse.
 
-    Each component is optional, but finding none (a missing path, or a
-    zip ``basename`` matching no member) raises ShapefileError.
+    A missing path raises ShapefileError (``plan_shapefile``).
     """
-    plan = plan_shapefile(path, options, basename)
-    if not (plan.has_shp or plan.has_dbf or plan.shx_offsets is not None):
-        where = path if basename is None else f"{path} [{basename}]"
-        raise core.ShapefileError(f"no .shp, .shx or .dbf found: {where}")
-    pruned = (bbox is not None
-              and not _header_intersects(plan.header_bounds, bbox))
-    if flat_points:
-        if plan.shape_type not in core.POINT_TYPES:
-            raise core.ShapefileError(
-                "flat_points requires a Point-type shapefile")
-        out = _read_points_flat(spark, plan, target_records_per_split)
-        if pruned:
-            # whole file outside the window (folds to an empty relation)
-            return out.where(F.lit(False))
-        if bbox is not None:
-            # per-record pre-decode masking is intentionally skipped on
-            # the flat path: the whole-split frombuffer decode is faster
-            # than a selective decode, and this filter is codegen'd
-            qx0, qy0, qx1, qy1 = (float(v) for v in bbox)
-            out = out.where((F.col("x") >= qx0) & (F.col("x") <= qx1) &
-                            (F.col("y") >= qy0) & (F.col("y") <= qy1))
-        return out
-    schema = features_schema(plan)
-
-    if pruned:
-        return spark.createDataFrame([], schema)   # whole file pruned
-
-    if plan.n_records >= 0 and not plan.is_zip and plan.shx_offsets is not None:
-        n = plan.n_records
-        k = max(1, math.ceil(n / target_records_per_split))
-        bounds = [(1 + i * n // k, 1 + (i + 1) * n // k) for i in range(k)]
-        can_pretest = plan.has_shp
-    else:
-        # unknown count (no SHX/DBF) or zip → single sequential split
-        n = plan.n_records if plan.n_records >= 0 else 1 << 40
-        bounds = [(1, n + 1)]
-        can_pretest = False
-
     from pyspark.sql.pandas.types import to_arrow_schema
+
+    plan = plan_shapefile(path, options, basename)
+    if flat_points and plan.shape_type not in core.POINT_TYPES:
+        raise core.ShapefileError(
+            "flat_points requires a Point-type shapefile")
+    schema = flat_points_schema(plan) if flat_points else features_schema(plan)
+    window = _window_filters(bbox)
+    if _header_prunes(plan.header_bounds, window):
+        return spark.createDataFrame([], schema)   # whole file pruned
     arrow_schema = to_arrow_schema(schema)
-    window = None if bbox is None else tuple(float(v) for v in bbox)
-    pretest = window is not None and can_pretest
-    bbox_fn = (lambda buf, rel: _bbox_window_mask(buf, rel, window)) \
-        if pretest else None
-
-    df = _scan_splits(spark, bounds, schema, lambda a, b: _arrow_split_batch(
-        plan, a, b, arrow_schema, bbox_mask_fn=bbox_fn))
-    if window is not None and not pretest:
-        qx0, qy0, qx1, qy1 = window
-        df = df.where((F.col("bbox.xmax") >= qx0) &
-                      (F.col("bbox.xmin") <= qx1) &
-                      (F.col("bbox.ymax") >= qy0) &
-                      (F.col("bbox.ymin") <= qy1))
+    # flat points decode whole splits (faster than a selective decode)
+    # and filter x/y in codegen'd Spark instead
+    pushed = [] if flat_points else window
+    df = _scan_splits(
+        spark, split_bounds(plan, target_records_per_split), schema,
+        lambda ab: [read_split(plan, *ab, arrow_schema, flat_points,
+                               (), pushed)])
+    if flat_points and bbox is not None:
+        x0, y0, x1, y1 = (float(v) for v in bbox)
+        df = df.where(F.col("x").between(x0, x1) & F.col("y").between(y0, y1))
     return df
-
-
-def _bbox_window_mask(buf: bytes, rel: np.ndarray,
-                      window: tuple[float, float, float, float]) -> np.ndarray:
-    """Record-header bounds INTERSECT the query window (NaN bounds —
-    Null shapes — never intersect)."""
-    bb = record_bounds_quick(buf, rel)
-    qx0, qy0, qx1, qy1 = window
-    return ((bb[:, 2] >= qx0) & (bb[:, 0] <= qx1) &
-            (bb[:, 3] >= qy0) & (bb[:, 1] <= qy1))
 
 
 def discover_shapefile_bases(directory: str) -> list[str]:
@@ -833,133 +984,44 @@ def discover_shapefile_bases(directory: str) -> list[str]:
     return bases
 
 
-def _header_intersects(bounds: tuple | None,
-                       bbox: tuple[float, float, float, float]) -> bool:
-    """Does a file-header bounds tuple intersect a (x0, y0, x1, y1) query
-    window?  Unknown/NoData bounds conservatively intersect."""
-    if bounds is None:
-        return True
-    half = len(bounds) // 2
-    hx0, hy0, hx1, hy1 = bounds[0], bounds[1], bounds[half], bounds[half + 1]
-    if hx0 > hx1 or hy0 > hy1:          # NoData-scrubbed → unknown
-        return True
-    qx0, qy0, qx1, qy1 = bbox
-    return not (hx1 < qx0 or hx0 > qx1 or hy1 < qy0 or hy0 > qy1)
+def dir_schema(schema: T.StructType) -> T.StructType:
+    """A directory scan's schema: the file schema plus ``source_basename``
+    (built fresh — ``StructType.add`` mutates in place)."""
+    return T.StructType(list(schema.fields) +
+                        [T.StructField("source_basename", T.StringType())])
 
 
 def read_shapefile_dir(spark: SparkSession, directory: str,
                        options: dict | None = None,
-                       target_records_per_split: int = 100_000,
-                       bbox: tuple[float, float, float, float] | None = None,
-                       plan_files_per_task: int = 16) -> DataFrame:
+                       target_records_per_split: int = RECORDS_PER_SPLIT,
+                       bbox: tuple[float, float, float, float] | None = None
+                       ) -> DataFrame:
     """Read every shapefile under ``directory`` into one ``features``
     DataFrame with a ``source_basename`` column.
 
-    Scale shape (VERDICT r2 #6): the driver does ONE directory listing
-    plus ONE representative header plan (for the schema); every other
-    header pre-pass runs INSIDE tasks.  Stage 1 maps file paths →
-    (path, fid_start, fid_end) split rows (reading only SHX/DBF headers);
-    stage 2 shuffles the tiny split rows across the cluster and parses.
-    Driver wall time is O(1) in file count — a 10k-tile corpus plans
-    10k headers across the cluster, not serially on the driver.
-
-    ``bbox=(x0, y0, x1, y1)`` skips whole files whose header bounds
-    (shxheader.go:53-102) don't intersect the window (file-level
-    partition pruning), bounds-tests surviving records from their
-    record headers BEFORE geometry decode on the SHX path, and filters
-    zip members post-parse — the same semantics as
-    ``read_shapefile_df(bbox=...)`` per file.
+    One Spark job: the driver does ONE directory listing plus ONE
+    representative header plan (for the schema); the files are cut into
+    ``file_groups`` and each task plans and reads its files
+    (``read_file``), so driver time is O(1) in file count.  ``bbox``
+    filters every file as ``read_shapefile_df(bbox=...)`` does, skipping
+    whole files by header bounds.
 
     All files must share the representative file's schema; a mismatched
     file fails its task loudly (Arrow schema error) rather than silently
     coercing.
     """
-    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     bases = discover_shapefile_bases(directory)
     if not bases:
         raise core.ShapefileError(f"no shapefiles under {directory}")
-
-    base_schema = features_schema(plan_shapefile(bases[0], options))
-    # StructType.add mutates in place — build the extended schema fresh
-    schema = T.StructType(list(base_schema.fields) +
-                          [T.StructField("source_basename", T.StringType())])
-    arrow_base = to_arrow_schema(base_schema)
-    arrow_full = to_arrow_schema(schema)
-    tps = target_records_per_split
-
-    def plan_splits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            paths: list[str] = []
-            starts: list[int] = []
-            ends: list[int] = []
-            for p in pdf["path"]:
-                plan = plan_shapefile(p, options)
-                if bbox is not None and not _header_intersects(
-                        plan.header_bounds, bbox):
-                    continue
-                if (plan.n_records >= 0 and not plan.is_zip
-                        and plan.shx_offsets is not None):
-                    n = plan.n_records
-                    k = max(1, math.ceil(n / tps))
-                    bnds = [(1 + i * n // k, 1 + (i + 1) * n // k)
-                            for i in range(k)]
-                else:
-                    n = plan.n_records if plan.n_records >= 0 else 1 << 40
-                    bnds = [(1, n + 1)]
-                for a, b in bnds:
-                    paths.append(p)
-                    starts.append(a)
-                    ends.append(b)
-            yield pd.DataFrame({
-                "path": pd.Series(paths, dtype="object"),
-                "fid_start": pd.Series(starts, dtype="int64"),
-                "fid_end": pd.Series(ends, dtype="int64")})
-
-    n_plan_tasks = max(1, math.ceil(len(bases) / plan_files_per_task))
-    paths_df = spark.createDataFrame([(b,) for b in bases], "path string")
-    splits = (paths_df.repartition(n_plan_tasks, "path")
-              .mapInPandas(plan_splits,
-                           "path string, fid_start long, fid_end long"))
-
-    window = None if bbox is None else tuple(float(v) for v in bbox)
-
-    def parse(batches):
-        plans: dict[str, ShapefilePlan] = {}
-        for rb in batches:
-            for p, a, b in zip(rb.column("path").to_pylist(),
-                               rb.column("fid_start").to_pylist(),
-                               rb.column("fid_end").to_pylist()):
-                plan = plans.get(p)
-                if plan is None:
-                    plan = plans[p] = plan_shapefile(p, options)
-                pretest = (window is not None and not plan.is_zip
-                           and plan.shx_offsets is not None and plan.has_shp)
-                bbox_fn = (lambda buf, rel:
-                           _bbox_window_mask(buf, rel, window)) \
-                    if pretest else None
-                out = _arrow_split_batch(plan, int(a), int(b), arrow_base,
-                                         bbox_mask_fn=bbox_fn)
-                if not out.num_rows:
-                    continue
-                name = posixpath.basename(p)
-                yield pa.RecordBatch.from_arrays(
-                    list(out.columns) +
-                    [pa.array([name] * out.num_rows, pa.string())],
-                    schema=arrow_full)
-
-    df = (splits.repartition(F.col("path"), F.col("fid_start"))
-          .mapInArrow(parse, schema=schema))
-    if window is not None:
-        # exact semantics on files the pre-test couldn't cover (zips, no
-        # SHX); idempotent on the rest
-        qx0, qy0, qx1, qy1 = window
-        df = df.where((F.col("bbox.xmax") >= qx0) &
-                      (F.col("bbox.xmin") <= qx1) &
-                      (F.col("bbox.ymax") >= qy0) &
-                      (F.col("bbox.ymin") <= qy1))
-    return df
+    schema = dir_schema(features_schema(plan_shapefile(bases[0], options)))
+    arrow_schema = to_arrow_schema(schema)
+    window = _window_filters(bbox)
+    return _scan_splits(spark, file_groups(bases), schema, lambda paths: (
+        rb for p in paths
+        for rb in read_file(p, options, None, arrow_schema,
+                            target_records_per_split, bbox_filters=window)))
 
 
 def _arrow_points_flat_batch(plan: ShapefilePlan, fid_start: int,
@@ -994,55 +1056,11 @@ def _arrow_points_flat_batch(plan: ShapefilePlan, fid_start: int,
     return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
-def sequential_split_bounds(plan: ShapefilePlan,
-                            records_per_split: int) -> list[tuple[int, int]]:
-    """Per-file fid split bounds for task-side sequential scans, shared
-    by the function readers and both DataSource readers (r5 review: the
-    rule lived in three places and could drift): chunk by
-    ``records_per_split`` when the record count is known and the source
-    can range-read (SHX present, not a zip member); otherwise one
-    sequential split, with the large sentinel when the count is unknown."""
-    n = plan.n_records
-    if n >= 0 and not plan.is_zip and plan.shx_offsets is not None \
-            and plan.has_shp:
-        step = records_per_split
-        return [(a, min(a + step, n + 1)) for a in range(1, n + 1, step)]
-    n = n if n >= 0 else (1 << 40)
-    return [(1, n + 1)]
-
-
 def flat_points_schema(plan: ShapefilePlan) -> T.StructType:
     """Schema of the flat-point emit path: fid, deleted, DBF columns,
     then plain x/y(/z/m) doubles — no nested geometry struct."""
-    ord_names = _ord_names(plan.shape_type)
-    fields = [T.StructField("fid", T.LongType(), False),
-              T.StructField("deleted", T.BooleanType(), False)]
-    for name, ftype, length, decimals in plan.dbf_fields:
-        fields.append(T.StructField(
-            name, _dbf_spark_type(core.DBFField(name, ftype, length, 0, 0), decimals)))
-    fields += [T.StructField(c, T.DoubleType()) for c in ord_names]
-    return T.StructType(fields)
-
-
-def _read_points_flat(spark: SparkSession, plan: ShapefilePlan,
-                      target_records_per_split: int) -> DataFrame:
-    """Point-type scan emitting flat x/y(/z/m) double columns + DBF cols."""
-    schema = flat_points_schema(plan)
-
-    n = plan.n_records
-    if n >= 0 and plan.shx_offsets is not None and not plan.is_zip \
-            and plan.has_shp:
-        k = max(1, math.ceil(n / target_records_per_split))
-        bounds = [(1 + i * n // k, 1 + (i + 1) * n // k) for i in range(k)]
-    else:
-        # zip (not splittable: every split would re-read the member) or
-        # unknown count (no SHX/DBF) → single sequential split with the
-        # same large-sentinel fallback as read_shapefile_df
-        bounds = sequential_split_bounds(plan, target_records_per_split)
-    from pyspark.sql.pandas.types import to_arrow_schema
-    arrow_schema = to_arrow_schema(schema)
-    return _scan_splits(spark, bounds, schema, lambda a, b:
-                        _arrow_points_flat_batch(plan, a, b, arrow_schema))
+    return T.StructType(_attr_fields(plan) + [
+        T.StructField(c, T.DoubleType()) for c in _ord_names(plan.shape_type)])
 
 
 def file_metadata(path: str, options: dict | None = None,

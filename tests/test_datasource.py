@@ -308,10 +308,15 @@ def test_flat_points_datasource_dir_mode(ds_spark, tmp_path):
     assert df.where("source_basename = 'f1'").count() == 100
 
 
-def test_flat_points_rejects_non_point_corpus(ds_spark, ref_testdata):
+def test_flat_points_rejects_non_point_corpus(ds_spark, tmp_path):
+    from go_shapefile_spark.sources.shapefile_writer import write_polygons
+
+    base = str(tmp_path / "poly")
+    write_polygons(base, [{"coords": [0, 0, 0, 1, 1, 1, 1, 0, 0, 0],
+                           "ends": [10]}])
     with pytest.raises(Exception, match="Point-type"):
         (ds_spark.read.format("shapefile")
-         .option("path", os.path.join(ref_testdata, "poly"))
+         .option("path", base)
          .option("flat_points", "true").load().collect())
 
 
@@ -373,3 +378,138 @@ def test_flat_points_fid_pruning(tmp_path):
     rows = [rb for p in parts for rb in reader.read(p)]
     fids = [f for rb in rows for f in rb.column(0).to_pylist()]
     assert fids == [90]
+
+
+# --- hermetic front-door parity: both front doors × both modes -------------
+
+_FIELDS = [("NAME", "C", 8), ("AREA", "N", 12, 3), ("EAS_ID", "N", 6)]
+_WINDOW = (2.5, 0.5, 7.5, 1.5)
+
+
+def _write_rects(base, n, x0, name):
+    from go_shapefile_spark.sources.shapefile_writer import write_polygons
+
+    write_polygons(
+        base, [{"coords": [x0 + i, 0, x0 + i, 1 + i % 3, x0 + i + 1,
+                           1 + i % 3, x0 + i + 1, 0, x0 + i, 0], "ends": [10]}
+               for i in range(n)],
+        _FIELDS, [[f"{name}{i}", i * 1.5, 100 + i] for i in range(n)])
+
+
+@pytest.fixture(scope="module")
+def parity_corpus(tmp_path_factory):
+    """Polygons with C/N/N-decimal fields, a zip bundle, a .shp with no
+    .shx and a Point file, all sharing one DBF schema."""
+    import zipfile
+
+    import numpy as np
+
+    from go_shapefile_spark.sources.shapefile_writer import write_points
+
+    d = tmp_path_factory.mktemp("parity")
+    _write_rects(str(d / "polys"), 12, 0, "p")
+    zbase = str(tmp_path_factory.mktemp("zsrc") / "inzip")
+    _write_rects(zbase, 9, 1.5, "z")
+    with zipfile.ZipFile(d / "bundle.zip", "w") as zf:
+        for ext in ("shp", "shx", "dbf"):
+            zf.write(f"{zbase}.{ext}", f"inzip.{ext}")
+    _write_rects(str(d / "noshx"), 7, 3, "n")
+    os.remove(d / "noshx.shx")
+    xs = np.arange(10) + 0.25
+    write_points(str(d / "pts"), xs, xs / 5.0, fields=_FIELDS,
+                 rows=[[f"q{i}", i * 1.5, 100 + i] for i in range(10)])
+    return d
+
+
+def _front_door(spark, door, mode, corpus, base, filt):
+    """One read through ``door`` with filter ``filt`` pushed the way that
+    door takes it."""
+    from go_shapefile_spark.sources.shapefile import read_shapefile_dir
+
+    path = str(corpus) if mode == "dir" else base
+    x0, y0, x1, y1 = filt if isinstance(filt, tuple) else (None,) * 4
+    if door == "function":
+        kw = {"bbox": filt} if isinstance(filt, tuple) else {}
+        df = (read_shapefile_dir(spark, path, target_records_per_split=4,
+                                 **kw) if mode == "dir" else
+              read_shapefile_df(spark, path, target_records_per_split=4,
+                                **kw))
+    else:
+        df = (spark.read.format("shapefile").option("path", path)
+              .option("records_per_split", "4").load())
+        if isinstance(filt, tuple):
+            df = df.where(f"bbox.xmax >= {x0} AND bbox.xmin <= {x1} AND "
+                          f"bbox.ymax >= {y0} AND bbox.ymin <= {y1}")
+    return df.where(filt) if isinstance(filt, str) else df
+
+
+def _relational(spark, mode, corpus, base, filt):
+    """The expectation: the unfiltered ``read_shapefile_df`` of every
+    file, filtered relationally."""
+    from pyspark.sql import functions as F
+
+    from go_shapefile_spark.sources.shapefile import discover_shapefile_bases
+
+    if mode == "dir":
+        df = None
+        for b in discover_shapefile_bases(str(corpus)):
+            one = read_shapefile_df(spark, b).withColumn(
+                "source_basename", F.lit(os.path.basename(b)))
+            df = one if df is None else df.unionByName(one)
+    else:
+        df = read_shapefile_df(spark, base)
+    if isinstance(filt, tuple):
+        x0, y0, x1, y1 = filt
+        df = df.where((F.col("bbox.xmax") >= x0) & (F.col("bbox.xmin") <= x1)
+                      & (F.col("bbox.ymax") >= y0) & (F.col("bbox.ymin") <= y1))
+    elif filt is not None:
+        df = df.where(filt)
+    return df
+
+
+def _rows(df):
+    key = ("source_basename", "fid") if "source_basename" in df.columns \
+        else ("fid",)
+    return sorted(df.collect(), key=lambda r: tuple(r[k] for k in key))
+
+
+_FILTERS = {"none": None, "bbox": _WINDOW, "attr": "AREA > 4 AND EAS_ID < 108",
+            "off_window": (1000.0, 1000.0, 1001.0, 1001.0)}
+
+
+@pytest.mark.parametrize("filt", sorted(_FILTERS))
+@pytest.mark.parametrize("mode", ["single", "dir"])
+@pytest.mark.parametrize("door", ["function", "format"])
+def test_front_door_parity(ds_spark, parity_corpus, door, mode, filt):
+    """Every front door returns exactly the rows of a relational
+    ``.where`` over the unfiltered function read — on a polygon file, a
+    zip bundle, a .shp with no .shx and a Point file, singly and as one
+    directory."""
+    f = _FILTERS[filt]
+    bases = [str(parity_corpus / b) for b in
+             ("polys", "bundle.zip", "noshx", "pts")]
+    for base in bases if mode == "single" else [None]:
+        exp = _rows(_relational(ds_spark, mode, parity_corpus, base, f))
+        got = _rows(_front_door(ds_spark, door, mode, parity_corpus, base, f))
+        assert got == exp, (door, mode, filt, base)
+        assert (len(exp) == 0) == (filt == "off_window"), (filt, base)
+
+
+def test_read_shapefile_dir_is_one_scan_stage(ds_spark, parity_corpus):
+    """The directory scan is one ``mapInArrow`` over ``spark.range``: no
+    Python planning stage and no shuffle below it, and counting it runs
+    at most two jobs."""
+    from go_shapefile_spark.plans.audit import executed_plan
+    from go_shapefile_spark.sources.shapefile import read_shapefile_dir
+
+    df = read_shapefile_dir(ds_spark, str(parity_corpus))
+    plan = executed_plan(df.groupBy().count())
+    below = plan[plan.index("MapInArrow"):]
+    assert "Exchange" not in below and "MapInPandas" not in below, plan
+    sc = ds_spark.sparkContext
+    sc.setJobGroup("dir-count", "dir-count")
+    try:
+        assert df.count() == 12 + 9 + 7 + 10
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("dir-count")) <= 2

@@ -57,6 +57,22 @@ def test_rasterize_vectorize_roundtrip(spark):
     assert covered == original
 
 
+def test_rasterize_cell_centre_on_edge(spark):
+    """A partial cell whose centre lies exactly on a polygon edge: the
+    clockwise rectangle lon -10..11.25 has its east edge through the
+    centre of cell (0..22.5, 0..11.25) at res 4, so it covers that
+    cell's west half — px 0..7 on every row, not the inverted 8..15."""
+    from go_shapefile_spark.operators.tiles import rasterize_polygons
+    ring = [-10.0, -20.0, -10.0, 20.0, 11.25, 20.0, 11.25, -20.0,
+            -10.0, -20.0]
+    polys = [{"fid": 1, "coords": np.array(ring), "ends": [10]}]
+    pixels = rasterize_polygons(spark, polys, res=4, tile_px=16).toPandas()
+    cell = int(C.cell_from_xy(np.array([8]), np.array([8]), 4)[0])
+    got = set(zip(pixels.px[pixels.cell == cell],
+                  pixels.py[pixels.cell == cell]))
+    assert got == {(x, y) for x in range(8) for y in range(16)}
+
+
 def test_rasterize_real_countries(spark, ref_testdata):
     """E8 on real geometry: rasterized ne_110m pixel area must
     approximate each country's shoelace area, and the vectorized

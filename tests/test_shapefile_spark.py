@@ -365,20 +365,28 @@ def test_unknown_record_count_read(spark, tmp_path):
 
 def test_missing_shapefile_raises(spark, tmp_path):
     """A path with no .shp/.shx/.dbf, or a zip basename matching no
-    member, raises instead of reading as a 0-row frame; a lone .shp
-    (every other component absent) still reads."""
+    member, raises instead of reading as a 0-row frame — through every
+    front door: the function reader, ``format("shapefile")`` (single file
+    and a directory member) and ``file_metadata``; a lone .shp (every
+    other component absent) still reads."""
     import zipfile
 
     import numpy as np
 
+    from go_shapefile_spark.sources.datasource import ShapefileDataSource
     from go_shapefile_spark.sources.shapefile_core import ShapefileError
     from go_shapefile_spark.sources.shapefile_writer import write_points
 
+    missing = str(tmp_path / "no_such_file")
     with pytest.raises(ShapefileError, match="no .shp, .shx or .dbf"):
-        read_shapefile_df(spark, str(tmp_path / "no_such_file"))
+        read_shapefile_df(spark, missing)
     with pytest.raises(ShapefileError, match="no .shp, .shx or .dbf"):
-        read_shapefile_df(spark, str(tmp_path / "no_such_file"),
-                          flat_points=True)
+        read_shapefile_df(spark, missing, flat_points=True)
+    with pytest.raises(ShapefileError, match="no .shp, .shx or .dbf"):
+        file_metadata(missing)
+    spark.dataSource.register(ShapefileDataSource)
+    with pytest.raises(Exception, match="no .shp, .shx or .dbf"):
+        spark.read.format("shapefile").option("path", missing).load().count()
 
     base = str(tmp_path / "pts")
     write_points(base, np.arange(5.0), np.arange(5.0))
@@ -389,6 +397,17 @@ def test_missing_shapefile_raises(spark, tmp_path):
     assert read_shapefile_df(spark, zpath, basename="pts").count() == 5
     with pytest.raises(ShapefileError, match="other"):
         read_shapefile_df(spark, zpath, basename="other")
+    zdir = tmp_path / "zdir"
+    zdir.mkdir()
+    os.rename(zpath, zdir / "pts.zip")
+    with pytest.raises(Exception, match="no .shp, .shx or .dbf"):
+        (spark.read.format("shapefile").option("path", str(zdir))
+         .option("basename", "other").load().count())
+    # the planned file reads; the zip member named "a" is missing in-task
+    write_points(str(zdir / "a"), np.arange(3.0), np.arange(3.0))
+    with pytest.raises(Exception, match="no .shp, .shx or .dbf"):
+        (spark.read.format("shapefile").option("path", str(zdir))
+         .option("basename", "a").load().count())
 
     os.remove(base + ".shx")
     assert read_shapefile_df(spark, base).count() == 5

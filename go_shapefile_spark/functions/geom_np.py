@@ -60,19 +60,53 @@ def point_in_polygon_chunked(px, py, coords, ends, stride: int = 2,
     return out
 
 
-def edge_bboxes(coords: np.ndarray, ends, stride: int = 2):
-    """Per-edge bounding boxes (exmin, eymin, exmax, eymax) over all rings."""
-    bxs, bys, bXs, bYs = [], [], [], []
-    for x, y in rings_of(np.asarray(coords, dtype=np.float64), ends, stride):
-        bxs.append(np.minimum(x[:-1], x[1:]))
-        bXs.append(np.maximum(x[:-1], x[1:]))
-        bys.append(np.minimum(y[:-1], y[1:]))
-        bYs.append(np.maximum(y[:-1], y[1:]))
-    return (np.concatenate(bxs), np.concatenate(bys),
-            np.concatenate(bXs), np.concatenate(bYs))
+def ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """``arange(s, s + c)`` for every (start, count) pair, concatenated."""
+    return np.arange(counts.sum()) + np.repeat(
+        starts - (np.cumsum(counts) - counts), counts)
 
 
-def polygon_bbox(coords: np.ndarray, stride: int = 2):
-    c = np.asarray(coords, dtype=np.float64)
-    return (c[0::stride].min(), c[1::stride].min(),
-            c[0::stride].max(), c[1::stride].max())
+def points_in_polygons(px: np.ndarray, py: np.ndarray, pid: np.ndarray,
+                       seg: np.ndarray, seg_pid: np.ndarray) -> np.ndarray:
+    """Even-odd ray-cast PIP of every point ``(px[i], py[i])`` against
+    polygon ``pid[i]``, whose ring edges are the rows of ``seg`` (E, 4)
+    ``[x1, y1, x2, y2]`` with ``seg_pid == pid[i]`` — batched over all
+    polygons, and equal to ``point_in_polygon`` per polygon.
+
+    Points are grouped by distinct (polygon, y): an edge straddles a
+    group when ``min(y1, y2) <= y < max(y1, y2)`` (the ``(y1 > y) !=
+    (y2 > y)`` test), and its crossing abscissa is computed once per
+    (group, straddling edge) with ``point_in_polygon``'s float ops.  A
+    sorted merge of abscissas and points then counts, per point, the
+    abscissas east of it (``px < xs``).
+    """
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    if not len(px):
+        return np.zeros(0, dtype=bool)
+    uy, yrank = np.unique(py, return_inverse=True)
+    r = len(uy)
+    gkey, grp = np.unique(np.asarray(pid, np.int64) * r + yrank,
+                          return_inverse=True)
+    gy = uy[gkey % r]
+    x1, y1, x2, y2 = np.asarray(seg, dtype=np.float64).T
+    base = np.asarray(seg_pid, np.int64) * r
+    glo = np.searchsorted(gkey, base + np.searchsorted(uy, np.minimum(y1, y2)))
+    ghi = np.searchsorted(gkey, base + np.searchsorted(uy, np.maximum(y1, y2)))
+    cnt = ghi - glo
+    ei = np.repeat(np.arange(len(cnt)), cnt)
+    gi = ranges(glo, cnt)
+    xs = x1[ei] + (gy[gi] - y1[ei]) / (y2 - y1)[ei] * (x2 - x1)[ei]
+    # merge: within a group, abscissas sort before points of equal value,
+    # so the abscissas at or before a point are exactly those <= px
+    m = len(xs)
+    kind = np.concatenate([np.zeros(m, np.int8), np.ones(len(px), np.int8)])
+    order = np.lexsort((kind, np.concatenate([xs, px]),
+                        np.concatenate([gi, grp])))
+    is_x = kind[order] == 0
+    at_or_before = np.cumsum(is_x)[~is_x]
+    point = order[~is_x] - m
+    group_end = np.cumsum(np.bincount(gi, minlength=len(gkey)))
+    inside = np.empty(len(px), dtype=bool)
+    inside[point] = (group_end[grp[point]] - at_or_before) % 2 == 1
+    return inside

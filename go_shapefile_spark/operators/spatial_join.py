@@ -21,7 +21,6 @@ downstream aggregations (see operators/skew.py).
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import numpy as np
@@ -39,8 +38,10 @@ from . import local
 # condition, so it shares one generated method with the probe loop;
 # HotSpot does not JIT a method above 8,000 bytecode bytes, and the
 # stage leaves whole-stage codegen above spark.sql.codegen.maxFields
-# (100) columns.  At 8 edges the largest method measured 4.6 KB on the
-# countries_join query and 7.8 KB with 30 more point columns (BENCH.md).
+# (100) columns.  At 8 edges, with the eight reference signs packed in
+# one int column, the largest method measured 4.9 KB on the
+# countries_join query and 7.9 KB on a 54-column point side, the widest
+# that still fits the field limit (BENCH.md).
 UNROLL_K = 8
 # Partial cells with more than UNROLL_K edges are quartered at most this
 # many times; what is still above UNROLL_K joins through the
@@ -59,7 +60,7 @@ ROWS_SCHEMA = ", ".join(
     + ["_sj_in boolean not null"]
     + [f"_sj_e{j}_{c} double not null" for j in range(UNROLL_K)
        for c in _EDGE]
-    + [f"_sj_e{j}_s boolean not null" for j in range(UNROLL_K)])
+    + ["_sj_s int not null"])
 WIDE_COLS = ["cell", "polygon_fid", "_sj_x0", "_sj_x1", "_sj_y0", "_sj_y1",
              "_sj_rx", "_sj_ry", "_sj_in", "_sj_edges"]
 JOIN_SCHEMA = ROWS_SCHEMA + ", _sj_edges array<array<double>>"
@@ -139,10 +140,11 @@ def _split_rects(box: np.ndarray, prow: np.ndarray, pe: np.ndarray,
 
     ``box`` is (n, 4) ``[x0, x1, y0, y1]``; ``prow, pe`` are the
     (rectangle, edge) incidences, sorted by rectangle with edges in ring
-    order; ``ebox`` is (E, 4) edge bboxes ``[xmin, ymin, xmax, ymax]``.
-    A child keeps the parent's edges whose bbox overlaps it (the strict
-    test of the cell-level clip), so the segment from its centre to any
-    point in it can only cross those.  Returns the leaves' boxes, the
+    order; ``ebox`` is (E, 4) edge bboxes ``[xmin, ymin, xmax, ymax]``,
+    each overlapping its rectangle (strict tests).  A child keeps the
+    parent's edges whose bbox overlaps it (the strict test of the
+    cell-level clip), so the segment from its centre to any point in it
+    can only cross those.  Returns the leaves' boxes, the
     input rectangle each came from, and their incidences, sorted the
     same way.
     """
@@ -175,11 +177,15 @@ def _split_rects(box: np.ndarray, prow: np.ndarray, pe: np.ndarray,
         box[~north, 3] = ym[~north]
         owner = np.repeat(owner[split], 4)
         sel = split[prow]
-        cr = 4 * (np.cumsum(split) - 1)[prow[sel]][:, None] + np.arange(4)
+        par = (np.cumsum(split) - 1)[prow[sel]]
+        # an edge overlaps its parent strictly, so the overlap test of a
+        # child reduces to the parent's midlines
+        eb, pm = ebox[pe[sel]], 4 * par
+        w_, e_ = eb[:, 0] < xm[pm], eb[:, 2] > xm[pm]
+        s_, n_ = eb[:, 1] < ym[pm], eb[:, 3] > ym[pm]
+        hit = np.column_stack([w_ & s_, e_ & s_, w_ & n_, e_ & n_])
+        cr = pm[:, None] + np.arange(4)
         ce = np.broadcast_to(pe[sel][:, None], cr.shape)
-        cb, eb = box[cr], ebox[ce]
-        hit = ((eb[..., 0] < cb[..., 1]) & (eb[..., 2] > cb[..., 0]) &
-               (eb[..., 1] < cb[..., 3]) & (eb[..., 3] > cb[..., 2]))
         order = np.argsort(cr[hit], kind="stable")
         prow, pe = cr[hit][order], ce[hit][order]
     return (np.concatenate(leaves), np.concatenate(lown),
@@ -226,19 +232,69 @@ def _move_refs_off_edges(box: np.ndarray, rx: np.ndarray, ry: np.ndarray,
                          "cover rows")
 
 
-def _cover_arrays(polygons: list[dict], res: int, edge_chunk: int,
-                  with_edges: bool, split_k: int | None) -> dict:
-    """The cover kernel behind ``polygon_cell_cover`` and ``join_cover``:
-    full rows, then partial rows, with ``cell fid full rx ry ref lon0
-    lat0`` and the half-open membership ``bounds`` (n, 4) ``[x0, x1,
-    y0, y1]`` (±inf on the cell's outer sides, so a point the cell id
-    puts in the cell lands in exactly one of its rows); with edges, the
-    (row, segment) incidences ``erow`` / ``seg`` sorted by row.
+def _polygon_edges(polygons: list[dict]):
+    """Every polygon's coordinate bbox (P, 4) ``[xmin, ymin, xmax, ymax]``
+    and all ring edges, polygon by polygon in ring order: segments (E, 4)
+    ``[x1, y1, x2, y2]`` and each edge's polygon index."""
+    coords = [np.asarray(p["coords"], dtype=np.float64) for p in polygons]
+    clen = np.array([len(c) for c in coords], dtype=np.int64)
+    if not clen.all() or (clen % 2).any():
+        raise ValueError("polygon coords must be a non-empty run of x, y pairs")
+    xy = np.concatenate(coords)
+    x, y = xy[0::2], xy[1::2]
+    voff = np.cumsum(clen // 2) - clen // 2
+    bbox = np.column_stack([np.minimum.reduceat(x, voff),
+                            np.minimum.reduceat(y, voff),
+                            np.maximum.reduceat(x, voff),
+                            np.maximum.reduceat(y, voff)])
+    if not np.isfinite(bbox).all():
+        raise ValueError("polygon coordinates must be finite")
+    ends = [np.asarray(p["ends"], dtype=np.int64) for p in polygons]
+    nring = np.array([len(e) for e in ends])
+    rpoly = np.repeat(np.arange(len(polygons)), nring)
+    ends = np.concatenate(ends)
+    prev = np.concatenate([[0], ends[:-1]])      # each ring's start
+    prev[(np.cumsum(nring) - nring)[nring > 0]] = 0
+    nvert = np.maximum((np.minimum(ends, clen[rpoly]) - prev) // 2, 0)
+    nedge = np.maximum(nvert - 1, 0)
+    first = voff[rpoly] + prev // 2
+    v = G.ranges(first, nedge)
+    seg = np.column_stack([x[v], y[v], x[v + 1], y[v + 1]])
+    return bbox, seg, np.repeat(rpoly, nedge)
+
+
+def _grid_span(lo: np.ndarray, hi: np.ndarray, origin: float, size: float,
+               n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Per interval ``[lo, hi]``: the first and last grid index ``g`` with
+    ``lo < origin + g*size + size`` and ``hi > origin + g*size``, the
+    strict overlap test of a cell and an edge bbox, computed with those
+    exact float ops.  Both tests are monotone in ``g``, so each bound is
+    the floor estimate corrected by testing its neighbours."""
+    def corner(g):
+        return origin + g * size
+
+    a0 = np.clip(np.floor((lo - origin) / size), -4, n + 4).astype(np.int64)
+    b0 = np.clip(np.ceil((hi - origin) / size) - 1, -4, n + 4).astype(np.int64)
+    a, b = a0 - 2, b0 - 3
+    for d in range(-2, 3):
+        a += ~(lo < corner(a0 + d) + size)
+        b += hi > corner(b0 + d)
+    return a, b
+
+
+def _cover_arrays(polygons: list[dict], res: int,
+                  split_k: int | None) -> dict:
+    """The cover kernel behind ``polygon_cell_cover`` and ``join_cover``,
+    batched over every polygon: full rows, then partial rows, with
+    ``cell fid full rx ry ref lon0 lat0``, the half-open membership
+    ``bounds`` (n, 4) ``[x0, x1, y0, y1]`` (±inf on the cell's outer
+    sides, so a point the cell id puts in the cell lands in exactly one
+    of its rows), and the (row, segment) incidences ``erow`` / ``seg``
+    sorted by row, edges in ring order.
 
     ``split_k`` splits partial cells with more than that many edges
-    into sub-rectangles (``_split_rects``, one call over every polygon);
-    a sub-rectangle with no edge and its centre outside is dropped, as
-    no point in it is inside.
+    into sub-rectangles (``_split_rects``); a sub-rectangle with no edge
+    and its centre outside is dropped, as no point in it is inside.
     """
     n = 1 << res
     w, h = 360.0 / n, 180.0 / n
@@ -247,63 +303,59 @@ def _cover_arrays(polygons: list[dict], res: int, edge_chunk: int,
                                         "ref", "lon0", "lat0", "erow")}
         out.update(bounds=np.zeros((0, 4)), seg=np.zeros((0, 4)))
         return out
-    # Pass 1, per polygon: the bbox grid and the cells overlapping an
-    # edge bbox (partial), with their (cell, edge) incidences.  Arrays
-    # collect per polygon and concatenate once: a pandas frame per
-    # polygon was ~80% of the build at 200k polygons (profiled); the
-    # bbox grid range uses scalar math (same float64 ops as xy_np).
-    grids, prow_l, pe_l, ebox_l, seg_l = [], [], [], [], []
-    n_part = n_edge = 0
-    for poly in polygons:
-        coords, ends = poly["coords"], poly["ends"]
-        x0, y0, x1, y1 = G.polygon_bbox(coords)
-        ix0 = min(max(int(math.floor((x0 + 180.0) / 360.0 * n)), 0), n - 1)
-        iy0 = min(max(int(math.floor((y0 + 90.0) / 180.0 * n)), 0), n - 1)
-        ix1 = min(max(int(math.floor((x1 + 180.0) / 360.0 * n)), 0), n - 1)
-        iy1 = min(max(int(math.floor((y1 + 90.0) / 180.0 * n)), 0), n - 1)
-        ixs = np.arange(ix0, ix1 + 1)
-        iys = np.arange(iy0, iy1 + 1)
-        gx = np.tile(ixs, len(iys))
-        gy = np.repeat(iys, len(ixs))
-        lon0 = -180.0 + gx * w
-        lat0 = -90.0 + gy * h
+    fids = np.array([p["fid"] for p in polygons], dtype=np.int64)
+    bbox, segs, epoly = _polygon_edges(polygons)
+    # each polygon's bbox grid, cells numbered globally: polygon by
+    # polygon, row-major within one
+    ix0, iy0, ix1, iy1 = (
+        np.clip(np.floor((bbox[:, j] + o) / s * n), 0, n - 1).astype(np.int64)
+        for j, o, s in ((0, 180.0, 360.0), (1, 90.0, 180.0),
+                        (2, 180.0, 360.0), (3, 90.0, 180.0)))
+    nx = ix1 - ix0 + 1
+    size = nx * (iy1 - iy0 + 1)
+    goff = np.cumsum(size) - size
 
-        ebox = G.edge_bboxes(coords, ends)
-        exmin, eymin, exmax, eymax = ebox
-        partial = np.zeros(gx.shape, dtype=bool)
-        hit_cols: list[np.ndarray] = []
-        for s in range(0, len(exmin), edge_chunk):
-            e = slice(s, s + edge_chunk)
-            hit = ((exmin[None, e] < lon0[:, None] + w) &
-                   (exmax[None, e] > lon0[:, None]) &
-                   (eymin[None, e] < lat0[:, None] + h) &
-                   (eymax[None, e] > lat0[:, None]))
-            partial |= hit.any(axis=1)
-            if with_edges:
-                hit_cols.append(hit)
-        part = np.nonzero(partial)[0]
-        grids.append((gx, gy, lon0, lat0, np.nonzero(~partial)[0], part))
-        if with_edges and len(part):
-            prow, pe = np.nonzero(np.concatenate(hit_cols, axis=1)[part])
-            prow_l.append(prow + n_part)
-            pe_l.append(pe + n_edge)
-            ebox_l.append(np.column_stack(ebox))
-            seg_l.append(_edge_segments(coords, ends))
-            n_edge += len(exmin)
-        n_part += len(part)
+    def decode(g):
+        p = np.searchsorted(goff, g, side="right") - 1
+        j = g - goff[p]
+        return p, ix0[p] + j % nx[p], iy0[p] + j // nx[p]
 
-    pgx, pgy, plon0, plat0 = (np.concatenate([g[i][g[5]] for g in grids])
-                              for i in range(4))
-    pfid = np.repeat([p["fid"] for p in polygons],
-                     [len(g[5]) for g in grids]).astype(np.int64)
+    # Pass 1: the (cell, edge) incidences — every cell of an edge's
+    # polygon grid overlapping the edge bbox (strict tests), generated
+    # edge by edge, then stably sorted by cell: rows in cell order,
+    # edges in ring order within a row
+    ebox = np.column_stack([np.minimum(segs[:, 0], segs[:, 2]),
+                            np.minimum(segs[:, 1], segs[:, 3]),
+                            np.maximum(segs[:, 0], segs[:, 2]),
+                            np.maximum(segs[:, 1], segs[:, 3])])
+    ex0, ex1 = _grid_span(ebox[:, 0], ebox[:, 2], -180.0, w, n)
+    ey0, ey1 = _grid_span(ebox[:, 1], ebox[:, 3], -90.0, h, n)
+    ex0, ey0 = np.maximum(ex0, ix0[epoly]), np.maximum(ey0, iy0[epoly])
+    cx = np.maximum(np.minimum(ex1, ix1[epoly]) - ex0 + 1, 0)
+    cy = np.maximum(np.minimum(ey1, iy1[epoly]) - ey0 + 1, 0)
+    cnt = cx * cy
+    pe = np.repeat(np.arange(len(segs)), cnt)
+    j = G.ranges(np.zeros_like(cnt), cnt)
+    p = epoly[pe]
+    gcell = goff[p] + ((ey0[pe] + j // cx[pe] - iy0[p]) * nx[p]
+                       + ex0[pe] + j % cx[pe] - ix0[p])
+    order = np.argsort(gcell, kind="stable")
+    gcell, pe = gcell[order], pe[order]
+    new = np.ones(len(gcell), dtype=bool)
+    new[1:] = gcell[1:] != gcell[:-1]
+    prow = np.cumsum(new) - 1
+    interior = np.ones(int(size.sum()), dtype=bool)
+    interior[gcell] = False
+    ipoly, igx, igy = decode(np.flatnonzero(interior))
+    ppoly, pgx, pgy = decode(gcell[new])
+    plon0, plat0 = -180.0 + pgx * w, -90.0 + pgy * h
+    n_part = len(pgx)
+
     cell_box = np.column_stack([plon0, plon0 + w, plat0, plat0 + h])
     box, owner = cell_box, np.arange(n_part)
-    prow = np.concatenate(prow_l) if prow_l else np.zeros(0, dtype=np.int64)
-    pe = np.concatenate(pe_l) if pe_l else np.zeros(0, dtype=np.int64)
     if split_k is not None and len(prow):
-        box, owner, prow, pe = _split_rects(box, prow, pe,
-                                            np.concatenate(ebox_l), split_k)
-        # leaves back in cell order, so each polygon's are one slice
+        box, owner, prow, pe = _split_rects(box, prow, pe, ebox, split_k)
+        # leaves back in cell order, the order of the output rows
         order = np.argsort(owner, kind="stable")
         rank = np.empty_like(order)
         rank[order] = np.arange(len(order))
@@ -314,37 +366,31 @@ def _cover_arrays(polygons: list[dict], res: int, edge_chunk: int,
     whole = (box == cell_box[owner]).all(axis=1)
     rx = np.where(whole, plon0[owner] + w / 2, (box[:, 0] + box[:, 1]) * 0.5)
     ry = np.where(whole, plat0[owner] + h / 2, (box[:, 2] + box[:, 3]) * 0.5)
-    seg = np.concatenate(seg_l)[pe] if seg_l else np.zeros((0, 4))
+    seg = segs[pe]
     _move_refs_off_edges(box, rx, ry, prow, seg)
 
-    # Pass 2, per polygon: ONE pointwise PIP of every reference point —
-    # interior cell centres (full or outside) and the partial cells'
-    # and sub-rectangles' centres (their parity)
-    lo = np.searchsorted(owner, np.cumsum([0] + [len(g[5]) for g in grids]))
-    full_l, ref = [], np.zeros(len(box), dtype=bool)
-    for poly, g, a, b in zip(polygons, grids, lo, lo[1:]):
-        gx, gy, lon0, lat0, interior, _ = g
-        inside = G.point_in_polygon_chunked(
-            np.concatenate([lon0[interior] + w / 2, rx[a:b]]),
-            np.concatenate([lat0[interior] + h / 2, ry[a:b]]),
-            poly["coords"], poly["ends"])
-        keep = interior[inside[:len(interior)]]
-        full_l.append((gx[keep], gy[keep], lon0[keep], lat0[keep],
-                       np.full(len(keep), poly["fid"], dtype=np.int64)))
-        ref[a:b] = inside[len(interior):]
+    # Pass 2: ONE batched PIP of every reference point — interior cell
+    # centres (full or outside) and the partial rows' references (their
+    # parity)
+    n_int = len(igx)
+    inside = G.points_in_polygons(
+        np.concatenate([-180.0 + igx * w + w / 2, rx]),
+        np.concatenate([-90.0 + igy * h + h / 2, ry]),
+        np.concatenate([ipoly, ppoly[owner]]), segs, epoly)
+    full, ref = inside[:n_int], inside[n_int:]
     if split_k is not None:
         live = ref | (np.bincount(prow, minlength=len(box)) > 0)
         prow = (np.cumsum(live) - 1)[prow]
         box, owner, rx, ry, ref = (box[live], owner[live], rx[live],
                                    ry[live], ref[live])
 
-    fgx, fgy, flon0, flat0, ffid = (np.concatenate([f[i] for f in full_l])
-                                    for i in range(5))
+    fgx, fgy, ffid = igx[full], igy[full], fids[ipoly[full]]
+    flon0, flat0 = -180.0 + fgx * w, -90.0 + fgy * h
     n_full = len(fgx)
     return {
         "cell": C.cell_from_xy(np.concatenate([fgx, pgx[owner]]),
                                np.concatenate([fgy, pgy[owner]]), res),
-        "fid": np.concatenate([ffid, pfid[owner]]),
+        "fid": np.concatenate([ffid, fids[ppoly[owner]]]),
         "full": np.arange(n_full + len(box)) < n_full,
         "rx": np.concatenate([flon0 + w / 2, rx]),
         "ry": np.concatenate([flat0 + h / 2, ry]),
@@ -362,7 +408,6 @@ def _cover_arrays(polygons: list[dict], res: int, edge_chunk: int,
 
 
 def polygon_cell_cover(polygons: list[dict], res: int,
-                       edge_chunk: int = 512,
                        with_edges: bool = False) -> pd.DataFrame:
     """Classify grid cells at ``res`` against each polygon.
 
@@ -385,7 +430,7 @@ def polygon_cell_cover(polygons: list[dict], res: int,
     Returns pandas DataFrame (cell:int64, fid:int64, full:bool
     [, rx, ry, ref_inside, edges, lon0, lat0]).
     """
-    a = _cover_arrays(polygons, res, edge_chunk, with_edges, None)
+    a = _cover_arrays(polygons, res, None)
     out = pd.DataFrame({"cell": a["cell"].astype(np.int64),
                         "fid": a["fid"].astype(np.int64),
                         "full": a["full"].astype(bool)})
@@ -412,17 +457,18 @@ def join_cover(polygons: list[dict], res: int) -> pd.DataFrame:
     (``_split_rects``), each with its own centre reference (moved off
     any edge through it, ``_move_refs_off_edges``), parity and edges; a
     row then holds its ≤ ``UNROLL_K`` edges as scalar columns
-    ``_sj_e{j}_ax.._by`` plus ``_sj_e{j}_s``, the sign ``d1 > 0`` of the
-    reference's orientation against the edge (cover columns only, so
-    precomputed here with the operand order of the SQL predicate; numpy
-    and the JVM both round per IEEE operation, so the sign is the one
-    the predicate would compute).  Padding edges are zero-length
-    (a = b = (0, 0)): ``d1 = d2 = 0`` contributes no crossing.  Rows still
-    above ``UNROLL_K`` at ``SPLIT_DEPTH`` keep their edge list in
-    ``_sj_edges`` (NULL elsewhere) and join through ``aggregate()``.
+    ``_sj_e{j}_ax.._by`` plus, in bit ``j`` of the one int ``_sj_s``,
+    the sign ``d1 > 0`` of the reference's orientation against edge
+    ``j`` (cover columns only, so precomputed here with the operand
+    order of the SQL predicate; numpy and the JVM both round per IEEE
+    operation, so the sign is the one the predicate would compute).
+    Padding edges are zero-length (a = b = (0, 0)): ``d1 = d2 = 0``
+    contributes no crossing.  Rows still above ``UNROLL_K`` at
+    ``SPLIT_DEPTH`` keep their edge list in ``_sj_edges`` (NULL
+    elsewhere) and join through ``aggregate()``.
     """
     k = UNROLL_K
-    a = _cover_arrays(polygons, res, 512, True, k)
+    a = _cover_arrays(polygons, res, k)
     n = len(a["fid"])
     erow = a["erow"].astype(np.int64)
     counts = np.bincount(erow, minlength=n)
@@ -448,21 +494,12 @@ def join_cover(polygons: list[dict], res: int) -> pd.DataFrame:
     for j in range(k):
         for c, name in enumerate(_EDGE):
             out[f"_sj_e{j}_{name}"] = edges[:, j, c]
-    for j in range(k):
-        out[f"_sj_e{j}_s"] = signs[:, j]
+    out["_sj_s"] = (signs << np.arange(k)).sum(axis=1).astype(np.int32)
     lists = np.full(n, None, dtype=object)
     for r in np.nonzero(wide)[0]:
         lists[r] = seg[starts[r]:starts[r] + counts[r]].tolist()
     out["_sj_edges"] = lists
     return pd.DataFrame(out)
-
-
-def _edge_segments(coords: np.ndarray, ends) -> np.ndarray:
-    """All ring edges as an (E, 4) array of [x1, y1, x2, y2]."""
-    segs = []
-    for x, y in G.rings_of(np.asarray(coords, dtype=np.float64), ends):
-        segs.append(np.column_stack([x[:-1], y[:-1], x[1:], y[1:]]))
-    return np.concatenate(segs) if segs else np.zeros((0, 4))
 
 
 def _crossing_sql(p: str, q: str, rx: str, ry: str, edge: tuple,
@@ -474,8 +511,9 @@ def _crossing_sql(p: str, q: str, rx: str, ry: str, edge: tuple,
     half-open sign rule (``d > 0`` vs ``d <= 0``), so a polygon vertex
     lying exactly on the reference→point segment — common with
     round-number grids — still counts exactly one crossing per true
-    boundary pass.  ``d1`` reads no point column; ``d1_pos`` names a
-    column holding its sign ``d1 > 0`` when the cover precomputes it.
+    boundary pass.  ``d1`` reads no point column; ``d1_pos`` is a
+    boolean SQL expression for its sign ``d1 > 0`` when the cover
+    precomputes it.
     """
     ax, ay, bx, by = edge
     # orient(a,b,c) = (bx-ax)(cy-ay) - (by-ay)(cx-ax)
@@ -503,14 +541,15 @@ def aggregate_crossings_sql(p: str, q: str, rx: str, ry: str,
 
 
 def unrolled_crossings_sql(p: str, q: str, rx: str, ry: str, k: int,
-                           prefix: str, d1_pos: bool = False) -> str:
+                           prefix: str, signs: str | None = None) -> str:
     """Crossings over ``k`` scalar edge columns ``{prefix}{j}_ax.._by``
-    (with ``d1_pos``, their precomputed signs ``{prefix}{j}_s``),
-    statically unrolled so the predicate stays inside whole-stage
-    codegen: no array access, no lambda, no per-row allocation."""
+    (with ``signs``, an int column whose bit ``j`` holds edge ``j``'s
+    precomputed sign ``d1 > 0``), statically unrolled so the predicate
+    stays inside whole-stage codegen: no array access, no lambda, no
+    per-row allocation."""
     return " + ".join(
         _crossing_sql(p, q, rx, ry, tuple(f"{prefix}{j}_{c}" for c in _EDGE),
-                      f"{prefix}{j}_s" if d1_pos else None)
+                      f"(({signs} & {1 << j}) > 0)" if signs else None)
         for j in range(k))
 
 
@@ -522,7 +561,7 @@ def _join_filter_sql(p: str, q: str, unrolled: bool) -> str:
     ``d1 = d2 = 0`` and never count a crossing); the other form is the
     depth-cap rows' ``aggregate()`` over ``_sj_edges``."""
     crossings = (unrolled_crossings_sql(p, q, "_sj_rx", "_sj_ry", UNROLL_K,
-                                        "_sj_e", d1_pos=True)
+                                        "_sj_e", signs="_sj_s")
                  if unrolled else
                  aggregate_crossings_sql(p, q, "_sj_rx", "_sj_ry",
                                          "_sj_edges"))

@@ -18,6 +18,10 @@ Spark-first restatement of the reference's two read paths
 * Zip bundles (.zip/.shz/.exe) are not splittable → one task ingests and
   re-emits as ``features`` rows (fine for the polygon side; the large
   side of every join in this engine is parquet/Iceberg and splittable).
+* A one-split file that range-reads and is within ``local.SCAN_BYTES``
+  decodes on the driver through the same per-split reader and becomes
+  a LocalRelation (``read_shapefile_df``): a Python task's fixed start
+  dwarfs such a decode.
 
 This module is the one scan core: the split rule (``split_bounds``),
 the pushed-filter evaluators, the per-split reader (``read_split``) and
@@ -41,6 +45,7 @@ from typing import Any, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull,
@@ -49,6 +54,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators import local
 from . import fsio
 from . import shapefile_core as core
 
@@ -567,8 +573,6 @@ def _arrow_attr_arrays(plan: ShapefilePlan, fid_start: int, n_full: int,
     split, decoded straight from the split's DBF byte range — shared by
     the columnar polygon and flat-point emit paths.  ``keep`` optionally
     subsets the ``n_full`` decoded records down to ``n`` survivors."""
-    import pyarrow as pa
-
     dbf_cols = deleted = None
     if plan.dbf_record_size and plan.has_dbf:
         dbf_cols, deleted = _read_split_dbf(plan, fid_start, n_full)
@@ -606,8 +610,6 @@ def _arrow_split_batch(plan: ShapefilePlan, fid_start: int, fid_end: int,
     kernel's flat buffers — zero per-record Python for XY polygon
     corpora.  Anything the kernel declines falls back to the pandas path
     (same rows, same schema)."""
-    import pyarrow as pa
-
     # the columnar build is positional over the FULL features schema; a
     # user-supplied (pruned/reordered) read schema takes the by-name
     # pandas conversion instead
@@ -807,8 +809,6 @@ def _bbox_keep(buf: bytes, rel: np.ndarray,
 def _bbox_postfilter(rb, filters: list[Filter]):
     """Exact bbox filtering AFTER parse, for files that cannot range-read
     (zip members, no SHX): the same comparisons on the bbox struct."""
-    import pyarrow as pa
-
     bbox = rb.column(rb.schema.get_field_index("bbox"))
     keep = np.ones(rb.num_rows, dtype=bool)
     for f in filters:
@@ -887,8 +887,6 @@ def read_file(path: str, options: dict | None, basename: str | None,
     runs here, inside the task, so the driver plans one file per
     directory; a file whose header bounds fail a bbox filter is skipped
     whole."""
-    import pyarrow as pa
-
     plan = plan_shapefile(path, options, basename)
     if flat and plan.shape_type not in core.POINT_TYPES:
         raise core.ShapefileError(
@@ -924,6 +922,14 @@ def _scan_splits(spark: SparkSession, tasks: list, schema: T.StructType,
     return spark.range(0, k, 1, k).mapInArrow(parse, schema=schema)
 
 
+def scan_bytes(plan: ShapefilePlan) -> int:
+    """The bytes a range-reading scan of the whole file reads: every
+    ``.shp`` record (8-byte header plus its ``.shx`` content length) and
+    every ``.dbf`` record."""
+    n = plan.n_records
+    return int(plan.shx_lengths.sum()) + 8 * n + n * plan.dbf_record_size
+
+
 def read_shapefile_df(spark: SparkSession, path: str, options: dict | None = None,
                       basename: str | None = None,
                       target_records_per_split: int = RECORDS_PER_SPLIT,
@@ -933,7 +939,11 @@ def read_shapefile_df(spark: SparkSession, path: str, options: dict | None = Non
     """Read a shapefile (basename or zip bundle) as a ``features`` DataFrame.
 
     Splittable when a .shx is present and the source is not a zip
-    (``split_bounds``): each task seeks to its own fid range.
+    (``split_bounds``): each task seeks to its own fid range.  A file
+    that range-reads in one split and whose ``scan_bytes`` are within
+    ``local.SCAN_BYTES`` is read on the driver by the same
+    ``read_split`` and returned as a LocalRelation: no Python task, so
+    no worker start, for the small polygon side of a join.
 
     ``flat_points=True`` (Point-type files only): emit plain ``x``/``y``
     (+``z``/``m``) double columns instead of the nested geometry struct.
@@ -964,10 +974,17 @@ def read_shapefile_df(spark: SparkSession, path: str, options: dict | None = Non
     # flat points decode whole splits (faster than a selective decode)
     # and filter x/y in codegen'd Spark instead
     pushed = [] if flat_points else window
-    df = _scan_splits(
-        spark, split_bounds(plan, target_records_per_split), schema,
-        lambda ab: [read_split(plan, *ab, arrow_schema, flat_points,
-                               (), pushed)])
+    splits = split_bounds(plan, target_records_per_split)
+    if (_range_reads(plan) and len(splits) == 1
+            and local.within(scan_bytes(plan), local.SCAN_BYTES)):
+        # small file: decode on the driver, no Python task at all
+        rb = read_split(plan, *splits[0], arrow_schema, flat_points, (), pushed)
+        df = spark.createDataFrame(pa.Table.from_batches([rb]), schema)
+    else:
+        df = _scan_splits(
+            spark, splits, schema,
+            lambda ab: [read_split(plan, *ab, arrow_schema, flat_points,
+                                   (), pushed)])
     if flat_points and bbox is not None:
         x0, y0, x1, y1 = (float(v) for v in bbox)
         df = df.where(F.col("x").between(x0, x1) & F.col("y").between(y0, y1))
@@ -1030,8 +1047,6 @@ def _arrow_points_flat_batch(plan: ShapefilePlan, fid_start: int,
     the vectorized decoder's numpy columns — no pandas frame in between
     (the frame build + from_pandas conversion was ~30% of the scan wall
     time at 2M points; see BENCH.md round 4)."""
-    import pyarrow as pa
-
     ords = None
     if not plan.is_zip and plan.has_shp and plan.shx_offsets is not None:
         got = _read_split_shp(plan, fid_start, fid_end)

@@ -268,16 +268,18 @@ def _job_count(spark, action) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_scan_is_one_job_in_fid_order(spark, tmp_path):
+def test_scan_is_one_job_in_fid_order(spark, tmp_path, local_caps):
     """Splits come from ``spark.range``, one per task, with no shuffle:
     counting a one-split file runs exactly one Spark job, and a 3-split
     read returns the same fids in the same order as a single-split read
-    (flat-point path too)."""
+    (flat-point path too).  ``SCAN_BYTES=0`` keeps the small one-split
+    file on the distributed scan."""
     import numpy as np
 
     from go_shapefile_spark.sources.shapefile_writer import (write_points,
                                                              write_polygons)
 
+    local_caps(SCAN_BYTES=0)
     ring = [0.0, 0.0, 0.0, 1.0, 1.0, 1.0, 1.0, 0.0, 0.0, 0.0]
     base = str(tmp_path / "sq")
     write_polygons(base, [{"coords": [v + i for v in ring], "ends": [10]}
@@ -411,3 +413,120 @@ def test_missing_shapefile_raises(spark, tmp_path):
 
     os.remove(base + ".shx")
     assert read_shapefile_df(spark, base).count() == 5
+
+
+# --- driver-local scan of small files (local.SCAN_BYTES) ----------------------
+
+_SMALL_FIELDS = [("NAME", "C", 8), ("AREA", "N", 12, 3), ("EAS_ID", "N", 6)]
+
+
+@pytest.fixture(scope="module")
+def small_corpus(tmp_path_factory):
+    """Small range-readable files: polygons (one with a hole, one in two
+    parts) and polylines with C/N/N-decimal fields, a Point file and an
+    empty polygon file."""
+    import numpy as np
+
+    from go_shapefile_spark.sources.shapefile_writer import (
+        write_points, write_polygons, write_polylines)
+
+    d = tmp_path_factory.mktemp("small")
+    rect = [0.0, 0.0, 0.0, 2.0, 2.0, 2.0, 2.0, 0.0, 0.0, 0.0]
+    hole = [0.5, 0.5, 1.5, 0.5, 1.5, 1.5, 0.5, 1.5, 0.5, 0.5]
+    polys = [{"coords": [v + i for v in rect], "ends": [10]}
+             for i in range(8)]
+    polys[2] = {"coords": rect + hole, "ends": [10, 20]}
+    polys[5] = {"coords": rect + [v + 4 for v in rect], "ends": [10, 20]}
+    rows = [[f"p{i}", i * 1.5, 100 + i] for i in range(8)]
+    rows[3] = [None, None, None]
+    write_polygons(str(d / "polys"), polys, _SMALL_FIELDS, rows)
+    write_polylines(str(d / "lines"),
+                    [{"coords": [i, 0.0, i + 1.0, 1.0, i + 2.0, 0.0],
+                      "ends": [6]} for i in range(5)], _SMALL_FIELDS,
+                    [[f"l{i}", i / 4, i] for i in range(5)])
+    xs = np.arange(10) + 0.25
+    write_points(str(d / "pts"), xs, xs / 5.0, _SMALL_FIELDS,
+                 [[f"q{i}", i * 1.5, 100 + i] for i in range(10)])
+    write_polygons(str(d / "empty"), [], _SMALL_FIELDS, [])
+    return d
+
+
+def _is_local(df) -> bool:
+    """True when the read is a driver-built LocalRelation (no scan task)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "LocalTableScan" in plan and "MapInArrow" not in plan
+
+
+@pytest.mark.parametrize("base, kw", [
+    ("polys", {}), ("lines", {}), ("pts", {}),
+    ("pts", {"flat_points": True}),
+    ("polys", {"bbox": (2.5, 0.5, 5.5, 1.5)}),
+    ("pts", {"flat_points": True, "bbox": (2.0, 0.0, 6.0, 1.0)}),
+    ("empty", {})])
+def test_driver_local_read_equals_distributed(spark, small_corpus,
+                                              local_caps, base, kw):
+    """A small one-split file reads on the driver; the rows, their order,
+    the schema and its nullability equal the distributed read's (a cap
+    of -1: the empty file's 0 bytes are within a cap of 0)."""
+    path = str(small_corpus / base)
+    got = read_shapefile_df(spark, path, **kw)
+    local_caps(SCAN_BYTES=-1)
+    exp = read_shapefile_df(spark, path, **kw)
+    assert _is_local(got) and not _is_local(exp)
+    assert got.schema == exp.schema
+    assert [f.nullable for f in got.schema.fields] == \
+        [f.nullable for f in exp.schema.fields]
+    rows = got.collect()
+    assert rows == exp.collect()
+    assert (len(rows) == 0) == (base == "empty")
+
+
+def test_scan_bytes_cap_is_exact(spark, small_corpus, local_caps):
+    """``scan_bytes`` is the bytes the scan reads (every .shp record and
+    .dbf record); a file one byte over the cap takes the distributed
+    scan, and both read the same rows."""
+    from go_shapefile_spark.sources.shapefile import plan_shapefile, scan_bytes
+
+    path = str(small_corpus / "polys")
+    plan = plan_shapefile(path)
+    assert scan_bytes(plan) == (os.path.getsize(path + ".shp") - 100
+                                + plan.n_records * plan.dbf_record_size)
+    local_caps(SCAN_BYTES=scan_bytes(plan))
+    at_cap = read_shapefile_df(spark, path)
+    local_caps(SCAN_BYTES=scan_bytes(plan) - 1)
+    over = read_shapefile_df(spark, path)
+    assert _is_local(at_cap) and not _is_local(over)
+    assert at_cap.collect() == over.collect()
+
+
+def test_only_one_range_read_split_goes_driver_local(spark, small_corpus,
+                                                     tmp_path):
+    """Several splits, a zip member and a .shp without .shx keep the
+    distributed scan, however small."""
+    import shutil
+    import zipfile
+
+    path = str(small_corpus / "polys")
+    assert not _is_local(read_shapefile_df(spark, path,
+                                           target_records_per_split=4))
+    zpath = str(tmp_path / "polys.zip")
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for ext in ("shp", "shx", "dbf"):
+            zf.write(f"{path}.{ext}", f"polys.{ext}")
+    assert not _is_local(read_shapefile_df(spark, zpath))
+    bare = str(tmp_path / "bare")
+    for ext in ("shp", "dbf"):
+        shutil.copyfile(f"{path}.{ext}", f"{bare}.{ext}")
+    assert not _is_local(read_shapefile_df(spark, bare))
+
+
+def test_small_read_runs_no_job_and_no_python(spark, small_corpus):
+    """A bounded collect of a small file runs no Spark job, and its
+    executed plan has no Python node."""
+    from go_shapefile_spark.plans.audit import assert_no_python_udf
+
+    df = read_shapefile_df(spark, str(small_corpus / "polys"))
+    got = []
+    assert _job_count(spark, lambda: got.extend(df.limit(3).collect())) == 0
+    assert [r.fid for r in got] == [1, 2, 3]
+    assert_no_python_udf(df)

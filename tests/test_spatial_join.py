@@ -422,7 +422,9 @@ def test_join_stage_stays_in_codegen(spark, local_caps):
     """The refine runs inside whole-stage codegen, in a method HotSpot
     compiles: with AQE off the join is ``*(n) BroadcastHashJoin`` and no
     generated method exceeds 8,000 bytecode bytes — for both cover
-    builds and a wide point side."""
+    builds, a wide point side, and the widest that fits: 54 point
+    columns, with ``cell``, the two coordinate copies and the 43 cover
+    columns, make the stage's 100 fields."""
     from go_shapefile_spark.operators.geotag import with_lonlat_jvm
     from go_shapefile_spark.operators.spatial_join import (
         PreparedCover, spatial_join_prepared)
@@ -437,6 +439,9 @@ def test_join_stage_stays_in_codegen(spark, local_caps):
                                  F.xxhash64("id").alias("phash")))
     wide_pts = pts.select(
         "*", *[(F.col("idx") + i).alias(f"c{i}") for i in range(24)])
+    widest_pts = pts.select(
+        "*", *[(F.col("idx") + i).alias(f"c{i}") for i in range(50)])
+    assert len(widest_pts.columns) == 54
     driver = PreparedCover.from_features(features, res=4)
     local_caps(COVER_FEATURES=0)
     dist = PreparedCover.from_features(features, res=4)
@@ -444,7 +449,9 @@ def test_join_stage_stays_in_codegen(spark, local_caps):
         for cover, points, keep in (
                 (driver, pts, ["idx", "polygon_fid"]),
                 (dist, pts, ["idx", "polygon_fid"]),
-                (driver, wide_pts, [*wide_pts.columns, "polygon_fid"])):
+                (driver, wide_pts, [*wide_pts.columns, "polygon_fid"]),
+                (driver, widest_pts, [*widest_pts.columns, "polygon_fid"]),
+                (dist, widest_pts, [*widest_pts.columns, "polygon_fid"])):
             joined = spatial_join_prepared(points, cover, keep_cols=keep)
             assert broadcast_joins_in_codegen(joined), \
                 joined._jdf.queryExecution().executedPlan().toString()

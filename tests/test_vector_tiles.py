@@ -150,11 +150,13 @@ def test_vector_tiles_rejects_polylines(spark):
         vector_tiles(df, res=4).collect()
 
 
-def test_vector_tiles_plan_no_shuffle_above_parse(spark):
+def test_vector_tiles_plan_no_shuffle_above_parse(spark, local_caps):
     # the only Exchange allowed is the source's split-metadata
     # repartition BELOW the parse stage (it moves split ranges, not
-    # rows); the clip stage itself must chain straight onto the parse
+    # rows); the clip stage itself must chain straight onto the parse.
+    # SCAN_BYTES=0: the distributed scan, not a driver-local read
     from go_shapefile_spark.sources.shapefile import read_shapefile_df
+    local_caps(SCAN_BYTES=0)
     df = vector_tiles(read_shapefile_df(spark, COUNTRIES), res=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     clip_at = plan.index("MapInArrow run")

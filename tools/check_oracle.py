@@ -5,7 +5,9 @@ DuckDB over the same parquet tables, then compares row count, sorted
 column names, and order-insensitive per-column values.
 
 ``--distributed`` sets every ``operators.local`` cap to 0, so each
-operator with a driver-local finish replays its distributed path.
+operator with a driver-local finish replays its distributed path, and
+small shapefiles take the Python scan instead of the driver-local read
+(``SCAN_BYTES``).
 
 Usage: python tools/check_oracle.py [query ...] [--sf-dir DIR] [--distributed]
 """

@@ -267,35 +267,32 @@ SELECT x, y, CAST(MIN(d) AS BIGINT) AS dist FROM walk GROUP BY x, y"""
 # The three fixed-round grid runners below (distance transform, cost
 # distance, flow accumulation) iterate over an AGGREGATED degree-grid
 # relation bounded by the grid itself, where each distributed round is
-# pure shuffle latency (~0.25 s/round, 2.2 s of a 3.1 s query).  After
-# the aggregation they check the EXACT cell count and spans and, when
-# operators/local.py allows, run the identical integer recurrence in
-# numpy on the driver; otherwise the fully distributed chain.
+# pure shuffle latency (~0.25 s/round, 2.2 s of a 3.1 s query).  One
+# bounded collect of the aggregated grid decides: when operators/local.py
+# allows, the identical integer recurrence runs in numpy on the driver;
+# otherwise the grid is pinned for the fully distributed chain.
 
 
-def _grid_local_stats(base: DataFrame):
-    """Exact cell count + coordinate spans of the aggregated grid (one
-    1-row agg, which doubles as the pin materialization)."""
-    from pyspark.sql import functions as F
+def _grid_collect(grid: DataFrame):
+    """The grid's int64 columns by name when it has at most
+    ``local.GRID_CELLS`` cells and its (span+2)-padded pack key fits
+    int64 (sparse adversarial coords fall back to the distributed
+    chain); else None."""
+    import numpy as np
 
-    return base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("x").alias("x0"), F.max("x").alias("x1"),
-        F.min("y").alias("y0"), F.max("y").alias("y1")).collect()[0]
-
-
-def _grid_local_ok(st) -> bool:
-    """Bounded for the driver path: cell count within
-    ``local.GRID_CELLS`` and the (span+2)-padded pack key fits int64
-    (sparse adversarial coords fall back to the distributed chain)."""
-    if st.n == 0 or not local.within(st.n, local.GRID_CELLS):
-        return False
-    spanx = int(st.x1) - int(st.x0) + 3
-    spany = int(st.y1) - int(st.y0) + 3
-    return spanx * spany < (1 << 62)
+    table = local.collect_within(grid, local.GRID_CELLS)
+    if table is None:
+        return None
+    cols = {name: table.column(name).to_numpy().astype(np.int64)
+            for name in table.column_names}
+    x, y = cols["x"], cols["y"]
+    if x.size and ((int(x.max()) - int(x.min()) + 3)
+                   * (int(y.max()) - int(y.min()) + 3)) >= 1 << 62:
+        return None
+    return cols
 
 
-def _grid_pack(pdf, st):
+def _grid_pack(x, y):
     """Sort the collected grid by a collision-free packed (x, y) key
     (ascending pack order == lexicographic (x, y) order, so emitted
     rows are partition-order independent); returns the sort
@@ -303,10 +300,9 @@ def _grid_pack(pdf, st):
     plus the sorted key array and the y-span multiplier."""
     import numpy as np
 
-    x = pdf["x"].to_numpy(np.int64)
-    y = pdf["y"].to_numpy(np.int64)
-    spany = int(st.y1) - int(st.y0) + 3
-    key = (x - int(st.x0) + 1) * spany + (y - int(st.y0) + 1)
+    x0, y0 = (int(x.min()), int(y.min())) if x.size else (0, 0)
+    spany = (int(y.max()) - y0 + 3) if y.size else 3
+    key = (x - x0 + 1) * spany + (y - y0 + 1)
     order = np.argsort(key)
     return order, key[order], spany
 
@@ -328,25 +324,23 @@ def _grid_neighbor_pairs(key_sorted, spany, offsets):
     return out
 
 
-def _minplus_local_df(spark, base: DataFrame, st, offsets,
-                      rounds: int, out_col: str) -> DataFrame:
+def _minplus_local_df(spark, cols: dict, offsets, rounds: int,
+                      out_col: str) -> DataFrame:
     """Driver-side min-plus (Bellman-Ford) rounds over the bounded
-    grid: the exact integer recurrence ``d_r(c) = min(d_{r-1}(c),
-    min_nbr d_{r-1}(nbr) + w)`` the distributed chain runs —
-    ``np.minimum.at`` is unbuffered, min is order-free, and all values
-    are int64, so the result is bit-identical.  Unreached cells stay
-    at the sentinel and are dropped (the oracle's absent-cells cap)."""
+    grid ``cols`` (:func:`_grid_collect`): the exact integer recurrence
+    ``d_r(c) = min(d_{r-1}(c), min_nbr d_{r-1}(nbr) + w)`` the
+    distributed chain runs — ``np.minimum.at`` is unbuffered, min is
+    order-free, and all values are int64, so the result is
+    bit-identical.  Unreached cells stay at the sentinel and are
+    dropped (the oracle's absent-cells cap)."""
     import numpy as np
     from pyspark.sql import types as T
 
     schema = T.StructType([T.StructField("x", T.LongType(), True),
                            T.StructField("y", T.LongType(), True),
                            T.StructField(out_col, T.LongType(), True)])
-    pdf = base.toPandas()
-    order, key_sorted, spany = _grid_pack(pdf, st)
-    x = pdf["x"].to_numpy(np.int64)[order]
-    y = pdf["y"].to_numpy(np.int64)[order]
-    s = pdf["is_src"].to_numpy(np.int64)[order]
+    order, key_sorted, spany = _grid_pack(cols["x"], cols["y"])
+    x, y, s = (cols[c][order] for c in ("x", "y", "is_src"))
     pairs = _grid_neighbor_pairs(key_sorted, spany, offsets)
     inf = np.int64(1) << 62
     dist = np.where(s == 1, np.int64(0), inf)
@@ -398,21 +392,21 @@ def _grid_minplus(points: DataFrame, rounds: int, pin: str | None,
     from .pinning import fresh_pins, pin_ctes
 
     spark = points.sparkSession
-    pinf = fresh_pins(spark, slot, strategy=pin)
-    # materialize dbase once, edges once (both base templates share
-    # the dpx/dbase prefix)
     base = pin_ctes(
-        spark, "WITH" + distance_transform_base_cte(H.SPARK), ["dbase"],
-        pinf, pts=points.selectExpr("lon", "lat",
-                                    "CAST(is_src AS BIGINT) AS is_src")
-    )[1]["dbase"]
-    st = _grid_local_stats(base)
-    if _grid_local_ok(st):
+        spark, "WITH" + distance_transform_base_cte(H.SPARK)
+        + "\nSELECT * FROM dbase", [],
+        pts=points.selectExpr("lon", "lat",
+                              "CAST(is_src AS BIGINT) AS is_src"))[0]
+    cols = _grid_collect(base)
+    if cols is not None:
         # bounded grid: run the identical recurrence on the driver
         # (see the section comment above) — the edge relation is never
         # built, and the shuffle rounds collapse into vectorized numpy
         # passes
-        return _minplus_local_df(spark, base, st, offsets, rounds, out_col)
+        return _minplus_local_df(spark, cols, offsets, rounds, out_col)
+    # materialize dbase once, edges once
+    pinf = fresh_pins(spark, slot, strategy=pin)
+    base = pinf(base)
     vals = ",".join(f"({dx},{dy},{w})" for dx, dy, w in offsets)
     edges = pinf(pin_ctes(spark, f"""
 WITH doffs AS (SELECT * FROM (VALUES {vals}) AS t(dx, dy, w))
@@ -526,12 +520,12 @@ blabels AS (
 """
 
 
-def _flow_local_df(spark, grid: DataFrame, st, rounds: int,
-                   k: int) -> DataFrame:
-    """Driver-side D8 inflow rounds over the bounded degree grid — the
-    exact integer algebra of the distributed chain: per cell, the
-    steepest uphill neighbor (max n, ties by smallest (x, y) — the
-    template's ROW_NUMBER ORDER BY n DESC, x, y), then ``rounds``
+def _flow_local_df(spark, cols: dict, rounds: int, k: int) -> DataFrame:
+    """Driver-side D8 inflow rounds over the bounded degree grid
+    ``cols`` (:func:`_grid_collect`) — the exact integer algebra of the
+    distributed chain: per cell, the steepest uphill neighbor (max n,
+    ties by smallest (x, y) — the template's ROW_NUMBER ORDER BY
+    n DESC, x, y), then ``rounds``
     passes of ``u = 1 + Σ_incoming u`` (``np.add.at`` is unbuffered;
     integer sums are order-free), then the top-``k`` ranking by
     (acc DESC, x, y).  All int64 end to end."""
@@ -543,11 +537,8 @@ def _flow_local_df(spark, grid: DataFrame, st, rounds: int,
                            T.StructField("n", T.LongType(), True),
                            T.StructField("acc", T.LongType(), True),
                            T.StructField("rk", T.LongType(), True)])
-    pdf = grid.toPandas()
-    order, key_sorted, spany = _grid_pack(pdf, st)
-    x = pdf["x"].to_numpy(np.int64)[order]
-    y = pdf["y"].to_numpy(np.int64)[order]
-    n = pdf["n"].to_numpy(np.int64)[order]
+    order, key_sorted, spany = _grid_pack(cols["x"], cols["y"])
+    x, y, n = (cols[c][order] for c in ("x", "y", "n"))
     pairs = _grid_neighbor_pairs(
         key_sorted, spany,
         [(-1, -1, 0), (-1, 0, 0), (-1, 1, 0), (0, -1, 0),
@@ -610,18 +601,19 @@ def grid_flow_accumulation(points: DataFrame, rounds: int = 8,
     from .pinning import fresh_pins, pin_ctes
 
     spark = points.sparkSession
-    pinf = fresh_pins(spark, slot, strategy=pin)
-    grid = pinf(points
-                .selectExpr("CAST(FLOOR(lon) AS BIGINT) AS x",
-                            "CAST(FLOOR(lat) AS BIGINT) AS y")
-                .groupBy("x", "y")
-                .agg(F.count(F.lit(1)).cast("long").alias("n")))
-    st = _grid_local_stats(grid)
-    if _grid_local_ok(st):
+    grid = (points
+            .selectExpr("CAST(FLOOR(lon) AS BIGINT) AS x",
+                        "CAST(FLOOR(lat) AS BIGINT) AS y")
+            .groupBy("x", "y")
+            .agg(F.count(F.lit(1)).cast("long").alias("n")))
+    cols = _grid_collect(grid)
+    if cols is not None:
         # bounded grid: steepest-neighbor pick + inflow rounds on the
         # driver (see the bounded-grid section comment) — the dirs
         # relation is never built distributively
-        return _flow_local_df(spark, grid, st, rounds, k)
+        return _flow_local_df(spark, cols, rounds, k)
+    pinf = fresh_pins(spark, slot, strategy=pin)
+    grid = pinf(grid)
     # the neighbor coordinates are PRECOMPUTED in a subquery before
     # the b join: with `b.n > a.n` written directly against the
     # 3-relation join, Catalyst has an a–b join edge with only that

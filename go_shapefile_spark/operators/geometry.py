@@ -42,6 +42,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
+from ..sources.shapefile import map_features
 from ..sources.shapefile_core import (SHAPE_TYPE_POLYGON,
                                       SHAPE_TYPE_POLYGON_M,
                                       SHAPE_TYPE_POLYGON_Z,
@@ -52,6 +53,10 @@ from ..sources.shapefile_core import (SHAPE_TYPE_POLYGON,
 _POLYGONS = {SHAPE_TYPE_POLYGON, SHAPE_TYPE_POLYGON_M, SHAPE_TYPE_POLYGON_Z}
 _POLYLINES = {SHAPE_TYPE_POLYLINE, SHAPE_TYPE_POLYLINE_M,
               SHAPE_TYPE_POLYLINE_Z}
+# the feature columns a kernel reads (``map_features``); simplify adds
+# ``geometry.rings``
+KERNEL_COLUMNS = ["fid", "shape_type", "geometry.layout", "geometry.coords",
+                  "geometry.ends"]
 
 
 def part_measures(coords: np.ndarray, ends, stride: int = 2):
@@ -219,9 +224,6 @@ def geodesic_measures(features: DataFrame) -> DataFrame:
     shape: one Arrow pass, no shuffle."""
     import pyarrow as pa
 
-    cols = features.select("fid", "shape_type", "geometry.layout",
-                           "geometry.coords", "geometry.ends")
-
     def run(batches):
         for batch in batches:
             fid = batch.column(0).to_numpy(zero_copy_only=False)
@@ -241,8 +243,9 @@ def geodesic_measures(features: DataFrame) -> DataFrame:
                           pa.float64())],
                 names=["fid", "geo_area_m2", "geo_length_m"])
 
-    return cols.mapInArrow(
-        run, schema="fid long, geo_area_m2 double, geo_length_m double")
+    return map_features(
+        features, KERNEL_COLUMNS, run,
+        "fid long, geo_area_m2 double, geo_length_m double")
 
 
 def simplify_features(features: DataFrame, eps: float) -> DataFrame:
@@ -262,9 +265,6 @@ def simplify_features(features: DataFrame, eps: float) -> DataFrame:
 
     if eps < 0:
         raise ValueError("eps must be non-negative")
-    cols = features.select("fid", "shape_type", "geometry.layout",
-                           "geometry.coords", "geometry.ends",
-                           "geometry.rings")
 
     def run(batches):
         for batch in batches:
@@ -338,10 +338,10 @@ def simplify_features(features: DataFrame, eps: float) -> DataFrame:
                  pa.array(np.concatenate(f_st), pa.int32()), geom],
                 names=["fid", "shape_type", "geometry"])
 
-    return cols.mapInArrow(
-        run, schema="fid long, shape_type int, geometry struct<"
-                    "layout:string, coords:array<double>, "
-                    "ends:array<int>, rings:array<int>>")
+    return map_features(
+        features, KERNEL_COLUMNS + ["geometry.rings"], run,
+        "fid long, shape_type int, geometry struct<layout:string, "
+        "coords:array<double>, ends:array<int>, rings:array<int>>")
 
 
 # --- batched kernels (canonical distributed path) ---------------------------
@@ -720,9 +720,6 @@ def geom_measures(features: DataFrame) -> DataFrame:
     """
     import pyarrow as pa
 
-    cols = features.select("fid", "shape_type", "geometry.layout",
-                           "geometry.coords", "geometry.ends")
-
     def run(batches):
         for batch in batches:
             fid = batch.column(0).to_numpy(zero_copy_only=False)
@@ -740,9 +737,9 @@ def geom_measures(features: DataFrame) -> DataFrame:
                           pa.float64()) for i in (1, 2, 3, 4)],
                 names=["fid", "area", "perimeter", "cx", "cy"])
 
-    return cols.mapInArrow(
-        run, schema="fid long, area double, perimeter double, "
-                    "cx double, cy double")
+    return map_features(
+        features, KERNEL_COLUMNS, run,
+        "fid long, area double, perimeter double, cx double, cy double")
 
 
 # --- convex hull per group -------------------------------------------------

@@ -284,25 +284,24 @@ def triangle_counts_local(edges: DataFrame):
     join (r6): identical algebra (orientation by ascending (deg, id),
     wedges = ordered out-neighbor pairs, closed against the oriented
     edge set; nodes in no triangle are absent), exact integer counts.
-    Returns None unless BOTH the exact edge count (one 1-row agg, which
-    doubles as the pin materialization) and the exact wedge count
-    (Σ od·(od−1)/2, computed from degrees before materializing
-    anything quadratic) are within ``local.TRIANGLE_EDGES`` /
-    ``local.TRIANGLE_WEDGES`` — larger graphs keep the caller's
-    distributed wedge join."""
+    Returns None unless BOTH the edge count (one bounded collect,
+    ``local.collect_within``) and the exact wedge count (Σ od·(od−1)/2,
+    computed from degrees before materializing anything quadratic) are
+    within ``local.TRIANGLE_EDGES`` / ``local.TRIANGLE_WEDGES`` — larger
+    graphs keep the caller's distributed wedge join.  An empty edge set
+    gives an empty frame."""
     import numpy as np
     from pyspark.sql import types as T
 
-    n_edges = edges.count()
-    if n_edges == 0 or not local.within(n_edges, local.TRIANGLE_EDGES):
+    table = local.collect_within(edges, local.TRIANGLE_EDGES)
+    if table is None:
         return None
     spark = edges.sparkSession
     node_t = edges.schema[0].dataType
     schema = T.StructType([T.StructField("node", node_t, True),
                            T.StructField("n_tri", T.LongType(), True)])
-    pdf = edges.toPandas()
-    a = pdf.iloc[:, 0].to_numpy()
-    b = pdf.iloc[:, 1].to_numpy()
+    a = table.column(0).to_numpy()
+    b = table.column(1).to_numpy()
     nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
     da, db = idx[:len(a)], idx[len(a):]
     n = len(nodes)

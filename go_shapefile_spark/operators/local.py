@@ -1,12 +1,13 @@
 """The one bounded-local seam: when an operator finishes on the driver
 instead of on the cluster.
 
-An operator that knows the EXACT size of its remaining work (a
-convergence checksum, a 1-row agg on a pinned relation, a bounded
-collect) finishes with one bounded Arrow collect plus vectorized numpy
-when that size is within its cap; at that size the distributed rounds
-are pure job latency.  Larger inputs keep the distributed path, so the
-collected bytes are bounded by the cap at any input scale.
+An operator decides with one bounded collect (:func:`collect_within`,
+at most ``cap + 1`` rows as Arrow).  Within the cap it finishes on the
+driver with vectorized numpy, where distributed rounds would be pure
+job latency; above it, it keeps its distributed path and pins only
+then, so the collected bytes are bounded by the cap at any input scale.
+(``connected_components`` tests :func:`within` on the exact count its
+convergence checksum gives for free.)
 
 Sizing rule: driver numpy is SINGLE-THREADED, so a cap must keep the
 numpy pass small next to the shuffle latency it removes (a viewshed
@@ -60,6 +61,13 @@ def within(n: int, cap: int) -> bool:
     """The exact-count test: go driver-local when ``n`` is at most
     ``cap``."""
     return n <= cap
+
+
+def collect_within(df, cap: int):
+    """``df`` as a ``pa.Table`` when it has at most ``cap`` rows, else
+    None; at most ``cap + 1`` rows are collected."""
+    table = df.limit(cap + 1).toArrow()
+    return table if within(table.num_rows, cap) else None
 
 
 def to_spark(spark, columns: dict, schema):

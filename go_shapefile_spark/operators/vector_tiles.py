@@ -55,8 +55,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from ..functions import cells as C
-from .geometry import (_arrow_groups, _BatchGeom, _gather_ranges,
-                       _geom_from_records)
+from ..sources.shapefile import map_features
+from .geometry import (KERNEL_COLUMNS, _arrow_groups, _BatchGeom,
+                       _gather_ranges, _geom_from_records)
 
 
 def clip_ring_reference(x, y, box):
@@ -492,9 +493,6 @@ def vector_tiles_lines(features: DataFrame, res: int) -> DataFrame:
     pass, no shuffle — the polyline twin of :func:`vector_tiles`."""
     import pyarrow as pa
 
-    cols = features.select("fid", "shape_type", "geometry.layout",
-                           "geometry.coords", "geometry.ends")
-
     def run(batches):
         for batch in batches:
             fid = batch.column(0).to_numpy(zero_copy_only=False)
@@ -526,10 +524,10 @@ def vector_tiles_lines(features: DataFrame, res: int) -> DataFrame:
                 ], names=["fid", "cell", "lon0", "lat0", "n_paths",
                           "n_points", "length", "coords", "ends"])
 
-    return cols.mapInArrow(
-        run, schema="fid long, cell long, lon0 double, lat0 double, "
-                    "n_paths long, n_points long, length double, "
-                    "coords array<double>, ends array<int>")
+    return map_features(
+        features, KERNEL_COLUMNS, run,
+        "fid long, cell long, lon0 double, lat0 double, n_paths long, "
+        "n_points long, length double, coords array<double>, ends array<int>")
 
 
 def clip_tiles_for_records(recs, res: int):
@@ -683,9 +681,6 @@ def vector_tiles(features: DataFrame, res: int) -> DataFrame:
     """
     import pyarrow as pa
 
-    cols = features.select("fid", "shape_type", "geometry.layout",
-                           "geometry.coords", "geometry.ends")
-
     def run(batches):
         for batch in batches:
             fid = batch.column(0).to_numpy(zero_copy_only=False)
@@ -717,7 +712,7 @@ def vector_tiles(features: DataFrame, res: int) -> DataFrame:
                 ], names=["fid", "cell", "lon0", "lat0", "n_rings",
                           "n_points", "area", "coords", "ends"])
 
-    return cols.mapInArrow(
-        run, schema="fid long, cell long, lon0 double, lat0 double, "
-                    "n_rings long, n_points long, area double, "
-                    "coords array<double>, ends array<int>")
+    return map_features(
+        features, KERNEL_COLUMNS, run,
+        "fid long, cell long, lon0 double, lat0 double, n_rings long, "
+        "n_points long, area double, coords array<double>, ends array<int>")

@@ -5191,30 +5191,28 @@ GROUP BY t.u
     oracles["skyline_events"] = q_skyline(DUCK)
 
     def triangles_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Spark side pins the oriented-edge relation before the wedge
-        join: ``tg_oe`` is referenced three times and CTE inlining would
-        re-run the whole upstream (events scan → md5 geotag → window →
-        DISTINCT → degree rank join) once per reference (r6
-        optimization; the pinned relation keeps the REPARTITION(64, u)
+        """When the distinct edge relation ``tg_e`` and its wedge count
+        are bounded, the identical orient/wedge/close algebra runs
+        vectorized on the driver over one bounded collect of ``tg_e``
+        (operators/graph.py) — the global-rank window and the 4.8M-row
+        wedge join were ~1.6 s of shuffle latency at sf0.1.  Unbounded
+        graphs pin ``tg_e`` and the oriented-edge relation and run the
+        distributed wedge join: ``tg_oe`` is referenced three times, and
+        CTE inlining would re-run the whole upstream (events scan → md5
+        geotag → window → DISTINCT → degree rank join) once per
+        reference (the pinned relation keeps the REPARTITION(64, u)
         distribution the hint establishes).  Oracle unchanged."""
         register_tables(spark, sf_dir)
         from .operators.graph import triangle_counts_local
 
-        pin = _fresh_checkpoints(spark, "triangle_counts")
-        # r6 second pass: pin the distinct edge relation (the part
-        # that scales with input) and, when its exact edge AND wedge
-        # counts are bounded, run the identical orient/wedge/close
-        # algebra vectorized on the driver (operators/graph.py) —
-        # the global-rank window and the 4.8M-row wedge join were
-        # ~1.6 s of shuffle latency at sf0.1.  Unbounded graphs keep
-        # the distributed wedge join below.
-        tg_e = pin_ctes(spark, "WITH " + _triangle_edges_ctes(SPARK),
-                        ["tg_e"], pin)[1]["tg_e"]
+        tg_e = spark.sql("WITH " + _triangle_edges_ctes(SPARK)
+                         + "\nSELECT * FROM tg_e")
         local = triangle_counts_local(tg_e)
         if local is not None:
             return local
+        pin = _fresh_checkpoints(spark, "triangle_counts")
         return pin_ctes(spark, "WITH " + triangle_count_sql("tg_e", SPARK),
-                        ["tg_oe"], pin, tg_e=tg_e)[0]
+                        ["tg_oe"], pin, tg_e=pin(tg_e))[0]
     queries["triangle_counts"] = triangles_pinned
     oracles["triangle_counts"] = q_triangles(DUCK)
 

@@ -46,6 +46,7 @@ from typing import Any, Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull,
@@ -903,6 +904,16 @@ def read_file(path: str, options: dict | None, basename: str | None,
                 schema=arrow_schema)
 
 
+def _task_batches(ids, tasks: list, read) -> Iterator:
+    """The non-empty RecordBatches of ``read(tasks[i])`` for every task
+    id ``i`` in the ``id`` column of the Arrow batches ``ids``."""
+    for rb in ids:
+        for i in rb.column("id").to_pylist():
+            for out in read(tasks[i]):
+                if out.num_rows:
+                    yield out
+
+
 def _scan_splits(spark: SparkSession, tasks: list, schema: T.StructType,
                  read) -> DataFrame:
     """One Spark task per element of ``tasks`` (a split's fid bounds, or
@@ -911,15 +922,61 @@ def _scan_splits(spark: SparkSession, tasks: list, schema: T.StructType,
     The task rows are JVM-generated — no Python-built plan frame, no
     shuffle — and partition i reads task i, so rows come back in order."""
 
-    def parse(batches):
-        for rb in batches:
-            for i in rb.column("id").to_pylist():
-                for out in read(tasks[i]):
-                    if out.num_rows:
-                        yield out
+    def parse(ids):
+        return _task_batches(ids, tasks, read)
 
     k = len(tasks)
-    return spark.range(0, k, 1, k).mapInArrow(parse, schema=schema)
+    df = spark.range(0, k, 1, k).mapInArrow(parse, schema=schema)
+    df._shapefile_scan = (tasks, read)   # for map_features
+    return df
+
+
+def project_batch(rb, columns: list[str]):
+    """``select(*columns)`` on one Arrow batch.  ``"s.f"`` takes field
+    ``f`` of struct column ``s``, named ``f``, and NULL where the struct
+    row is NULL, as Spark's ``select("s.f")`` gives."""
+    arrays = []
+    for name in columns:
+        parent, _, child = name.partition(".")
+        col = rb.column(parent)
+        arrays.append(pc.struct_field(col, child) if child else col)
+    return pa.RecordBatch.from_arrays(
+        arrays, names=[name.rpartition(".")[2] for name in columns])
+
+
+def map_features(features: DataFrame, columns: list[str], fn,
+                 schema) -> DataFrame:
+    """``features.select(*columns).mapInArrow(fn, schema)``, in the scan
+    task when it can be: the one way a feature kernel meets its input.
+
+    When ``features`` is a DataFrame that a distributed shapefile scan
+    returned (``_scan_splits``) and it is not cached, the kernel runs
+    in the same Python task as the decode: one ``mapInArrow`` over
+    ``spark.range`` reads each split, projects ``columns`` in Arrow
+    (:func:`project_batch`) and feeds ``fn`` slices of at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, the batches
+    the two-stage plan would hand it.  So the geometry never crosses to
+    the JVM and back, and the task starts one Python worker, not two.
+    Any other input keeps the two stages."""
+    projected = features.select(*columns)   # a bad column fails here
+    scan = vars(features).get("_shapefile_scan")
+    if scan is None or features.is_cached:
+        return projected.mapInArrow(fn, schema=schema)
+    tasks, read = scan
+    spark = features.sparkSession
+    rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+    def parse_and_map(ids):
+        def batches():
+            for rb in _task_batches(ids, tasks, read):
+                rb = project_batch(rb, columns)
+                step = rows if rows > 0 else rb.num_rows
+                for off in range(0, rb.num_rows, step):
+                    yield rb.slice(off, step)
+        return fn(batches())
+
+    k = len(tasks)
+    return spark.range(0, k, 1, k).mapInArrow(parse_and_map, schema=schema)
 
 
 def scan_bytes(plan: ShapefilePlan) -> int:

@@ -151,18 +151,16 @@ def test_vector_tiles_rejects_polylines(spark):
 
 
 def test_vector_tiles_plan_no_shuffle_above_parse(spark, local_caps):
-    # the only Exchange allowed is the source's split-metadata
-    # repartition BELOW the parse stage (it moves split ranges, not
-    # rows); the clip stage itself must chain straight onto the parse.
+    # the clip runs inside the scan task: ONE mapInArrow over the
+    # JVM-generated split ids (Range), so no Exchange anywhere above
+    # the Range and no second Python stage.
     # SCAN_BYTES=0: the distributed scan, not a driver-local read
     from go_shapefile_spark.sources.shapefile import read_shapefile_df
     local_caps(SCAN_BYTES=0)
     df = vector_tiles(read_shapefile_df(spark, COUNTRIES), res=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    clip_at = plan.index("MapInArrow run")
-    parse_at = plan.index("MapInArrow parse")
-    assert clip_at < parse_at
-    assert "Exchange" not in plan[clip_at:parse_at]
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Exchange" not in plan[:plan.index("Range")], plan
     assert "BatchEvalPython" not in plan
 
 

@@ -348,23 +348,23 @@ def main() -> None:
     sections.append(("shapefile DataSource flat mode (fid pruning)",
                      checks, formatted(dsf)))
 
-    # geometry kernels: simplify -> measures composes as scan + two
-    # chained MapInArrow stages (the batched per-feature kernels — a
-    # DELIBERATE Arrow-Python stage, like decode) with NO shuffle
+    # geometry kernels: simplify -> measures composes as scan + ONE
+    # more MapInArrow (simplify runs inside the scan task, measures
+    # chains onto it: batched per-feature kernels — a DELIBERATE
+    # Arrow-Python stage, like decode) with NO shuffle
     from go_shapefile_spark.operators.geometry import (geom_measures,
                                                        simplify_features)
     gm = geom_measures(simplify_features(feats, eps=0.1))
     plan = audit.executed_plan(gm)
     base = audit.executed_plan(feats.select("fid"))
     checks = [
-        # the source itself contributes one Exchange (it distributes
-        # tiny split DESCRIPTORS to tasks, not geometry) and one
-        # MapInArrow (the parse); the kernels must add zero shuffles
-        # and exactly two Arrow stages on top
+        # the source contributes one MapInArrow (the parse); the
+        # kernels must add zero shuffles and exactly one Arrow stage
         ("kernels add no Exchange over the bare scan",
          plan.count("Exchange") == base.count("Exchange")),
-        ("both kernel stages are Arrow-batched (+2 MapInArrow)",
-         plan.count("MapInArrow") == base.count("MapInArrow") + 2),
+        ("simplify fuses into the parse, measures chains on (+1 "
+         "MapInArrow)",
+         plan.count("MapInArrow") == base.count("MapInArrow") + 1),
     ]
     sections.append(("Geometry simplify + measures (batched Arrow "
                      "kernels)", checks, formatted(gm)))
@@ -407,18 +407,18 @@ def main() -> None:
     sections.append(("PQ ANN search (probed inverted lists + ADC + "
                      "exact refine)", checks, formatted(pq)))
 
-    # vector tiles: the tile fan-out happens INSIDE the Arrow kernel, so
-    # the plan must be one mapInArrow chained straight onto the parse —
-    # any Exchange above the parse would mean rows were duplicated
-    # per-tile through a shuffle
+    # vector tiles: the tile fan-out happens INSIDE the Arrow kernel,
+    # and the kernel runs inside the scan task, so the plan must be ONE
+    # mapInArrow over the split ids (Range) — any Exchange above the
+    # Range would mean rows were duplicated per-tile through a shuffle
     from go_shapefile_spark.operators.vector_tiles import vector_tiles
     vt = vector_tiles(feats, res=4)
     plan = audit.executed_plan(vt)
-    clip_at = plan.index("MapInArrow run")
-    parse_at = plan.index("MapInArrow parse")
     checks = [
-        ("clip chains directly onto the parse (no Exchange between)",
-         clip_at < parse_at and "Exchange" not in plan[clip_at:parse_at]),
+        ("one Arrow stage: the clip runs in the scan task",
+         plan.count("MapInArrow") == 1),
+        ("no Exchange above the split ids (Range)",
+         "Exchange" not in plan[:plan.index("Range")]),
         ("no row-at-a-time Python", "BatchEvalPython" not in plan),
     ]
     sections.append(("Vector-tile clipping (batched Sutherland-Hodgman, "

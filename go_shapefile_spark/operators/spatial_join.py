@@ -109,30 +109,6 @@ def _map_polygons(features: DataFrame, cover, schema: str) -> DataFrame:
             .mapInPandas(build, schema=schema))
 
 
-COVER_SCHEMA = ("cell long, polygon_fid long, full boolean, rx double, "
-                "ry double, ref_inside boolean, edges array<array<double>>, "
-                "lon0 double, lat0 double")
-
-
-def cell_cover_df(features: DataFrame, res: int) -> DataFrame:
-    """Distributed cell-cover build: each task covers its share of the
-    polygon corpus (mapInPandas over ``features`` rows) — nothing is
-    collected to the driver, so a million-parcel polygon side builds its
-    cover across the cluster instead of serially in driver Python.
-
-    Input needs columns (fid, geometry); rows with NULL geometry are
-    skipped.  Output matches ``polygon_cell_cover(with_edges=True)``.
-    """
-    def cover(polys: list[dict]) -> pd.DataFrame:
-        out = polygon_cell_cover(polys, res, with_edges=True)
-        out["edges"] = out["edges"].map(lambda e: e if e is not None else [])
-        out = out.rename(columns={"fid": "polygon_fid"})
-        return out[["cell", "polygon_fid", "full", "rx", "ry",
-                    "ref_inside", "edges", "lon0", "lat0"]]
-
-    return _map_polygons(features, cover, COVER_SCHEMA)
-
-
 def _split_rects(box: np.ndarray, prow: np.ndarray, pe: np.ndarray,
                  ebox: np.ndarray, k: int):
     """Quarter every rectangle with more than ``k`` clipped edges,
@@ -282,25 +258,27 @@ def _grid_span(lo: np.ndarray, hi: np.ndarray, origin: float, size: float,
     return a, b
 
 
-def _cover_arrays(polygons: list[dict], res: int,
-                  split_k: int | None) -> dict:
-    """The cover kernel behind ``polygon_cell_cover`` and ``join_cover``,
-    batched over every polygon: full rows, then partial rows, with
-    ``cell fid full rx ry ref lon0 lat0``, the half-open membership
-    ``bounds`` (n, 4) ``[x0, x1, y0, y1]`` (±inf on the cell's outer
-    sides, so a point the cell id puts in the cell lands in exactly one
-    of its rows), and the (row, segment) incidences ``erow`` / ``seg``
-    sorted by row, edges in ring order.
+def _cover_arrays(polygons: list[dict], res: int, split_k: int) -> dict:
+    """The cover kernel behind ``join_cover``, batched over every
+    polygon: full rows, then partial rows, with ``cell fid full rx ry
+    ref``, the half-open membership ``bounds`` (n, 4) ``[x0, x1, y0,
+    y1]`` (±inf on the cell's outer sides, so a point the cell id puts
+    in the cell lands in exactly one of its rows), and the (row,
+    segment) incidences ``erow`` / ``seg`` sorted by row, edges in ring
+    order.
 
-    ``split_k`` splits partial cells with more than that many edges
-    into sub-rectangles (``_split_rects``); a sub-rectangle with no edge
-    and its centre outside is dropped, as no point in it is inside.
+    A cell overlapping no edge bbox is uniformly inside or outside, so
+    one centre PIP makes it a full row or drops it; the others are
+    partial, with every edge whose bbox overlaps them.  Partial cells
+    with more than ``split_k`` edges are split into sub-rectangles
+    (``_split_rects``); a sub-rectangle with no edge and its centre
+    outside is dropped, as no point in it is inside.
     """
     n = 1 << res
     w, h = 360.0 / n, 180.0 / n
     if not polygons:
         out = {c: np.zeros(0) for c in ("cell", "fid", "full", "rx", "ry",
-                                        "ref", "lon0", "lat0", "erow")}
+                                        "ref", "erow")}
         out.update(bounds=np.zeros((0, 4)), seg=np.zeros((0, 4)))
         return out
     fids = np.array([p["fid"] for p in polygons], dtype=np.int64)
@@ -353,7 +331,7 @@ def _cover_arrays(polygons: list[dict], res: int,
 
     cell_box = np.column_stack([plon0, plon0 + w, plat0, plat0 + h])
     box, owner = cell_box, np.arange(n_part)
-    if split_k is not None and len(prow):
+    if len(prow):
         box, owner, prow, pe = _split_rects(box, prow, pe, ebox, split_k)
         # leaves back in cell order, the order of the output rows
         order = np.argsort(owner, kind="stable")
@@ -378,11 +356,10 @@ def _cover_arrays(polygons: list[dict], res: int,
         np.concatenate([-90.0 + igy * h + h / 2, ry]),
         np.concatenate([ipoly, ppoly[owner]]), segs, epoly)
     full, ref = inside[:n_int], inside[n_int:]
-    if split_k is not None:
-        live = ref | (np.bincount(prow, minlength=len(box)) > 0)
-        prow = (np.cumsum(live) - 1)[prow]
-        box, owner, rx, ry, ref = (box[live], owner[live], rx[live],
-                                   ry[live], ref[live])
+    live = ref | (np.bincount(prow, minlength=len(box)) > 0)
+    prow = (np.cumsum(live) - 1)[prow]
+    box, owner, rx, ry, ref = (box[live], owner[live], rx[live], ry[live],
+                               ref[live])
 
     fgx, fgy, ffid = igx[full], igy[full], fids[ipoly[full]]
     flon0, flat0 = -180.0 + fgx * w, -90.0 + fgy * h
@@ -395,8 +372,6 @@ def _cover_arrays(polygons: list[dict], res: int,
         "rx": np.concatenate([flon0 + w / 2, rx]),
         "ry": np.concatenate([flat0 + h / 2, ry]),
         "ref": np.concatenate([np.ones(n_full, dtype=bool), ref]),
-        "lon0": np.concatenate([flon0, plon0[owner]]),
-        "lat0": np.concatenate([flat0, plat0[owner]]),
         # membership bounds: a side on the cell's outer edge is open
         "bounds": np.concatenate([
             np.tile([-np.inf, np.inf, -np.inf, np.inf], (n_full, 1)),
@@ -405,47 +380,6 @@ def _cover_arrays(polygons: list[dict], res: int,
         "erow": n_full + prow,
         "seg": seg,
     }
-
-
-def polygon_cell_cover(polygons: list[dict], res: int,
-                       with_edges: bool = False) -> pd.DataFrame:
-    """Classify grid cells at ``res`` against each polygon.
-
-    Soundness: a cell whose rectangle overlaps NO edge bbox is uniformly
-    inside or outside (no boundary crosses it), so a single center-PIP
-    classifies it (``full``/drop).  Cells overlapping any edge bbox are
-    conservatively ``partial`` — refinement stays correct, just does a
-    little more PIP work.
-
-    ``with_edges=True`` additionally attaches to every partial cell the
-    data a crossing-parity refinement needs: ``rx, ry`` — the cell
-    center (a reference point), ``ref_inside`` — the polygon parity at
-    that reference, and ``edges`` — the clipped edge list (every polygon
-    edge whose bbox overlaps the cell; a conservative superset of the
-    edges that can cross a segment lying inside the cell) — plus the
-    cell's SW corner ``lon0, lat0`` so consumers (the rasterizer) never
-    decode the cell id in SQL (the Morton-decode expression inlined per
-    pixel blows codegen up).
-
-    Returns pandas DataFrame (cell:int64, fid:int64, full:bool
-    [, rx, ry, ref_inside, edges, lon0, lat0]).
-    """
-    a = _cover_arrays(polygons, res, None)
-    out = pd.DataFrame({"cell": a["cell"].astype(np.int64),
-                        "fid": a["fid"].astype(np.int64),
-                        "full": a["full"].astype(bool)})
-    if with_edges:
-        counts = np.bincount(a["erow"].astype(np.int64),
-                             minlength=len(out))
-        segs = np.split(a["seg"], np.cumsum(counts)[:-1]) if len(out) \
-            else []
-        out["rx"], out["ry"] = a["rx"], a["ry"]
-        out["ref_inside"] = a["ref"].astype(bool)
-        out["edges"] = pd.Series(
-            [None if f else s.tolist() for f, s in zip(a["full"], segs)],
-            dtype="object")
-        out["lon0"], out["lat0"] = a["lon0"], a["lat0"]
-    return out
 
 
 def join_cover(polygons: list[dict], res: int) -> pd.DataFrame:

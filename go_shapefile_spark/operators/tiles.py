@@ -3,12 +3,11 @@
 * ``tile_counts`` — per-cell rollup of a point table (the "tiles" half of
   the headline metric).  Pure built-ins: map-side partial aggregation,
   one shuffle on the Morton ``cell`` key.
-* ``rasterize_features`` / ``rasterize_cover`` — vector→raster: every
-  (tile, polygon) cover entry becomes a T×T occupancy grid; full-cover
-  tiles short-circuit to all-ones without touching geometry; partial
-  tiles test pixel centers with the spatial join's clipped-edge
-  crossing-parity predicate — pure JVM past the (distributed) cover
-  build, no polygon state on the driver.
+* ``rasterize_features`` — vector→raster over the spatial join's cover:
+  full cells become all-ones T×T blocks without touching geometry; a
+  partial row tests the pixel centres of its sub-rectangle with the
+  join's clipped-edge crossing-parity predicate — pure JVM past the
+  (distributed) cover build, no polygon state on the driver.
 * ``vectorize_raster`` — raster→vector: per-tile pixel rows are merged
   into maximal horizontal runs, then rectangles, via ``applyInPandas``
   per (cell, fid) group.  Output rectangles are exact covers of the
@@ -17,6 +16,7 @@
 
 from __future__ import annotations
 
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -24,12 +24,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
-from ..functions import geom_np as G
+from .spatial_join import (
+    JOIN_SCHEMA, UNROLL_K, _map_polygons, aggregate_crossings_sql, join_cover,
+    parity_sql, unrolled_crossings_sql)
 
-# Edge columns the rasterizer's widest unrolled predicate reads.  Its
-# predicate runs in a Filter over the exploded pixel stage, not in a
-# join condition; tiered at 6/24 it measured 2x faster than one width.
-RASTER_UNROLL_K = 24
+# ``raster_cover``'s rows: the join's cover columns, then the pixel
+# stage's own.
+RASTER_SCHEMA = JOIN_SCHEMA + (
+    ", lon0 double not null, lat0 double not null, px0 int not null, "
+    "nx int not null, py0 int not null, ny int not null")
 
 
 def tile_counts(points: DataFrame, res: int, lon_col: str = "lon",
@@ -287,98 +290,100 @@ def tile_pyramid(points: DataFrame, max_res: int, min_res: int = 0,
     return out
 
 
-def rasterize_cover(cover: DataFrame, res: int, tile_px: int = 16,
-                    n_tasks: int = 32) -> DataFrame:
-    """Vector→raster over a cell-cover DataFrame (COVER_SCHEMA): emits
-    (cell, fid, px, py) rows for occupied pixels — **entirely JVM** after
-    the cover build, no polygon broadcast, no driver state (VERDICT r2 #2).
+def _pixel_span(lo: np.ndarray, hi: np.ndarray, c0: np.ndarray,
+                c1: np.ndarray, t: int) -> tuple[np.ndarray, np.ndarray]:
+    """Per row: the first index and the count of the pixels ``p`` of a
+    cell ``[c0, c1]`` whose centre ``c0 + (p + 0.5) * (c1 - c0) / t`` —
+    the pixel stage's float ops, in its order — lies in ``[lo, hi)``.
+    Centres increase with ``p``, so both ends are counts."""
+    first = np.zeros(len(lo), dtype=np.int64)
+    end = np.zeros(len(lo), dtype=np.int64)
+    for p in range(t):
+        centre = c0 + (p + 0.5) * (c1 - c0) / t
+        first += centre < lo
+        end += centre < hi
+    return first, end - first
 
-    * full cells explode the whole T×T block (Generate node, no geometry);
-    * partial cells explode pixel centers and filter with the SAME
-      clipped-edge crossing-parity predicate the spatial join uses — a
-      pixel center lies inside its cell, so the cover's clipped edges are
-      sufficient for an exact PIP against the full polygon;
-    * cells with more clipped edges than the unroll width fall back to
-      the interpreted aggregate() form (rare boundary-dense tiles).
-    """
-    from .spatial_join import (
-        aggregate_crossings_sql, parity_sql, unrolled_crossings_sql)
 
-    t = tile_px
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
-
-    # The cover carries each cell's SW corner (lon0/lat0, computed in the
-    # numpy cover build) — decoding the Morton id in SQL here would inline
-    # a multi-KB expression into every one of the predicate's ~150 cx/cy
-    # references and blow whole-stage codegen into MB-scale task binaries
-    # (measured: 8-19 MiB binaries, 10x slowdown).
-    def pixels(df: DataFrame) -> DataFrame:
-        # same FP evaluation order as the reference numpy rasterizer:
-        # cx = lon0 + (px + 0.5) * (lon1 - lon0) / t
-        return (df
-                .selectExpr("*", f"explode(sequence(0, {t * t - 1})) AS pidx")
-                .selectExpr("*", f"CAST(pidx % {t} AS INT) AS px",
-                            f"CAST(pidx DIV {t} AS INT) AS py")
-                .selectExpr(
-                    "*",
-                    f"lon0 + (px + CAST(0.5 AS DOUBLE)) * "
-                    f"((lon0 + CAST({w!r} AS DOUBLE)) - lon0) / "
-                    f"CAST({t} AS DOUBLE) AS cx",
-                    f"lat0 + (py + CAST(0.5 AS DOUBLE)) * "
-                    f"((lat0 + CAST({h!r} AS DOUBLE)) - lat0) / "
-                    f"CAST({t} AS DOUBLE) AS cy"))
-
-    # edge-ordinate projection as ONE selectExpr (a Column per ordinate
-    # would be ~200 py4j round trips — ~0.5 s of driver latency per call)
-    ecols = [f"try_element_at(try_element_at(edges, {j + 1}), {c + 1}) "
-             f"AS e{j}_{x}"
-             for j in range(RASTER_UNROLL_K)
-             for c, x in enumerate(("ax", "ay", "bx", "by"))]
-    # ONE scan of the cover (no per-branch union, which would re-run the
-    # cover build once per branch): spread tiles across tasks — cover rows
-    # are tiny, the exploded pixel rows are the real volume — then explode
-    # pixels and pick the predicate per row.  Full cells keep every pixel;
-    # cells within the unroll width run the codegen'd crossing predicate;
-    # the rare boundary-dense cells take the interpreted aggregate() form.
-    base = (cover.repartition(n_tasks, "cell")
-            .selectExpr("cell", "polygon_fid", "full", "rx", "ry",
-                        "ref_inside", "lon0", "lat0",
-                        "size(edges) AS n_edges", "edges", *ecols))
-    # tiered unroll (r6): NULL-padded terms (try_element_at past the
-    # edge list) contribute zero crossings but still COST ~8 flops each
-    # per pixel, so sparse cells (the common case — a small feature
-    # clips to a handful of edges) take a 6-term predicate instead of
-    # paying all 24 (rasterize_200k: most pixels run 4-edge cells; the
-    # short form is value-identical on n_edges ≤ 6 because the padded
-    # tail is exactly the terms being dropped)
-    def inside(crossings: str) -> str:
-        return parity_sql("ref_inside", crossings)
-
-    keep = (f"full OR (CASE WHEN n_edges <= 6 THEN "
-            f"{inside(unrolled_crossings_sql('cx', 'cy', 'rx', 'ry', 6, 'e'))} "
-            f"WHEN n_edges <= {RASTER_UNROLL_K} THEN "
-            f"{inside(unrolled_crossings_sql('cx', 'cy', 'rx', 'ry', RASTER_UNROLL_K, 'e'))} "
-            f"ELSE {inside(aggregate_crossings_sql('cx', 'cy', 'rx', 'ry', 'edges'))} END)")
-    return (pixels(base).where(F.expr(keep))
-            .selectExpr("cell", "polygon_fid AS fid", "px", "py"))
+def raster_cover(polygons: list[dict], res: int, tile_px: int) -> pd.DataFrame:
+    """The join's cover rows (``join_cover``) with what the pixel stage
+    reads besides them (``RASTER_SCHEMA``): the cell's SW corner
+    ``lon0, lat0`` and the row's pixels, ``nx`` × ``ny`` from ``px0,
+    py0`` — every pixel whose centre lies in the row's half-open
+    sub-rectangle.  Rows holding no pixel centre are dropped."""
+    cover = join_cover(polygons, res)
+    lon0, lat0, lon1, lat1 = C.cell_bounds_np(cover["cell"].to_numpy())
+    px0, nx = _pixel_span(cover["_sj_x0"].to_numpy(),
+                          cover["_sj_x1"].to_numpy(), lon0, lon1, tile_px)
+    py0, ny = _pixel_span(cover["_sj_y0"].to_numpy(),
+                          cover["_sj_y1"].to_numpy(), lat0, lat1, tile_px)
+    cover = cover.assign(lon0=lon0, lat0=lat0,
+                         px0=px0.astype(np.int32), nx=nx.astype(np.int32),
+                         py0=py0.astype(np.int32), ny=ny.astype(np.int32))
+    return cover[(nx > 0) & (ny > 0)]
 
 
 def rasterize_features(features: DataFrame, res: int,
                        tile_px: int = 16) -> DataFrame:
-    """Vector→raster from a (fid, geometry) features DataFrame: the cover
-    is built DISTRIBUTED (cell_cover_df — each task covers its share of
-    the polygon corpus), then rasterized JVM-side.  Nothing about the
-    polygon corpus ever lands on the driver, so this is the 100×-polygons
-    path for E8.  The cover (tiny: O(cells), no pixel rows) is cached so
-    REPEATED ACTIONS over the raster — rasterize→vectorize pipelines
-    re-traversed, bench re-counts — don't re-run the Python cover build;
-    a single action scans it once either way.  Session-lifetime cache,
-    same policy as PreparedCover's index artifact."""
-    from .spatial_join import cell_cover_df
+    """Vector→raster from a (fid, geometry) features DataFrame: emits
+    (cell, fid, px, py) rows for occupied pixels.
 
-    return rasterize_cover(cell_cover_df(features, res).cache(), res,
-                           tile_px)
+    The cover is the spatial join's (``raster_cover`` over
+    ``join_cover``), built DISTRIBUTED — each task covers its share of
+    the polygon corpus, nothing about it lands on the driver — and
+    cached, so repeated actions over the raster (rasterize→vectorize
+    pipelines, bench re-counts) don't re-run the Python build.  Past
+    it, every stage is JVM:
+
+    * full cells explode their whole T×T block, no geometry;
+    * a partial row explodes only the pixels of its sub-rectangle and
+      tests their centres with the join's crossing-parity predicate over
+      its ≤ UNROLL_K edges — a centre lies in its row's rectangle, so
+      the row's clipped edges suffice for an exact PIP;
+    * depth-cap rows (``_sj_edges``) take the interpreted aggregate()
+      form in their own branch, keeping the codegen fallback out of the
+      compiled Filter.
+    """
+    t = tile_px
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    cover = _map_polygons(
+        features, lambda polys: raster_cover(polys, res, t),
+        RASTER_SCHEMA).cache()
+
+    def centre(c0: str, p: str, size: float) -> str:
+        # the float ops of ``_pixel_span``, in its order; coalesce makes
+        # the (nullable) quotient a non-null centre, which keeps null
+        # branches out of every predicate term
+        return (f"coalesce({c0} + ({p} + CAST(0.5 AS DOUBLE)) * "
+                f"(({c0} + CAST({size!r} AS DOUBLE)) - {c0}) / "
+                f"CAST({t} AS DOUBLE), CAST(0.0 AS DOUBLE))")
+
+    def pixels(rows: str) -> DataFrame:
+        return (cover.where(rows)
+                .selectExpr("*", "explode(sequence(py0, py0 + ny - 1)) AS py")
+                .selectExpr("*", "explode(sequence(px0, px0 + nx - 1)) AS px"))
+
+    def inside(rows: str, crossings: str) -> DataFrame:
+        # the centres are Generate outputs: Project columns would be
+        # inlined into each of the predicate's ~50 references to them
+        return (pixels(rows)
+                .selectExpr("*", "inline(array(struct("
+                            f"{centre('lon0', 'px', w)} AS cx, "
+                            f"{centre('lat0', 'py', h)} AS cy)))")
+                .where(parity_sql("_sj_in", crossings)))
+
+    branches = [
+        pixels("_sj_full"),
+        inside("NOT _sj_full AND _sj_edges IS NULL",
+               unrolled_crossings_sql("cx", "cy", "_sj_rx", "_sj_ry",
+                                      UNROLL_K, "_sj_e", signs="_sj_s")),
+        inside("_sj_edges IS NOT NULL",
+               aggregate_crossings_sql("cx", "cy", "_sj_rx", "_sj_ry",
+                                       "_sj_edges"))]
+    return reduce(DataFrame.union, [
+        df.selectExpr("cell", "polygon_fid AS fid", "px", "py")
+        for df in branches])
 
 
 def rasterize_polygons(spark: SparkSession, polygons: list[dict], res: int,

@@ -24,11 +24,27 @@ def assert_broadcast_join(df: DataFrame) -> None:
         f"expected a broadcast join in:\n{plan[:2000]}"
 
 
+PYTHON_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                "MapInArrow", "FlatMapGroupsInPandas")
+
+
 def assert_no_python_udf(df: DataFrame) -> None:
     plan = executed_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                   "MapInArrow", "FlatMapGroupsInPandas"):
+    for marker in PYTHON_NODES:
         assert marker not in plan, f"unexpected {marker} in:\n{plan[:2000]}"
+
+
+def python_operators(df: DataFrame) -> list[str]:
+    """The Python nodes of the executed plan's operator tree, walked
+    through children only: a cached relation's build plan (e.g. a
+    mapInPandas cover build) is not one of the operator's own stages.
+    Read with AQE off: an AdaptiveSparkPlan is a leaf."""
+    def walk(node):
+        if node.nodeName() in PYTHON_NODES:
+            yield node.nodeName()
+        for i in range(node.children().size()):
+            yield from walk(node.children().apply(i))
+    return list(walk(df._jdf.queryExecution().executedPlan()))
 
 
 def assert_pushed_filters(df: DataFrame, fragment: str) -> None:
@@ -83,6 +99,15 @@ def broadcast_joins_in_codegen(df: DataFrame) -> bool:
              if "BroadcastHashJoin" in ln]
     return bool(joins) and all(
         re.search(r"\*\(\d+\) BroadcastHashJoin", ln) for ln in joins)
+
+
+def filter_codegen_stages(df: DataFrame, fragment: str) -> list[str]:
+    """Per executed-plan Filter whose condition contains ``fragment``:
+    its whole-stage codegen prefix ``*(n)``, or '' where it runs
+    interpreted.  Read with AQE off (see broadcast_joins_in_codegen)."""
+    return [m.group(1) or "" for ln in executed_plan(df).splitlines()
+            if fragment in ln
+            and (m := re.search(r"(\*\(\d+\))? ?Filter ", ln))]
 
 
 def max_generated_method_bytes(df: DataFrame) -> int:

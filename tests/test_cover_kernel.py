@@ -1,7 +1,6 @@
 """The batched cell-cover kernel (``spatial_join._cover_arrays``) against
 a per-polygon reference: the dense cells × edges overlap matrix and one
-ray-cast PIP per polygon.  ``join_cover`` and
-``polygon_cell_cover(with_edges=True)`` must come out bit-identical."""
+ray-cast PIP per polygon.  ``join_cover`` must come out bit-identical."""
 
 import hashlib
 import math
@@ -114,7 +113,7 @@ def _reference_cover_arrays(polygons, res, split_k):
     cell_box = np.column_stack([plon0, plon0 + w, plat0, plat0 + h])
     box, owner = cell_box, np.arange(n_part)
     prow, pe = np.concatenate(prow_l), np.concatenate(pe_l)
-    if split_k is not None and len(prow):
+    if len(prow):
         box, owner, prow, pe = _reference_split_rects(box, prow, pe, ebox,
                                                       split_k)
         order = np.argsort(owner, kind="stable")
@@ -141,11 +140,10 @@ def _reference_cover_arrays(polygons, res, split_k):
         full_l.append((gx[keep], gy[keep], lon0[keep], lat0[keep],
                        np.full(len(keep), poly["fid"], dtype=np.int64)))
         ref[a:b] = inside[len(interior):]
-    if split_k is not None:
-        live = ref | (np.bincount(prow, minlength=len(box)) > 0)
-        prow = (np.cumsum(live) - 1)[prow]
-        box, owner, rx, ry, ref = (box[live], owner[live], rx[live],
-                                   ry[live], ref[live])
+    live = ref | (np.bincount(prow, minlength=len(box)) > 0)
+    prow = (np.cumsum(live) - 1)[prow]
+    box, owner, rx, ry, ref = (box[live], owner[live], rx[live], ry[live],
+                               ref[live])
 
     fgx, fgy, flon0, flat0, ffid = (np.concatenate([f[i] for f in full_l])
                                     for i in range(5))
@@ -158,8 +156,6 @@ def _reference_cover_arrays(polygons, res, split_k):
         "rx": np.concatenate([flon0 + w / 2, rx]),
         "ry": np.concatenate([flat0 + h / 2, ry]),
         "ref": np.concatenate([np.ones(n_full, dtype=bool), ref]),
-        "lon0": np.concatenate([flon0, plon0[owner]]),
-        "lat0": np.concatenate([flat0, plat0[owner]]),
         "bounds": np.concatenate([
             np.tile([-np.inf, np.inf, -np.inf, np.inf], (n_full, 1)),
             np.where(box == cell_box[owner],
@@ -183,13 +179,10 @@ def _assert_frames_identical(got: pd.DataFrame, exp: pd.DataFrame):
 
 
 def _assert_covers_identical(polygons, res):
-    got = (SJ.join_cover(polygons, res),
-           SJ.polygon_cell_cover(polygons, res, with_edges=True))
+    got = SJ.join_cover(polygons, res)
     with mock.patch.object(SJ, "_cover_arrays", _reference_cover_arrays):
-        exp = (SJ.join_cover(polygons, res),
-               SJ.polygon_cell_cover(polygons, res, with_edges=True))
-    for g, e in zip(got, exp):
-        _assert_frames_identical(g, e)
+        exp = SJ.join_cover(polygons, res)
+    _assert_frames_identical(got, exp)
 
 
 def _ring(cx, cy, radii, step, clockwise):

@@ -73,6 +73,89 @@ def test_rasterize_cell_centre_on_edge(spark):
     assert got == {(x, y) for x in range(8) for y in range(16)}
 
 
+def _pixel_truth(polygons, res, t):
+    """Every pixel of every cell in each polygon's bbox grid, centres
+    computed as the rasterizer computes them: the set of (cell, fid, px,
+    py) whose centre the numpy ray cast puts inside, and the set whose
+    centre lies exactly on an edge (either answer is right there)."""
+    from go_shapefile_spark.functions import geom_np as G
+
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    inside, on_edge = set(), set()
+    for poly in polygons:
+        coords, ends = np.asarray(poly["coords"], dtype=np.float64), poly["ends"]
+        x, y = coords[0::2], coords[1::2]
+        gx = np.arange(int((x.min() + 180) // w), int((x.max() + 180) // w) + 1)
+        gy = np.arange(int((y.min() + 90) // h), int((y.max() + 90) // h) + 1)
+        gx, gy, px, py = (a.ravel() for a in np.meshgrid(
+            gx[(gx >= 0) & (gx < n)], gy[(gy >= 0) & (gy < n)],
+            np.arange(t), np.arange(t), indexing="ij"))
+        lon0, lat0 = -180.0 + gx * w, -90.0 + gy * h
+        cx = lon0 + (px + 0.5) * ((lon0 + w) - lon0) / t
+        cy = lat0 + (py + 0.5) * ((lat0 + h) - lat0) / t
+        seg = np.concatenate([np.column_stack([rx[:-1], ry[:-1], rx[1:], ry[1:]])
+                              for rx, ry in G.rings_of(coords, ends)])
+        on = np.zeros(len(cx), dtype=bool)
+        for ax, ay, bx, by in seg:
+            on |= (((bx - ax) * (cy - ay) - (by - ay) * (cx - ax)) == 0) & \
+                (cx >= min(ax, bx)) & (cx <= max(ax, bx)) & \
+                (cy >= min(ay, by)) & (cy <= max(ay, by))
+        keys = list(zip(C.cell_from_xy(gx, gy, res).tolist(),
+                        [poly["fid"]] * len(cx), px.tolist(), py.tolist()))
+        pip = G.point_in_polygon_chunked(cx, cy, coords, ends)
+        inside |= {k for k, i in zip(keys, pip) if i}
+        on_edge |= {k for k, o in zip(keys, on) if o}
+    return inside, on_edge
+
+
+@pytest.mark.parametrize("corpus", ["countries-1", "countries-2", "petals"])
+def test_rasterize_matches_numpy_pip(spark, corpus):
+    """Pixel parity with the numpy ray cast on the countries_join corpus
+    of perfbench seeds 1 and 2 (holes, islands, rings against ±180°) and
+    on six petals meeting in one vertex, whose depth-cap rows rasterize
+    through the aggregate() branch."""
+    import hashlib
+    import sys
+
+    from go_shapefile_spark.operators.tiles import (
+        raster_cover, rasterize_polygons)
+
+    res, t = 6, 8
+    if corpus == "petals":
+        cx, cy = 10.3, 20.7
+        ring = []
+        for a in np.radians(np.arange(0, 360, 60)):
+            ring += [cx, cy,
+                     cx + 5 * np.cos(a - 0.17), cy + 5 * np.sin(a - 0.17),
+                     cx + 5 * np.cos(a + 0.17), cy + 5 * np.sin(a + 0.17)]
+        ring = np.array(ring + [cx, cy])
+        polygons = [{"fid": 77, "coords": ring, "ends": [len(ring)]}]
+        t = 256      # pixels fine enough to land in the depth-cap rows
+        assert raster_cover(polygons, res, t)["_sj_edges"].notna().any()
+    else:
+        perfbench = os.path.join(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))), "perfbench")
+        sys.path.insert(0, perfbench)
+        try:
+            import gen
+        finally:
+            sys.path.remove(perfbench)
+        key = int.from_bytes(
+            hashlib.sha256(b"countries_join").digest()[:4], "little")
+        seed = int(corpus.split("-")[1])
+        polygons = [{"fid": i + 1, "coords": p["coords"],
+                     "ends": [int(e) for e in p["ends"]]}
+                    for i, p in enumerate(gen.countries(
+                        np.random.default_rng([seed, key])))]
+    pix = rasterize_polygons(spark, polygons, res=res, tile_px=t).toPandas()
+    got = set(zip(pix.cell, pix.fid, pix.px, pix.py))
+    assert len(got) == len(pix)
+    inside, on_edge = _pixel_truth(polygons, res, t)
+    assert len(inside) > 1000
+    assert got - on_edge == inside - on_edge
+
+
 def test_rasterize_real_countries(spark, ref_testdata):
     """E8 on real geometry: rasterized ne_110m pixel area must
     approximate each country's shoelace area, and the vectorized

@@ -42,24 +42,30 @@ def test_spatial_join_is_broadcast(spark, ref_testdata):
 
 
 def test_rasterize_pixel_stages_are_jvm(spark):
-    """E8 vector→raster: past the cover build, rasterization is pure JVM —
-    no polygon broadcast, no Python stage (VERDICT r2 #2)."""
-    from go_shapefile_spark.operators.spatial_join import (
-        COVER_SCHEMA, polygon_cell_cover)
-    from go_shapefile_spark.operators.tiles import rasterize_cover
+    """E8 vector→raster: past the cover build, rasterization is pure JVM
+    — no polygon broadcast, no Python stage (VERDICT r2 #2) — and the
+    partial rows' crossing predicate runs inside whole-stage codegen:
+    with AQE off its Filter prints ``*(n) Filter`` and no generated
+    method exceeds 8,000 bytecode bytes, so HotSpot compiles them."""
+    from go_shapefile_spark.operators.tiles import rasterize_polygons
+    from go_shapefile_spark.plans.audit import (
+        HUGE_METHOD_BYTES, aqe_off, filter_codegen_stages,
+        max_generated_method_bytes, python_operators)
 
-    ring = [10.0, 10.0, 10.0, 40.0, 40.0, 40.0, 40.0, 10.0, 10.0, 10.0]
-    cover_pdf = polygon_cell_cover(
-        [{"fid": 1, "coords": np.array(ring), "ends": [10]}], 4,
-        with_edges=True)
-    cover_pdf["edges"] = cover_pdf["edges"].map(
-        lambda e: e if e is not None else [])
-    cover = spark.createDataFrame(
-        cover_pdf.rename(columns={"fid": "polygon_fid"}),
-        schema=COVER_SCHEMA)
-    raster = rasterize_cover(cover, res=4, tile_px=8)
-    assert_no_python_udf(raster)
-    assert raster.count() > 0
+    square = [10.0, 10.0, 10.0, 40.0, 40.0, 40.0, 40.0, 10.0, 10.0, 10.0]
+    t = np.linspace(0, 2 * np.pi, 241)
+    circle = np.column_stack([-60 + 25 * np.cos(-t),
+                              10 + 25 * np.sin(-t)]).ravel()
+    polys = [{"fid": 1, "coords": np.array(square), "ends": [10]},
+             {"fid": 2, "coords": circle, "ends": [len(circle)]}]
+    for tile_px in (8, 16):
+        raster = rasterize_polygons(spark, polys, res=4, tile_px=tile_px)
+        with aqe_off(spark):
+            assert not python_operators(raster)
+            stages = filter_codegen_stages(raster, "_sj_e7_ax")
+            assert stages and all(stages), executed_plan(raster)
+            assert max_generated_method_bytes(raster) <= HUGE_METHOD_BYTES
+        assert raster.count() > 0
 
 
 def test_tile_counts_single_shuffle(spark):

@@ -6,7 +6,7 @@ from hypothesis import given, settings, strategies as st
 
 from go_shapefile_spark.functions import cells as C
 from go_shapefile_spark.functions import geom_np as G
-from go_shapefile_spark.operators.spatial_join import polygon_cell_cover
+from go_shapefile_spark.operators.spatial_join import UNROLL_K, join_cover
 
 lon_st = st.floats(min_value=-180.0, max_value=179.999, allow_nan=False)
 lat_st = st.floats(min_value=-90.0, max_value=89.999, allow_nan=False)
@@ -111,7 +111,7 @@ def test_cover_classification_sound_property(ring, points, res):
     Points exactly on the boundary are excluded — there the assignment
     is convention-dependent by design (either side is acceptable)."""
     poly = {"fid": 1, "coords": ring, "ends": [len(ring)]}
-    cover = polygon_cell_cover([poly], res, with_edges=True)
+    cover = join_cover([poly], res)
     lon = np.array([p[0] for p in points])
     lat = np.array([p[1] for p in points])
     off = ~_on_boundary(lon, lat, ring)
@@ -122,23 +122,32 @@ def test_cover_classification_sound_property(ring, points, res):
     truth = G.point_in_polygon_chunked(lon, lat, ring, [len(ring)])
 
     cells = C.cell_np(lon, lat, res)
-    by_cell = {}
-    for row in cover.itertuples(index=False):
-        by_cell[row.cell] = row
     got = np.zeros(len(points), dtype=bool)
     for i, c in enumerate(cells):
-        row = by_cell.get(int(c))
+        # the one row of the point's cell whose half-open rectangle
+        # holds it, if any
+        rows = cover[(cover["cell"] == c)
+                     & (cover["_sj_x0"] <= lon[i]) & (lon[i] < cover["_sj_x1"])
+                     & (cover["_sj_y0"] <= lat[i]) & (lat[i] < cover["_sj_y1"])]
+        assert len(rows) <= 1
+        row = None if rows.empty else rows.iloc[0]
         if row is None:
             got[i] = False
-        elif row.full:
+        elif row["_sj_full"]:
             got[i] = True
         else:
-            # partial → crossing parity from the cell-center reference
+            # partial → crossing parity from the row's reference (its
+            # zero-length padding edges never cross)
+            rx, ry = row["_sj_rx"], row["_sj_ry"]
             ref = G.point_in_polygon_chunked(
-                np.array([row.rx]), np.array([row.ry]), ring, [len(ring)])[0]
+                np.array([rx]), np.array([ry]), ring, [len(ring)])[0]
+            edges = row["_sj_edges"]
+            if edges is None:
+                edges = [[row[f"_sj_e{j}_{x}"] for x in ("ax", "ay", "bx", "by")]
+                         for j in range(UNROLL_K)]
             crossings = 0
-            for e in (row.edges or []):
-                crossings += _segments_cross(row.rx, row.ry, lon[i], lat[i],
+            for e in edges:
+                crossings += _segments_cross(rx, ry, lon[i], lat[i],
                                              e[0], e[1], e[2], e[3])
             got[i] = bool(ref) ^ (crossings % 2 == 1)
     np.testing.assert_array_equal(got, truth)

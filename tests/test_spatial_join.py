@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from go_shapefile_spark.functions import cells as C
 from go_shapefile_spark.operators.knn import knn_radius, knn_radius_oracle_sql
 from go_shapefile_spark.operators.spatial_join import (
-    polygon_cell_cover, polygons_from_features, spatial_join,
+    join_cover, polygons_from_features, spatial_join,
     spatial_join_bruteforce,
 )
 from go_shapefile_spark.sources.shapefile import read_shapefile_df
@@ -35,14 +35,14 @@ def _points(n=4000, seed=5):
 
 
 def test_cell_cover_classification(countries):
-    cover = polygon_cell_cover(countries[:20], res=6)
+    cover = join_cover(countries[:20], res=6)
     assert len(cover) > 0
-    assert cover["full"].any() or True  # small polygons may be all-partial
+    assert cover["_sj_full"].any() or True  # small polygons may be all-partial
     # full cells: their centers must be inside their polygon
     from go_shapefile_spark.functions import geom_np as G
     by_fid = {p["fid"]: p for p in countries[:20]}
-    full = cover[cover["full"]]
-    for fid, grp in full.groupby("fid"):
+    full = cover[cover["_sj_full"]]
+    for fid, grp in full.groupby("polygon_fid"):
         lon0, lat0, lon1, lat1 = C.cell_bounds_np(grp["cell"].to_numpy())
         cx, cy = (lon0 + lon1) / 2, (lat0 + lat1) / 2
         p = by_fid[fid]

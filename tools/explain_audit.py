@@ -181,26 +181,24 @@ def main() -> None:
                      "(record-header bounds before decode)",
                      checks, formatted(ds_bb)))
 
-    # distributed rasterize: past the cover build the pixel stages are
-    # pure JVM (audited on a pre-built cover so the plan isolates them)
-    from go_shapefile_spark.operators.spatial_join import (
-        COVER_SCHEMA, polygon_cell_cover)
-    from go_shapefile_spark.operators.tiles import rasterize_cover
-    cover_pdf = polygon_cell_cover(polys[:5], 5, with_edges=True)
-    cover_pdf["edges"] = cover_pdf["edges"].map(
-        lambda e: e if e is not None else [])
-    cover_df = spark.createDataFrame(
-        cover_pdf.rename(columns={"fid": "polygon_fid"}), schema=COVER_SCHEMA)
-    raster = rasterize_cover(cover_df, res=5, tile_px=8)
-    try:
-        audit.assert_no_python_udf(raster)
-        ok = True
-    except AssertionError:
-        ok = False
-    sections.append(("Vector→raster tiles (single-pass, clipped-edge "
-                     "crossing predicate per pixel)",
-                     [("no Python nodes past the cover build", ok)],
-                     formatted(raster)))
+    # distributed rasterize: past the (cached, mapInPandas) cover build
+    # the pixel stages are JVM, and the partial rows' crossing Filter
+    # runs compiled in methods HotSpot JITs
+    from go_shapefile_spark.operators.tiles import rasterize_polygons
+    raster = rasterize_polygons(spark, polys[:5], res=5, tile_px=8)
+    with audit.aqe_off(spark):
+        stages = audit.filter_codegen_stages(raster, "_sj_e7_ax")
+        method = audit.max_generated_method_bytes(raster)
+        checks = [
+            ("no Python nodes past the cover build",
+             not audit.python_operators(raster)),
+            (f"crossing Filter inside whole-stage codegen "
+             f"({', '.join(stages) or 'none'})", bool(stages) and all(stages)),
+            (f"largest generated method {method} B <= "
+             f"{audit.HUGE_METHOD_BYTES} B", method <= audit.HUGE_METHOD_BYTES)]
+    sections.append(("Vector→raster tiles (the join's split cover, "
+                     "clipped-edge crossing predicate per pixel)",
+                     checks, formatted(raster)))
 
     # exact-kNN terminal round: salted equi-join, never one cell key
     from go_shapefile_spark.operators.knn import _terminal_topk

@@ -16,13 +16,12 @@ and subtract automatically, so ``area = -Σ signed2 / 2`` over ALL rings
 of a feature and the ring→polygon grouping (``rings``) never needs to
 be consulted for measures.
 
-Two implementations of each kernel:
+Each kernel has a per-feature reference and one batched path:
 
 * per-feature (``feature_measures`` / ``simplify_feature``) — the
-  readable reference, also used to pin oracle literals where exactness
-  vs the distributed path is proven by tests;
+  readable, independent reference the batched path is tested against;
 * BATCHED (``measures_batch`` / ``dp_keep_mask_batch`` /
-  ``simplify_batch``) — the canonical distributed path.  A per-feature
+  ``simplify_batch``) — the canonical path.  A per-feature
   Python loop costs ~1 ms/feature in numpy call overhead (measured:
   1.3k features/s/core for 64-gon DP); the batched forms run the same
   arithmetic level-synchronously across EVERY ring of an Arrow batch
@@ -32,12 +31,18 @@ Two implementations of each kernel:
   between the two forms (same elementwise expressions, same
   first-max tie-break; tests assert equality on every ne_110m ring).
   Float SUMS differ in the last ulp (``ndarray.sum`` is pairwise,
-  ``reduceat`` is sequential), so the batched form is canonical:
-  Spark runs it and the DuckDB oracles pin literals from a driver-side
-  run of the SAME batched kernel.
+  ``reduceat`` is sequential), so the batched form is canonical.
+
+Each operator's Arrow batch function (``run_geom_measures``,
+``run_geodesic_measures``, ``run_simplify``) is a module-level
+function: Spark runs it through ``map_features``, and the DuckDB
+oracles pin literals from the same function run on the driver over the
+core parser's records (``sources.shapefile.map_records``).
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -57,6 +62,7 @@ _POLYLINES = {SHAPE_TYPE_POLYLINE, SHAPE_TYPE_POLYLINE_M,
 # ``geometry.rings``
 KERNEL_COLUMNS = ["fid", "shape_type", "geometry.layout", "geometry.coords",
                   "geometry.ends"]
+SIMPLIFY_COLUMNS = KERNEL_COLUMNS + ["geometry.rings"]
 
 
 def part_measures(coords: np.ndarray, ends, stride: int = 2):
@@ -218,34 +224,112 @@ def simplify_feature(shape_type: int, layout: str | None, coords, ends,
     return (np.concatenate(kept_parts).ravel(), new_ends, new_rings)
 
 
+def run_geodesic_measures(batches):
+    """The batch function of :func:`geodesic_measures`."""
+    import pyarrow as pa
+
+    for batch in batches:
+        fid = batch.column(0).to_numpy(zero_copy_only=False)
+        outs = []
+        for sel, g, _rv, _rpr, closed, _l in _arrow_groups(
+                batch, with_rings=False):
+            area, ln = geodesic_measures_batch(g, polyline=not closed)
+            outs.append((sel, area, ln))
+        if not outs:
+            continue
+        sel = np.concatenate([o[0] for o in outs])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(fid[sel], pa.int64()),
+             pa.array(np.concatenate([o[1] for o in outs]),
+                      pa.float64()),
+             pa.array(np.concatenate([o[2] for o in outs]),
+                      pa.float64())],
+            names=["fid", "geo_area_m2", "geo_length_m"])
+
+
 def geodesic_measures(features: DataFrame) -> DataFrame:
     """(fid, geo_area_m2, geo_length_m) per feature — the spherical
     twin of :func:`geom_measures` for lon/lat corpora.  Same plan
     shape: one Arrow pass, no shuffle."""
+    return map_features(
+        features, KERNEL_COLUMNS, run_geodesic_measures,
+        "fid long, geo_area_m2 double, geo_length_m double")
+
+
+def run_simplify(batches, eps: float):
+    """The batch function of :func:`simplify_features`."""
     import pyarrow as pa
 
-    def run(batches):
-        for batch in batches:
-            fid = batch.column(0).to_numpy(zero_copy_only=False)
-            outs = []
-            for sel, g, _rv, _rpr, closed, _l in _arrow_groups(
-                    batch, with_rings=False):
-                area, ln = geodesic_measures_batch(g, polyline=not closed)
-                outs.append((sel, area, ln))
-            if not outs:
-                continue
-            sel = np.concatenate([o[0] for o in outs])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(fid[sel], pa.int64()),
-                 pa.array(np.concatenate([o[1] for o in outs]),
-                          pa.float64()),
-                 pa.array(np.concatenate([o[2] for o in outs]),
-                          pa.float64())],
-                names=["fid", "geo_area_m2", "geo_length_m"])
+    for batch in batches:
+        fid = batch.column(0).to_numpy(zero_copy_only=False)
+        st = batch.column(1).to_numpy(zero_copy_only=False)
+        f_fid, f_st, f_layout = [], [], []
+        f_cv, f_cc, f_ev, f_ec, f_rv, f_rc = [], [], [], [], [], []
+        for sel, g, rings_vals, rings_per_row, closed, layout in \
+                _arrow_groups(batch, with_rings=True):
+            mask, kept, part_drop = simplify_batch(
+                g, rings_vals, eps, closed)
+            n_rows = g.parts_per_row.size
+            row_part_starts = np.concatenate(
+                ([0], np.cumsum(g.parts_per_row)[:-1]))
+            pt_out = np.add.reduceat(kept, row_part_starts) \
+                if kept.size else np.zeros(n_rows, np.int64)
+            sp = ~part_drop
+            sp_sizes = kept[sp] * g.stride
+            sp_row = g.row_of_part[sp]
+            gcum = np.cumsum(sp_sizes)
+            row_sp_counts = np.bincount(sp_row, minlength=n_rows)
+            row_first = np.concatenate(
+                ([0], np.cumsum(row_sp_counts)[:-1]))
+            base = np.concatenate(([0], gcum))[row_first]
+            ends_out = gcum - np.repeat(base, row_sp_counts)
+            if closed:
+                grp_sizes = rings_vals
+                grp_first = np.concatenate(
+                    ([0], np.cumsum(grp_sizes)[:-1]))
+                n_keep_grp = np.add.reduceat(
+                    sp.astype(np.int64), grp_first) \
+                    if sp.size else np.zeros(0, np.int64)
+                grp_row = np.repeat(np.arange(n_rows), rings_per_row)
+                live = n_keep_grp > 0
+                rings_out = n_keep_grp[live]
+                rings_counts = np.bincount(grp_row[live],
+                                           minlength=n_rows)
+            else:
+                rings_out = np.zeros(0, np.int64)
+                rings_counts = np.zeros(n_rows, np.int64)
+            rk = pt_out > 0
+            f_fid.append(fid[sel][rk])
+            f_st.append(st[sel][rk])
+            f_layout.extend([layout] * int(rk.sum()))
+            f_cv.append(g.pts[mask].ravel())
+            f_cc.append((pt_out * g.stride)[rk])
+            f_ev.append(ends_out)
+            f_ec.append(row_sp_counts[rk])
+            f_rv.append(rings_out)
+            f_rc.append(rings_counts[rk])
+        if not f_fid:
+            continue
 
-    return map_features(
-        features, KERNEL_COLUMNS, run,
-        "fid long, geo_area_m2 double, geo_length_m double")
+        def _list_arr(vals_list, counts_list, typ):
+            counts = np.concatenate(counts_list)
+            offs = np.concatenate(([0], np.cumsum(counts)))
+            return pa.ListArray.from_arrays(
+                pa.array(offs.astype(np.int32)),
+                pa.array(np.concatenate(vals_list), typ))
+
+        geom = pa.StructArray.from_arrays(
+            [pa.array(f_layout, pa.string()),
+             _list_arr(f_cv, f_cc, pa.float64()),
+             _list_arr([e.astype(np.int32) for e in f_ev], f_ec,
+                       pa.int32()),
+             _list_arr([r.astype(np.int32) for r in f_rv], f_rc,
+                       pa.int32())],
+            names=["layout", "coords", "ends", "rings"])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.concatenate(f_fid), pa.int64()),
+             pa.array(np.concatenate(f_st), pa.int32()), geom],
+            names=["fid", "shape_type", "geometry"])
 
 
 def simplify_features(features: DataFrame, eps: float) -> DataFrame:
@@ -261,85 +345,10 @@ def simplify_features(features: DataFrame, eps: float) -> DataFrame:
     no per-row Python on either side.  No shuffle, no driver state —
     parallel by input split at any corpus size.
     """
-    import pyarrow as pa
-
     if eps < 0:
         raise ValueError("eps must be non-negative")
-
-    def run(batches):
-        for batch in batches:
-            fid = batch.column(0).to_numpy(zero_copy_only=False)
-            st = batch.column(1).to_numpy(zero_copy_only=False)
-            f_fid, f_st, f_layout = [], [], []
-            f_cv, f_cc, f_ev, f_ec, f_rv, f_rc = [], [], [], [], [], []
-            for sel, g, rings_vals, rings_per_row, closed, layout in \
-                    _arrow_groups(batch, with_rings=True):
-                mask, kept, part_drop = simplify_batch(
-                    g, rings_vals, eps, closed)
-                n_rows = g.parts_per_row.size
-                row_part_starts = np.concatenate(
-                    ([0], np.cumsum(g.parts_per_row)[:-1]))
-                pt_out = np.add.reduceat(kept, row_part_starts) \
-                    if kept.size else np.zeros(n_rows, np.int64)
-                sp = ~part_drop
-                sp_sizes = kept[sp] * g.stride
-                sp_row = g.row_of_part[sp]
-                gcum = np.cumsum(sp_sizes)
-                row_sp_counts = np.bincount(sp_row, minlength=n_rows)
-                row_first = np.concatenate(
-                    ([0], np.cumsum(row_sp_counts)[:-1]))
-                base = np.concatenate(([0], gcum))[row_first]
-                ends_out = gcum - np.repeat(base, row_sp_counts)
-                if closed:
-                    grp_sizes = rings_vals
-                    grp_first = np.concatenate(
-                        ([0], np.cumsum(grp_sizes)[:-1]))
-                    n_keep_grp = np.add.reduceat(
-                        sp.astype(np.int64), grp_first) \
-                        if sp.size else np.zeros(0, np.int64)
-                    grp_row = np.repeat(np.arange(n_rows), rings_per_row)
-                    live = n_keep_grp > 0
-                    rings_out = n_keep_grp[live]
-                    rings_counts = np.bincount(grp_row[live],
-                                               minlength=n_rows)
-                else:
-                    rings_out = np.zeros(0, np.int64)
-                    rings_counts = np.zeros(n_rows, np.int64)
-                rk = pt_out > 0
-                f_fid.append(fid[sel][rk])
-                f_st.append(st[sel][rk])
-                f_layout.extend([layout] * int(rk.sum()))
-                f_cv.append(g.pts[mask].ravel())
-                f_cc.append((pt_out * g.stride)[rk])
-                f_ev.append(ends_out)
-                f_ec.append(row_sp_counts[rk])
-                f_rv.append(rings_out)
-                f_rc.append(rings_counts[rk])
-            if not f_fid:
-                continue
-
-            def _list_arr(vals_list, counts_list, typ):
-                counts = np.concatenate(counts_list)
-                offs = np.concatenate(([0], np.cumsum(counts)))
-                return pa.ListArray.from_arrays(
-                    pa.array(offs.astype(np.int32)),
-                    pa.array(np.concatenate(vals_list), typ))
-
-            geom = pa.StructArray.from_arrays(
-                [pa.array(f_layout, pa.string()),
-                 _list_arr(f_cv, f_cc, pa.float64()),
-                 _list_arr([e.astype(np.int32) for e in f_ev], f_ec,
-                           pa.int32()),
-                 _list_arr([r.astype(np.int32) for r in f_rv], f_rc,
-                           pa.int32())],
-                names=["layout", "coords", "ends", "rings"])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(f_fid), pa.int64()),
-                 pa.array(np.concatenate(f_st), pa.int32()), geom],
-                names=["fid", "shape_type", "geometry"])
-
     return map_features(
-        features, KERNEL_COLUMNS + ["geometry.rings"], run,
+        features, SIMPLIFY_COLUMNS, partial(run_simplify, eps=eps),
         "fid long, shape_type int, geometry struct<layout:string, "
         "coords:array<double>, ends:array<int>, rings:array<int>>")
 
@@ -492,14 +501,6 @@ def geodesic_measures_batch(g: _BatchGeom, polyline: bool):
     return area, length
 
 
-def geodesic_for_records(recs) -> list[tuple[float, float]]:
-    """Per-record (area_m2, length_m) via the batched kernel — the
-    oracle-pinning twin of :func:`geodesic_measures`."""
-    g, closed = _geom_from_records(recs)
-    return list(zip(*(a.tolist() for a in
-                      geodesic_measures_batch(g, polyline=not closed))))
-
-
 def dp_keep_mask_batch(x: np.ndarray, y: np.ndarray,
                        part_starts: np.ndarray, part_ends: np.ndarray,
                        eps: float) -> np.ndarray:
@@ -633,79 +634,25 @@ def simplify_batch(g: _BatchGeom, rings_per_row_vals: np.ndarray,
     return mask, kept_per_part, part_drop
 
 
-def _geom_from_records(recs) -> tuple["_BatchGeom", bool]:
-    """One :class:`_BatchGeom` over core-parser ``SHPRecord``s (uniform
-    shape type/layout — one shapefile).  Driver-side twin of the Arrow
-    batch construction, for oracle literal pinning and exactness tests:
-    segmented reductions never span a feature, so results are identical
-    under ANY batch partitioning."""
-    st = int(recs[0].shape_type)
-    if st in _POLYLINES:
-        closed = False
-    elif st in _POLYGONS:
-        closed = True
-    else:
-        raise ValueError(f"measures: unsupported shape type {st}")
-    stride = STRIDES.get(recs[0].layout or "XY", 2)
-    coords = np.concatenate([np.asarray(r.coords, np.float64)
-                             for r in recs])
-    pt_per_row = np.array([len(r.coords) // stride for r in recs],
-                          np.int64)
-    row_pt_off = np.concatenate(([0], np.cumsum(pt_per_row)[:-1]))
-    part_ends = np.concatenate(
-        [np.asarray(r.ends, np.int64) // stride + off
-         for r, off in zip(recs, row_pt_off)])
-    parts_per_row = np.array([len(r.ends) for r in recs], np.int64)
-    return _BatchGeom(coords, pt_per_row, part_ends, parts_per_row,
-                      stride), closed
+def run_geom_measures(batches):
+    """The batch function of :func:`geom_measures`."""
+    import pyarrow as pa
 
-
-def measures_for_records(recs) -> list[tuple[float, float, float, float]]:
-    """Per-record (area, length, cx, cy) via the BATCHED kernel —
-    bit-identical to what :func:`geom_measures` computes in Spark."""
-    g, closed = _geom_from_records(recs)
-    return list(zip(*(a.tolist() for a in
-                      measures_batch(g, polyline=not closed))))
-
-
-def simplify_for_records(recs, eps: float):
-    """Per-record simplified ``(coords, ends, rings) | None`` via the
-    BATCHED kernel — bit-identical to :func:`simplify_features`."""
-    g, closed = _geom_from_records(recs)
-    rings_vals = np.concatenate(
-        [np.asarray([len(e) for e in r.endss] if r.endss
-                    else [1] * len(r.ends), np.int64) for r in recs]) \
-        if closed else None
-    mask, kept, part_drop = simplify_batch(g, rings_vals, eps, closed)
-    out = []
-    p = 0          # part cursor
-    rg = 0         # group cursor
-    rings_per_row = [len(r.endss) if r.endss else len(r.ends)
-                     for r in recs] if closed else None
-    for i, r in enumerate(recs):
-        nparts = len(r.ends)
-        kp = kept[p:p + nparts]
-        drop = part_drop[p:p + nparts]
-        lo = int(g.row_starts[i])
-        hi = lo + int(g.pt_per_row[i])
-        rows_mask = mask[lo:hi]
-        coords = g.pts[lo:hi][rows_mask].ravel()
-        if coords.size == 0:
-            out.append(None)
-        else:
-            ends = np.cumsum(kp[~drop] * g.stride).tolist()
-            if closed:
-                grp_sizes = rings_vals[rg:rg + rings_per_row[i]]
-                gf = np.concatenate(([0], np.cumsum(grp_sizes)[:-1]))
-                nk = np.add.reduceat((~drop).astype(np.int64), gf)
-                rings = nk[nk > 0].tolist()
-            else:
-                rings = []
-            out.append((coords, [int(e) for e in ends], rings))
-        p += nparts
-        if closed:
-            rg += rings_per_row[i]
-    return out
+    for batch in batches:
+        fid = batch.column(0).to_numpy(zero_copy_only=False)
+        outs = []
+        for sel, g, _rv, _rpr, closed, _l in _arrow_groups(
+                batch, with_rings=False):
+            area, ln, cx, cy = measures_batch(g, polyline=not closed)
+            outs.append((sel, area, ln, cx, cy))
+        if not outs:
+            continue
+        sel = np.concatenate([o[0] for o in outs])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(fid[sel], pa.int64())] +
+            [pa.array(np.concatenate([o[i] for o in outs]),
+                      pa.float64()) for i in (1, 2, 3, 4)],
+            names=["fid", "area", "perimeter", "cx", "cy"])
 
 
 def geom_measures(features: DataFrame) -> DataFrame:
@@ -718,27 +665,8 @@ def geom_measures(features: DataFrame) -> DataFrame:
     corpus size, so a 10^9-feature table parallelizes by input split
     alone.
     """
-    import pyarrow as pa
-
-    def run(batches):
-        for batch in batches:
-            fid = batch.column(0).to_numpy(zero_copy_only=False)
-            outs = []
-            for sel, g, _rv, _rpr, closed, _l in _arrow_groups(
-                    batch, with_rings=False):
-                area, ln, cx, cy = measures_batch(g, polyline=not closed)
-                outs.append((sel, area, ln, cx, cy))
-            if not outs:
-                continue
-            sel = np.concatenate([o[0] for o in outs])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(fid[sel], pa.int64())] +
-                [pa.array(np.concatenate([o[i] for o in outs]),
-                          pa.float64()) for i in (1, 2, 3, 4)],
-                names=["fid", "area", "perimeter", "cx", "cy"])
-
     return map_features(
-        features, KERNEL_COLUMNS, run,
+        features, KERNEL_COLUMNS, run_geom_measures,
         "fid long, area double, perimeter double, cx double, cy double")
 
 

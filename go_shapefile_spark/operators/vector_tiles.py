@@ -14,7 +14,9 @@ vectorized, output positions come from one cumsum, and every per-ring /
 per-tile reduction uses ``np.bincount`` segment sums (empty-segment
 safe, and accumulation stays inside each slot, so results are identical
 under ANY batch partitioning — the property that lets the DuckDB oracle
-pin literals from a driver-side run of the SAME kernel).
+pin literals from a driver run of the SAME batch function,
+``run_vector_tiles``, over the core parser's records:
+``sources.shapefile.map_records``).
 
 Correctness notes (all tested):
 
@@ -51,13 +53,15 @@ the raster tiles' vector twin).
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 from pyspark.sql import DataFrame
 
 from ..functions import cells as C
 from ..sources.shapefile import map_features
 from .geometry import (KERNEL_COLUMNS, _arrow_groups, _BatchGeom,
-                       _gather_ranges, _geom_from_records)
+                       _gather_ranges)
 
 
 def clip_ring_reference(x, y, box):
@@ -177,8 +181,8 @@ def clip_tiles_batch(g: _BatchGeom, res: int):
     n_points, area, coords_list_lens, coords_vals, ends_list_lens,
     ends_vals)`` where coords are re-closed rings in the flat XY model.
     """
-    # computed extent (not the header bbox): both the Spark path and the
-    # driver twin derive candidates from the same coords; pairs are
+    # computed extent (not the header bbox): candidates derive from the
+    # batch's own coords, wherever the batch was built; pairs are
     # (ring x tile), tile-major within each row
     (row_of_cell, cell_id, bx0, by0, bx1, by1, cell_of_pair,
      ring_of_pair) = _candidate_tiles(g, res)
@@ -477,71 +481,74 @@ def clip_lines_batch(g: _BatchGeom, res: int):
             ends_vals)
 
 
-def clip_line_tiles_for_records(recs, res: int):
-    """Driver twin of :func:`vector_tiles_lines` (oracle pinning)."""
-    g, closed = _geom_from_records(recs)
-    if closed:
-        raise ValueError("vector_tiles_lines: polyline shape types only")
-    out = clip_lines_batch(g, res)[:7]
-    return [(int(r) + 1, int(c), float(x0), float(y0), int(np_), int(pt),
-             float(ln)) for r, c, x0, y0, np_, pt, ln in zip(*out)]
+def run_vector_tiles_lines(batches, res: int):
+    """The batch function of :func:`vector_tiles_lines`."""
+    import pyarrow as pa
+
+    for batch in batches:
+        fid = batch.column(0).to_numpy(zero_copy_only=False)
+        for sel, g, _rv, _rpr, closed, _layout in _arrow_groups(
+                batch, with_rings=False):
+            if closed:
+                raise ValueError(
+                    "vector_tiles_lines: polyline shape types only")
+            (row, cell, lon0, lat0, npth, npts, ln, c_lens, c_vals,
+             e_lens, e_vals) = clip_lines_batch(g, res)
+            if row.size == 0:
+                continue
+            c_offs = np.concatenate(([0], np.cumsum(c_lens)))
+            e_offs = np.concatenate(([0], np.cumsum(e_lens)))
+            yield pa.RecordBatch.from_arrays([
+                pa.array(fid[sel][row], pa.int64()),
+                pa.array(cell, pa.int64()),
+                pa.array(lon0, pa.float64()),
+                pa.array(lat0, pa.float64()),
+                pa.array(npth, pa.int64()),
+                pa.array(npts, pa.int64()),
+                pa.array(ln, pa.float64()),
+                pa.ListArray.from_arrays(
+                    pa.array(c_offs, pa.int32()),
+                    pa.array(c_vals, pa.float64())),
+                pa.ListArray.from_arrays(
+                    pa.array(e_offs, pa.int32()),
+                    pa.array(e_vals, pa.int32())),
+            ], names=["fid", "cell", "lon0", "lat0", "n_paths",
+                      "n_points", "length", "coords", "ends"])
 
 
 def vector_tiles_lines(features: DataFrame, res: int) -> DataFrame:
     """Per-(feature, tile) clipped-polyline summary of a line corpus:
     ``(fid, cell, lon0, lat0, n_paths, n_points, length)``.  One Arrow
     pass, no shuffle — the polyline twin of :func:`vector_tiles`."""
-    import pyarrow as pa
-
-    def run(batches):
-        for batch in batches:
-            fid = batch.column(0).to_numpy(zero_copy_only=False)
-            for sel, g, _rv, _rpr, closed, _layout in _arrow_groups(
-                    batch, with_rings=False):
-                if closed:
-                    raise ValueError(
-                        "vector_tiles_lines: polyline shape types only")
-                (row, cell, lon0, lat0, npth, npts, ln, c_lens, c_vals,
-                 e_lens, e_vals) = clip_lines_batch(g, res)
-                if row.size == 0:
-                    continue
-                c_offs = np.concatenate(([0], np.cumsum(c_lens)))
-                e_offs = np.concatenate(([0], np.cumsum(e_lens)))
-                yield pa.RecordBatch.from_arrays([
-                    pa.array(fid[sel][row], pa.int64()),
-                    pa.array(cell, pa.int64()),
-                    pa.array(lon0, pa.float64()),
-                    pa.array(lat0, pa.float64()),
-                    pa.array(npth, pa.int64()),
-                    pa.array(npts, pa.int64()),
-                    pa.array(ln, pa.float64()),
-                    pa.ListArray.from_arrays(
-                        pa.array(c_offs, pa.int32()),
-                        pa.array(c_vals, pa.float64())),
-                    pa.ListArray.from_arrays(
-                        pa.array(e_offs, pa.int32()),
-                        pa.array(e_vals, pa.int32())),
-                ], names=["fid", "cell", "lon0", "lat0", "n_paths",
-                          "n_points", "length", "coords", "ends"])
-
     return map_features(
-        features, KERNEL_COLUMNS, run,
+        features, KERNEL_COLUMNS, partial(run_vector_tiles_lines, res=res),
         "fid long, cell long, lon0 double, lat0 double, n_paths long, "
         "n_points long, length double, coords array<double>, ends array<int>")
 
 
-def clip_tiles_for_records(recs, res: int):
-    """Driver-side twin over core-parser records — bit-identical to what
-    :func:`vector_tiles` computes in Spark (oracle literal pinning)."""
-    g, closed = _geom_from_records(recs)
-    if not closed:
-        raise ValueError("vector_tiles: polygon shape types only")
-    (row, cell, lon0, lat0, nr, npts, area, _cl, _cv, _el,
-     _ev) = clip_tiles_batch(g, res)
-    return [(int(r) + 1, int(c), float(x0), float(y0), int(a), int(b),
-             float(ar))
-            for r, c, x0, y0, a, b, ar
-            in zip(row, cell, lon0, lat0, nr, npts, area)]
+def zoom_eps(z: int, eps_fraction: float = 1.0 / 256) -> float:
+    """A pyramid level's simplification tolerance: ``eps_fraction`` of
+    the height of a res-``z`` tile (1/256 is one pixel of a 256-px
+    tile)."""
+    return eps_fraction * (180.0 / (1 << z))
+
+
+def _pyramid(features: DataFrame, min_res: int, max_res: int,
+             eps_fraction: float, pin: str | None, slot: str | None,
+             clip) -> DataFrame:
+    from .geometry import simplify_features
+    from .pinning import fresh_pins
+
+    if not 0 <= min_res <= max_res:
+        raise ValueError(f"bad zoom range [{min_res}, {max_res}]")
+    pinf = fresh_pins(features.sparkSession, slot, strategy=pin)
+    feats = pinf(features.select("fid", "shape_type", "geometry"))
+    out = None
+    for z in range(min_res, max_res + 1):
+        lvl = clip(simplify_features(feats, zoom_eps(z, eps_fraction)),
+                   res=z)
+        out = lvl if out is None else out.unionByName(lvl)
+    return out
 
 
 def vector_tile_pyramid(features: DataFrame, min_res: int, max_res: int,
@@ -550,73 +557,17 @@ def vector_tile_pyramid(features: DataFrame, min_res: int, max_res: int,
                         slot: str | None = None) -> DataFrame:
     """Multi-zoom vector tiles (the tippecanoe pipeline): per zoom ``z``
     the corpus is Douglas–Peucker-simplified at one tile-pixel of
-    tolerance (``eps_fraction`` of the tile height — default 1/256, a
-    256-px tile) and then clipped to the res-``z`` tiles.  Output rows
-    are the union over zooms; the cell id encodes the resolution, so no
-    extra level column is needed.
+    tolerance (:func:`zoom_eps`) and then clipped to the res-``z``
+    tiles.  Output rows are the union over zooms; the cell id encodes
+    the resolution, so no extra level column is needed.
 
     The parsed features are pinned once (operators/pinning.py) and every
     level reads the pin — levels re-simplify (tolerance differs per
     zoom; that is the point of the pyramid) but never re-parse/re-scan
     the source.  Each level stays a shuffle-free mapInArrow chain.
     """
-    from .pinning import fresh_pins
-
-    if not 0 <= min_res <= max_res:
-        raise ValueError(f"bad zoom range [{min_res}, {max_res}]")
-    from .geometry import simplify_features
-
-    pinf = fresh_pins(features.sparkSession, slot, strategy=pin)
-    feats = pinf(features.select("fid", "shape_type", "geometry"))
-    out = None
-    for z in range(min_res, max_res + 1):
-        eps = eps_fraction * (180.0 / (1 << z))
-        lvl = vector_tiles(simplify_features(feats, eps), res=z)
-        out = lvl if out is None else out.unionByName(lvl)
-    return out
-
-
-class _ShimRec:
-    """Minimal record for :func:`_geom_from_records` over already-
-    simplified geometry (driver pyramid twin)."""
-
-    __slots__ = ("shape_type", "layout", "coords", "ends", "endss")
-
-    def __init__(self, shape_type, layout, coords, ends):
-        self.shape_type = shape_type
-        self.layout = layout
-        self.coords = coords
-        self.ends = ends
-        self.endss = None
-
-
-def pyramid_for_records(recs, min_res: int, max_res: int,
-                        eps_fraction: float = 1.0 / 256):
-    """Driver twin of :func:`vector_tile_pyramid` — simplify + clip per
-    zoom with the SAME batched kernels, preserving original fids across
-    rows that simplification drops entirely."""
-    from .geometry import simplify_for_records
-
-    out = []
-    for z in range(min_res, max_res + 1):
-        eps = eps_fraction * (180.0 / (1 << z))
-        simp = simplify_for_records(recs, eps)
-        fids = [i + 1 for i, s in enumerate(simp) if s is not None]
-        shims = [_ShimRec(recs[i].shape_type, recs[i].layout, s[0], s[1])
-                 for i, s in enumerate(simp) if s is not None]
-        if not shims:
-            continue
-        g, closed = _geom_from_records(shims)
-        if not closed:
-            raise ValueError("vector_tile_pyramid: polygons only")
-        (row, cell, lon0, lat0, nr, npts, area, _cl, _cv, _el,
-         _ev) = clip_tiles_batch(g, z)
-        out.extend(
-            (fids[int(r)], int(c), float(x0), float(y0), int(a), int(b),
-             float(ar))
-            for r, c, x0, y0, a, b, ar
-            in zip(row, cell, lon0, lat0, nr, npts, area))
-    return out
+    return _pyramid(features, min_res, max_res, eps_fraction, pin, slot,
+                    vector_tiles)
 
 
 def vector_tile_pyramid_lines(features: DataFrame, min_res: int,
@@ -627,47 +578,43 @@ def vector_tile_pyramid_lines(features: DataFrame, min_res: int,
     """Polyline twin of :func:`vector_tile_pyramid`: per zoom, DP-
     simplify at one tile-pixel tolerance then clip to that zoom's
     tiles; parse pinned once, levels unioned."""
-    from .pinning import fresh_pins
-
-    if not 0 <= min_res <= max_res:
-        raise ValueError(f"bad zoom range [{min_res}, {max_res}]")
-    from .geometry import simplify_features
-
-    pinf = fresh_pins(features.sparkSession, slot, strategy=pin)
-    feats = pinf(features.select("fid", "shape_type", "geometry"))
-    out = None
-    for z in range(min_res, max_res + 1):
-        eps = eps_fraction * (180.0 / (1 << z))
-        lvl = vector_tiles_lines(simplify_features(feats, eps), res=z)
-        out = lvl if out is None else out.unionByName(lvl)
-    return out
+    return _pyramid(features, min_res, max_res, eps_fraction, pin, slot,
+                    vector_tiles_lines)
 
 
-def line_pyramid_for_records(recs, min_res: int, max_res: int,
-                             eps_fraction: float = 1.0 / 256):
-    """Driver twin of :func:`vector_tile_pyramid_lines` (polyline
-    simplification keeps endpoints, so no feature ever drops)."""
-    from .geometry import simplify_for_records
+def run_vector_tiles(batches, res: int):
+    """The batch function of :func:`vector_tiles`."""
+    import pyarrow as pa
 
-    out = []
-    for z in range(min_res, max_res + 1):
-        eps = eps_fraction * (180.0 / (1 << z))
-        simp = simplify_for_records(recs, eps)
-        fids = [i + 1 for i, s in enumerate(simp) if s is not None]
-        shims = [_ShimRec(recs[i].shape_type, recs[i].layout, s[0], s[1])
-                 for i, s in enumerate(simp) if s is not None]
-        if not shims:
-            continue
-        g, closed = _geom_from_records(shims)
-        if closed:
-            raise ValueError("vector_tile_pyramid_lines: polylines only")
-        row, cell, lon0, lat0, npth, npts, ln = clip_lines_batch(g, z)[:7]
-        out.extend(
-            (fids[int(r)], int(c), float(x0), float(y0), int(a), int(b),
-             float(l_))
-            for r, c, x0, y0, a, b, l_
-            in zip(row, cell, lon0, lat0, npth, npts, ln))
-    return out
+    for batch in batches:
+        fid = batch.column(0).to_numpy(zero_copy_only=False)
+        for sel, g, _rv, _rpr, closed, _layout in _arrow_groups(
+                batch, with_rings=False):
+            if not closed:
+                raise ValueError(
+                    "vector_tiles: polygon shape types only")
+            (row, cell, lon0, lat0, nr, npts, area, c_lens, c_vals,
+             e_lens, e_vals) = clip_tiles_batch(g, res)
+            if row.size == 0:
+                continue
+            c_offs = np.concatenate(([0], np.cumsum(c_lens)))
+            e_offs = np.concatenate(([0], np.cumsum(e_lens)))
+            yield pa.RecordBatch.from_arrays([
+                pa.array(fid[sel][row], pa.int64()),
+                pa.array(cell, pa.int64()),
+                pa.array(lon0, pa.float64()),
+                pa.array(lat0, pa.float64()),
+                pa.array(nr, pa.int64()),
+                pa.array(npts, pa.int64()),
+                pa.array(area, pa.float64()),
+                pa.ListArray.from_arrays(
+                    pa.array(c_offs, pa.int32()),
+                    pa.array(c_vals, pa.float64())),
+                pa.ListArray.from_arrays(
+                    pa.array(e_offs, pa.int32()),
+                    pa.array(e_vals, pa.int32())),
+            ], names=["fid", "cell", "lon0", "lat0", "n_rings",
+                      "n_points", "area", "coords", "ends"])
 
 
 def vector_tiles(features: DataFrame, res: int) -> DataFrame:
@@ -679,40 +626,7 @@ def vector_tiles(features: DataFrame, res: int) -> DataFrame:
     rows compose with geometry measures / GeoJSON export downstream.
     One Arrow pass, no shuffle; parallelism = input splits.
     """
-    import pyarrow as pa
-
-    def run(batches):
-        for batch in batches:
-            fid = batch.column(0).to_numpy(zero_copy_only=False)
-            for sel, g, _rv, _rpr, closed, _layout in _arrow_groups(
-                    batch, with_rings=False):
-                if not closed:
-                    raise ValueError(
-                        "vector_tiles: polygon shape types only")
-                (row, cell, lon0, lat0, nr, npts, area, c_lens, c_vals,
-                 e_lens, e_vals) = clip_tiles_batch(g, res)
-                if row.size == 0:
-                    continue
-                c_offs = np.concatenate(([0], np.cumsum(c_lens)))
-                e_offs = np.concatenate(([0], np.cumsum(e_lens)))
-                yield pa.RecordBatch.from_arrays([
-                    pa.array(fid[sel][row], pa.int64()),
-                    pa.array(cell, pa.int64()),
-                    pa.array(lon0, pa.float64()),
-                    pa.array(lat0, pa.float64()),
-                    pa.array(nr, pa.int64()),
-                    pa.array(npts, pa.int64()),
-                    pa.array(area, pa.float64()),
-                    pa.ListArray.from_arrays(
-                        pa.array(c_offs, pa.int32()),
-                        pa.array(c_vals, pa.float64())),
-                    pa.ListArray.from_arrays(
-                        pa.array(e_offs, pa.int32()),
-                        pa.array(e_vals, pa.int32())),
-                ], names=["fid", "cell", "lon0", "lat0", "n_rings",
-                          "n_points", "area", "coords", "ends"])
-
     return map_features(
-        features, KERNEL_COLUMNS, run,
+        features, KERNEL_COLUMNS, partial(run_vector_tiles, res=res),
         "fid long, cell long, lon0 double, lat0 double, n_rings long, "
         "n_points long, area double, coords array<double>, ends array<int>")

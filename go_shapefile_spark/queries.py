@@ -3152,6 +3152,54 @@ SELECT CAST(3 AS BIGINT), (SELECT c FROM n3), CAST({r32} AS BIGINT)
 # --- shapefile-source gate queries -----------------------------------------
 
 REF_TESTDATA = "/root/reference/testdata"
+_TILE_NAMES = ["fid", "cell", "lon0", "lat0", "n_rings", "n_points", "area"]
+_LINE_TILE_NAMES = ["fid", "cell", "lon0", "lat0", "n_paths", "n_points",
+                    "length"]
+
+
+def _kernel_rows(records, columns: list[str], fn,
+                 names: list[str]) -> list[tuple]:
+    """The ``names`` columns of a feature kernel's batch function run on
+    the driver over core-parser records (``map_records``), as row
+    tuples in output order — the rows the kernel gives in Spark."""
+    from .sources.shapefile import map_records
+
+    return [row for rb in map_records(records, columns, fn)
+            for row in zip(*(rb.column(n).to_pylist() for n in names))]
+
+
+def _pyramid_rows(records, min_res: int, max_res: int, run_clip,
+                  names: list[str]) -> list[tuple]:
+    """``vector_tile_pyramid`` on the driver: per zoom, simplify's
+    output batches chain into the clip's batch function, as in Spark."""
+    from functools import partial
+
+    from .operators.geometry import (KERNEL_COLUMNS, SIMPLIFY_COLUMNS,
+                                     run_simplify)
+    from .operators.vector_tiles import zoom_eps
+    from .sources.shapefile import map_records
+
+    rows = []
+    for z in range(min_res, max_res + 1):
+        simp = map_records(records, SIMPLIFY_COLUMNS,
+                           partial(run_simplify, eps=zoom_eps(z)))
+        rows += _kernel_rows(simp, KERNEL_COLUMNS, partial(run_clip, res=z),
+                             names)
+    return rows
+
+
+def _countries_tiles() -> list[tuple]:
+    """ne_110m countries clipped to res-4 tiles by ``vector_tiles``'
+    batch function over the core parser's records."""
+    from functools import partial
+
+    from .operators.geometry import KERNEL_COLUMNS
+    from .operators.vector_tiles import run_vector_tiles
+    from .sources.shapefile_core import read_zip
+
+    sf = read_zip(os.path.join(REF_TESTDATA, "110m-admin-0-countries.zip"))
+    return _kernel_rows(sf.shp.records, KERNEL_COLUMNS,
+                        partial(run_vector_tiles, res=4), _TILE_NAMES)
 
 
 def geojson_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3238,9 +3286,9 @@ def vector_tiles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector-tile materialization: every ne_110m country clipped
     (Sutherland–Hodgman, batched) to the res-4 cell tiles it covers —
     per (feature, tile): tile origin, clipped ring/point counts and the
-    clipped planar area.  The oracle pins literals from the SAME
-    batched kernel over the golden core parser (driver twin is
-    bit-exact — tested); the kernel itself is proven in
+    clipped planar area.  The oracle pins literals from the kernel's
+    own batch function run on the driver over the golden core parser
+    (``map_records``; bit-exact — tested); the kernel itself is proven in
     tests/test_vector_tiles.py against an independent per-ring
     Sutherland–Hodgman reference, analytic boxes, and per-feature area
     conservation across the tile decomposition."""
@@ -3254,15 +3302,10 @@ def vector_tiles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_vector_tiles_oracle() -> str:
-    from .operators.vector_tiles import clip_tiles_for_records
-    from .sources.shapefile_core import read_zip
-
-    sf = read_zip(os.path.join(REF_TESTDATA, "110m-admin-0-countries.zip"))
     rows = []
     # quoted literals: see q_geom_measures_oracle (bare 17-digit
     # literals DECIMAL-parse in DuckDB and double-round one ulp off)
-    for fid, cell, x0, y0, nr, npts, area in clip_tiles_for_records(
-            sf.shp.records, 4):
+    for fid, cell, x0, y0, nr, npts, area in _countries_tiles():
         rows.append(f"(CAST({fid} AS BIGINT), CAST({cell} AS BIGINT), "
                     f"CAST('{x0!r}' AS DOUBLE), CAST('{y0!r}' AS DOUBLE), "
                     f"CAST({nr} AS BIGINT), CAST({npts} AS BIGINT), "
@@ -3308,8 +3351,8 @@ def areal_interpolation_spark(spark: SparkSession,
     countries clipped to res-4 tiles by the batched Sutherland–Hodgman
     kernel, a per-country value reaggregated onto the tile system
     proportional to clipped area.  Geometry is the proven clip kernel
-    (oracle pins the same driver-twin areas); the transfer math is
-    dual-engine SQL."""
+    (oracle pins the areas of its batch function run on the driver);
+    the transfer math is dual-engine SQL."""
     from .operators.vector_tiles import vector_tiles
     from .sources.shapefile import read_shapefile_df
 
@@ -3321,13 +3364,8 @@ def areal_interpolation_spark(spark: SparkSession,
 
 
 def q_areal_interpolation_oracle() -> str:
-    from .operators.vector_tiles import clip_tiles_for_records
-    from .sources.shapefile_core import read_zip
-
-    sf = read_zip(os.path.join(REF_TESTDATA, "110m-admin-0-countries.zip"))
     rows = []
-    for fid, cell, x0, y0, nr, npts, area in clip_tiles_for_records(
-            sf.shp.records, 4):
+    for fid, cell, x0, y0, nr, npts, area in _countries_tiles():
         rows.append(f"(CAST({fid} AS BIGINT), CAST({cell} AS BIGINT), "
                     f"CAST('{area!r}' AS DOUBLE))")
     return (f"WITH tiles AS (SELECT * FROM (VALUES\n"
@@ -3339,8 +3377,8 @@ def vector_tile_pyramid_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-zoom vector tiles (tippecanoe pipeline): ne_110m countries
     simplified at one tile-pixel tolerance per zoom, then clipped to
     that zoom's tiles, zooms 2-4 unioned (cell ids encode the level).
-    Oracle pins literals from the driver twin composing the SAME
-    simplify + clip kernels."""
+    Oracle pins literals from the simplify and clip batch functions
+    chained on the driver (``_pyramid_rows``)."""
     from .operators.vector_tiles import vector_tile_pyramid
     from .sources.shapefile import read_shapefile_df
 
@@ -3352,7 +3390,7 @@ def vector_tile_pyramid_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_vector_tile_pyramid_oracle() -> str:
-    from .operators.vector_tiles import pyramid_for_records
+    from .operators.vector_tiles import run_vector_tiles
     from .sources.shapefile_core import read_zip
 
     sf = read_zip(os.path.join(REF_TESTDATA, "110m-admin-0-countries.zip"))
@@ -3361,7 +3399,8 @@ def q_vector_tile_pyramid_oracle() -> str:
             f"CAST({nr} AS BIGINT), CAST({npts} AS BIGINT), "
             f"CAST('{area!r}' AS DOUBLE))"
             for fid, cell, x0, y0, nr, npts, area
-            in pyramid_for_records(sf.shp.records, 2, 4)]
+            in _pyramid_rows(sf.shp.records, 2, 4, run_vector_tiles,
+                             _TILE_NAMES)]
     return ("SELECT * FROM (VALUES\n" + ",\n".join(rows)
             + "\n) AS t(fid, cell, lon0, lat0, n_rings, n_points, area)")
 
@@ -3407,7 +3446,8 @@ def vector_tiles_lines_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polyline vector tiles: the deterministic 500-line corpus clipped
     (batched Liang–Barsky + path re-chaining) to res-5 cell tiles —
     per (feature, tile): sub-path/point counts and clipped length.  The
-    oracle pins literals from the SAME kernel over the core parser; the
+    oracle pins literals from the kernel's batch function run on the
+    driver over the core parser's records; the
     segment clip itself is proven against an independent per-part
     reference in tests/test_vector_tiles.py."""
     from .operators.vector_tiles import vector_tiles_lines
@@ -3420,13 +3460,17 @@ def vector_tiles_lines_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_vector_tiles_lines_oracle() -> str:
-    from .operators.vector_tiles import clip_line_tiles_for_records
+    from functools import partial
+
+    from .operators.geometry import KERNEL_COLUMNS
+    from .operators.vector_tiles import run_vector_tiles_lines
     from .sources.shapefile_core import read_shapefile
 
     sf = read_shapefile(ensure_lines_corpus())
     rows = []
-    for fid, cell, x0, y0, npth, npts, ln in clip_line_tiles_for_records(
-            sf.shp.records, 5):
+    for fid, cell, x0, y0, npth, npts, ln in _kernel_rows(
+            sf.shp.records, KERNEL_COLUMNS,
+            partial(run_vector_tiles_lines, res=5), _LINE_TILE_NAMES):
         rows.append(f"(CAST({fid} AS BIGINT), CAST({cell} AS BIGINT), "
                     f"CAST('{x0!r}' AS DOUBLE), CAST('{y0!r}' AS DOUBLE), "
                     f"CAST({npth} AS BIGINT), CAST({npts} AS BIGINT), "
@@ -3443,8 +3487,8 @@ def dissolve_tiles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     area is a sum and the dissolve is exact.  Per-tile areas quantize
     to integer 1e-9 deg² units BEFORE the group sum (float SUM
     accumulation order is not dual-engine stable; integer sums are) —
-    the IDW/heatmap discipline.  Oracle pins literals from the driver
-    twin of the same clip kernel + grouping."""
+    the IDW/heatmap discipline.  Oracle pins literals from the clip's
+    batch function run on the driver, grouped in Python."""
     from pyspark.sql import functions as F
 
     from .operators.vector_tiles import vector_tiles
@@ -3470,15 +3514,13 @@ def dissolve_tiles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dissolve_tiles_oracle() -> str:
     import math
 
-    from .operators.vector_tiles import clip_tiles_for_records
     from .sources.shapefile_core import read_zip
 
     sf = read_zip(os.path.join(REF_TESTDATA, "110m-admin-0-countries.zip"))
     color_of = {i + 1: int(sf.record(i)[0]["MAP_COLOR"])
                 for i in range(sf.num_records())}
     acc: dict = {}
-    for fid, cell, _x0, _y0, nr, _npts, area in clip_tiles_for_records(
-            sf.shp.records, 4):
+    for fid, cell, _x0, _y0, nr, _npts, area in _countries_tiles():
         key = (color_of[fid], cell)
         n, rings, au = acc.get(key, (0, 0, 0))
         acc[key] = (n + 1, rings + nr,
@@ -3495,8 +3537,9 @@ def geom_measures_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geometry measures (planar area / perimeter / area-weighted
     centroid) for every ne_110m country, computed distributed over the
     Spark shapefile source — the ST_Area/ST_Length/ST_Centroid analog.
-    The oracle pins literals from the SAME kernel over the golden core
-    parser (bit-exact — the gate proves the distributed plumbing and
+    The oracle pins literals from the kernel's batch function run on
+    the driver over the golden core parser (bit-exact — the gate proves
+    the distributed plumbing and
     Spark-source parse parity); the kernel itself is proven in
     tests/test_geometry.py against analytic shapes and an independent
     sequential pure-Python reference."""
@@ -3513,8 +3556,9 @@ def simplify_countries_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     ne_110m country at eps=0.1°, summarized per feature: vertex/ring
     counts before and after plus measures of the SIMPLIFIED geometry —
     exercising the simplify_features → geom_measures composition over
-    the shared geometry struct.  The oracle pins literals from the SAME
-    kernels over the golden core parser; the DP kernel itself is proven
+    the shared geometry struct.  The oracle pins literals from the two
+    kernels' batch functions chained on the driver over the golden core
+    parser; the DP kernel itself is proven
     in tests/test_geometry.py against an independent recursive
     reference and the within-eps guarantee."""
     from pyspark.sql import functions as F
@@ -3540,31 +3584,30 @@ def simplify_countries_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simplify_countries_oracle() -> str:
-    from types import SimpleNamespace
+    from functools import partial
 
-    from .operators.geometry import (measures_for_records,
-                                     simplify_for_records)
+    from .operators.geometry import (KERNEL_COLUMNS, SIMPLIFY_COLUMNS,
+                                     run_geom_measures, run_simplify)
+    from .sources.shapefile import map_records
     from .sources.shapefile_core import read_zip
 
     sf = read_zip(os.path.join(REF_TESTDATA, "110m-admin-0-countries.zip"))
     recs = sf.shp.records
-    simped = simplify_for_records(recs, eps=0.1)
-    # measures of the simplified geometry via the same batched kernel
-    # the Spark composition runs (literals quoted — see
-    # q_geom_measures_oracle)
-    live = [(i, s) for i, s in enumerate(simped) if s is not None]
-    meas = measures_for_records([
-        SimpleNamespace(shape_type=recs[i].shape_type,
-                        layout=recs[i].layout, coords=s[0], ends=s[1])
-        for i, s in live])
+    simp = map_records(recs, SIMPLIFY_COLUMNS, partial(run_simplify, eps=0.1))
+    # measures of the simplified geometry: simplify's output chained
+    # into the measures batch function, as the Spark composition runs
+    # (literals quoted — see q_geom_measures_oracle)
+    geoms = {fid: g for rb in simp for fid, g in zip(
+        rb.column("fid").to_pylist(), rb.column("geometry").to_pylist())}
     rows = []
-    for ((i, (c, e, _rg)), (a, ln, _cx, _cy)) in zip(live, meas):
-        rec = recs[i]
-        rows.append(f"SELECT CAST({i + 1} AS BIGINT) AS fid, "
+    for fid, a, ln in _kernel_rows(simp, KERNEL_COLUMNS, run_geom_measures,
+                                   ["fid", "area", "perimeter"]):
+        rec, g = recs[fid - 1], geoms[fid]
+        rows.append(f"SELECT CAST({fid} AS BIGINT) AS fid, "
                     f"CAST({len(rec.coords) // 2} AS BIGINT) AS pts_in, "
                     f"CAST({len(rec.ends)} AS BIGINT) AS rings_in, "
-                    f"CAST({len(c) // 2} AS BIGINT) AS pts_out, "
-                    f"CAST({len(e)} AS BIGINT) AS rings_out, "
+                    f"CAST({len(g['coords']) // 2} AS BIGINT) AS pts_out, "
+                    f"CAST({len(g['ends'])} AS BIGINT) AS rings_out, "
                     f"CAST('{a!r}' AS DOUBLE) AS area, "
                     f"CAST('{ln!r}' AS DOUBLE) AS perimeter")
     return "\nUNION ALL\n".join(rows)
@@ -3575,7 +3618,8 @@ def geodesic_measures_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     spherical-excess area, meters) for every ne_110m country — the
     geography-type ST_Area/ST_Length analog for lon/lat corpora.  Same
     one-Arrow-pass plan as geom_measures; the oracle pins literals from
-    the SAME kernel over the golden core parser, and the kernel itself
+    the kernel's batch function run on the driver over the golden core
+    parser, and the kernel itself
     is proven in tests/test_geometry.py against analytic closed forms
     (exact lat-lon rectangle, meridian arcs, antimeridian wrap) and
     Earth's land-area total."""
@@ -3588,34 +3632,37 @@ def geodesic_measures_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_geodesic_measures_oracle() -> str:
-    from .operators.geometry import geodesic_for_records
+    from .operators.geometry import KERNEL_COLUMNS, run_geodesic_measures
     from .sources.shapefile_core import read_zip
 
     sf = read_zip(os.path.join(REF_TESTDATA, "110m-admin-0-countries.zip"))
     rows = []
     # literals quoted for correctly-rounded string → DOUBLE parse (see
     # q_geom_measures_oracle)
-    for i, (a, ln) in enumerate(geodesic_for_records(sf.shp.records)):
-        rows.append(f"SELECT CAST({i + 1} AS BIGINT) AS fid, "
+    for fid, a, ln in _kernel_rows(
+            sf.shp.records, KERNEL_COLUMNS, run_geodesic_measures,
+            ["fid", "geo_area_m2", "geo_length_m"]):
+        rows.append(f"SELECT CAST({fid} AS BIGINT) AS fid, "
                     f"CAST('{a!r}' AS DOUBLE) AS geo_area_m2, "
                     f"CAST('{ln!r}' AS DOUBLE) AS geo_length_m")
     return "\nUNION ALL\n".join(rows)
 
 
 def q_geom_measures_oracle() -> str:
-    from .operators.geometry import measures_for_records
+    from .operators.geometry import KERNEL_COLUMNS, run_geom_measures
     from .sources.shapefile_core import read_zip
 
     sf = read_zip(os.path.join(REF_TESTDATA, "110m-admin-0-countries.zip"))
     rows = []
-    # literals pinned from the BATCHED kernel (the same one Spark runs;
-    # segmented sums are batch-partitioning-independent) and QUOTED: a
+    # literals pinned from the batch function Spark runs (segmented
+    # sums are batch-partitioning-independent) and QUOTED: a
     # bare 17-digit literal parses as DECIMAL first in DuckDB and
     # double-rounds one ulp off; the string → DOUBLE parse is correctly
     # rounded (shortest-repr roundtrip)
-    for i, (a, ln, cx, cy) in enumerate(
-            measures_for_records(sf.shp.records)):
-        rows.append(f"SELECT CAST({i + 1} AS BIGINT) AS fid, "
+    for fid, a, ln, cx, cy in _kernel_rows(
+            sf.shp.records, KERNEL_COLUMNS, run_geom_measures,
+            ["fid", "area", "perimeter", "cx", "cy"]):
+        rows.append(f"SELECT CAST({fid} AS BIGINT) AS fid, "
                     f"CAST('{a!r}' AS DOUBLE) AS area, "
                     f"CAST('{ln!r}' AS DOUBLE) AS perimeter, "
                     f"CAST('{cx!r}' AS DOUBLE) AS cx, "
@@ -4085,7 +4132,7 @@ FROM comp
             "length")
 
     def q_line_pyramid_oracle() -> str:
-        from .operators.vector_tiles import line_pyramid_for_records
+        from .operators.vector_tiles import run_vector_tiles_lines
         from .sources.shapefile_core import read_shapefile
 
         sf = read_shapefile(ensure_lines_corpus())
@@ -4094,7 +4141,8 @@ FROM comp
                 f"CAST({npth} AS BIGINT), CAST({npts} AS BIGINT), "
                 f"CAST('{ln!r}' AS DOUBLE))"
                 for fid, cell, x0, y0, npth, npts, ln
-                in line_pyramid_for_records(sf.shp.records, 4, 5)]
+                in _pyramid_rows(sf.shp.records, 4, 5,
+                                 run_vector_tiles_lines, _LINE_TILE_NAMES)]
         return ("SELECT * FROM (VALUES\n" + ",\n".join(rows)
                 + "\n) AS t(fid, cell, lon0, lat0, n_paths, n_points, "
                 "length)")

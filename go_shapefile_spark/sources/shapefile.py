@@ -979,6 +979,30 @@ def map_features(features: DataFrame, columns: list[str], fn,
     return spark.range(0, k, 1, k).mapInArrow(parse_and_map, schema=schema)
 
 
+def map_records(records, columns: list[str], fn) -> list:
+    """:func:`map_features` on the driver: ``fn``'s output batches over
+    core-parser ``records`` (or over Arrow batches of the
+    ``fid, shape_type, geometry`` a kernel such as simplify emits).
+
+    Records become the batch a scan emits for them: ``fid`` is the
+    1-based record position and ``geometry`` is built by the same
+    :func:`_geom_dict` as the pandas scan path.  The DuckDB oracles run
+    a feature kernel's own batch function through this, so Spark and
+    the oracle share one kernel path; a kernel's output fed back in
+    chains two kernels the way Spark does."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if records and isinstance(records[0], core.SHPRecord):
+        records = [pa.RecordBatch.from_pylist(
+            [{"fid": i, "shape_type": r.shape_type, "geometry": _geom_dict(r)}
+             for i, r in enumerate(records, 1)],
+            schema=to_arrow_schema(T.StructType([
+                T.StructField("fid", T.LongType(), False),
+                T.StructField("shape_type", T.IntegerType()),
+                T.StructField("geometry", GEOMETRY_TYPE)])))]
+    return list(fn(project_batch(rb, columns) for rb in records))
+
+
 def scan_bytes(plan: ShapefilePlan) -> int:
     """The bytes a range-reading scan of the whole file reads: every
     ``.shp`` record (8-byte header plus its ``.shx`` content length) and

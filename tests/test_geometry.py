@@ -1,9 +1,49 @@
-"""Geometry measures: analytic shapes, independent reference, Spark parity."""
+"""Geometry measures: analytic shapes, independent reference, Spark parity
+(the driver runs each kernel's own batch function over the core
+parser's records, ``sources.shapefile.map_records``)."""
 
 import math
+import os
+from functools import partial
 
 import numpy as np
 import pytest
+
+from go_shapefile_spark.operators.geometry import (
+    KERNEL_COLUMNS, SIMPLIFY_COLUMNS, run_geodesic_measures,
+    run_geom_measures, run_simplify)
+from go_shapefile_spark.queries import REF_TESTDATA, _kernel_rows
+from go_shapefile_spark.sources.shapefile import map_records
+
+COUNTRIES = os.path.join(REF_TESTDATA, "110m-admin-0-countries.zip")
+
+
+def _countries():
+    """ne_110m countries through the core parser."""
+    from go_shapefile_spark.sources.shapefile_core import read_zip
+
+    if not os.path.exists(COUNTRIES):
+        pytest.skip(f"fixture absent: {COUNTRIES}")
+    return read_zip(COUNTRIES)
+
+
+def _measures(records):
+    """(area, perimeter, cx, cy) per feature, in fid order."""
+    return _kernel_rows(records, KERNEL_COLUMNS, run_geom_measures,
+                        ["area", "perimeter", "cx", "cy"])
+
+
+def _geodesic(records):
+    return _kernel_rows(records, KERNEL_COLUMNS, run_geodesic_measures,
+                        ["geo_area_m2", "geo_length_m"])
+
+
+def _simplified(records, eps):
+    """simplify's output batches and fid -> simplified geometry dict."""
+    simp = map_records(records, SIMPLIFY_COLUMNS,
+                       partial(run_simplify, eps=eps))
+    return simp, {fid: g for rb in simp for fid, g in zip(
+        rb.column("fid").to_pylist(), rb.column("geometry").to_pylist())}
 
 
 def _ref_measures(coords, ends, stride=2):
@@ -168,45 +208,40 @@ def test_simplify_ring_drop_policies():
 
 def test_simplify_spark_composes_with_measures(spark):
     """simplify_features output feeds geom_measures; rows match the
-    driver kernels on every surviving ne_110m feature."""
-    from go_shapefile_spark.operators.geometry import (
-        geom_measures, measures_for_records, simplify_features,
-        simplify_for_records)
+    driver run of the same two batch functions, chained, on every
+    surviving ne_110m feature."""
+    from go_shapefile_spark.operators.geometry import (geom_measures,
+                                                       simplify_features)
     from go_shapefile_spark.sources.shapefile import read_shapefile_df
-    from go_shapefile_spark.sources.shapefile_core import read_zip
 
-    z = "/root/reference/testdata/110m-admin-0-countries.zip"
-    simp = simplify_features(read_shapefile_df(spark, z), eps=0.1)
+    sf = _countries()
+    simp = simplify_features(read_shapefile_df(spark, COUNTRIES), eps=0.1)
     got = {r.fid: (r.area, r.perimeter)
            for r in geom_measures(simp).collect()}
-    sf = read_zip(z)
-    from types import SimpleNamespace
     recs = sf.shp.records
-    live = [(i, s) for i, s in
-            enumerate(simplify_for_records(recs, 0.1)) if s is not None]
-    meas = measures_for_records([
-        SimpleNamespace(shape_type=recs[i].shape_type,
-                        layout=recs[i].layout, coords=s[0], ends=s[1])
-        for i, s in live])
-    want = {i + 1: (a, ln) for (i, _), (a, ln, _, _) in zip(live, meas)}
+    simp_batches, live = _simplified(recs, 0.1)
+    want = {fid: (a, ln) for fid, a, ln in _kernel_rows(
+        simp_batches, KERNEL_COLUMNS, run_geom_measures,
+        ["fid", "area", "perimeter"])}
     assert got == want and len(got) > 150
     # simplification actually simplified: strictly fewer vertices
     # overall (ne_110m is already generalized; eps=0.1 still trims ~20%)
     n_in = sum(len(r.coords) for r in recs)
-    n_out = sum(len(s[0]) for _, s in live)
+    n_out = sum(len(g["coords"]) for g in live.values())
     assert n_out < 0.9 * n_in
 
 
 def test_batched_mask_bitwise_equals_per_ring_on_fixtures():
     """dp_keep_mask_batch over ALL rings at once == dp_keep_mask per
     ring, bitwise, on every ne_110m ring at two tolerances."""
-    from go_shapefile_spark.operators.geometry import (_geom_from_records,
+    from go_shapefile_spark.operators.geometry import (_arrow_groups,
                                                        dp_keep_mask,
                                                        dp_keep_mask_batch)
-    from go_shapefile_spark.sources.shapefile_core import read_zip
 
-    sf = read_zip("/root/reference/testdata/110m-admin-0-countries.zip")
-    g, closed = _geom_from_records(sf.shp.records)
+    sf = _countries()
+    batch, = map_records(sf.shp.records, KERNEL_COLUMNS, lambda b: b)
+    (_sel, g, _rv, _rpr, closed, _layout), = _arrow_groups(
+        batch, with_rings=False)
     assert closed
     for eps in (0.05, 0.3):
         got = dp_keep_mask_batch(g.x, g.y, g.part_starts, g.part_ends, eps)
@@ -221,27 +256,26 @@ def test_batched_measures_match_per_feature_kernel():
     per-feature reference within float reassociation tolerance, and the
     batched simplify structure equals the per-feature one EXACTLY."""
     from go_shapefile_spark.operators.geometry import (feature_measures,
-                                                       measures_for_records,
-                                                       simplify_feature,
-                                                       simplify_for_records)
-    from go_shapefile_spark.sources.shapefile_core import read_zip
+                                                       simplify_feature)
 
-    sf = read_zip("/root/reference/testdata/110m-admin-0-countries.zip")
+    sf = _countries()
     recs = sf.shp.records
-    for rec, got in zip(recs, measures_for_records(recs)):
+    for rec, got in zip(recs, _measures(recs)):
         want = feature_measures(rec.shape_type, rec.layout, rec.coords,
                                 rec.ends)
         for gv, wv in zip(got, want):
             assert gv == pytest.approx(wv, rel=1e-12, abs=1e-12)
-    for rec, got in zip(recs, simplify_for_records(recs, 0.1)):
+    _simp, live = _simplified(recs, 0.1)
+    for fid, rec in enumerate(recs, 1):
+        got = live.get(fid)
         rings = [len(e) for e in rec.endss] if rec.endss \
             else [1] * len(rec.ends)
         want = simplify_feature(rec.shape_type, rec.layout, rec.coords,
                                 rec.ends, rings, 0.1)
         assert (got is None) == (want is None)
         if got is not None:
-            assert np.array_equal(got[0], want[0])
-            assert got[1] == want[1] and got[2] == want[2]
+            assert np.array_equal(got["coords"], want[0])
+            assert got["ends"] == want[1] and got["rings"] == want[2]
 
 
 def test_batched_simplify_drop_cases_match_per_feature():
@@ -286,17 +320,14 @@ def test_batched_simplify_drop_cases_match_per_feature():
 
 
 def test_geom_measures_spark_matches_driver_kernel(spark):
-    from go_shapefile_spark.operators.geometry import (
-        geom_measures, measures_for_records)
+    from go_shapefile_spark.operators.geometry import geom_measures
     from go_shapefile_spark.sources.shapefile import read_shapefile_df
-    from go_shapefile_spark.sources.shapefile_core import read_zip
 
-    z = "/root/reference/testdata/110m-admin-0-countries.zip"
-    got = {r.fid: (r.area, r.perimeter, r.cx, r.cy)
-           for r in geom_measures(read_shapefile_df(spark, z)).collect()}
-    sf = read_zip(z)
+    sf = _countries()
+    got = {r.fid: (r.area, r.perimeter, r.cx, r.cy) for r in
+           geom_measures(read_shapefile_df(spark, COUNTRIES)).collect()}
     assert len(got) == 177
-    for i, want in enumerate(measures_for_records(sf.shp.records)):
+    for i, want in enumerate(_measures(sf.shp.records)):
         assert got[i + 1] == want          # bit-exact: same batched kernel
 
 
@@ -379,11 +410,8 @@ def test_geodesic_polyline_and_boundary_zeroing():
 def test_geodesic_countries_sane():
     """All 177 ne_110m countries positive; the total matches Earth's
     land area (~1.49e8 km²) and Russia is the largest (~1.7e7 km²)."""
-    from go_shapefile_spark.operators.geometry import geodesic_for_records
-    from go_shapefile_spark.sources.shapefile_core import read_zip
-
-    sf = read_zip("/root/reference/testdata/110m-admin-0-countries.zip")
-    res = geodesic_for_records(sf.shp.records)
+    sf = _countries()
+    res = _geodesic(sf.shp.records)
     areas = np.array([a for a, _ in res]) / 1e6      # km²
     assert (areas > 0).all()
     assert 1.3e8 < areas.sum() < 1.6e8
@@ -391,16 +419,14 @@ def test_geodesic_countries_sane():
 
 
 def test_geodesic_spark_matches_driver_kernel(spark):
-    from go_shapefile_spark.operators.geometry import (
-        geodesic_for_records, geodesic_measures)
+    from go_shapefile_spark.operators.geometry import geodesic_measures
     from go_shapefile_spark.sources.shapefile import read_shapefile_df
-    from go_shapefile_spark.sources.shapefile_core import read_zip
 
-    z = "/root/reference/testdata/110m-admin-0-countries.zip"
-    got = {r.fid: (r.geo_area_m2, r.geo_length_m)
-           for r in geodesic_measures(read_shapefile_df(spark, z)).collect()}
+    sf = _countries()
+    got = {r.fid: (r.geo_area_m2, r.geo_length_m) for r in
+           geodesic_measures(read_shapefile_df(spark, COUNTRIES)).collect()}
     assert len(got) == 177
-    for i, want in enumerate(geodesic_for_records(read_zip(z).shp.records)):
+    for i, want in enumerate(_geodesic(sf.shp.records)):
         assert got[i + 1] == want          # bit-exact: same batched kernel
 
 

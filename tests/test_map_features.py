@@ -1,20 +1,30 @@
 """The feature-kernel seam (sources/shapefile.map_features): a kernel
 over a distributed shapefile scan runs inside the scan task, and gives
-the rows the two-stage ``select().mapInArrow()`` plan gives."""
+the rows the two-stage ``select().mapInArrow()`` plan gives.  Its
+driver side (``map_records``), which pins the DuckDB oracles, feeds a
+kernel's batch function the batch the scan emits and gives Spark's
+rows."""
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 import pytest
 
 from go_shapefile_spark.operators.geometry import (
-    geodesic_measures, geom_measures, simplify_features)
+    KERNEL_COLUMNS, SIMPLIFY_COLUMNS, geodesic_measures, geom_measures,
+    run_geodesic_measures, run_geom_measures, run_simplify,
+    simplify_features)
 from go_shapefile_spark.operators.vector_tiles import (
-    vector_tiles, vector_tiles_lines)
+    run_vector_tiles, run_vector_tiles_lines, vector_tile_pyramid,
+    vector_tile_pyramid_lines, vector_tiles, vector_tiles_lines)
 from go_shapefile_spark.plans.audit import executed_plan
+from go_shapefile_spark.queries import (_LINE_TILE_NAMES, _TILE_NAMES,
+                                        _pyramid_rows)
 from go_shapefile_spark.sources.shapefile import (
-    project_batch, read_shapefile_df, read_shapefile_dir)
+    map_records, project_batch, read_shapefile_df, read_shapefile_dir)
 
 _FIELDS = [("NAME", "C", 8), ("EAS_ID", "N", 6)]
 _KERNELS = {
@@ -28,6 +38,15 @@ _LINE_KERNELS = {
     "geom_measures": geom_measures,
     "geodesic_measures": geodesic_measures,
     "simplify_features": lambda df: simplify_features(df, eps=0.5),
+}
+# each kernel's (columns, batch function), as the operator binds them
+_BATCH_FNS = {
+    "vector_tiles": (KERNEL_COLUMNS, partial(run_vector_tiles, res=3)),
+    "vector_tiles_lines": (KERNEL_COLUMNS,
+                           partial(run_vector_tiles_lines, res=3)),
+    "geom_measures": (KERNEL_COLUMNS, run_geom_measures),
+    "geodesic_measures": (KERNEL_COLUMNS, run_geodesic_measures),
+    "simplify_features": (SIMPLIFY_COLUMNS, partial(run_simplify, eps=0.5)),
 }
 
 
@@ -215,3 +234,70 @@ def test_missing_kernel_column_fails_at_plan_time(spark, local_caps,
     for features in (flat, flat.select("*")):
         with pytest.raises(AnalysisException):
             geom_measures(features)
+
+
+def _tuples(value):
+    """Arrow ``to_pylist`` rows as the nested tuples Spark Rows are."""
+    if isinstance(value, dict):
+        return tuple(_tuples(v) for v in value.values())
+    return value
+
+
+def _corpora(kernel_corpus):
+    return [(str(kernel_corpus / "polys" / "part0"), _KERNELS),
+            (str(kernel_corpus / "lines"), _LINE_KERNELS)]
+
+
+def test_driver_runner_feeds_the_batch_a_scan_emits(kernel_corpus):
+    """``map_records`` over core-parser records hands a batch function
+    what the scan's reader hands it: ``read_split``'s batch projected
+    to the kernel columns."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from go_shapefile_spark.sources.shapefile import (
+        features_schema, plan_shapefile, read_split)
+    from go_shapefile_spark.sources.shapefile_core import read_shapefile
+
+    for base, _kernels in _corpora(kernel_corpus):
+        plan = plan_shapefile(base)
+        scan = read_split(plan, 1, plan.n_records + 1,
+                          to_arrow_schema(features_schema(plan)))
+        want = project_batch(scan, SIMPLIFY_COLUMNS)
+        got, = map_records(read_shapefile(base).shp.records,
+                           SIMPLIFY_COLUMNS, lambda batches: batches)
+        assert got.schema.equals(want.schema), base
+        assert got.to_pylist() == want.to_pylist() and want.num_rows, base
+
+
+def test_driver_runner_gives_the_spark_rows(spark, kernel_corpus):
+    """All five kernels: the batch function run on the driver over the
+    core parser's records gives the rows the operator gives in Spark."""
+    from go_shapefile_spark.sources.shapefile_core import read_shapefile
+
+    for base, kernels in _corpora(kernel_corpus):
+        records = read_shapefile(base).shp.records
+        features = read_shapefile_df(spark, base)
+        for name, kernel in kernels.items():
+            columns, fn = _BATCH_FNS[name]
+            got = sorted(_tuples(row) for rb in map_records(
+                records, columns, fn) for row in rb.to_pylist())
+            want = _rows(kernel(features))
+            assert got == want and want, (base, name)
+
+
+def test_driver_pyramid_gives_the_spark_rows(spark, kernel_corpus):
+    """Simplify's output batches chained into the clip's batch function
+    on the driver give ``vector_tile_pyramid`` / ``_lines``' rows."""
+    from go_shapefile_spark.sources.shapefile_core import read_shapefile
+
+    cases = [("polys/part0", vector_tile_pyramid, run_vector_tiles,
+              _TILE_NAMES),
+             ("lines", vector_tile_pyramid_lines, run_vector_tiles_lines,
+              _LINE_TILE_NAMES)]
+    for path, pyramid, run_clip, names in cases:
+        base = str(kernel_corpus / path)
+        got = sorted(_pyramid_rows(read_shapefile(base).shp.records, 2, 4,
+                                   run_clip, names))
+        want = _rows(pyramid(read_shapefile_df(spark, base), 2, 4)
+                     .select(*names))
+        assert got == want and want, path

@@ -1,21 +1,53 @@
 """Vector-tile clipping: batched Sutherland-Hodgman vs independent
-references, analytic cases, conservation, and Spark/driver parity."""
+references, analytic cases, conservation, and Spark/driver parity (the
+driver runs each kernel's own batch function over the core parser's
+records, ``sources.shapefile.map_records``)."""
 
 from __future__ import annotations
+
+import os
+from functools import partial
 
 import numpy as np
 import pytest
 
+from go_shapefile_spark.operators.geometry import (
+    KERNEL_COLUMNS, SIMPLIFY_COLUMNS, run_geom_measures, run_simplify)
 from go_shapefile_spark.operators.vector_tiles import (
-    _ring_signed2, clip_ring_reference, clip_tiles_for_records,
-    sh_clip_batch, vector_tiles)
+    _ring_signed2, clip_ring_reference, run_vector_tiles,
+    run_vector_tiles_lines, sh_clip_batch, vector_tiles, zoom_eps)
+from go_shapefile_spark.queries import (_LINE_TILE_NAMES, _TILE_NAMES,
+                                        _kernel_rows, _pyramid_rows)
+from go_shapefile_spark.sources.shapefile import map_records
 
 COUNTRIES = "/root/reference/testdata/110m-admin-0-countries.zip"
 
 
 def _read_countries():
     from go_shapefile_spark.sources.shapefile_core import read_zip
+    if not os.path.exists(COUNTRIES):
+        pytest.skip(f"fixture absent: {COUNTRIES}")
     return read_zip(COUNTRIES)
+
+
+def _clip_rows(records, res):
+    return _kernel_rows(records, KERNEL_COLUMNS,
+                        partial(run_vector_tiles, res=res), _TILE_NAMES)
+
+
+def _measures(records):
+    """(area, perimeter, cx, cy) per feature, in fid order."""
+    return _kernel_rows(records, KERNEL_COLUMNS, run_geom_measures,
+                        ["area", "perimeter", "cx", "cy"])
+
+
+def _simplified_measures(records, eps):
+    """fid -> (area, perimeter) of each feature simplify keeps."""
+    simp = map_records(records, SIMPLIFY_COLUMNS,
+                       partial(run_simplify, eps=eps))
+    return {fid: (a, ln) for fid, a, ln in _kernel_rows(
+        simp, KERNEL_COLUMNS, run_geom_measures,
+        ["fid", "area", "perimeter"])}
 
 
 def test_batched_clip_bitwise_equals_reference():
@@ -88,9 +120,8 @@ def test_donut_hole_tiles_cancel_exactly():
 
 
 def test_countries_tiles_conserve_area_and_stay_in_bounds():
-    from go_shapefile_spark.operators.geometry import measures_for_records
     sf = _read_countries()
-    rows = clip_tiles_for_records(sf.shp.records, 4)
+    rows = _clip_rows(sf.shp.records, 4)
     assert len(rows) > 400
     per_fid: dict[int, float] = {}
     tw, th = 360.0 / 16, 180.0 / 16
@@ -98,14 +129,14 @@ def test_countries_tiles_conserve_area_and_stay_in_bounds():
         assert area > 0.0 and nr >= 1 and npts >= 4 * nr
         assert area <= tw * th * (1 + 1e-12)         # never exceeds a tile
         per_fid[fid] = per_fid.get(fid, 0.0) + area
-    for i, (a, _l, _cx, _cy) in enumerate(measures_for_records(sf.shp.records)):
+    for i, (a, _l, _cx, _cy) in enumerate(_measures(sf.shp.records)):
         assert np.isclose(per_fid.get(i + 1, 0.0), a, rtol=1e-9), i + 1
 
 
 def test_spark_matches_driver_twin_bitwise(spark):
     from go_shapefile_spark.sources.shapefile import read_shapefile_df
     sf = _read_countries()
-    exp = sorted(clip_tiles_for_records(sf.shp.records, 4))
+    exp = sorted(_clip_rows(sf.shp.records, 4))
     df = vector_tiles(read_shapefile_df(spark, COUNTRIES), res=4)
     got = sorted((r.fid, r.cell, r.lon0, r.lat0, r.n_rings, r.n_points,
                   r.area) for r in df.collect())
@@ -199,26 +230,26 @@ def test_batched_segment_clip_matches_reference_paths():
 
 
 def test_line_tiles_conserve_length_and_match_spark(spark):
-    from go_shapefile_spark.operators.vector_tiles import (
-        clip_line_tiles_for_records, vector_tiles_lines)
-    from go_shapefile_spark.operators.geometry import measures_for_records
+    from go_shapefile_spark.operators.vector_tiles import vector_tiles_lines
     from go_shapefile_spark.queries import ensure_lines_corpus
     from go_shapefile_spark.sources.shapefile import read_shapefile_df
     from go_shapefile_spark.sources.shapefile_core import read_shapefile
 
     base = ensure_lines_corpus()
     sf = read_shapefile(base)
-    rows = clip_line_tiles_for_records(sf.shp.records, 5)
+    rows = _kernel_rows(sf.shp.records, KERNEL_COLUMNS,
+                        partial(run_vector_tiles_lines, res=5),
+                        _LINE_TILE_NAMES)
     # tiles partition the world: clipped lengths must sum back to each
     # feature's total length (new vertices only at tile boundaries)
     per_fid: dict[int, float] = {}
     for fid, cell, x0, y0, npth, npts, ln in rows:
         assert npts >= 2 * npth >= 2
         per_fid[fid] = per_fid.get(fid, 0.0) + ln
-    meas = measures_for_records(sf.shp.records)
+    meas = _measures(sf.shp.records)
     for i, (_a, ln, _cx, _cy) in enumerate(meas):
         assert np.isclose(per_fid.get(i + 1, 0.0), ln, rtol=1e-9), i + 1
-    # Spark == driver twin bit-exact
+    # Spark == the driver run of the same batch function, bit-exact
     got = sorted((r.fid, r.cell, r.lon0, r.lat0, r.n_paths, r.n_points,
                   r.length)
                  for r in vector_tiles_lines(
@@ -235,12 +266,9 @@ def test_line_tiles_reject_polygons(spark):
 
 
 def test_pyramid_levels_conserve_simplified_area(spark):
-    from go_shapefile_spark.operators.geometry import (
-        measures_for_records, simplify_for_records)
-    from go_shapefile_spark.operators.vector_tiles import (
-        _ShimRec, pyramid_for_records)
     sf = _read_countries()
-    rows = pyramid_for_records(sf.shp.records, 2, 4)
+    rows = _pyramid_rows(sf.shp.records, 2, 4, run_vector_tiles,
+                         _TILE_NAMES)
     # per zoom, the tile areas must sum to the area of the SIMPLIFIED
     # geometry at that zoom's tolerance (clipping conserves; the
     # simplification is what intentionally changes area between zooms)
@@ -251,23 +279,18 @@ def test_pyramid_levels_conserve_simplified_area(spark):
         by_res[res][fid] += area
     assert sorted(by_res) == [2, 3, 4]
     for z, per_fid in by_res.items():
-        eps = (1.0 / 256) * (180.0 / (1 << z))
-        simp = simplify_for_records(sf.shp.records, eps)
-        shims = {i + 1: _ShimRec(sf.shp.records[i].shape_type,
-                                 sf.shp.records[i].layout, s[0], s[1])
-                 for i, s in enumerate(simp) if s is not None}
-        for fid, shim in shims.items():
-            (a, _l, _cx, _cy), = measures_for_records([shim])
+        simp = _simplified_measures(sf.shp.records, zoom_eps(z))
+        for fid, (a, _l) in simp.items():
             got = per_fid.get(fid, 0.0)
             assert np.isclose(got, a, rtol=1e-9, atol=1e-12), (z, fid)
 
 
 def test_pyramid_spark_matches_driver_twin(spark):
-    from go_shapefile_spark.operators.vector_tiles import (
-        pyramid_for_records, vector_tile_pyramid)
+    from go_shapefile_spark.operators.vector_tiles import vector_tile_pyramid
     from go_shapefile_spark.sources.shapefile import read_shapefile_df
     sf = _read_countries()
-    exp = sorted(pyramid_for_records(sf.shp.records, 3, 4))
+    exp = sorted(_pyramid_rows(sf.shp.records, 3, 4, run_vector_tiles,
+                               _TILE_NAMES))
     df = vector_tile_pyramid(read_shapefile_df(spark, COUNTRIES), 3, 4)
     got = sorted((r.fid, r.cell, r.lon0, r.lat0, r.n_rings, r.n_points,
                   r.area) for r in df.collect())
@@ -305,34 +328,28 @@ def test_line_tiles_geometry_payload_consistent(spark):
 
 
 def test_line_pyramid_conserves_simplified_length(spark):
-    from go_shapefile_spark.operators.geometry import (
-        measures_for_records, simplify_for_records)
-    from go_shapefile_spark.operators.vector_tiles import (
-        _ShimRec, line_pyramid_for_records)
     from go_shapefile_spark.queries import ensure_lines_corpus
     from go_shapefile_spark.sources.shapefile_core import read_shapefile
 
     sf = read_shapefile(ensure_lines_corpus())
-    rows = line_pyramid_for_records(sf.shp.records, 4, 5)
+    rows = _pyramid_rows(sf.shp.records, 4, 5, run_vector_tiles_lines,
+                         _LINE_TILE_NAMES)
     by_res: dict[int, dict[int, float]] = {}
     for fid, cell, x0, y0, npth, npts, ln in rows:
         by_res.setdefault(cell >> 52, {}).setdefault(fid, 0.0)
         by_res[cell >> 52][fid] += ln
     assert sorted(by_res) == [4, 5]
     for z, per_fid in by_res.items():
-        eps = (1.0 / 256) * (180.0 / (1 << z))
-        simp = simplify_for_records(sf.shp.records, eps)
-        for i, s in enumerate(simp):
+        simp = _simplified_measures(sf.shp.records, zoom_eps(z))
+        for i in range(len(sf.shp.records)):
+            s = simp.get(i + 1)
             assert s is not None        # polyline endpoints always kept
-            shim = _ShimRec(sf.shp.records[i].shape_type,
-                            sf.shp.records[i].layout, s[0], s[1])
-            (_a, ln, _cx, _cy), = measures_for_records([shim])
+            _a, ln = s
             assert np.isclose(per_fid.get(i + 1, 0.0), ln,
                               rtol=1e-9), (z, i + 1)
 
 
 def test_dissolve_tiles_conserves_group_area(spark):
-    from go_shapefile_spark.operators.geometry import measures_for_records
     from go_shapefile_spark.queries import (dissolve_tiles_spark,
                                             q_dissolve_tiles_oracle)
     sf = _read_countries()
@@ -343,7 +360,7 @@ def test_dissolve_tiles_conserves_group_area(spark):
         per_color[r.map_color] = per_color.get(r.map_color, 0) + r.area_u
         n_tiles += 1
     exp: dict[int, float] = {}
-    meas = measures_for_records(sf.shp.records)
+    meas = _measures(sf.shp.records)
     for i, (a, _l, _cx, _cy) in enumerate(meas):
         c = int(sf.record(i)[0]["MAP_COLOR"])
         exp[c] = exp.get(c, 0.0) + a
@@ -376,14 +393,9 @@ def test_areal_interpolation_tail_analytic_and_conserves():
 
     # conservation on the real corpus: every country's quantized
     # shares sum to 1e9 ± (tiles-1) half-ulps of the ppb grid
-    from go_shapefile_spark.operators.vector_tiles import (
-        clip_tiles_for_records)
-    from go_shapefile_spark.sources.shapefile_core import read_zip
-
-    sf = read_zip(
-        "/root/reference/testdata/110m-admin-0-countries.zip")
+    sf = _read_countries()
     per_fid: dict[int, list[float]] = {}
-    for fid, cell, x0, y0, nr, npts, area in clip_tiles_for_records(
+    for fid, cell, x0, y0, nr, npts, area in _clip_rows(
             sf.shp.records, 4):
         per_fid.setdefault(fid, []).append(area)
     assert len(per_fid) == 177

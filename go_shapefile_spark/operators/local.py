@@ -29,14 +29,25 @@ joins by shuffling both sides on ``cell``.
 ``read_shapefile_df`` decodes on the driver and hands to Spark as a
 LocalRelation; the size is exact at plan time (the ``.shx`` record
 lengths and headers plus the ``.dbf`` records).  Every Python scan task
-pays a fixed start (a 1-task no-op ``mapInArrow`` job 0.23-0.47 s
-against 0.07-0.13 s for a 1-task JVM job, local[4]), while the driver
-decode plus the Arrow → LocalRelation hand-off grows with the bytes.
-Measured: 4-8-vertex parcels read and fully materialized (a ``noop``
-write), medians of 5 warm runs, local[4] — 0.93 MB 0.11 s on the driver
-vs 0.28 s through the one-task scan, 1.86 MB 0.15 vs 0.31, 3.72 MB 0.22
-vs 0.32, 7.43 MB 0.39 vs 0.42: break-even near 8 MB.  The cap sits at
-half of it, as driver decode is single-threaded and blocks the caller.
+pays a fixed start, while the driver decode plus the Arrow →
+LocalRelation hand-off grows with the bytes.  Measured: 4-8-vertex
+parcels read and fully materialized (a ``noop`` write), medians of 5
+warm runs, local[4] — 0.93 MB 0.11 s on the driver vs 0.28 s through
+the one-task scan, 1.86 MB 0.15 vs 0.31, 3.72 MB 0.22 vs 0.32, 7.43 MB
+0.39 vs 0.42: break-even near 8 MB.  The cap sits at half of it, as
+driver decode is single-threaded and blocks the caller.  That sizing
+predates the engine's worker daemon (``_worker_daemon``), which cut
+the start: a 1-task no-op ``mapInArrow`` job 0.32 → 0.15 s (medians,
+against 0.07 s for a 1-task JVM job, local[4], BENCH.md); the
+break-even was not re-measured since.
+
+``SCAN_BYTES`` is also the split size of a bigger file: ``split_bounds``
+cuts a range-reading file into one split per ``SCAN_BYTES``, up to the
+session's slot count, so no scan task decodes less than the driver
+would itself.  tiles_registry's 9.7 MB parcels take 2 splits, and its
+``job_s`` fell 23 % with the daemon (BENCH.md); a probe of 3 and 4
+splits cut it no further but raised ``peak_rss_mb`` by ~23 % (a Python
+worker and more JVM heap per task).
 
 The caps are read at call time; setting every name in :data:`CAPS` to
 0 sends every operator down its distributed path (an empty input, 0
@@ -51,7 +62,7 @@ TRIANGLE_EDGES = 2_000_000    # triangle_counts distinct edges
 TRIANGLE_WEDGES = 25_000_000  # ... and oriented wedges, from degrees
 COVER_FEATURES = 500          # polygons whose cell cover builds on the driver
 BROADCAST_ROWS = 4_000_000    # cover rows a spatial join still broadcasts
-SCAN_BYTES = 4 << 20          # shapefile bytes a one-split read decodes here
+SCAN_BYTES = 4 << 20          # shapefile bytes a read decodes here; split size
 
 CAPS = ("CC_EDGES", "GRID_CELLS", "TRIANGLE_EDGES", "TRIANGLE_WEDGES",
         "COVER_FEATURES", "BROADCAST_ROWS", "SCAN_BYTES")

@@ -21,7 +21,8 @@ Spark-first restatement of the reference's two read paths
 * A one-split file that range-reads and is within ``local.SCAN_BYTES``
   decodes on the driver through the same per-split reader and becomes
   a LocalRelation (``read_shapefile_df``): a Python task's fixed start
-  dwarfs such a decode.
+  dwarfs such a decode.  A bigger one spreads over the free slots, one
+  split per ``local.SCAN_BYTES`` (``split_bounds``).
 
 This module is the one scan core: the split rule (``split_bounds``),
 the pushed-filter evaluators, the per-split reader (``read_split``) and
@@ -697,13 +698,17 @@ _UNKNOWN_END = (1 << 40) + 1  # fid_end of a file with no SHX and no DBF
 
 
 def split_bounds(plan: ShapefilePlan, records_per_split: int, lo: int = 1,
-                 hi: float = math.inf) -> list[tuple[int, int]]:
+                 hi: float = math.inf, slots: int = 1) -> list[tuple[int, int]]:
     """The one split rule: fid ranges ``[a, b)`` over the file's records
     in ``[lo, hi)``.  A file that range-reads (SHX present, not a zip
-    member) is cut into ``ceil(n / records_per_split)`` balanced splits
-    ``lo + i*n//k``; any other is one sequential split (scanner.go:511-513),
-    ending at a large sentinel when the record count is unknown.  Nothing
-    left → one empty split."""
+    member) is cut into ``k = max(ceil(n / records_per_split),
+    min(slots, n, scan_bytes // local.SCAN_BYTES))`` balanced splits
+    ``lo + i*n//k``, ``scan_bytes`` counting the range's records: a
+    file over the driver-local cap spreads over up to ``slots`` tasks,
+    none reading less than the cap (a cap ≤ 0 spreads nothing).  Any
+    other file is one sequential split (scanner.go:511-513), ending at
+    a large sentinel when the record count is unknown.  Nothing left →
+    one empty split."""
     end = plan.n_records + 1 if plan.n_records >= 0 else _UNKNOWN_END
     hi = min(hi, end)
     if hi <= lo:
@@ -712,6 +717,8 @@ def split_bounds(plan: ShapefilePlan, records_per_split: int, lo: int = 1,
         return [(lo, hi)]
     n = hi - lo
     k = max(1, math.ceil(n / records_per_split))
+    if local.SCAN_BYTES > 0 and slots > k:
+        k = max(k, min(slots, n, scan_bytes(plan, lo, hi) // local.SCAN_BYTES))
     return [(lo + i * n // k, lo + (i + 1) * n // k) for i in range(k)]
 
 
@@ -1003,12 +1010,13 @@ def map_records(records, columns: list[str], fn) -> list:
     return list(fn(project_batch(rb, columns) for rb in records))
 
 
-def scan_bytes(plan: ShapefilePlan) -> int:
-    """The bytes a range-reading scan of the whole file reads: every
-    ``.shp`` record (8-byte header plus its ``.shx`` content length) and
-    every ``.dbf`` record."""
-    n = plan.n_records
-    return int(plan.shx_lengths.sum()) + 8 * n + n * plan.dbf_record_size
+def scan_bytes(plan: ShapefilePlan, lo: int = 1, hi: int | None = None) -> int:
+    """The bytes a range-reading scan of records ``[lo, hi)`` (the whole
+    file by default) reads: every ``.shp`` record (8-byte header plus
+    its ``.shx`` content length) and every ``.dbf`` record."""
+    lengths = plan.shx_lengths[lo - 1:None if hi is None else hi - 1]
+    n = len(lengths)
+    return int(lengths.sum()) + 8 * n + n * plan.dbf_record_size
 
 
 def read_shapefile_df(spark: SparkSession, path: str, options: dict | None = None,
@@ -1024,7 +1032,9 @@ def read_shapefile_df(spark: SparkSession, path: str, options: dict | None = Non
     that range-reads in one split and whose ``scan_bytes`` are within
     ``local.SCAN_BYTES`` is read on the driver by the same
     ``read_split`` and returned as a LocalRelation: no Python task, so
-    no worker start, for the small polygon side of a join.
+    no worker start, for the small polygon side of a join.  A bigger
+    one takes a split per ``local.SCAN_BYTES``, up to the session's
+    ``defaultParallelism``.
 
     ``flat_points=True`` (Point-type files only): emit plain ``x``/``y``
     (+``z``/``m``) double columns instead of the nested geometry struct.
@@ -1055,7 +1065,8 @@ def read_shapefile_df(spark: SparkSession, path: str, options: dict | None = Non
     # flat points decode whole splits (faster than a selective decode)
     # and filter x/y in codegen'd Spark instead
     pushed = [] if flat_points else window
-    splits = split_bounds(plan, target_records_per_split)
+    splits = split_bounds(plan, target_records_per_split,
+                          slots=spark.sparkContext.defaultParallelism)
     if (_range_reads(plan) and len(splits) == 1
             and local.within(scan_bytes(plan), local.SCAN_BYTES)):
         # small file: decode on the driver, no Python task at all

@@ -199,6 +199,27 @@ def test_vector_tiles_over_a_scan_is_one_python_stage(spark, local_caps,
     assert "BatchEvalPython" not in plan
 
 
+def test_spread_read_keeps_fid_order_and_fuses(spark, local_caps,
+                                               kernel_corpus):
+    """A file over ``SCAN_BYTES`` spreads over a split per cap (here 3
+    of the 4 slots): its fids come back 1..n in order, and the fused
+    clip over it gives the two-stage plan's rows."""
+    from go_shapefile_spark.sources.shapefile import plan_shapefile, scan_bytes
+
+    base = str(kernel_corpus / "polys" / "part0")
+    plan = plan_shapefile(base)
+    local_caps(SCAN_BYTES=scan_bytes(plan) // 3)
+    features = read_shapefile_df(spark, base)
+    assert features.rdd.getNumPartitions() == 3
+    assert [r.fid for r in features.collect()] == \
+        list(range(1, plan.n_records + 1))
+    fused = vector_tiles(features, res=3)
+    generic = vector_tiles(features.select("*"), res=3)
+    assert _fused(fused) and not _fused(generic)
+    want = _rows(generic)
+    assert _rows(fused) == want and want
+
+
 def test_cached_and_filtered_features_take_the_generic_path(
         spark, local_caps, kernel_corpus):
     local_caps(SCAN_BYTES=0)

@@ -303,6 +303,58 @@ def test_scan_is_one_job_in_fid_order(spark, tmp_path, local_caps):
         [(i + 1, float(i)) for i in range(10)]
 
 
+def _fake_plan(n: int, record_bytes: int):
+    """The fields ``split_bounds`` reads, for ``n`` range-readable
+    records of ``record_bytes`` scan bytes each (8-byte header
+    included, no ``.dbf``)."""
+    from types import SimpleNamespace
+
+    import numpy as np
+
+    return SimpleNamespace(n_records=n, is_zip=False,
+                           shx_offsets=np.zeros(n, np.int64),
+                           shx_lengths=np.full(n, record_bytes - 8, np.int64),
+                           dbf_record_size=0)
+
+
+@pytest.mark.parametrize("n, cap, slots, rps, k", [
+    (1000, 100_000, 4, 100_000, 1),   # bytes == cap: one split (driver)
+    (1000, 99_999, 4, 100_000, 1),    # one cap's worth: still one split
+    (1000, 50_000, 4, 100_000, 2),
+    (1000, 30_000, 4, 100_000, 3),    # no split under the cap
+    (1000, 10_000, 4, 100_000, 4),    # at most the slot count
+    (1000, 10_000, 1, 100_000, 1),    # DataSource planner: no slots known
+    (1000, 0, 4, 100_000, 1),         # a cap <= 0 spreads nothing
+    (1000, -1, 4, 100_000, 1),
+    (1000, 10_000, 4, 100, 10),       # records_per_split still bounds
+    (1000, 10_000, 16, 300, 10),
+    (3, 1, 8, 100_000, 3),            # at most one split per record
+])
+def test_split_rule_spreads_by_bytes(local_caps, n, cap, slots, rps, k):
+    """``split_bounds`` on 100-byte records (``n * 100`` scan bytes):
+    ``max(ceil(n / rps), min(slots, n, bytes // SCAN_BYTES))`` balanced,
+    contiguous splits covering every fid."""
+    from go_shapefile_spark.sources.shapefile import split_bounds
+
+    local_caps(SCAN_BYTES=cap)
+    splits = split_bounds(_fake_plan(n, 100), rps, slots=slots)
+    assert len(splits) == k
+    assert splits[0][0] == 1 and splits[-1][1] == n + 1
+    assert all(a[1] == b[0] for a, b in zip(splits, splits[1:]))
+    sizes = [b - a for a, b in splits]
+    assert max(sizes) - min(sizes) <= 1
+
+
+def test_split_rule_counts_the_range_bytes(local_caps):
+    """A pushed fid range spreads by the bytes of its own records."""
+    from go_shapefile_spark.sources.shapefile import split_bounds
+
+    local_caps(SCAN_BYTES=10_000)
+    assert split_bounds(_fake_plan(1000, 100), 100_000, lo=501, hi=1001,
+                        slots=8) == [(501 + 100 * i, 601 + 100 * i)
+                                     for i in range(5)]
+
+
 def test_read_shapefile_df_bbox_window(spark, ref_testdata):
     """bbox window on the function front door: pre-decode pushdown on the
     SHX path, post-parse filter on zips — identical rows either way, and

@@ -30,6 +30,18 @@ the per-file reader of directory scans (``read_file``).  The function
 front doors below and ``format("shapefile")`` (``datasource.py``) are
 thin callers of them.
 
+``read_split`` is the one split emitter, columnar end to end: the DBF
+columns decode once into Arrow arrays, where pushed attribute filters
+evaluate; the kept records' geometry comes from exactly one decoder
+(the point kernel, the XY polygon/polyline kernel, or the core parser
+for anything a kernel declines); and one function,
+``_geometry_columns``, turns that decoder's flat arrays (ordinates,
+per-record counts, part ends, rings, layout, bounds) into the
+``shape_type``/``geometry``/``bbox`` columns or the flat ``x``/``y``
+columns.  No pandas frame is built, so a NaN ordinate
+reads back NaN whichever decoder ran (the reference keeps ordinates as
+flat ``[]float64``).
+
 The 3-way positional zip of SHP⋈SHX⋈DBF (scanner.go:400-451) happens
 inside each task by batch index; the record-count consistency check
 (shapefile.go:192-196) is enforced at plan time from SHX/DBF header
@@ -45,7 +57,6 @@ from dataclasses import dataclass
 from typing import Any, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
@@ -55,6 +66,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators import local
 from . import fsio
@@ -220,100 +232,22 @@ def _attr_fields(plan: ShapefilePlan) -> list[T.StructField]:
         for name, ftype, length, decimals in plan.dbf_fields]
 
 
+_GEOMETRY_FIELDS = [
+    T.StructField("shape_type", T.IntegerType()),
+    T.StructField("geometry", GEOMETRY_TYPE),
+    T.StructField("bbox", BBOX_TYPE),
+]
+_GEOMETRY_ARROW = to_arrow_schema(T.StructType(_GEOMETRY_FIELDS))
+
+
 def features_schema(plan: ShapefilePlan) -> T.StructType:
-    return T.StructType(_attr_fields(plan) + [
-        T.StructField("shape_type", T.IntegerType()),
-        T.StructField("geometry", GEOMETRY_TYPE),
-        T.StructField("bbox", BBOX_TYPE),
-    ])
-
-
-def _point_bbox(layout: str, r) -> dict[str, float | None]:
-    """The degenerate bbox of one point's ordinates ``r`` (x, y[, z][, m])."""
-    b = dict.fromkeys(BBOX_TYPE.names)
-    b.update(xmin=r[0], ymin=r[1], xmax=r[0], ymax=r[1])
-    if layout == "XYM":
-        b.update(mmin=r[2], mmax=r[2])
-    elif layout == "XYZM":
-        b.update(zmin=r[2], zmax=r[2], mmin=r[3], mmax=r[3])
-    return b
-
-
-def _record_bbox(rec: core.SHPRecord) -> dict[str, float | None]:
-    b: dict[str, float | None] = dict.fromkeys(BBOX_TYPE.names)
-    if rec.layout is None:
-        return b
-    if rec.shape_type in core.POINT_TYPES:
-        return _point_bbox(rec.layout, [float(v) for v in rec.coords])
-    bounds = rec.bounds
-    if bounds is None:
-        return b
-    if rec.layout == "XY":
-        b.update(xmin=bounds[0], ymin=bounds[1], xmax=bounds[2], ymax=bounds[3])
-    elif rec.layout == "XYM":
-        b.update(xmin=bounds[0], ymin=bounds[1], mmin=bounds[2],
-                 xmax=bounds[3], ymax=bounds[4], mmax=bounds[5])
-    else:
-        b.update(xmin=bounds[0], ymin=bounds[1], zmin=bounds[2], mmin=bounds[3],
-                 xmax=bounds[4], ymax=bounds[5], zmax=bounds[6], mmax=bounds[7])
-    return b
-
-
-def _geom_dict(rec: core.SHPRecord) -> dict[str, Any]:
-    return {
-        "layout": rec.layout,
-        "coords": rec.coords.tolist(),
-        "ends": [int(e) for e in rec.ends],
-        "rings": [len(e) for e in rec.endss] if rec.endss else
-                 ([1] * len(rec.ends) if rec.shape_type in core.POLYGON_TYPES else []),
-    }
-
-
-def _coerce_column(values: list, ftype: str, decimals: int):
-    if ftype == "N" and decimals == 0:
-        for v in values:
-            if isinstance(v, float) and v != int(v):
-                raise core.ShapefileError(
-                    f"{v}: fractional value in zero-decimal numeric field")
-        return pd.array([None if v is None else int(v) for v in values], dtype="Int64")
-    if ftype == "N" or ftype == "F":
-        return pd.array([None if v is None else float(v) for v in values], dtype="float64")
-    if ftype == "L":
-        return pd.array(values, dtype="boolean")
-    return pd.Series(values, dtype="object")
+    return T.StructType(_attr_fields(plan) + _GEOMETRY_FIELDS)
 
 
 def _ord_names(shape_type: int) -> list[str]:
     stride = core.STRIDES[core._LAYOUT_BY_TYPE[shape_type]]
     return {2: ["x", "y"], 3: ["x", "y", "m"],
             4: ["x", "y", "z", "m"]}[stride]
-
-
-def _attr_columns(plan: ShapefilePlan, dbf_cols, deleted,
-                  fid_start: int, count: int) -> dict[str, Any]:
-    """Assemble the attribute columns (fid, deleted, DBF fields) into
-    pandas-ready arrays."""
-    out: dict[str, Any] = {
-        "fid": pd.array(range(fid_start, fid_start + count), dtype="int64"),
-        "deleted": pd.array(deleted if deleted is not None
-                            else [False] * count, dtype="boolean"),
-    }
-    for j, (name, ftype, length, decs) in enumerate(plan.dbf_fields):
-        if dbf_cols is None:
-            out[name] = _coerce_column([None] * count, ftype, decs)
-        else:
-            kind, vals, mask = dbf_cols[j]
-            if kind == "int":
-                out[name] = pd.arrays.IntegerArray(vals, mask)
-            elif kind == "float":
-                out[name] = vals  # float64; NaN → null under Arrow
-            elif ftype == "L":
-                out[name] = pd.array(vals, dtype="boolean")
-            elif ftype in ("N", "F"):
-                out[name] = _coerce_column(list(vals), ftype, decs)
-            else:
-                out[name] = pd.Series(vals, dtype="object")
-    return out
 
 
 def record_bounds_quick(buf: bytes, rel: np.ndarray) -> np.ndarray:
@@ -353,156 +287,9 @@ def record_bounds_quick(buf: bytes, rel: np.ndarray) -> np.ndarray:
     return out
 
 
-def _parse_split(plan: ShapefilePlan, fid_start: int, fid_end: int,
-                 flat_ords: bool = False,
-                 attr_mask_fn=None, bbox_mask_fn=None) -> pd.DataFrame:
-    """Parse records [fid_start, fid_end) (1-based fids) into a pandas batch.
-
-    ``flat_ords=True`` (point types): emit ordinate columns instead of
-    the geometry/bbox structs — no per-row python objects anywhere.
-
-    ``attr_mask_fn`` (DataSource filter pushdown): called with the
-    attribute-only DataFrame, returns a boolean keep-mask.  Attributes
-    decode first, so records the mask rejects never reach the geometry
-    parser — on the SHX path only the selected records' byte offsets are
-    parsed at all.
-
-    ``bbox_mask_fn`` (bbox predicate pushdown): called with the split's
-    (buf, rel offsets) on the SHX path, returns a keep-mask computed from
-    the record-header bounds (``record_bounds_quick``) — records outside
-    the query window are never geometry-decoded.
-    """
-    members = _zip_members(plan.path, plan.basename) if plan.is_zip else {}
-    shp_bytes = members.get("shp", (None, None))[1]
-    dbf_bytes = members.get("dbf", (None, None))[1]
-
-    # --- attribute side (column-vectorized, native dtypes) ------------------
-    dbf_cols: list[tuple[str, np.ndarray, np.ndarray | None]] | None = None
-    deleted: np.ndarray | None = None
-    if plan.dbf_record_size and plan.has_dbf:
-        dbf_cols, deleted = _read_split_dbf(plan, fid_start,
-                                            fid_end - fid_start, dbf_bytes)
-    n_attr = len(deleted) if deleted is not None else 0
-
-    # pushed-down attribute mask: evaluated before any geometry work
-    # (combined with the bbox mask below before anything is subset)
-    sel: np.ndarray | None = None
-    adf: pd.DataFrame | None = None
-    if n_attr:
-        adf = pd.DataFrame(_attr_columns(plan, dbf_cols, deleted,
-                                         fid_start, n_attr))
-        if attr_mask_fn is not None:
-            sel = np.asarray(attr_mask_fn(adf), dtype=bool)
-
-    # --- geometry side (selective under a pushed mask) ----------------------
-    shp_records: list[core.SHPRecord] = []
-    fast_ords: np.ndarray | None = None  # vectorized point fast path
-    geom_selected = False                # geometry already mask-subset?
-    if plan.is_zip and shp_bytes is not None:
-        data = core.parse_shp(shp_bytes, plan.shp_options)
-        shp_records = data.records[fid_start - 1:fid_end - 1]
-    elif not plan.is_zip and plan.has_shp:
-        if plan.shx_offsets is not None:
-            # SHX-driven split: range-read straight to this byte span.
-            got = _read_split_shp(plan, fid_start, fid_end)
-            if got is not None:
-                buf, rel = got
-                if bbox_mask_fn is not None:
-                    # record-header bounds test BEFORE any decode
-                    bsel = np.asarray(bbox_mask_fn(buf, rel), dtype=bool)
-                    if sel is not None and len(sel) != len(bsel):
-                        # SHX and DBF disagree on the record count: fail
-                        # with the reference's error, not a numpy shape
-                        # error (shapefile.go:192-196)
-                        raise core.ShapefileError(
-                            "inconsistent number of records")
-                    sel = bsel if sel is None else (sel & bsel)
-                fast_ords = _parse_points_vectorized(
-                    buf, rel, plan.shape_type, fid_start, fid_end)
-                if fast_ords is None:
-                    if sel is not None and len(rel) == len(sel):
-                        # selective parse: only the records the pushed
-                        # filter kept are ever decoded
-                        fids = np.arange(fid_start, fid_end)[sel]
-                        shp_records = core.parse_shp_range(
-                            buf, rel[sel], plan.shp_options, numbers=fids)
-                        geom_selected = True
-                    else:
-                        shp_records = core.parse_shp_range(
-                            buf, rel, plan.shp_options,
-                            numbers=np.arange(fid_start, fid_end))
-        else:
-            # No SHX → sequential single task (scanner.go:511-513).
-            data = core.parse_shp(fsio.read_bytes(f"{plan.path}.shp"),
-                                  plan.shp_options)
-            shp_records = data.records[fid_start - 1:fid_end - 1]
-    if adf is not None and sel is not None:
-        if len(sel) != len(adf):
-            raise core.ShapefileError("inconsistent number of records")
-        adf = adf[sel].reset_index(drop=True)
-
-    # count consistency (shapefile.go:192-196), on pre-mask counts
-    if geom_selected:
-        n_geom_check = n_attr  # selective parse validated fids directly
-    else:
-        n_geom_check = len(fast_ords) if fast_ords is not None else len(shp_records)
-    if n_geom_check and n_attr and n_geom_check != n_attr:
-        raise core.ShapefileError("inconsistent number of records")
-
-    # subset full-parsed geometry by the mask
-    if sel is not None and not geom_selected:
-        if fast_ords is not None and len(fast_ords) == len(sel):
-            fast_ords = fast_ords[sel]
-        elif shp_records and len(shp_records) == len(sel):
-            shp_records = [r for r, m in zip(shp_records, sel) if m]
-
-    n_geom = len(shp_records) if fast_ords is None else len(fast_ords)
-    if adf is not None:
-        out: dict[str, Any] = {c: adf[c] for c in adf.columns}
-        count = len(adf)
-    else:
-        count = n_geom
-        out = _attr_columns(plan, dbf_cols, deleted, fid_start, count)
-        if sel is not None:
-            # no attribute side: fids must follow the pushed bbox mask.
-            # A mask that doesn't span the split would silently assign
-            # consecutive wrong fids — fail loudly instead.
-            if len(sel) != fid_end - fid_start:
-                raise core.ShapefileError(
-                    f"pushed mask length {len(sel)} != split span "
-                    f"{fid_end - fid_start}")
-            out["fid"] = pd.array(np.arange(fid_start, fid_end)[sel],
-                                  dtype="int64")
-    if flat_ords:
-        if fast_ords is None:
-            fast_ords = np.array([r.coords for r in shp_records]) if \
-                shp_records else np.zeros((count, len(_ord_names(plan.shape_type))))
-        for j, c in enumerate(_ord_names(plan.shape_type)):
-            out[c] = fast_ords[:, j]
-        return pd.DataFrame(out)
-
-    if fast_ords is not None:
-        layout = core._LAYOUT_BY_TYPE[plan.shape_type]
-        out["shape_type"] = pd.array([plan.shape_type] * count, dtype="int32")
-        out["geometry"] = pd.Series(
-            [{"layout": layout, "coords": row, "ends": [], "rings": []}
-             for row in fast_ords.tolist()], dtype="object")
-        out["bbox"] = pd.Series([_point_bbox(layout, r)
-                                 for r in fast_ords.tolist()], dtype="object")
-    elif shp_records:
-        out["shape_type"] = pd.array([r.shape_type for r in shp_records], dtype="int32")
-        out["geometry"] = pd.Series([_geom_dict(r) for r in shp_records], dtype="object")
-        out["bbox"] = pd.Series([_record_bbox(r) for r in shp_records], dtype="object")
-    else:
-        out["shape_type"] = pd.array([None] * count, dtype="Int32")
-        out["geometry"] = pd.Series([None] * count, dtype="object")
-        out["bbox"] = pd.Series([None] * count, dtype="object")
-    return pd.DataFrame(out)
-
-
 def _parse_points_vectorized(buf: bytes, rel_offsets: np.ndarray,
                              shape_type: int, fid_start: int,
-                             fid_end: int) -> list[core.SHPRecord] | None:
+                             fid_end: int) -> np.ndarray | None:
     """Bulk decode for fixed-width Point records — no per-record Python.
 
     Point/PointM/PointZ records are all (8B BE header, 4B LE type,
@@ -537,9 +324,8 @@ def _parse_points_vectorized(buf: bytes, rel_offsets: np.ndarray,
 
 def _read_split_dbf(plan: ShapefilePlan, fid_start: int, n: int,
                     member: bytes | None = None):
-    """Decode this split's DBF records into native columns (shared by
-    the pandas and Arrow emit paths): one range read of the ``.dbf``, or
-    a slice of a zip bundle's whole ``member``."""
+    """Decode this split's DBF records into native columns: one range
+    read of the ``.dbf``, or a slice of a zip bundle's whole ``member``."""
     fields = [core.DBFField(n_, t, l, 0, 0) for n_, t, l, d in plan.dbf_fields]
     decimals = [d for n_, t, l, d in plan.dbf_fields]
     hdr = core.DBFHeader(3, None, plan.n_records, 0, plan.dbf_record_size)  # type: ignore[arg-type]
@@ -569,127 +355,181 @@ def _read_split_shp(plan: ShapefilePlan, fid_start: int,
     return fsio.read_bytes(f"{plan.path}.shp", start, end - start), offs - start
 
 
-def _arrow_attr_arrays(plan: ShapefilePlan, fid_start: int, n_full: int,
-                       keep: np.ndarray | None, n: int, arrow_schema):
-    """Attribute-side Arrow arrays (deleted flag + DBF fields) for one
-    split, decoded straight from the split's DBF byte range — shared by
-    the columnar polygon and flat-point emit paths.  ``keep`` optionally
-    subsets the ``n_full`` decoded records down to ``n`` survivors."""
-    dbf_cols = deleted = None
-    if plan.dbf_record_size and plan.has_dbf:
-        dbf_cols, deleted = _read_split_dbf(plan, fid_start, n_full)
-        if len(deleted) != n_full:
-            raise core.ShapefileError("inconsistent number of records")
-        if keep is not None:
-            deleted = deleted[keep]
-            dbf_cols = [(k, v[keep], None if m is None else m[keep])
-                        for k, v, m in dbf_cols]
-    arrays = [pa.array(deleted if deleted is not None
-                       else np.zeros(n, dtype=bool))]
-    for j, (name, ftype, length, decs) in enumerate(plan.dbf_fields):
-        if dbf_cols is None:
-            arrays.append(pa.nulls(n, arrow_schema.field(name).type))
-            continue
-        kind, vals, mask = dbf_cols[j]
+def _attr_arrays(plan: ShapefilePlan, fid_start: int, n: int,
+                 member: bytes | None, schema) -> dict[str, Any] | None:
+    """The split's ``deleted`` flag and DBF columns as Arrow arrays,
+    decoded once from its ``n`` DBF records (a blank numeric is NULL);
+    None when the file has no DBF."""
+    if not plan.has_dbf:
+        return None
+    dbf_cols, deleted = _read_split_dbf(plan, fid_start, n, member)
+    if len(deleted) != n:
+        raise core.ShapefileError("inconsistent number of records")
+    arrays = {"deleted": pa.array(deleted)}
+    for (name, *_), (kind, vals, mask) in zip(plan.dbf_fields, dbf_cols):
         if kind == "int":
-            arrays.append(pa.array(vals, mask=mask))
+            arrays[name] = pa.array(vals, mask=mask)
         elif kind == "float":
-            arrays.append(pa.array(vals, from_pandas=True))  # NaN → null
+            arrays[name] = pa.array(vals, mask=np.isnan(vals))
         else:
-            arrays.append(pa.array(vals.tolist(),
-                                   type=arrow_schema.field(name).type))
+            arrays[name] = pa.array(vals.tolist(),
+                                    type=schema.field(name).type)
     return arrays
 
 
-def _arrow_split_batch(plan: ShapefilePlan, fid_start: int, fid_end: int,
-                       arrow_schema, attr_mask_fn=None, bbox_mask_fn=None):
-    """One split → one Arrow RecordBatch, columnar end to end when the
-    vectorized polygon kernel applies.
+# a layout's record bounds (mins..., maxs...) → their BBOX_TYPE positions
+_BOUNDS_AT = {"XY": [0, 1, 2, 3], "XYM": [0, 1, 6, 2, 3, 7],
+              "XYZM": [0, 1, 4, 6, 2, 3, 5, 7]}
 
-    The per-row cost of the features scan is NOT parsing but building a
-    Python dict per geometry for Arrow conversion; this path builds the
-    geometry/bbox struct columns directly as Arrow ListArrays over the
-    kernel's flat buffers — zero per-record Python for XY polygon
-    corpora.  Anything the kernel declines falls back to the pandas path
-    (same rows, same schema)."""
-    # the columnar build is positional over the FULL features schema; a
-    # user-supplied (pruned/reordered) read schema takes the by-name
-    # pandas conversion instead
-    full_names = [f.name for f in features_schema(plan).fields]
-    vec = None
-    keep: np.ndarray | None = None
-    if (not plan.is_zip and plan.has_shp and plan.shx_offsets is not None
-            and plan.shape_type in (core.SHAPE_TYPE_POLYGON,
-                                    core.SHAPE_TYPE_POLYLINE)
-            and attr_mask_fn is None
-            and [f.name for f in arrow_schema] == full_names):
-        got = _read_split_shp(plan, fid_start, fid_end)
-        if got is not None:
-            buf, rel = got
-            # sized to the records actually present — fid_end may be a
-            # large sentinel when the record count is unknown upstream
-            fids = fid_start + np.arange(len(rel), dtype=np.int64)
-            if bbox_mask_fn is not None:
-                # SELECTIVE vectorized decode: mask from the record
-                # headers, then the kernel gathers only survivors — the
-                # columnar path stays available under bbox pushdown
-                keep = np.asarray(bbox_mask_fn(buf, rel), dtype=bool)
-                rel, fids = rel[keep], fids[keep]
-                if not len(rel):
-                    # fully pruned split: emit empty directly (falling
-                    # through to _parse_split would re-read the same
-                    # byte span and decode the whole DBF for zero rows)
-                    return pa.RecordBatch.from_arrays(
-                        [pa.array([], type=f.type) for f in arrow_schema],
-                        schema=arrow_schema)
-            if len(rel):
-                vec = core.parse_polygons_vectorized(
-                    buf, rel, fids,
-                    plan.shp_options, shape_type=plan.shape_type)
-                if vec is not None and \
-                        2 * int(vec["num_points"].sum()) >= (1 << 31):
-                    vec = None  # ListArray int32 offsets would overflow
-    if vec is None:
-        pdf = _parse_split(plan, fid_start, fid_end,
-                           attr_mask_fn=attr_mask_fn,
-                           bbox_mask_fn=bbox_mask_fn)
-        return pa.RecordBatch.from_pandas(pdf, schema=arrow_schema,
-                                          preserve_index=False)
 
-    n = vec["n"]
-    n_full = fid_end - fid_start
-    # --- attribute columns ---------------------------------------------
-    arrays = [pa.array(fids, pa.int64())]
-    arrays += _arrow_attr_arrays(plan, fid_start, n_full, keep, n,
-                                 arrow_schema)
-    # --- geometry struct --------------------------------------------------
-    arrays.append(pa.array(np.full(n, plan.shape_type, np.int32)))
-    coord_counts = 2 * vec["num_points"]
-    coord_offs = np.concatenate(([0], np.cumsum(coord_counts))).astype("int32")
-    coords_arr = pa.ListArray.from_arrays(
-        pa.array(coord_offs), pa.array(vec["coords"], pa.float64()))
-    ends_offs = np.concatenate(([0], np.cumsum(vec["num_parts"]))).astype("int32")
-    ends_arr = pa.ListArray.from_arrays(
-        pa.array(ends_offs), pa.array(vec["ends_rel"].astype(np.int32)))
-    rings_offs = np.concatenate(
-        ([0], np.cumsum(vec["polys_per_rec"]))).astype("int32")
-    rings_arr = pa.ListArray.from_arrays(
-        pa.array(rings_offs), pa.array(vec["rings_flat"].astype(np.int32)))
-    layout_arr = pa.array(["XY"] * n)
-    geom_type = arrow_schema.field("geometry").type
-    arrays.append(pa.StructArray.from_arrays(
-        [layout_arr, coords_arr, ends_arr, rings_arr],
-        fields=list(geom_type)))
-    # --- bbox struct -------------------------------------------------------
-    bb = vec["bbox"]
-    nulls = pa.nulls(n, pa.float64())
-    bbox_type = arrow_schema.field("bbox").type
-    arrays.append(pa.StructArray.from_arrays(
-        [pa.array(bb[:, 0]), pa.array(bb[:, 1]),
-         pa.array(bb[:, 2]), pa.array(bb[:, 3]),
-         nulls, nulls, nulls, nulls],
-        fields=list(bbox_type)))
-    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+@dataclass
+class _Geometry:
+    """A split's decoded geometry as flat arrays, whichever decoder made
+    it: the one input of :func:`_geometry_columns`."""
+    shape_type: np.ndarray    # per record
+    layout: list              # per record; None for a Null shape
+    coords: np.ndarray        # every record's ordinates, concatenated
+    n_coords: np.ndarray      # ordinates per record
+    ends: np.ndarray          # part ends, record-relative
+    n_ends: np.ndarray        # parts per record
+    rings: np.ndarray         # rings per polygon
+    n_rings: np.ndarray       # polygons per record
+    bbox: list                # BBOX_TYPE's children: (values, NULL mask
+                              # or None), or None when all NULL
+
+
+def _kernel_geometry(shape_type: int, bounds: list[np.ndarray], coords,
+                     n_coords, ends, n_ends, rings, n_rings) -> _Geometry:
+    """A kernel's output: every record of ``shape_type``, with record
+    ``bounds`` as columns (mins..., maxs...)."""
+    n = len(n_coords)
+    layout = core._LAYOUT_BY_TYPE[shape_type]
+    bbox: list = [None] * 8
+    for at, col in zip(_BOUNDS_AT[layout], bounds):
+        bbox[at] = (col, None)
+    return _Geometry(np.full(n, shape_type, np.int32), [layout] * n, coords,
+                     n_coords, ends, n_ends, rings, n_rings, bbox)
+
+
+def _records_geometry(records: list[core.SHPRecord]) -> _Geometry:
+    """Core-parser records, flattened (NaN stays NaN).  A point's bbox is
+    its ordinates twice; a Null shape has no ordinates, parts or
+    bounds."""
+    n = len(records)
+    box, has = np.zeros((n, 8)), np.zeros((n, 8), dtype=bool)
+    for i, r in enumerate(records):
+        if r.layout is not None:
+            at = _BOUNDS_AT[r.layout]
+            box[i, at] = np.tile(r.coords, 2) if r.bounds is None else r.bounds
+            has[i, at] = True
+    return _Geometry(
+        np.array([r.shape_type for r in records], np.int32),
+        [r.layout for r in records],
+        np.concatenate([r.coords for r in records] or [np.empty(0)]),
+        np.array([len(r.coords) for r in records], np.int64),
+        np.array([e for r in records for e in r.ends], np.int64),
+        np.array([len(r.ends) for r in records], np.int64),
+        np.array([len(e) for r in records for e in r.endss], np.int64),
+        np.array([len(r.endss) for r in records], np.int64),
+        [(box[:, j], ~has[:, j]) for j in range(8)])
+
+
+def _list_array(values: np.ndarray, counts: np.ndarray, dtype) -> pa.Array:
+    offsets = np.concatenate(([0], np.cumsum(counts)))
+    if offsets[-1] >= 1 << 31:
+        raise core.ShapefileError("split too large for int32 list offsets")
+    return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)),
+                                    pa.array(np.asarray(values, dtype)))
+
+
+def _geometry_columns(g: _Geometry | None, n: int,
+                      flat: list[str] | None = None) -> list:
+    """The one column assembly: ``n`` records' geometry → the
+    ``shape_type``, ``geometry`` and ``bbox`` columns, or with ``flat``
+    (ordinate names) the flat ordinate columns, NULL where a record is
+    not a point.  No ``.shp`` (``g`` None) → NULL columns."""
+    if g is None:
+        types = [pa.float64()] * len(flat) if flat else _GEOMETRY_ARROW.types
+        return [pa.nulls(n, t) for t in types]
+    if flat:
+        k = len(flat)
+        point = g.n_coords == k
+        if g.n_coords[~point].any():
+            raise core.ShapefileError("flat_points requires Point records")
+        ords = np.zeros((n, k))
+        ords[point] = g.coords.reshape(-1, k)
+        return [pa.array(ords[:, j], mask=~point) for j in range(k)]
+    geometry_type, bbox_type = _GEOMETRY_ARROW.types[1:]
+    return [
+        pa.array(g.shape_type, pa.int32()),
+        pa.StructArray.from_arrays(
+            [pa.array(g.layout, pa.string()),
+             _list_array(g.coords, g.n_coords, np.float64),
+             _list_array(g.ends, g.n_ends, np.int32),
+             _list_array(g.rings, g.n_rings, np.int32)],
+            fields=list(geometry_type)),
+        pa.StructArray.from_arrays(
+            [pa.nulls(n, pa.float64()) if c is None
+             else pa.array(c[0], mask=c[1]) for c in g.bbox],
+            fields=list(bbox_type)),
+    ]
+
+
+def _split_geometry(plan: ShapefilePlan, fid_start: int, fid_end: int,
+                    shp: bytes | None, n_attr: int | None,
+                    keep: np.ndarray | None, bbox_filters):
+    """The split's geometry, decoded by exactly one of: the point kernel,
+    the XY polygon/polyline kernel on the kept offsets, or the core
+    parser — on the kept offsets where the file range-reads, else over
+    the whole ``.shp`` (a zip member ``shp``, or a file with no
+    ``.shx``).  A kernel declines anything irregular and the parser
+    then rules, with the reference's errors.
+
+    Returns (the kept records' geometry, None without a ``.shp``; the
+    split's record count; ``keep`` with ``bbox_filters`` tested against
+    the record headers, before any decode)."""
+    def counted(n: int) -> int:
+        if n_attr is not None and n != n_attr:
+            raise core.ShapefileError("inconsistent number of records")
+        return n
+
+    if not plan.has_shp:
+        return None, n_attr or 0, keep
+    if not _range_reads(plan):
+        data = shp if plan.is_zip else fsio.read_bytes(f"{plan.path}.shp")
+        records = core.parse_shp(data, plan.shp_options) \
+            .records[fid_start - 1:fid_end - 1]
+        n = counted(len(records))
+        if keep is not None:
+            records = [r for r, k in zip(records, keep) if k]
+        return _records_geometry(records), n, keep
+    buf, rel = _read_split_shp(plan, fid_start, fid_end) or \
+        (b"", np.zeros(0, np.int64))
+    n = counted(len(rel))
+    if bbox_filters:
+        bkeep = _bbox_keep(buf, rel, bbox_filters)
+        keep = bkeep if keep is None else keep & bkeep
+    ords = _parse_points_vectorized(buf, rel, plan.shape_type, fid_start,
+                                    fid_start + n)
+    if ords is not None:   # whole split: faster than a selective decode
+        ords = ords if keep is None else ords[keep]
+        none, zeros = np.zeros(0, np.int64), np.zeros(len(ords), np.int64)
+        return _kernel_geometry(
+            plan.shape_type, list(ords.T) * 2, ords.ravel(),
+            np.full(len(ords), ords.shape[1]), none, zeros, none,
+            zeros), n, keep
+    fids = np.arange(fid_start, fid_start + n, dtype=np.int64)
+    if keep is not None:
+        rel, fids = rel[keep], fids[keep]
+    vec = core.parse_polygons_vectorized(buf, rel, fids, plan.shp_options,
+                                         shape_type=plan.shape_type)
+    if vec is not None:
+        return _kernel_geometry(
+            plan.shape_type, list(vec["bbox"].T), vec["coords"],
+            2 * vec["num_points"], vec["ends_rel"], vec["num_parts"],
+            vec["rings_flat"], vec["polys_per_rec"]), n, keep
+    return _records_geometry(core.parse_shp_range(
+        buf, rel, plan.shp_options, numbers=fids)), n, keep
 
 
 RECORDS_PER_SPLIT = 100_000   # default split size of every front door
@@ -740,6 +580,9 @@ _CMP = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual)
 _CMP_OP = {EqualTo: operator.eq, GreaterThan: operator.gt,
            GreaterThanOrEqual: operator.ge, LessThan: operator.lt,
            LessThanOrEqual: operator.le}
+_PC_OP = {EqualTo: pc.equal, GreaterThan: pc.greater,
+          GreaterThanOrEqual: pc.greater_equal, LessThan: pc.less,
+          LessThanOrEqual: pc.less_equal}
 _BBOX_COL = {"xmin": 0, "ymin": 1, "xmax": 2, "ymax": 3}
 
 
@@ -784,20 +627,19 @@ def _try_accept_row_filter(f: Filter, plan: ShapefilePlan, bbox_ok: bool,
     return False
 
 
-def _attr_keep(adf: pd.DataFrame, filters: list[Filter]) -> np.ndarray:
-    """Keep-mask over decoded attribute columns (SQL NULL-fails-predicate
+def _attr_keep(attrs: dict[str, Any], filters: list[Filter]) -> np.ndarray:
+    """Keep-mask over the decoded attribute arrays (SQL NULL-fails-predicate
     semantics)."""
-    keep = np.ones(len(adf), dtype=bool)
+    keep = np.ones(len(attrs["deleted"]), dtype=bool)
     for f in filters:
-        col = adf[f.attribute[0]]
+        col = attrs[f.attribute[0]]
         if isinstance(f, IsNull):
-            m = col.isna()
+            m = col.is_null()
         elif isinstance(f, IsNotNull):
-            m = ~col.isna()
+            m = col.is_valid()
         else:
-            m = _CMP_OP[type(f)](col, f.value)
-            m = m.fillna(False) if hasattr(m, "fillna") else m
-        keep &= np.asarray(m, dtype=bool)
+            m = _PC_OP[type(f)](col, f.value).fill_null(False)
+        keep &= m.to_numpy(zero_copy_only=False)
     return keep
 
 
@@ -817,7 +659,7 @@ def _bbox_keep(buf: bytes, rel: np.ndarray,
 def _bbox_postfilter(rb, filters: list[Filter]):
     """Exact bbox filtering AFTER parse, for files that cannot range-read
     (zip members, no SHX): the same comparisons on the bbox struct."""
-    bbox = rb.column(rb.schema.get_field_index("bbox"))
+    bbox = rb.column("bbox")
     keep = np.ones(rb.num_rows, dtype=bool)
     for f in filters:
         # nulls → NaN, which fails every comparison (SQL semantics)
@@ -866,25 +708,47 @@ def _header_prunes(header_bounds: tuple | None,
 def read_split(plan: ShapefilePlan, fid_start: int, fid_end: int,
                arrow_schema, flat: bool = False, attr_filters=(),
                bbox_filters=()):
-    """Records ``[fid_start, fid_end)`` → one Arrow RecordBatch.
+    """Records ``[fid_start, fid_end)`` → one Arrow RecordBatch of
+    ``arrow_schema``'s columns: the one split emitter.
 
-    ``flat`` takes the flat-point emit (no filters: its ``x``/``y``
-    predicates are codegen'd in Spark).  Otherwise ``attr_filters`` mask
-    records before geometry decode, and ``bbox_filters`` are tested
-    against the record headers before decode where the file range-reads,
-    or on the parsed bbox struct where it cannot."""
-    if flat:
-        return _arrow_points_flat_batch(plan, fid_start, fid_end, arrow_schema)
+    The attributes decode once (:func:`_attr_arrays`) and
+    ``attr_filters`` mask them before any geometry decode.
+    ``bbox_filters`` are tested against the record headers before decode
+    where the file range-reads, or on the built bbox column where it
+    cannot.  The kept records' geometry comes from one decoder
+    (:func:`_split_geometry`) and becomes columns through one function
+    (:func:`_geometry_columns`): ``shape_type``/``geometry``/``bbox``,
+    or with ``flat`` the ``x``/``y``[/``z``]/[``m``] columns (no filters:
+    their predicates are codegen'd in Spark).  A read schema that prunes
+    or reorders columns selects them by name."""
+    full = to_arrow_schema(flat_points_schema(plan) if flat
+                           else features_schema(plan))
+    members = _zip_members(plan.path, plan.basename) if plan.is_zip else {}
+    attrs = _attr_arrays(plan, fid_start, fid_end - fid_start,
+                         members.get("dbf", (None, None))[1], full)
+    keep = _attr_keep(attrs, attr_filters) \
+        if attrs is not None and attr_filters else None
     pretest = bool(bbox_filters) and _range_reads(plan)
-    rb = _arrow_split_batch(
-        plan, fid_start, fid_end, arrow_schema,
-        attr_mask_fn=(lambda adf: _attr_keep(adf, attr_filters))
-        if attr_filters else None,
-        bbox_mask_fn=(lambda buf, rel: _bbox_keep(buf, rel, bbox_filters))
-        if pretest else None)
+    geom, n, keep = _split_geometry(
+        plan, fid_start, fid_end, members.get("shp", (None, None))[1],
+        None if attrs is None else len(attrs["deleted"]), keep,
+        bbox_filters if pretest else ())
+    fids = np.arange(fid_start, fid_start + n, dtype=np.int64)
+    if keep is not None:
+        fids = fids[keep]
+        attrs = attrs and {k: a.filter(pa.array(keep))
+                           for k, a in attrs.items()}
+    cols = {"fid": pa.array(fids),
+            "deleted": pa.array(np.zeros(len(fids), dtype=bool)),
+            **(attrs or {})}
+    ords = _ord_names(plan.shape_type) if flat else None
+    cols.update(zip(ords or ["shape_type", "geometry", "bbox"],
+                    _geometry_columns(geom, len(fids), ords)))
+    rb = pa.RecordBatch.from_arrays([cols[f.name] for f in full],
+                                    schema=full)
     if bbox_filters and not pretest:
         rb = _bbox_postfilter(rb, bbox_filters)
-    return rb
+    return rb.select(arrow_schema.names).cast(arrow_schema)
 
 
 def read_file(path: str, options: dict | None, basename: str | None,
@@ -992,21 +856,17 @@ def map_records(records, columns: list[str], fn) -> list:
     ``fid, shape_type, geometry`` a kernel such as simplify emits).
 
     Records become the batch a scan emits for them: ``fid`` is the
-    1-based record position and ``geometry`` is built by the same
-    :func:`_geom_dict` as the pandas scan path.  The DuckDB oracles run
-    a feature kernel's own batch function through this, so Spark and
-    the oracle share one kernel path; a kernel's output fed back in
+    1-based record position and ``shape_type``/``geometry`` come from
+    the scan's own column assembly (:func:`_geometry_columns`).  The
+    DuckDB oracles run a feature kernel's own batch function through
+    this, so Spark and the oracle share one kernel path; a kernel's output fed back in
     chains two kernels the way Spark does."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     if records and isinstance(records[0], core.SHPRecord):
-        records = [pa.RecordBatch.from_pylist(
-            [{"fid": i, "shape_type": r.shape_type, "geometry": _geom_dict(r)}
-             for i, r in enumerate(records, 1)],
-            schema=to_arrow_schema(T.StructType([
-                T.StructField("fid", T.LongType(), False),
-                T.StructField("shape_type", T.IntegerType()),
-                T.StructField("geometry", GEOMETRY_TYPE)])))]
+        shape_type, geometry, _ = _geometry_columns(
+            _records_geometry(records), len(records))
+        records = [pa.RecordBatch.from_arrays(
+            [pa.array(np.arange(1, len(records) + 1)), shape_type, geometry],
+            names=["fid", "shape_type", "geometry"])]
     return list(fn(project_batch(rb, columns) for rb in records))
 
 
@@ -1051,8 +911,6 @@ def read_shapefile_df(spark: SparkSession, path: str, options: dict | None = Non
 
     A missing path raises ShapefileError (``plan_shapefile``).
     """
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     plan = plan_shapefile(path, options, basename)
     if flat_points and plan.shape_type not in core.POINT_TYPES:
         raise core.ShapefileError(
@@ -1119,8 +977,6 @@ def read_shapefile_dir(spark: SparkSession, directory: str,
     file fails its task loudly (Arrow schema error) rather than silently
     coercing.
     """
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     bases = discover_shapefile_bases(directory)
     if not bases:
         raise core.ShapefileError(f"no shapefiles under {directory}")
@@ -1131,36 +987,6 @@ def read_shapefile_dir(spark: SparkSession, directory: str,
         rb for p in paths
         for rb in read_file(p, options, None, arrow_schema,
                             target_records_per_split, bbox_filters=window)))
-
-
-def _arrow_points_flat_batch(plan: ShapefilePlan, fid_start: int,
-                             fid_end: int, arrow_schema):
-    """One flat-point split → one Arrow RecordBatch built directly from
-    the vectorized decoder's numpy columns — no pandas frame in between
-    (the frame build + from_pandas conversion was ~30% of the scan wall
-    time at 2M points; see BENCH.md round 4)."""
-    ords = None
-    if not plan.is_zip and plan.has_shp and plan.shx_offsets is not None:
-        got = _read_split_shp(plan, fid_start, fid_end)
-        if got is None:
-            return pa.RecordBatch.from_arrays(
-                [pa.array([], type=f.type) for f in arrow_schema],
-                schema=arrow_schema)
-        buf, rel = got
-        fid_end = fid_start + len(rel)  # clamp unknown-count sentinels
-        ords = _parse_points_vectorized(buf, rel, plan.shape_type,
-                                        fid_start, fid_end)
-    if ords is None:
-        # irregular records / zip / no SHX → validated slow path
-        pdf = _parse_split(plan, fid_start, fid_end, flat_ords=True)
-        return pa.RecordBatch.from_pandas(pdf, schema=arrow_schema,
-                                          preserve_index=False)
-    n = len(ords)
-    arrays = [pa.array(np.arange(fid_start, fid_end, dtype=np.int64))]
-    arrays += _arrow_attr_arrays(plan, fid_start, n, None, n, arrow_schema)
-    for j in range(ords.shape[1]):
-        arrays.append(pa.array(np.ascontiguousarray(ords[:, j])))
-    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
 def flat_points_schema(plan: ShapefilePlan) -> T.StructType:

@@ -154,30 +154,55 @@ def test_record_bounds_quick_matches_decode(ref_testdata):
     np.testing.assert_array_equal(quick, exp)
 
 
-def test_pushdown_skips_geometry_decode(ds_spark, ref_testdata, monkeypatch):
-    """Records rejected by a pushed attribute filter never reach the
-    geometry parser on the SHX path (selective parse_shp_range)."""
+def _decoded_offsets(monkeypatch) -> list[int]:
+    """The number of record offsets handed to each geometry decoder call
+    (the polygon kernel or the core parser), in call order."""
     import go_shapefile_spark.sources.shapefile_core as core
 
     seen = []
-    orig = core.parse_shp_range
+    for name in ("parse_shp_range", "parse_polygons_vectorized"):
+        def counting(buf, offsets, *a, _orig=getattr(core, name), **k):
+            seen.append(len(offsets))
+            return _orig(buf, offsets, *a, **k)
+        monkeypatch.setattr(core, name, counting)
+    return seen
 
-    def counting(buf, offsets, options=None, numbers=None):
-        seen.append(len(offsets))
-        return orig(buf, offsets, options, numbers=numbers)
 
-    monkeypatch.setattr(core, "parse_shp_range", counting)
-    monkeypatch.setattr(
-        "go_shapefile_spark.sources.shapefile.core.parse_shp_range", counting)
-    plan = plan_shapefile(os.path.join(ref_testdata, "poly"))
+def _attribute_pushdown_decodes(base: str, monkeypatch) -> None:
+    """``AREA > 300000`` pushed into a one-split read: the decoders see
+    exactly the surviving records, once."""
+    seen = _decoded_offsets(monkeypatch)
+    plan = plan_shapefile(base)
     schema = features_schema(plan)
     r = ShapefileReader(plan, schema, records_per_split=100)
     list(r.pushFilters([GreaterThan(("AREA",), 300000.0)]))
     [part] = r.partitions()
     batches = list(r.read(part))
     n_rows = sum(b.num_rows for b in batches)
-    assert seen == [n_rows]  # parsed exactly the surviving records
+    assert seen == [n_rows]  # decoded exactly the surviving records
     assert 0 < n_rows < 10
+
+
+def test_pushdown_skips_geometry_decode(ds_spark, ref_testdata, monkeypatch):
+    """Records rejected by a pushed attribute filter never reach a
+    geometry decoder on the SHX path (selective decode of the kept
+    offsets)."""
+    _attribute_pushdown_decodes(os.path.join(ref_testdata, "poly"),
+                                monkeypatch)
+
+
+def test_pushdown_skips_geometry_decode_written(tmp_path, monkeypatch):
+    """The same on a written polygon file."""
+    from go_shapefile_spark.sources.shapefile_writer import write_polygons
+
+    base = str(tmp_path / "areas")
+    write_polygons(
+        base,
+        [{"coords": [i, 0, i, 1, i + 1, 1, i + 1, 0, i, 0], "ends": [10]}
+         for i in range(10)],
+        fields=[("AREA", "N", 12, 3)],
+        rows=[[i * 50000.0] for i in range(10)])
+    _attribute_pushdown_decodes(base, monkeypatch)
 
 
 def test_format_directory_mode(ds_spark, ref_testdata, tmp_path):

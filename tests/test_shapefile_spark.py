@@ -167,17 +167,17 @@ def test_vectorized_polygon_kernel_parity(spark, tmp_path, monkeypatch):
     # monkeypatch is visible — executors import the real module)
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    import go_shapefile_spark.sources.shapefile as sfmod
+    from go_shapefile_spark.sources import shapefile_core as core
     from go_shapefile_spark.sources.shapefile import (
-        _arrow_split_batch, features_schema, plan_shapefile)
+        features_schema, plan_shapefile, read_split)
 
     def no_fallback(*a, **k):
         raise AssertionError("vectorized polygon kernel fell back")
 
-    monkeypatch.setattr(sfmod, "_parse_split", no_fallback)
+    monkeypatch.setattr(core, "parse_shp_range", no_fallback)
     plan2 = plan_shapefile(base)
-    rb = _arrow_split_batch(plan2, 1, len(polys) + 1,
-                            to_arrow_schema(features_schema(plan2)))
+    rb = read_split(plan2, 1, len(polys) + 1,
+                    to_arrow_schema(features_schema(plan2)))
     assert rb.num_rows == len(polys)
     monkeypatch.undo()
 
@@ -230,15 +230,13 @@ def test_vectorized_polyline_kernel_parity(spark, tmp_path, monkeypatch):
     # kernel engages in-process
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    import go_shapefile_spark.sources.shapefile as sfmod
     from go_shapefile_spark.sources.shapefile import (
-        _arrow_split_batch, features_schema, plan_shapefile)
-    monkeypatch.setattr(sfmod, "_parse_split",
+        features_schema, plan_shapefile, read_split)
+    monkeypatch.setattr(core, "parse_shp_range",
                         lambda *a, **k: (_ for _ in ()).throw(
                             AssertionError("fell back")))
     plan = plan_shapefile(base)
-    rb = _arrow_split_batch(plan, 1, 31,
-                            to_arrow_schema(features_schema(plan)))
+    rb = read_split(plan, 1, 31, to_arrow_schema(features_schema(plan)))
     assert rb.num_rows == 30
     monkeypatch.undo()
 

@@ -13,7 +13,7 @@ Float formatting uses Python's shortest round-trip repr, so an
 export→import round trip reproduces every coordinate bit-exactly
 (tested against the full ne_110m corpus).  JSON formatting is a
 serialization boundary like the image codecs, so the DataFrame
-operators run Arrow-batched ``mapInPandas``; this is not a hot
+operators run Arrow-batched ``mapInArrow``; this is not a hot
 analytic path.
 
 Reference parity: the reference exposes geometry as go-geom objects
@@ -24,12 +24,11 @@ format those callers most commonly marshal to.
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..operators import local
 from ..sources import shapefile_core as core
 
 
@@ -132,29 +131,27 @@ def features_to_geojson(df: DataFrame, id_col: str = "fid",
     Feature properties."""
     props = props or []
     cols = [id_col, "shape_type", "geometry"] + props
+    id_type = df.schema[id_col].dataType.simpleString()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fids, docs = [], []
-            for r in pdf.itertuples(index=False):
-                g = r.geometry
-                if g is None or pd.isna(r.shape_type):
+    def run(batches):
+        for rb in batches:
+            docs = []
+            for fid, st, g, *vals in zip(
+                    *(local.values(rb.column(c)) for c in cols)):
+                if g is None or st is None:
                     geom = None          # null shape → null geometry
                 else:
                     geom = geometry_to_geojson(
-                        int(r.shape_type), g["layout"], g["coords"],
-                        g["ends"], g["rings"])
+                        st, g["layout"], g["coords"], g["ends"], g["rings"])
                 feat = {"type": "Feature",
-                        "id": getattr(r, id_col),
+                        "id": fid,
                         "geometry": geom,
-                        "properties": {p: getattr(r, p) for p in props}}
-                fids.append(getattr(r, id_col))
+                        "properties": dict(zip(props, vals))}
                 docs.append(json.dumps(feat, separators=(",", ":")))
-            yield pd.DataFrame({id_col: fids, "geojson": docs})
+            yield {id_col: rb.column(id_col), "geojson": docs}
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(*cols).mapInPandas(
-        run, schema=f"{id_col} {id_type}, geojson string")
+    return local.map_arrow(df.select(*cols), run,
+                           f"{id_col} {id_type}, geojson string")
 
 
 def features_to_geojson_jvm(df: DataFrame, id_col: str = "fid",
@@ -239,21 +236,18 @@ def features_to_geojson_jvm(df: DataFrame, id_col: str = "fid",
 def geojson_to_features(df: DataFrame, json_col: str = "geojson",
                         id_col: str = "fid") -> DataFrame:
     """(fid, geojson) → features-shaped rows (fid, shape_type, geometry)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                feat = json.loads(getattr(r, json_col))
-                st, layout, coords, ends, rings = \
-                    geojson_to_geometry(feat["geometry"])
-                out.append((getattr(r, id_col), st,
-                            {"layout": layout, "coords": coords,
-                             "ends": ends, "rings": rings}))
-            yield pd.DataFrame(out, columns=[id_col, "shape_type",
-                                             "geometry"])
-
     id_type = df.schema[id_col].dataType.simpleString()
-    return df.mapInPandas(
-        run, schema=f"{id_col} {id_type}, shape_type int, geometry "
-                    "struct<layout:string,coords:array<double>,"
-                    "ends:array<int>,rings:array<int>>")
+
+    def run(batches):
+        for rb in batches:
+            parsed = [geojson_to_geometry(json.loads(doc)["geometry"])
+                      for doc in rb.column(json_col).to_pylist()]
+            yield {id_col: rb.column(id_col),
+                   "shape_type": [p[0] for p in parsed],
+                   "geometry": [dict(zip(("layout", "coords", "ends", "rings"),
+                                         p[1:])) for p in parsed]}
+
+    return local.map_arrow(
+        df, run, f"{id_col} {id_type}, shape_type int, geometry "
+                 "struct<layout:string,coords:array<double>,"
+                 "ends:array<int>,rings:array<int>>")

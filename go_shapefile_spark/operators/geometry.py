@@ -54,6 +54,7 @@ from ..sources.shapefile_core import (SHAPE_TYPE_POLYGON,
                                       SHAPE_TYPE_POLYLINE,
                                       SHAPE_TYPE_POLYLINE_M,
                                       SHAPE_TYPE_POLYLINE_Z, STRIDES)
+from . import local
 
 _POLYGONS = {SHAPE_TYPE_POLYGON, SHAPE_TYPE_POLYGON_M, SHAPE_TYPE_POLYGON_Z}
 _POLYLINES = {SHAPE_TYPE_POLYLINE, SHAPE_TYPE_POLYLINE_M,
@@ -711,14 +712,12 @@ def convex_hull_groups(points: DataFrame, group_col: str = "u",
     (group, lon, lat) — downstream rollups stay relational.
 
     Shape (r6 optimization): a JVM ``collect_list`` groupBy turns each
-    group into one array row, and ONE ``mapInPandas`` stage hulls many
-    groups per Arrow batch.  The previous ``applyInPandas`` form paid
-    a per-group Python/pandas invocation (one tiny DataFrame per
-    group), which dominated wall time on thousands-of-small-groups
-    inputs (guide §4.2: batch the Python boundary).  The hull vertex
+    group into one array row, and ONE ``mapInArrow`` stage hulls many
+    groups per Arrow batch.  A per-group form (one Python invocation
+    per group) dominated wall time on thousands-of-small-groups inputs
+    (guide §4.2: batch the Python boundary).  The hull vertex
     SET is input-order independent (``monotone_chain_hull`` lexsorts
     internally), so ``collect_list`` order does not affect output."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     grouped = (points.select(group_col, lon_col, lat_col)
@@ -727,11 +726,12 @@ def convex_hull_groups(points: DataFrame, group_col: str = "u",
                     F.collect_list(lat_col).alias("ys")))
 
     def hulls(batches):
-        for pdf in batches:
+        for rb in batches:
             gs: list[np.ndarray] = []
             lons: list[np.ndarray] = []
             lats: list[np.ndarray] = []
-            for g, xs, ys in zip(pdf[group_col], pdf["xs"], pdf["ys"]):
+            for g, xs, ys in zip(*(local.values(rb.column(c))
+                                   for c in (group_col, "xs", "ys"))):
                 x = np.asarray(xs, dtype=np.float64)
                 y = np.asarray(ys, dtype=np.float64)
                 idx = monotone_chain_hull(x, y)
@@ -739,10 +739,10 @@ def convex_hull_groups(points: DataFrame, group_col: str = "u",
                 lons.append(x[idx])
                 lats.append(y[idx])
             if gs:
-                yield pd.DataFrame({group_col: np.concatenate(gs),
-                                    lon_col: np.concatenate(lons),
-                                    lat_col: np.concatenate(lats)})
+                yield {group_col: np.concatenate(gs),
+                       lon_col: np.concatenate(lons),
+                       lat_col: np.concatenate(lats)}
 
-    return grouped.mapInPandas(
-        hulls, schema=f"{group_col} long, {lon_col} double, "
-                      f"{lat_col} double")
+    return local.map_arrow(
+        grouped, hulls,
+        f"{group_col} long, {lon_col} double, {lat_col} double")

@@ -16,7 +16,7 @@ evaluator lost 2x to the parallel SQL path that way and was reverted).
 ``COVER_FEATURES`` follows it.  The driver cell cover of ~400-vertex
 polygons at res 8 costs ~3.2 ms of numpy per polygon (0.65 s for 180,
 19,439 cover rows), against ~1.2 s of job latency it removes from the
-distributed mapInPandas build (9 jobs -> 1).  Cover build plus one
+distributed cover build (9 jobs -> 1).  Cover build plus one
 per-polygon join count over 200k points, local[4], range of warm runs:
 180 polygons 3.3-4.7 s driver vs 5.2-6.2 s distributed, 350 3.3-4.1 vs
 3.9-4.6, 500 3.7-4.1 vs 4.0-4.6, 1,000 6.9-7.5 vs 5.0-6.0 — so the cap
@@ -56,6 +56,10 @@ within 0, still finishes locally).
 
 from __future__ import annotations
 
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
+
 CC_EDGES = 2_000_000          # connected_components live edges (~32 MB)
 GRID_CELLS = 1_000_000        # distance / cost / flow occupied grid cells
 TRIANGLE_EDGES = 2_000_000    # triangle_counts distinct edges
@@ -81,12 +85,54 @@ def collect_within(df, cap: int):
     return table if within(table.num_rows, cap) else None
 
 
-def to_spark(spark, columns: dict, schema):
-    """Driver-computed columns → a DataFrame with ``schema``; empty
-    columns give an empty frame."""
-    import pandas as pd
+def arrow_builder(schema):
+    """The output builder of every Python stage and driver-local finish:
+    ``schema`` (DDL or StructType), parsed here on the driver → a
+    function from a mapping of columns (numpy arrays, lists or Arrow
+    arrays) to a RecordBatch of exactly its Arrow types, which is what
+    Spark reads (``int32`` under ``long`` fails in the JVM).  A NaN
+    stays NaN; only ``None`` is NULL."""
+    arrow = to_arrow_schema(DataType.fromDDL(schema)
+                            if isinstance(schema, str) else schema)
 
-    pdf = pd.DataFrame(columns)
-    if len(pdf) == 0:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(pdf, schema)
+    def build(columns) -> pa.RecordBatch:
+        return pa.RecordBatch.from_arrays(
+            [c.cast(f.type) if isinstance(c, pa.Array)
+             else pa.array(c, type=f.type, from_pandas=False)
+             for f in arrow for c in [columns[f.name]]], schema=arrow)
+    return build
+
+
+def values(col) -> list:
+    """A column's per-row values for a Python kernel: lists as numpy
+    arrays (a Python float per ordinate costs more than the kernels),
+    structs as dicts of their fields' values, None for a NULL row."""
+    if pa.types.is_struct(col.type):
+        names = [f.name for f in col.type]
+        return [dict(zip(names, r)) if ok else None for ok, r in zip(
+            col.is_valid().to_pylist(), zip(*map(values, col.flatten())))]
+    return list(col.to_numpy(zero_copy_only=False)) \
+        if pa.types.is_list(col.type) else col.to_pylist()
+
+
+def map_arrow(df, fn, schema):
+    """``df.mapInArrow``: ``fn`` takes an iterator of RecordBatches and
+    yields column mappings, each built into a batch of ``schema``."""
+    build = arrow_builder(schema)
+    return df.mapInArrow(lambda batches: map(build, fn(batches)), schema)
+
+
+def apply_arrow(grouped, fn, schema):
+    """``grouped.applyInArrow``: ``fn(key, table)``, the group key as
+    Python values, returns the group's column mapping."""
+    build = arrow_builder(schema)
+    return grouped.applyInArrow(
+        lambda key, table: pa.Table.from_batches(
+            [build(fn(tuple(k.as_py() for k in key), table))]), schema)
+
+
+def to_spark(spark, columns: dict, schema):
+    """Driver-computed columns → a DataFrame with ``schema``, from one
+    Arrow table whose columns are already named: a bare LocalRelation."""
+    return spark.createDataFrame(
+        pa.Table.from_batches([arrow_builder(schema)(columns)]), schema)

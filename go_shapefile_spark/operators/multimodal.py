@@ -21,33 +21,32 @@ codec — never the production posture.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..sources.images import decode_image, pixels_from_phash
+from . import local
 
 FEATURE_DIM = 6 + 12  # mean/std per channel + 4-bin histogram per channel
 
 
-def _decode(row, stub_ok: bool) -> np.ndarray | None:
-    if row.fmt in ("png", "jpeg", "jpegp"):
-        return decode_image(row.bytes, row.fmt)
+def _decode(row: dict, stub_ok: bool) -> np.ndarray | None:
+    fmt = row["fmt"]
+    if fmt in ("png", "jpeg", "jpegp"):
+        return decode_image(row["bytes"], fmt)
     if stub_ok:
         # deterministic fake decode for formats with no sandbox codec
-        return pixels_from_phash(int(row.phash), int(row.w), int(row.h))
-    raise NotImplementedError(f"no codec for {row.fmt!r} in this environment")
+        return pixels_from_phash(*(int(row[c]) for c in ("phash", "w", "h")))
+    raise NotImplementedError(f"no codec for {fmt!r} in this environment")
 
 
-def _decoded_stacks(pdf: pd.DataFrame, stub_ok: bool):
+def _decoded_stacks(rb, stub_ok: bool):
     """Decode a batch and group same-shape images into stacked arrays:
     yields (row_indices, (n, h, w, 3) uint8 stack).  Decode is per-image
     by nature; the stacks let every downstream stage (resize, features,
     hashing) run as ONE numpy op across the group instead of per row."""
     by_shape: dict[tuple[int, int], tuple[list, list]] = {}
-    for i, row in enumerate(pdf.itertuples(index=False)):
+    for i, row in enumerate(rb.to_pylist()):
         img = _decode(row, stub_ok)
         idxs, imgs = by_shape.setdefault(img.shape[:2], ([], []))
         idxs.append(i)
@@ -130,12 +129,12 @@ def decode_resize_featurize(images: DataFrame, out_w: int = 8, out_h: int = 8,
     Decode is per-image (codec); resize and featurize run ONCE per
     same-shape stack (single fancy-index / reduction over (n, h, w, 3)).
     The thumbnail is raw RGB bytes of the resized image (out_h·out_w·3)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
+    def run(batches):
+        for rb in batches:
+            n = rb.num_rows
             thumbs = [None] * n
             feats = [None] * n
-            for idxs, stack in _decoded_stacks(pdf, stub_ok):
+            for idxs, stack in _decoded_stacks(rb, stub_ok):
                 h, w = stack.shape[1:3]
                 ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
                 xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
@@ -144,13 +143,13 @@ def decode_resize_featurize(images: DataFrame, out_w: int = 8, out_h: int = 8,
                 for j, i in enumerate(idxs):
                     thumbs[i] = resized[j].tobytes()
                     feats[i] = fs[j].tolist()
-            yield pd.DataFrame({"image_id": pdf["image_id"],
-                                "fmt": pdf["fmt"],
-                                "thumb": thumbs, "feature": feats})
+            yield {"image_id": rb.column("image_id"),
+                   "fmt": rb.column("fmt"),
+                   "thumb": thumbs, "feature": feats}
 
-    return images.mapInPandas(
-        run, schema="image_id string, fmt string, thumb binary, "
-                    "feature array<float>")
+    return local.map_arrow(
+        images, run, "image_id string, fmt string, thumb binary, "
+                     "feature array<float>")
 
 
 def augment_images(images: DataFrame, out_w: int = 8, out_h: int = 8,
@@ -172,17 +171,17 @@ def augment_images(images: DataFrame, out_w: int = 8, out_h: int = 8,
     if not 0.0 < crop_frac <= 1.0:
         raise ValueError(f"crop_frac must be in (0, 1], got {crop_frac}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
+    def run(batches):
+        for rb in batches:
+            n = rb.num_rows
             outs: list[bytes | None] = [None] * n
             flips = np.zeros(n, dtype=bool)
-            for idxs, stack in _decoded_stacks(pdf, stub_ok):
+            phash = rb.column("phash").to_numpy(zero_copy_only=False)
+            for idxs, stack in _decoded_stacks(rb, stub_ok):
                 g, h, w, _ = stack.shape
                 ch = max(1, int(round(h * crop_frac)))
                 cw = max(1, int(round(w * crop_frac)))
-                seeds = splitmix64(
-                    pdf["phash"].to_numpy()[idxs].astype(np.int64))
+                seeds = splitmix64(phash[idxs].astype(np.int64))
                 oy = (seeds % np.uint64(h - ch + 1)).astype(np.int64)
                 ox = ((seeds >> np.uint64(16))
                       % np.uint64(w - cw + 1)).astype(np.int64)
@@ -198,15 +197,15 @@ def augment_images(images: DataFrame, out_w: int = 8, out_h: int = 8,
                     flips[idxs] = do
                 for j, i in enumerate(idxs):
                     outs[i] = resized[j].tobytes()
-            yield pd.DataFrame({"image_id": pdf["image_id"],
-                                "aug": outs,
-                                "aug_w": np.full(n, out_w, dtype=np.int32),
-                                "aug_h": np.full(n, out_h, dtype=np.int32),
-                                "flipped": flips})
+            yield {"image_id": rb.column("image_id"),
+                   "aug": outs,
+                   "aug_w": np.full(n, out_w, dtype=np.int32),
+                   "aug_h": np.full(n, out_h, dtype=np.int32),
+                   "flipped": flips}
 
-    return images.mapInPandas(
-        run, schema="image_id string, aug binary, aug_w int, aug_h int, "
-                    "flipped boolean")
+    return local.map_arrow(
+        images, run, "image_id string, aug binary, aug_w int, aug_h int, "
+                     "flipped boolean")
 
 
 def frame_sample(videos: DataFrame, every_n: int = 10,
@@ -224,11 +223,11 @@ def frame_sample(videos: DataFrame, every_n: int = 10,
     """
     from ..sources.video_codec import sample_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for rb in batches:
             vids, idxs, frames = [], [], []
-            for row in pdf.itertuples(index=False):
-                data = bytes(row.bytes) if row.bytes is not None else b""
+            for row in rb.to_pylist():
+                data = row["bytes"] or b""
                 if data[:4] == b"RIFF":
                     got = []
                     try:
@@ -240,7 +239,7 @@ def frame_sample(videos: DataFrame, every_n: int = 10,
                         got = None          # stub fallback below
                     if got is not None:
                         for fi, px in got:
-                            vids.append(row.video_id)
+                            vids.append(row["video_id"])
                             idxs.append(fi)
                             frames.append(px)
                         continue
@@ -248,20 +247,20 @@ def frame_sample(videos: DataFrame, every_n: int = 10,
                     raise NotImplementedError(
                         "no codec for this video payload "
                         "(only MJPEG-AVI is supported in-sandbox)")
-                for fi in range(0, int(row.n_frames), every_n):
-                    px = pixels_from_phash(int(row.phash) + fi,
-                                           int(row.w), int(row.h))
-                    vids.append(row.video_id)
+                for fi in range(0, int(row["n_frames"]), every_n):
+                    px = pixels_from_phash(int(row["phash"]) + fi,
+                                           int(row["w"]), int(row["h"]))
+                    vids.append(row["video_id"])
                     idxs.append(fi)
                     frames.append(px.tobytes())
-            yield pd.DataFrame({"video_id": vids, "frame_idx": idxs,
-                                "frame": frames})
+            yield {"video_id": vids, "frame_idx": idxs,
+                   "frame": frames}
 
-    return videos.mapInPandas(
-        run, schema="video_id string, frame_idx int, frame binary")
+    return local.map_arrow(
+        videos, run, "video_id string, frame_idx int, frame binary")
 
 
-def _decode_audio(row, stub_ok: bool) -> tuple[np.ndarray, int]:
+def _decode_audio(row: dict, stub_ok: bool) -> tuple[np.ndarray, int]:
     """Audio row -> ((n,) float64 mono waveform in [-1, 1), sample
     rate).  The rate is the one DECODED from the container — features
     derived from it (duration, ZCR, centroid) must not silently trust a
@@ -269,16 +268,16 @@ def _decode_audio(row, stub_ok: bool) -> tuple[np.ndarray, int]:
     from ..sources.audio import samples_from_ahash
     from ..sources.audio_codec import decode_wav
 
-    if row.fmt in ("wav-pcm16", "wav-ulaw"):
-        samples, rate = decode_wav(bytes(row.bytes))
+    if row["fmt"] in ("wav-pcm16", "wav-ulaw"):
+        samples, rate = decode_wav(bytes(row["bytes"]))
         return samples.astype(np.float64).mean(axis=1) / 32768.0, rate
     if stub_ok:
         return (samples_from_ahash(
-            int(row.ahash), int(row.n_samples),
-            int(row.sample_rate)).astype(np.float64) / 32768.0,
-            int(row.sample_rate))
+            int(row["ahash"]), int(row["n_samples"]),
+            int(row["sample_rate"])).astype(np.float64) / 32768.0,
+            int(row["sample_rate"]))
     raise NotImplementedError(
-        f"no codec for {row.fmt!r} in this environment")
+        f"no codec for {row['fmt']!r} in this environment")
 
 
 def audio_features(audio: DataFrame, stub_ok: bool = False) -> DataFrame:
@@ -294,13 +293,13 @@ def audio_features(audio: DataFrame, stub_ok: bool = False) -> DataFrame:
     default: unknown formats raise unless ``stub_ok=True`` regenerates
     the deterministic waveform from ``ahash`` (plumbing tests only).
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
+    def run(batches):
+        for rb in batches:
+            n = rb.num_rows
             cols = {k: np.zeros(n) for k in
                     ("duration_s", "rms", "zcr_hz", "centroid", "peak")}
             groups: dict[tuple[int, int], tuple[list, list]] = {}
-            for i, row in enumerate(pdf.itertuples(index=False)):
+            for i, row in enumerate(rb.to_pylist()):
                 x, rate = _decode_audio(row, stub_ok)
                 idxs, xs = groups.setdefault((len(x), rate), ([], []))
                 idxs.append(i)
@@ -320,18 +319,18 @@ def audio_features(audio: DataFrame, stub_ok: bool = False) -> DataFrame:
                 freqs = np.fft.rfftfreq(ln, d=1.0 / sr)
                 denom = np.maximum(mag.sum(axis=1), 1e-30)
                 cols["centroid"][ii] = (mag @ freqs) / denom
-            yield pd.DataFrame({"audio_id": pdf["audio_id"],
-                                "fmt": pdf["fmt"],
-                                "duration_s": cols["duration_s"],
-                                "rms": cols["rms"],
-                                "zcr_hz": cols["zcr_hz"],
-                                "spectral_centroid_hz": cols["centroid"],
-                                "peak": cols["peak"]})
+            yield {"audio_id": rb.column("audio_id"),
+                   "fmt": rb.column("fmt"),
+                   "duration_s": cols["duration_s"],
+                   "rms": cols["rms"],
+                   "zcr_hz": cols["zcr_hz"],
+                   "spectral_centroid_hz": cols["centroid"],
+                   "peak": cols["peak"]}
 
-    return audio.mapInPandas(
-        run, schema="audio_id string, fmt string, duration_s double, "
-                    "rms double, zcr_hz double, "
-                    "spectral_centroid_hz double, peak double")
+    return local.map_arrow(
+        audio, run, "audio_id string, fmt string, duration_s double, "
+                    "rms double, zcr_hz double, spectral_centroid_hz double, "
+                    "peak double")
 
 
 def audio_resample(audio: DataFrame, target_rate: int,
@@ -353,13 +352,13 @@ def audio_resample(audio: DataFrame, target_rate: int,
     if target_rate <= 0:
         raise ValueError(f"target_rate must be positive, got {target_rate}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
+    def run(batches):
+        for rb in batches:
+            n = rb.num_rows
             outs: list[bytes | None] = [None] * n
             lens = np.zeros(n, dtype=np.int64)
             groups: dict[tuple[int, int], tuple[list, list]] = {}
-            for i, row in enumerate(pdf.itertuples(index=False)):
+            for i, row in enumerate(rb.to_pylist()):
                 x, rate = _decode_audio(row, stub_ok)
                 idxs, xs = groups.setdefault((len(x), rate), ([], []))
                 idxs.append(i)
@@ -377,15 +376,15 @@ def audio_resample(audio: DataFrame, target_rate: int,
                 for j, i in enumerate(idxs):
                     outs[i] = encode_wav(pcm[j], target_rate)
                     lens[i] = out_n
-            yield pd.DataFrame({"audio_id": pdf["audio_id"],
-                                "bytes": outs,
-                                "n_samples": lens,
-                                "sample_rate": np.full(n, target_rate,
-                                                       dtype=np.int64),
-                                "fmt": ["wav-pcm16"] * n})
+            yield {"audio_id": rb.column("audio_id"),
+                   "bytes": outs,
+                   "n_samples": lens,
+                   "sample_rate": np.full(n, target_rate,
+                                          dtype=np.int64),
+                   "fmt": ["wav-pcm16"] * n}
 
-    return audio.mapInPandas(
-        run, schema="audio_id string, bytes binary, n_samples long, "
+    return local.map_arrow(
+        audio, run, "audio_id string, bytes binary, n_samples long, "
                     "sample_rate long, fmt string")
 
 
@@ -407,26 +406,24 @@ def audio_fingerprint(audio: DataFrame,
     clips >= 11 bits apart while mu-law re-encodes stay within 3).
     Returns (audio_id, afp).
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({"audio_id": pdf["audio_id"],
-                                "afp": fingerprint_batch(pdf, stub_ok)})
+    def run(batches):
+        for rb in batches:
+            yield {"audio_id": rb.column("audio_id"),
+                   "afp": fingerprint_batch(rb, stub_ok)}
 
-    return audio.mapInPandas(
-        run, schema="audio_id string, afp long")
+    return local.map_arrow(audio, run, "audio_id string, afp long")
 
 
-def fingerprint_batch(pdf: pd.DataFrame,
-                      stub_ok: bool = False) -> np.ndarray:
-    """The :func:`audio_fingerprint` kernel over one pandas batch ->
+def fingerprint_batch(rb, stub_ok: bool = False) -> np.ndarray:
+    """The :func:`audio_fingerprint` kernel over one Arrow batch ->
     int64 hashes aligned to the batch rows.  Shared by the batch
     operator and the streaming dedup stage (the math must be identical
     or a streaming backfill would disagree with the batch dedup)."""
     g, nb = AFP_SEGMENTS, AFP_BANDS
     weights = np.uint64(1) << np.arange(g * nb, dtype=np.uint64)
-    hashes = np.zeros(len(pdf), dtype=np.uint64)
+    hashes = np.zeros(rb.num_rows, dtype=np.uint64)
     groups: dict[int, tuple[list, list]] = {}
-    for i, row in enumerate(pdf.itertuples(index=False)):
+    for i, row in enumerate(rb.to_pylist()):
         x, _rate = _decode_audio(row, stub_ok)
         idxs, xs = groups.setdefault(len(x), ([], []))
         idxs.append(i)
@@ -485,11 +482,11 @@ def extract_patches(images: DataFrame, patch: int = 8,
     pretraining stats) group by (image_id) or (py, px) — both plain
     shuffle keys.
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for rb in batches:
             out_ids, out_py, out_px, out_bytes, out_sums = [], [], [], [], []
-            ids_all = pdf["image_id"].to_numpy()
-            for idxs, stack in _decoded_stacks(pdf, stub_ok):
+            ids_all = rb.column("image_id").to_numpy(zero_copy_only=False)
+            for idxs, stack in _decoded_stacks(rb, stub_ok):
                 n, h, w, _ = stack.shape
                 gh, gw = h // patch, w // patch
                 if gh == 0 or gw == 0:
@@ -511,16 +508,15 @@ def extract_patches(images: DataFrame, patch: int = 8,
                 out_bytes.extend(p.tobytes() for p in flat)
                 out_sums.append(sums.ravel())
             if out_ids:
-                yield pd.DataFrame({
-                    "image_id": np.concatenate(out_ids),
-                    "py": np.concatenate(out_py).astype(np.int32),
-                    "px": np.concatenate(out_px).astype(np.int32),
-                    "patch": out_bytes,
-                    "psum": np.concatenate(out_sums)})
+                yield {"image_id": np.concatenate(out_ids),
+                       "py": np.concatenate(out_py),
+                       "px": np.concatenate(out_px),
+                       "patch": out_bytes,
+                       "psum": np.concatenate(out_sums)}
 
-    return images.mapInPandas(
-        run, schema="image_id string, py int, px int, patch binary, "
-                    "psum long")
+    return local.map_arrow(
+        images, run, "image_id string, py int, px int, patch binary, "
+                     "psum long")
 
 
 def image_pixel_sums(images: DataFrame, stub_ok: bool = False) -> DataFrame:
@@ -528,18 +524,18 @@ def image_pixel_sums(images: DataFrame, stub_ok: bool = False) -> DataFrame:
     An independent whole-array reduction used to cross-check patch
     partitioning (and as a cheap content fingerprint for exact dedup
     of decoded pixels)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sums = np.zeros(len(pdf), dtype=np.int64)
-            npx = np.zeros(len(pdf), dtype=np.int64)
-            for idxs, stack in _decoded_stacks(pdf, stub_ok):
+    def run(batches):
+        for rb in batches:
+            sums = np.zeros(rb.num_rows, dtype=np.int64)
+            npx = np.zeros(rb.num_rows, dtype=np.int64)
+            for idxs, stack in _decoded_stacks(rb, stub_ok):
                 sums[idxs] = stack.sum(axis=(1, 2, 3), dtype=np.int64)
                 npx[idxs] = stack.shape[1] * stack.shape[2] * stack.shape[3]
-            yield pd.DataFrame({"image_id": pdf["image_id"],
-                                "pix_sum": sums, "n_px": npx})
+            yield {"image_id": rb.column("image_id"),
+                   "pix_sum": sums, "n_px": npx}
 
-    return images.mapInPandas(
-        run, schema="image_id string, pix_sum long, n_px long")
+    return local.map_arrow(
+        images, run, "image_id string, pix_sum long, n_px long")
 
 
 def image_quality_stats(images: DataFrame, stub_ok: bool = False) -> DataFrame:
@@ -565,12 +561,12 @@ def image_quality_stats(images: DataFrame, stub_ok: bool = False) -> DataFrame:
     first (extract_patches).  Arrow-batched; same-shape images reduce
     as one numpy pass (the _decoded_stacks discipline).
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: np.zeros(len(pdf), dtype=np.int64)
+    def run(batches):
+        for rb in batches:
+            cols = {k: np.zeros(rb.num_rows, dtype=np.int64)
                     for k in ("n_pix", "sum_luma", "sum_luma2",
                               "n_int", "sum_lap", "sum_lap2")}
-            for idxs, stack in _decoded_stacks(pdf, stub_ok):
+            for idxs, stack in _decoded_stacks(rb, stub_ok):
                 s = stack.astype(np.int64)
                 luma = 299 * s[..., 0] + 587 * s[..., 1] + 114 * s[..., 2]
                 n, h, w = luma.shape
@@ -584,12 +580,11 @@ def image_quality_stats(images: DataFrame, stub_ok: bool = False) -> DataFrame:
                     cols["n_int"][idxs] = (h - 2) * (w - 2)
                     cols["sum_lap"][idxs] = lap.sum(axis=(1, 2))
                     cols["sum_lap2"][idxs] = (lap * lap).sum(axis=(1, 2))
-            yield pd.DataFrame({"image_id": pdf["image_id"], **cols})
+            yield {"image_id": rb.column("image_id"), **cols}
 
-    return images.mapInPandas(
-        run, schema=("image_id string, n_pix long, sum_luma long, "
-                     "sum_luma2 long, n_int long, sum_lap long, "
-                     "sum_lap2 long"))
+    return local.map_arrow(
+        images, run, "image_id string, n_pix long, sum_luma long, "
+                     "sum_luma2 long, n_int long, sum_lap long, sum_lap2 long")
 
 
 LUMA_HIST_BINS = 16
@@ -616,20 +611,19 @@ def image_luma_histogram(images: DataFrame,
     downstream).  All-integer; the 16-way fan-out happens in-kernel,
     so the only shuffle is whatever the caller aggregates next.
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for rb in batches:
+            image_ids = rb.column("image_id").to_pylist()
             ids, bins_, counts = [], [], []
-            for idxs, stack in _decoded_stacks(pdf, stub_ok):
+            for idxs, stack in _decoded_stacks(rb, stub_ok):
                 hist = luma_hist_stack(stack)
                 for row, hv in zip(idxs, hist):
-                    ids.extend([pdf["image_id"].iloc[row]] * LUMA_HIST_BINS)
+                    ids.extend([image_ids[row]] * LUMA_HIST_BINS)
                     bins_.extend(range(LUMA_HIST_BINS))
                     counts.extend(int(x) for x in hv)
-            yield pd.DataFrame({"image_id": ids, "bin": bins_,
-                                "n": counts})
+            yield {"image_id": ids, "bin": bins_, "n": counts}
 
-    return images.mapInPandas(
-        run, schema="image_id string, bin int, n long")
+    return local.map_arrow(images, run, "image_id string, bin int, n long")
 
 
 AHASH_GRID = 8          # 8x8 grid -> 64-bit hash
@@ -648,18 +642,17 @@ def image_ahash(images: DataFrame, stub_ok: bool = False) -> DataFrame:
     within a few bits of their original.  Arrow-batched; per-image codec
     work is inherent.
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = np.zeros(len(pdf), dtype=np.uint64)
-            for idxs, stack in _decoded_stacks(pdf, stub_ok):
+    def run(batches):
+        for rb in batches:
+            hashes = np.zeros(rb.num_rows, dtype=np.uint64)
+            for idxs, stack in _decoded_stacks(rb, stub_ok):
                 gray = stack.astype(np.float64).mean(axis=3)  # (n, h, w)
                 hashes[idxs] = _ahash_gray_stack(gray)
             # uint64 accumulate, reinterpret as int64 (bit 63 = sign)
-            yield pd.DataFrame({"image_id": pdf["image_id"],
-                                "ahash": hashes.view(np.int64)})
+            yield {"image_id": rb.column("image_id"),
+                   "ahash": hashes.view(np.int64)}
 
-    return images.mapInPandas(
-        run, schema="image_id string, ahash long")
+    return local.map_arrow(images, run, "image_id string, ahash long")
 
 
 def _ahash_gray_stack(gray: np.ndarray) -> np.ndarray:
@@ -729,18 +722,17 @@ def image_phash_dct(images: DataFrame, stub_ok: bool = False) -> DataFrame:
     block means drift.  Arrow-batched, same-shape stacking, one
     einsum per stack.
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = np.zeros(len(pdf), dtype=np.uint64)
-            for idxs, stack in _decoded_stacks(pdf, stub_ok):
+    def run(batches):
+        for rb in batches:
+            hashes = np.zeros(rb.num_rows, dtype=np.uint64)
+            for idxs, stack in _decoded_stacks(rb, stub_ok):
                 small = resize_bilinear_stack(stack, PHASH_DIM, PHASH_DIM)
                 gray = small.astype(np.float64).mean(axis=3)
                 hashes[idxs] = _phash_gray_stack(gray)
-            yield pd.DataFrame({"image_id": pdf["image_id"],
-                                "phash_dct": hashes.view(np.int64)})
+            yield {"image_id": rb.column("image_id"),
+                   "phash_dct": hashes.view(np.int64)}
 
-    return images.mapInPandas(
-        run, schema="image_id string, phash_dct long")
+    return local.map_arrow(images, run, "image_id string, phash_dct long")
 
 
 def image_phash_neardup_pairs(images: DataFrame, max_hamming: int = 10,
@@ -772,18 +764,18 @@ def video_fingerprint(videos: DataFrame, every_n: int = 2,
     mean images batch into one numpy pass."""
     from ..sources.video_codec import sample_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = np.zeros(len(pdf), dtype=np.uint64)
+    def run(batches):
+        for rb in batches:
+            hashes = np.zeros(rb.num_rows, dtype=np.uint64)
             by_shape: dict[tuple[int, int], tuple[list, list]] = {}
-            for i, row in enumerate(pdf.itertuples(index=False)):
-                data = bytes(row.bytes) if row.bytes is not None else b""
+            for i, row in enumerate(rb.to_pylist()):
+                data = row["bytes"] or b""
                 if data[:4] == b"RIFF":
                     frames = [px for _, px in sample_frames(data, every_n)]
                 elif stub_ok:
-                    frames = [pixels_from_phash(int(row.phash) + fi,
-                                                int(row.w), int(row.h))
-                              for fi in range(0, int(row.n_frames),
+                    frames = [pixels_from_phash(int(row["phash"]) + fi,
+                                                int(row["w"]), int(row["h"]))
+                              for fi in range(0, int(row["n_frames"]),
                                               every_n)]
                 else:
                     raise NotImplementedError(
@@ -795,11 +787,10 @@ def video_fingerprint(videos: DataFrame, every_n: int = 2,
                 means.append(mean.mean(axis=2))   # grayscale
             for (h, w), (idxs, means) in by_shape.items():
                 hashes[np.asarray(idxs)] = _ahash_gray_stack(np.stack(means))
-            yield pd.DataFrame({"video_id": pdf["video_id"],
-                                "vhash": hashes.view(np.int64)})
+            yield {"video_id": rb.column("video_id"),
+                   "vhash": hashes.view(np.int64)}
 
-    return videos.mapInPandas(
-        run, schema="video_id string, vhash long")
+    return local.map_arrow(videos, run, "video_id string, vhash long")
 
 
 def video_neardup_pairs(videos: DataFrame, max_hamming: int = 3,
@@ -865,7 +856,7 @@ def banded_hash_pairs(sig: DataFrame, id_col: str, hash_col: str,
     # The signature relation is referenced FOUR times below (ranked,
     # identical-hash join, both band sides); Spark inlines the subtree
     # per reference, so without a pin the decode+hash Python stage runs
-    # 4x (measured: 4 MapInPandas nodes in the executed plan).  Pin it
+    # 4x (measured: 4 Python map nodes in the executed plan).  Pin it
     # once under an anonymous per-call slot (round-4 CacheManager
     # lesson: cache() silently fails to substitute inside banded
     # self-join compositions).
@@ -941,32 +932,27 @@ def image_metadata(images: DataFrame) -> DataFrame:
     from ..sources.images import png_header
     from ..sources.jpeg_codec import jpeg_header
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "fmt": [], "width": [], "height": [],
-                   "n_comps": [], "progressive": [], "sampling": []}
-            for iid, fmt, buf in zip(pdf["image_id"], pdf["fmt"],
-                                     pdf["bytes"]):
-                data = bytes(buf)
-                if fmt == "png":
-                    hd = png_header(data)
-                elif fmt in ("jpeg", "jpegp"):
-                    hd = jpeg_header(data)
-                else:
-                    raise ValueError(f"unknown image format {fmt!r}")
-                out["image_id"].append(iid)
-                out["fmt"].append(fmt)
-                out["width"].append(hd["w"])
-                out["height"].append(hd["h"])
-                out["n_comps"].append(hd["n_comps"])
-                out["progressive"].append(int(hd["progressive"]))
-                out["sampling"].append(f"{hd['max_h']}x{hd['max_v']}")
-            yield pd.DataFrame(out)
+    def header(fmt: str, data: bytes) -> dict:
+        if fmt == "png":
+            return png_header(data)
+        if fmt in ("jpeg", "jpegp"):
+            return jpeg_header(data)
+        raise ValueError(f"unknown image format {fmt!r}")
 
-    return images.mapInPandas(
-        run, schema="image_id string, fmt string, width long, "
-                    "height long, n_comps long, progressive long, "
-                    "sampling string")
+    def run(batches):
+        for rb in batches:
+            hds = [header(fmt, bytes(buf)) for fmt, buf in zip(
+                rb.column("fmt").to_pylist(), rb.column("bytes").to_pylist())]
+            yield {"image_id": rb.column("image_id"), "fmt": rb.column("fmt"),
+                   "width": [hd["w"] for hd in hds],
+                   "height": [hd["h"] for hd in hds],
+                   "n_comps": [hd["n_comps"] for hd in hds],
+                   "progressive": [int(hd["progressive"]) for hd in hds],
+                   "sampling": [f"{hd['max_h']}x{hd['max_v']}" for hd in hds]}
+
+    return local.map_arrow(
+        images, run, "image_id string, fmt string, width long, height long, "
+                     "n_comps long, progressive long, sampling string")
 
 
 def audio_metadata(clips: DataFrame) -> DataFrame:
@@ -976,20 +962,17 @@ def audio_metadata(clips: DataFrame) -> DataFrame:
     containers."""
     from ..sources.audio_codec import wav_header
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"audio_id": [], "format_tag": [], "n_channels": [],
-                   "sample_rate": [], "bits": [], "n_samples": []}
-            for aid, buf in zip(pdf["audio_id"], pdf["bytes"]):
-                hd = wav_header(bytes(buf))
-                out["audio_id"].append(aid)
-                for k in ("format_tag", "n_channels", "sample_rate",
-                          "bits", "n_samples"):
-                    out[k].append(hd[k])
-            yield pd.DataFrame(out)
+    def run(batches):
+        for rb in batches:
+            hds = [wav_header(bytes(buf))
+                   for buf in rb.column("bytes").to_pylist()]
+            yield {"audio_id": rb.column("audio_id"),
+                   **{k: [hd[k] for hd in hds] for k in (
+                       "format_tag", "n_channels", "sample_rate", "bits",
+                       "n_samples")}}
 
-    return clips.mapInPandas(
-        run, schema="audio_id string, format_tag long, n_channels long, "
+    return local.map_arrow(
+        clips, run, "audio_id string, format_tag long, n_channels long, "
                     "sample_rate long, bits long, n_samples long")
 
 
@@ -999,20 +982,15 @@ def video_metadata(videos: DataFrame) -> DataFrame:
     malformed containers."""
     from ..sources.video_codec import avi_header
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"video_id": [], "codec": [], "width": [],
-                   "height": [], "fps": [], "n_frames": []}
-            for vid, buf in zip(pdf["video_id"], pdf["bytes"]):
-                hd = avi_header(bytes(buf))
-                out["video_id"].append(vid)
-                out["codec"].append(hd["codec"])
-                out["width"].append(hd["w"])
-                out["height"].append(hd["h"])
-                out["fps"].append(hd["fps"])
-                out["n_frames"].append(hd["n_frames"])
-            yield pd.DataFrame(out)
+    def run(batches):
+        for rb in batches:
+            hds = [avi_header(bytes(buf))
+                   for buf in rb.column("bytes").to_pylist()]
+            yield {"video_id": rb.column("video_id"),
+                   **{k: [hd[h] for hd in hds] for k, h in (
+                       ("codec", "codec"), ("width", "w"), ("height", "h"),
+                       ("fps", "fps"), ("n_frames", "n_frames"))}}
 
-    return videos.mapInPandas(
-        run, schema="video_id string, codec string, width long, "
-                    "height long, fps long, n_frames long")
+    return local.map_arrow(
+        videos, run, "video_id string, codec string, width long, height long, "
+                     "fps long, n_frames long")

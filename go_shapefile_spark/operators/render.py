@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import hashes as H
 from . import geotag as GT
+from . import local
 from .tiles import heatmap_body
 
 RENDER_N_IDS = 10_000      # fixed deterministic corpus (sf-independent)
@@ -104,8 +105,6 @@ def render_heatmap_tiles(spark: SparkSession, n_ids: int = RENDER_N_IDS,
 
     Returns ``(tx, ty, n_px, sum_intensity, png_md5, png)`` — one row
     per non-empty tile, bytes included (the served payload)."""
-    import pandas as pd
-
     hm = spark.sql(
         "WITH " + render_pts_cte(H.SPARK, n_ids).lstrip().rstrip() + ","
         + heatmap_body(H.SPARK, ppd=ppd))
@@ -114,20 +113,19 @@ def render_heatmap_tiles(spark: SparkSession, n_ids: int = RENDER_N_IDS,
         f"{_floordiv('x', tile_px, H.SPARK)} AS tx",
         f"{_floordiv('y', tile_px, H.SPARK)} AS ty")
 
-    def render(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
+    def render(key: tuple, table) -> dict:
+        tx, ty = key
+        inten = table.column("intensity").to_numpy()
         png = _render_tile_png(
-            tx, ty, pdf["x"].to_numpy(np.int64),
-            pdf["y"].to_numpy(np.int64),
-            pdf["intensity"].to_numpy(np.int64), tile_px)
-        return pd.DataFrame({
-            "tx": [tx], "ty": [ty], "n_px": [len(pdf)],
-            "sum_intensity": [int(pdf["intensity"].sum())],
-            "png_md5": [hashlib.md5(png).hexdigest()], "png": [png]})
+            tx, ty, table.column("x").to_numpy(),
+            table.column("y").to_numpy(), inten, tile_px)
+        return {"tx": [tx], "ty": [ty], "n_px": [table.num_rows],
+                "sum_intensity": [int(inten.sum())],
+                "png_md5": [hashlib.md5(png).hexdigest()], "png": [png]}
 
-    return tiled.groupBy("tx", "ty").applyInPandas(
-        render, schema="tx long, ty long, n_px long, sum_intensity long, "
-                       "png_md5 string, png binary")
+    return local.apply_arrow(
+        tiled.groupBy("tx", "ty"), render, "tx long, ty long, n_px long, "
+        "sum_intensity long, png_md5 string, png binary")
 
 
 # --- hillshade tiles (shaded relief of the density surface) ---------------
@@ -221,8 +219,6 @@ def render_hillshade_tiles(spark: SparkSession,
     5×5 blur → Horn gradient splat (ALL JVM, exact integers) → per-tile
     numpy shading + PNG encode.  Returns (tx, ty, n_px, png_md5, png).
     """
-    import pandas as pd
-
     from . import raster as RA
 
     hm = spark.sql(
@@ -236,17 +232,15 @@ def render_hillshade_tiles(spark: SparkSession,
         f"{_floordiv('x', tile_px, H.SPARK)} AS tx",
         f"{_floordiv('y', tile_px, H.SPARK)} AS ty")
 
-    def render(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
+    def render(key: tuple, table) -> dict:
+        tx, ty = key
         png = _hillshade_tile_png(
-            tx, ty, pdf["x"].to_numpy(np.int64),
-            pdf["y"].to_numpy(np.int64),
-            pdf["gx"].to_numpy(np.int64), pdf["gy"].to_numpy(np.int64),
-            tile_px)
-        return pd.DataFrame({
-            "tx": [tx], "ty": [ty], "n_px": [len(pdf)],
-            "png_md5": [hashlib.md5(png).hexdigest()], "png": [png]})
+            tx, ty, table.column("x").to_numpy(),
+            table.column("y").to_numpy(), table.column("gx").to_numpy(),
+            table.column("gy").to_numpy(), tile_px)
+        return {"tx": [tx], "ty": [ty], "n_px": [table.num_rows],
+                "png_md5": [hashlib.md5(png).hexdigest()], "png": [png]}
 
-    return tiled.groupBy("tx", "ty").applyInPandas(
-        render, schema="tx long, ty long, n_px long, "
-                       "png_md5 string, png binary")
+    return local.apply_arrow(
+        tiled.groupBy("tx", "ty"), render,
+        "tx long, ty long, n_px long, png_md5 string, png binary")

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..functions import hashes as H
+from . import local
 
 
 def heavy_hitters(tokens: DataFrame, col: str = "tok",
@@ -56,7 +57,7 @@ def heavy_hitters(tokens: DataFrame, col: str = "tok",
 
     Returns ``(item, cnt)`` with the input column's name preserved.
     """
-    import pandas as pd
+    import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
     c = int(capacity)
@@ -66,18 +67,19 @@ def heavy_hitters(tokens: DataFrame, col: str = "tok",
     def sketch(batches):
         state: dict = {}
         n_seen = 0
-        for pdf in batches:
-            vc = pdf[col].value_counts()
-            n_seen += int(vc.sum())
-            for tok, k in vc.items():
-                state[tok] = state.get(tok, 0) + int(k)
+        for rb in batches:
+            toks = rb.column(col).drop_null()
+            n_seen += len(toks)
+            for vc in pc.value_counts(toks).to_pylist():
+                state[vc["values"]] = state.get(vc["values"], 0) + vc["counts"]
             if len(state) > c:
                 m = sorted(state.values(), reverse=True)[c]
                 state = {t: v - m for t, v in state.items() if v > m}
-        yield pd.DataFrame({col: list(state) + [None],
-                            "cnt": list(state.values()) + [n_seen]})
+        yield {col: list(state) + [None],
+               "cnt": list(state.values()) + [n_seen]}
 
-    sk = tokens.select(col).mapInPandas(sketch, f"{col} string, cnt long")
+    sk = local.map_arrow(tokens.select(col), sketch,
+                         f"{col} string, cnt long")
     rows = sk.collect()                      # <= (c+1) x partitions rows
     n = sum(r.cnt for r in rows if r[col] is None)
     cands = sorted({r[col] for r in rows if r[col] is not None})
@@ -168,6 +170,23 @@ def kmv_overlap_sql(dialect: str, rel: str = "events",
     the pairwise stage runs on sketches only — pairs never touch the
     raw member stream.
     """
+    return kmv_ctes_sql(dialect, rel, group, member, k) + f"""\
+SELECT g1, g2, exact_union, exact_inter,
+       (ABS(est_union - exact_union)
+          <= GREATEST(CAST(3.0 AS DOUBLE),
+                      {float(union_tol)!r} * exact_union)) AS union_ok,
+       (ABS(jac_est * est_union - exact_inter)
+          <= GREATEST(CAST(5.0 AS DOUBLE),
+                      {float(inter_tol)!r} * exact_union)) AS inter_ok
+FROM kfinal
+"""
+
+
+def kmv_ctes_sql(dialect: str, rel: str = "events",
+                 group: str = "event_type", member: str = "user_id",
+                 k: int = 64) -> str:
+    """:func:`kmv_overlap_sql`'s CTEs, up to ``kfinal`` (per group pair:
+    exact union/intersection and the KMV estimates)."""
     st = "STRING" if dialect == H.SPARK else "VARCHAR"
     h = H.h32(f"CAST(m AS {st})", dialect)
     two32 = float(1 << 32)
@@ -218,12 +237,4 @@ kfinal AS (
                    / CAST(e.h_k AS DOUBLE) END AS est_union,
          CAST(e.n_shared AS DOUBLE) / CAST(e.n_u AS DOUBLE) AS jac_est
   FROM kest e JOIN kexact x ON e.g1 = x.g1 AND e.g2 = x.g2)
-SELECT g1, g2, exact_union, exact_inter,
-       (ABS(est_union - exact_union)
-          <= GREATEST(CAST(3.0 AS DOUBLE),
-                      {float(union_tol)!r} * exact_union)) AS union_ok,
-       (ABS(jac_est * est_union - exact_inter)
-          <= GREATEST(CAST(5.0 AS DOUBLE),
-                      {float(inter_tol)!r} * exact_union)) AS inter_ok
-FROM kfinal
 """

@@ -21,8 +21,6 @@ downstream aggregations (see operators/skew.py).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -94,19 +92,20 @@ def _map_polygons(features: DataFrame, cover, schema: str) -> DataFrame:
     """``cover(polygons)`` per task over ``features`` rows (fid, geometry;
     NULL geometries skipped) — nothing is collected to the driver."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for rb in batches:
             polys = [_poly_dict(fid, g["layout"], g["coords"], g["ends"])
-                     for fid, g in zip(pdf["fid"], pdf["geometry"])
+                     for fid, g in zip(rb.column("fid").to_pylist(),
+                                       local.values(rb.column("geometry")))
                      if g is not None]
             if polys:
                 yield cover(polys)
 
     # spread polygons across tasks — the cover build is CPU-bound per
     # polygon and input files may pack all polygons into one split
-    return (features.select("fid", "geometry")
-            .repartition(F.col("fid"))
-            .mapInPandas(build, schema=schema))
+    return local.map_arrow(
+        features.select("fid", "geometry").repartition(F.col("fid")), run,
+        schema)
 
 
 def _split_rects(box: np.ndarray, prow: np.ndarray, pe: np.ndarray,
@@ -382,8 +381,8 @@ def _cover_arrays(polygons: list[dict], res: int, split_k: int) -> dict:
     }
 
 
-def join_cover(polygons: list[dict], res: int) -> pd.DataFrame:
-    """The join's cover rows (``JOIN_SCHEMA``) — the one build both
+def join_cover(polygons: list[dict], res: int) -> dict:
+    """The join's cover columns (``JOIN_SCHEMA``) — the one build both
     ``PreparedCover`` paths run (driver, and per task in ``from_features``).
 
     Full cells carry ``_sj_full``.  Partial cells with more than
@@ -433,7 +432,7 @@ def join_cover(polygons: list[dict], res: int) -> pd.DataFrame:
     for r in np.nonzero(wide)[0]:
         lists[r] = seg[starts[r]:starts[r] + counts[r]].tolist()
     out["_sj_edges"] = lists
-    return pd.DataFrame(out)
+    return out
 
 
 def _crossing_sql(p: str, q: str, rx: str, ry: str, edge: tuple,
@@ -507,7 +506,7 @@ def _join_filter_sql(p: str, q: str, unrolled: bool) -> str:
 
 class PreparedCover:
     """Session-lifetime cover artifact, built once and reused across
-    joins — the pandas→Spark conversion is paid once per session, like
+    joins — the Arrow→Spark conversion is paid once per session, like
     building any index.
 
     ``rows`` is the one relation the join probes: full cells and the
@@ -555,20 +554,22 @@ class PreparedCover:
         return self
 
     def __init__(self, spark: SparkSession, polygons: list[dict], res: int):
-        # columns are named in pandas: a Project (even a rename) over
-        # the wide join relation costs every join against it ~0.8 s of
-        # planning (measured on a 9,185-row, ~100-column relation)
+        # columns are named in the Arrow table: a Project (even a rename)
+        # over the wide join relation costs every join against it ~0.8 s
+        # of planning (measured on a 9,185-row, ~100-column relation)
         self.res = res
         cover = join_cover(polygons, res)
-        self.broadcast = local.within(len(cover), local.BROADCAST_ROWS)
-        is_wide = cover["_sj_edges"].notna()
-        rows = cover[~is_wide].drop(columns="_sj_edges")
+        self.broadcast = local.within(len(cover["cell"]),
+                                      local.BROADCAST_ROWS)
+        is_wide = np.not_equal(cover["_sj_edges"], None)
+        rows = {k: v[~is_wide] for k, v in cover.items()
+                if k != "_sj_edges"}
         self.rows = local.to_spark(spark, rows, ROWS_SCHEMA)
         self._has_narrow = not rows["_sj_full"].all()
         self.wide = None
         if is_wide.any():
-            self.wide = spark.createDataFrame(cover.loc[is_wide, WIDE_COLS],
-                                              schema=WIDE_SCHEMA)
+            self.wide = local.to_spark(
+                spark, {k: cover[k][is_wide] for k in WIDE_COLS}, WIDE_SCHEMA)
 
     # ``full`` and ``narrow`` put a Filter (and a Project) over ``rows``,
     # which ConvertToLocalRelation re-evaluates row by row on every

@@ -9,7 +9,7 @@
   join's clipped-edge crossing-parity predicate — pure JVM past the
   (distributed) cover build, no polygon state on the driver.
 * ``vectorize_raster`` — raster→vector: per-tile pixel rows are merged
-  into maximal horizontal runs, then rectangles, via ``applyInPandas``
+  into maximal horizontal runs, then rectangles, via ``applyInArrow``
   per (cell, fid) group.  Output rectangles are exact covers of the
   input pixels.
 """
@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
+from . import local
 from .spatial_join import (
     JOIN_SCHEMA, UNROLL_K, _map_polygons, aggregate_crossings_sql, join_cover,
     parity_sql, unrolled_crossings_sql)
@@ -305,22 +306,21 @@ def _pixel_span(lo: np.ndarray, hi: np.ndarray, c0: np.ndarray,
     return first, end - first
 
 
-def raster_cover(polygons: list[dict], res: int, tile_px: int) -> pd.DataFrame:
-    """The join's cover rows (``join_cover``) with what the pixel stage
-    reads besides them (``RASTER_SCHEMA``): the cell's SW corner
+def raster_cover(polygons: list[dict], res: int, tile_px: int) -> dict:
+    """The join's cover columns (``join_cover``) with what the pixel
+    stage reads besides them (``RASTER_SCHEMA``): the cell's SW corner
     ``lon0, lat0`` and the row's pixels, ``nx`` × ``ny`` from ``px0,
     py0`` — every pixel whose centre lies in the row's half-open
     sub-rectangle.  Rows holding no pixel centre are dropped."""
     cover = join_cover(polygons, res)
-    lon0, lat0, lon1, lat1 = C.cell_bounds_np(cover["cell"].to_numpy())
-    px0, nx = _pixel_span(cover["_sj_x0"].to_numpy(),
-                          cover["_sj_x1"].to_numpy(), lon0, lon1, tile_px)
-    py0, ny = _pixel_span(cover["_sj_y0"].to_numpy(),
-                          cover["_sj_y1"].to_numpy(), lat0, lat1, tile_px)
-    cover = cover.assign(lon0=lon0, lat0=lat0,
-                         px0=px0.astype(np.int32), nx=nx.astype(np.int32),
-                         py0=py0.astype(np.int32), ny=ny.astype(np.int32))
-    return cover[(nx > 0) & (ny > 0)]
+    lon0, lat0, lon1, lat1 = C.cell_bounds_np(cover["cell"])
+    px0, nx = _pixel_span(cover["_sj_x0"], cover["_sj_x1"], lon0, lon1,
+                          tile_px)
+    py0, ny = _pixel_span(cover["_sj_y0"], cover["_sj_y1"], lat0, lat1,
+                          tile_px)
+    cover.update(lon0=lon0, lat0=lat0, px0=px0, nx=nx, py0=py0, ny=ny)
+    keep = (nx > 0) & (ny > 0)
+    return {k: v[keep] for k, v in cover.items()}
 
 
 def rasterize_features(features: DataFrame, res: int,
@@ -409,10 +409,11 @@ def vectorize_raster(raster: DataFrame, tile_px: int = 16) -> DataFrame:
     axis-aligned rectangles (greedy row-run merge).  Exact inverse of a
     rasterization in the sense that the union of rectangles equals the
     pixel set."""
-    def to_rects(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def to_rects(key, table) -> dict:
         cell, fid = key
         occ = np.zeros((tile_px, tile_px), dtype=bool)
-        occ[pdf["py"].to_numpy(), pdf["px"].to_numpy()] = True
+        occ[table.column("py").to_numpy(),
+            table.column("px").to_numpy()] = True
         rects = []  # (x0, y0, x1, y1) inclusive pixel coords
         open_runs: dict[tuple[int, int], list] = {}
         for y in range(tile_px):
@@ -439,11 +440,10 @@ def vectorize_raster(raster: DataFrame, tile_px: int = 16) -> DataFrame:
                 rects.append(rect)
             open_runs = next_open
         rects.extend(open_runs.values())
-        return pd.DataFrame({
-            "cell": np.full(len(rects), cell, dtype=np.int64),
-            "fid": np.full(len(rects), fid, dtype=np.int64),
-            "x0": [r[0] for r in rects], "y0": [r[1] for r in rects],
-            "x1": [r[2] for r in rects], "y1": [r[3] for r in rects]})
+        r = np.array(rects, dtype=np.int64).reshape(-1, 4)
+        return {"cell": np.full(len(r), cell), "fid": np.full(len(r), fid),
+                **dict(zip(("x0", "y0", "x1", "y1"), r.T))}
 
-    return raster.groupBy("cell", "fid").applyInPandas(
-        to_rects, schema="cell long, fid long, x0 int, y0 int, x1 int, y1 int")
+    return local.apply_arrow(
+        raster.groupBy("cell", "fid"), to_rects,
+        "cell long, fid long, x0 int, y0 int, x1 int, y1 int")

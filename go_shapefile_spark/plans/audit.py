@@ -25,7 +25,7 @@ def assert_broadcast_join(df: DataFrame) -> None:
 
 
 PYTHON_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                "MapInArrow", "FlatMapGroupsInPandas")
+                "MapInArrow", "FlatMapGroupsInPandas", "FlatMapGroupsInArrow")
 
 
 def assert_no_python_udf(df: DataFrame) -> None:
@@ -37,7 +37,7 @@ def assert_no_python_udf(df: DataFrame) -> None:
 def python_operators(df: DataFrame) -> list[str]:
     """The Python nodes of the executed plan's operator tree, walked
     through children only: a cached relation's build plan (e.g. a
-    mapInPandas cover build) is not one of the operator's own stages.
+    mapInArrow cover build) is not one of the operator's own stages.
     Read with AQE off: an AdaptiveSparkPlan is a leaf."""
     def walk(node):
         if node.nodeName() in PYTHON_NODES:

@@ -2554,6 +2554,7 @@ def video_frame_sample_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     from pyspark.sql import functions as F
 
+    from .operators.local import map_arrow
     from .operators.multimodal import frame_sample
     from .sources.images import pixels_from_phash
 
@@ -2564,21 +2565,19 @@ def video_frame_sample_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                          "video_id")
 
     def check(batches):
-        import pandas as pd
-        for pdf in batches:
-            out_ids, ok = [], []
-            for r in pdf.itertuples(index=False):
-                ref = pixels_from_phash(int(r.phash) + int(r.frame_idx),
-                                        int(r.w), int(r.h))
-                got = np.frombuffer(r.frame, np.uint8).reshape(ref.shape)
+        for rb in batches:
+            ok = []
+            for r in rb.to_pylist():
+                ref = pixels_from_phash(r["phash"] + r["frame_idx"],
+                                        r["w"], r["h"])
+                got = np.frombuffer(r["frame"], np.uint8).reshape(ref.shape)
                 mse = float(np.mean((got.astype(np.float64) - ref) ** 2))
                 psnr = float("inf") if mse == 0 else \
                     10.0 * np.log10(255.0 ** 2 / mse)
-                out_ids.append(r.video_id)
-                ok.append(bool(psnr >= 40.0))
-            yield pd.DataFrame({"video_id": out_ids, "ok": ok})
+                ok.append(psnr >= 40.0)
+            yield {"video_id": rb.column("video_id"), "ok": ok}
 
-    checked = joined.mapInPandas(check, "video_id string, ok boolean")
+    checked = map_arrow(joined, check, "video_id string, ok boolean")
     return checked.agg(
         F.countDistinct("video_id").alias("n_videos"),
         F.count(F.lit(1)).alias("n_frames_sampled"),
@@ -3237,30 +3236,31 @@ def shapefile_poly_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit attributes + a WKT digest per record (regression-locks the
     parser inside the driver gate; ground truth is the golden pytest
     suite vs reference shapefile_test.go:122-132)."""
-    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from .functions.wkt import wkt_from_struct
+    from .operators import local
     from .sources.shapefile import read_shapefile_df
 
     df = read_shapefile_df(spark, os.path.join(REF_TESTDATA, "poly"))
+    keep = ["fid", "AREA", "EAS_ID", "PRFEDEA"]
+    schema = T.StructType([df.schema[c] for c in keep]
+                          + [T.StructField("wkt_md5", T.StringType())])
 
-    @F.pandas_udf("string")
-    def wkt_md5(shape_type, geometry):
-        # struct column arrives as a pd.DataFrame of its fields
+    def wkt_md5(batches):
         import hashlib
 
-        import pandas as pd
-        out = []
-        for st, layout, coords, ends, rings in zip(
-                shape_type, geometry["layout"], geometry["coords"],
-                geometry["ends"], geometry["rings"]):
-            w = wkt_from_struct(st, layout, coords, ends, rings)
-            out.append(hashlib.md5(w.encode()).hexdigest())
-        return pd.Series(out)
+        for rb in batches:
+            digests = [
+                hashlib.md5(wkt_from_struct(
+                    st, g["layout"], g["coords"], g["ends"],
+                    g["rings"]).encode()).hexdigest()
+                for st, g in zip(rb.column("shape_type").to_pylist(),
+                                 local.values(rb.column("geometry")))]
+            yield {**{c: rb.column(c) for c in keep}, "wkt_md5": digests}
 
-    return df.select(
-        "fid", "AREA", "EAS_ID", "PRFEDEA",
-        wkt_md5("shape_type", "geometry").alias("wkt_md5"))
+    return local.map_arrow(df.select(*keep, "shape_type", "geometry"),
+                           wkt_md5, schema)
 
 
 def shapefile_poly_oracle() -> str:
@@ -4848,10 +4848,8 @@ GROUP BY from_cell, to_cell
     queries["kmv_overlap"] = kmv_overlap
 
     def q_kmv_oracle() -> str:
-        from .operators.sketches import kmv_overlap_sql
-        body = kmv_overlap_sql(DUCK)
-        head = body[:body.index("SELECT g1, g2, exact_union")]
-        return ("WITH " + head
+        from .operators.sketches import kmv_ctes_sql
+        return ("WITH " + kmv_ctes_sql(DUCK)
                 + "SELECT g1, g2, exact_union, exact_inter, "
                   "TRUE AS union_ok, TRUE AS inter_ok FROM kfinal")
     oracles["kmv_overlap"] = q_kmv_oracle()
@@ -5189,12 +5187,12 @@ FROM dd GROUP BY u, v
     oracles["trajectory_hausdorff"] = q_traj_hausdorff(H.DUCK)
 
     # per-user convex hulls: Spark runs Andrew's monotone chain per
-    # group (applyInPandas — groups capped at 32 points, one shuffle
-    # on the group key); the oracle is the O(n³) RELATIONAL hull
-    # definition (p is a vertex iff some supporting half-plane through
-    # p and another point has every point on one side — all cross
-    # products ≥ 0).  Two algorithms, one function; identical doubles
-    # in both engines, vertex sums quantized to e6 BIGINTs.
+    # group (one mapInArrow over collect_list rows — groups capped at 32
+    # points, one shuffle on the group key); the oracle is the O(n³)
+    # RELATIONAL hull definition (p is a vertex iff some supporting
+    # half-plane through p and another point has every point on one side
+    # — all cross products ≥ 0).  Two algorithms, one function; identical
+    # doubles in both engines, vertex sums quantized to e6 BIGINTs.
     def convex_hulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark.sql import functions as F
 

@@ -18,17 +18,16 @@ javax.sound.sampled).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators import local
 from ..operators.geotag import splitmix64
 from .audio_codec import (AUDIO_CODEC_VERSION, WAVE_FORMAT_MULAW,
                           WAVE_FORMAT_PCM, decode_wav, encode_wav,
                           mulaw_decode, mulaw_encode)
-from .images import caption_of
+from .images import caption_of, generate_df, spread_python_scan
 
 SAMPLE_RATE = 8000
 _LEN_CHOICES = np.array([2048, 4096, 8192], dtype=np.int64)
@@ -111,19 +110,8 @@ def generate_audio_batch(start: int, end: int) -> pd.DataFrame:
 
 def generate_audio_df(spark: SparkSession, n: int,
                       rows_per_task: int = 2_000) -> DataFrame:
-    """Distributed generator: driver plans index ranges, executors build
-    batches — no waveform ever moves through the driver."""
-    bounds = [(i, min(i + rows_per_task, n))
-              for i in range(0, n, rows_per_task)]
-    splits = spark.createDataFrame(bounds, "start long, end long") \
-        .repartition(len(bounds), "start")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for a, b in zip(pdf["start"], pdf["end"]):
-                yield generate_audio_batch(int(a), int(b))
-
-    return splits.mapInPandas(gen, schema=AUDIO_SCHEMA)
+    return generate_df(spark, n, rows_per_task, generate_audio_batch,
+                       AUDIO_SCHEMA)
 
 
 def make_mulaw_dups(pdf: pd.DataFrame, k: int,
@@ -164,18 +152,18 @@ def check_audio_invariants(df: DataFrame) -> DataFrame:
     G.711 design point is ~38 dB on in-range tones).  Returns
     (audio_id, fmt, samples_ok, snr_db, transcript_ok).
     """
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                ref = samples_from_ahash(int(r.ahash), int(r.n_samples),
-                                         int(r.sample_rate))
-                got, rate = decode_wav(bytes(r.bytes))
-                ok = (rate == int(r.sample_rate)
-                      and got.shape == (int(r.n_samples), 1))
-                if ok and r.fmt == "wav-pcm16":
+    def check(batches):
+        for rb in batches:
+            oks, snrs, transcript_oks = [], [], []
+            for r in rb.to_pylist():
+                ref = samples_from_ahash(int(r["ahash"]), int(r["n_samples"]),
+                                         int(r["sample_rate"]))
+                got, rate = decode_wav(bytes(r["bytes"]))
+                ok = (rate == int(r["sample_rate"])
+                      and got.shape == (int(r["n_samples"]), 1))
+                if ok and r["fmt"] == "wav-pcm16":
                     expect = ref
-                elif ok and r.fmt == "wav-ulaw":
+                elif ok and r["fmt"] == "wav-ulaw":
                     expect = mulaw_decode(mulaw_encode(ref))
                 else:
                     ok = False
@@ -190,13 +178,14 @@ def check_audio_invariants(df: DataFrame) -> DataFrame:
                     snr = float("inf") if mse == 0 else \
                         10.0 * np.log10(power / mse)
                     ok = snr >= 30.0
-                out.append((r.audio_id, r.fmt, bool(ok), snr,
-                            caption_of(int(r.ahash)) == r.transcript))
-            yield pd.DataFrame(out, columns=["audio_id", "fmt",
-                                             "samples_ok", "snr_db",
-                                             "transcript_ok"])
+                oks.append(bool(ok))
+                snrs.append(snr)
+                transcript_oks.append(
+                    caption_of(int(r["ahash"])) == r["transcript"])
+            yield {"audio_id": rb.column("audio_id"),
+                   "fmt": rb.column("fmt"), "samples_ok": oks,
+                   "snr_db": snrs, "transcript_ok": transcript_oks}
 
-    from .images import spread_python_scan
-    return spread_python_scan(df).mapInPandas(
-        check, schema="audio_id string, fmt string, samples_ok boolean, "
-                      "snr_db double, transcript_ok boolean")
+    return local.map_arrow(
+        spread_python_scan(df), check, "audio_id string, fmt string, "
+        "samples_ok boolean, snr_db double, transcript_ok boolean")

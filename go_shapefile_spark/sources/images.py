@@ -23,12 +23,12 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators import local
 from ..operators.geotag import lonlat_np, splitmix64
 from .jpeg_codec import CODEC_VERSION, decode_jpeg, encode_jpeg
 
@@ -265,20 +265,27 @@ IMAGES_SCHEMA = ("image_id string, bytes binary, w int, h int, "
                  "fmt string, caption string, phash long")
 
 
-def generate_images_df(spark: SparkSession, n: int,
-                       rows_per_task: int = 20_000) -> DataFrame:
-    """Distributed generator: driver plans index ranges, executors build
-    batches — no data ever moves through the driver."""
+def generate_df(spark: SparkSession, n: int, rows_per_task: int, batch,
+                schema) -> DataFrame:
+    """Distributed generator: the driver plans index ranges, executors
+    build ``batch(start, end)`` columns of ``schema`` — no data ever
+    moves through the driver."""
     bounds = [(i, min(i + rows_per_task, n)) for i in range(0, n, rows_per_task)]
     splits = spark.createDataFrame(bounds, "start long, end long") \
         .repartition(len(bounds), "start")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for a, b in zip(pdf["start"], pdf["end"]):
-                yield generate_batch(int(a), int(b))
+    def gen(batches):
+        for rb in batches:
+            for a, b in zip(*rb.to_pydict().values()):
+                yield batch(a, b)
 
-    return splits.mapInPandas(gen, schema=IMAGES_SCHEMA)
+    return local.map_arrow(splits, gen, schema)
+
+
+def generate_images_df(spark: SparkSession, n: int,
+                       rows_per_task: int = 20_000) -> DataFrame:
+    return generate_df(spark, n, rows_per_task, generate_batch,
+                       IMAGES_SCHEMA)
 
 
 def write_images_table(spark: SparkSession, path: str, n: int,
@@ -301,35 +308,30 @@ def write_points_table(spark: SparkSession, path: str, n: int,
     petabytes of pixels.  Used by the bench headline at scale factors
     where encoding real PNGs for every row is pointless I/O.
     """
-    bounds = [(i, min(i + rows_per_task, n)) for i in range(0, n, rows_per_task)]
-    splits = spark.createDataFrame(bounds, "start long, end long") \
-        .repartition(len(bounds), "start")
+    def batch(start: int, end: int) -> dict:
+        idx = np.arange(start, end, dtype=np.int64)
+        return {"idx": idx, "phash": splitmix64(idx).view(np.int64)}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for a, b in zip(pdf["start"], pdf["end"]):
-                idx = np.arange(int(a), int(b), dtype=np.int64)
-                yield pd.DataFrame({"idx": idx,
-                                    "phash": splitmix64(idx).view(np.int64)})
-
-    (splits.mapInPandas(gen, schema="idx long, phash long")
-     .write.mode("overwrite").parquet(path))
+    generate_df(spark, n, rows_per_task, batch, "idx long, phash long") \
+        .write.mode("overwrite").parquet(path)
 
 
 def geotag_images(df: DataFrame) -> DataFrame:
     """E2: phash-salted deterministic lon/lat columns (vectorized, no
     per-row Python)."""
-    def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lon, lat = lonlat_np(pdf["phash"].to_numpy())
-            pdf = pdf.assign(lon=lon, lat=lat)
-            yield pdf
-
     from pyspark.sql import types as T
     schema = T.StructType(df.schema.fields +
                           [T.StructField("lon", T.DoubleType()),
                            T.StructField("lat", T.DoubleType())])
-    return df.mapInPandas(tag, schema=schema)
+
+    def tag(batches):
+        for rb in batches:
+            lon, lat = lonlat_np(
+                rb.column("phash").to_numpy(zero_copy_only=False))
+            yield {**dict(zip(rb.schema.names, rb.columns)),
+                   "lon": lon, "lat": lat}
+
+    return local.map_arrow(df, tag, schema)
 
 
 def spread_python_scan(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -362,21 +364,20 @@ def check_invariants(df: DataFrame) -> DataFrame:
     generator's quality setting must clear.  Returns
     (image_id, fmt, pixels_ok, psnr_db, caption_ok).
     """
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
+    def check(batches):
+        for rb in batches:
+            n = rb.num_rows
             if not n:
                 continue
-            phash = pdf["phash"].to_numpy(np.int64)
-            ws = pdf["w"].to_numpy(np.int64)
-            hs = pdf["h"].to_numpy(np.int64)
-            fmts = pdf["fmt"].to_numpy()
+            phash, ws, hs = (rb.column(c).to_numpy(zero_copy_only=False)
+                             .astype(np.int64) for c in ("phash", "w", "h"))
+            fmts = rb.column("fmt").to_numpy(zero_copy_only=False)
             # batched caption twin: ONE splitmix64 pass over the column
             # (identical algebra to caption_of — h is the uint64 mix,
             # word picks shift/mod it), then a per-row string compare
             hv = splitmix64(phash)
             nw = len(_WORDS)
-            caps = pdf["caption"].to_numpy()
+            caps = rb.column("caption").to_pylist()
             cap_oks = [
                 " ".join(_WORDS[(int(h) >> (5 * k)) % nw]
                          for k in range(6)) == c
@@ -397,23 +398,24 @@ def check_invariants(df: DataFrame) -> DataFrame:
                     .view(np.uint8).reshape(len(sel), nb * 8)
                 for j, i in enumerate(sel):
                     refs[i] = pix[j, :w * h * 3].reshape(h, w, 3)
-            out = []
-            for i, r in enumerate(pdf.itertuples(index=False)):
+            psnrs = []
+            for i, r in enumerate(rb.to_pylist()):
                 ref = refs[i] if refs[i] is not None else \
-                    pixels_lowfreq_from_phash(int(r.phash), int(r.w),
-                                              int(r.h))
-                got = decode_image(r.bytes, r.fmt)
+                    pixels_lowfreq_from_phash(int(r["phash"]), int(r["w"]),
+                                              int(r["h"]))
+                got = decode_image(r["bytes"], r["fmt"])
                 mse = float(np.mean((got.astype(np.float64) - ref) ** 2))
-                psnr = float("inf") if mse == 0 else \
-                    10.0 * np.log10(255.0 ** 2 / mse)
-                out.append((r.image_id, r.fmt, bool(psnr >= 40.0),
-                            psnr, cap_oks[i]))
-            yield pd.DataFrame(out, columns=["image_id", "fmt", "pixels_ok",
-                                             "psnr_db", "caption_ok"])
+                psnrs.append(float("inf") if mse == 0 else
+                             10.0 * np.log10(255.0 ** 2 / mse))
+            psnr = np.asarray(psnrs)
+            yield {"image_id": rb.column("image_id"),
+                   "fmt": rb.column("fmt"),
+                   "pixels_ok": psnr >= 40.0, "psnr_db": psnr,
+                   "caption_ok": cap_oks}
 
-    return spread_python_scan(df).mapInPandas(
-        check, schema="image_id string, fmt string, pixels_ok boolean, "
-                      "psnr_db double, caption_ok boolean")
+    return local.map_arrow(
+        spread_python_scan(df), check, "image_id string, fmt string, "
+        "pixels_ok boolean, psnr_db double, caption_ok boolean")
 
 
 VIDEOS_SCHEMA = ("video_id string, bytes binary, n_frames int, w int, "
@@ -444,18 +446,8 @@ def generate_videos_batch(start: int, end: int) -> pd.DataFrame:
 
 def generate_videos_df(spark: SparkSession, n: int,
                        rows_per_task: int = 100) -> DataFrame:
-    """Distributed video-table generator (same pattern as images)."""
-    bounds = [(i, min(i + rows_per_task, n))
-              for i in range(0, n, rows_per_task)]
-    splits = spark.createDataFrame(bounds, "start long, end long") \
-        .repartition(len(bounds), "start")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for a, b in zip(pdf["start"], pdf["end"]):
-                yield generate_videos_batch(int(a), int(b))
-
-    return splits.mapInPandas(gen, schema=VIDEOS_SCHEMA)
+    return generate_df(spark, n, rows_per_task, generate_videos_batch,
+                       VIDEOS_SCHEMA)
 
 
 def png_header(data: bytes) -> dict:

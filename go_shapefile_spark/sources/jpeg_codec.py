@@ -16,7 +16,7 @@ strict-mode decode must not hard-fail on those rows (VERDICT r4).
 
 Design notes for the Spark pipeline (the reason this lives here rather
 than behind an import guard): decode is inherently per-image work, so it
-runs inside ``mapInPandas`` batches (operators/multimodal.py) — the
+runs inside ``mapInArrow`` batches (operators/multimodal.py) — the
 codec itself vectorizes the per-block math (DCT/quant/level ops are
 whole-image numpy einsums; only the entropy coder walks symbols).
 

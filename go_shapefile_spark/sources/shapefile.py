@@ -343,13 +343,13 @@ def _read_split_dbf(plan: ShapefilePlan, fid_start: int, n: int,
 
 
 def _read_split_shp(plan: ShapefilePlan, fid_start: int,
-                    fid_end: int) -> tuple[bytes, np.ndarray] | None:
+                    fid_end: int) -> tuple[bytes, np.ndarray]:
     """One range-read of this split's .shp byte span → (buffer, relative
-    record offsets); None when the split is empty."""
+    record offsets); no bytes when the split is empty."""
     offs = plan.shx_offsets[fid_start - 1:fid_end - 1]
     lens = plan.shx_lengths[fid_start - 1:fid_end - 1]
     if not len(offs):
-        return None
+        return b"", offs
     start = int(offs[0])
     end = int(offs[-1]) + 8 + int(lens[-1])
     return fsio.read_bytes(f"{plan.path}.shp", start, end - start), offs - start
@@ -477,17 +477,17 @@ def _geometry_columns(g: _Geometry | None, n: int,
 
 def _split_geometry(plan: ShapefilePlan, fid_start: int, fid_end: int,
                     shp: bytes | None, n_attr: int | None,
-                    keep: np.ndarray | None, bbox_filters):
+                    keep: np.ndarray | None, span: tuple | None,
+                    bbox_keep: np.ndarray | None):
     """The split's geometry, decoded by exactly one of: the point kernel,
     the XY polygon/polyline kernel on the kept offsets, or the core
-    parser — on the kept offsets where the file range-reads, else over
-    the whole ``.shp`` (a zip member ``shp``, or a file with no
-    ``.shx``).  A kernel declines anything irregular and the parser
-    then rules, with the reference's errors.
-
-    Returns (the kept records' geometry, None without a ``.shp``; the
-    split's record count; ``keep`` with ``bbox_filters`` tested against
-    the record headers, before any decode)."""
+    parser — on the kept offsets of ``span``, the split's range read, or
+    (no span: a zip member ``shp``, a file with no ``.shx``) over the
+    whole ``.shp``.  A kernel declines anything irregular and the parser
+    then rules, with the reference's errors.  ``bbox_keep`` is the span's
+    record-header bbox test, or None.  Returns (the kept records'
+    geometry, None without a ``.shp``; the split's record count;
+    ``keep`` and ``bbox_keep`` combined)."""
     def counted(n: int) -> int:
         if n_attr is not None and n != n_attr:
             raise core.ShapefileError("inconsistent number of records")
@@ -495,7 +495,7 @@ def _split_geometry(plan: ShapefilePlan, fid_start: int, fid_end: int,
 
     if not plan.has_shp:
         return None, n_attr or 0, keep
-    if not _range_reads(plan):
+    if span is None:
         data = shp if plan.is_zip else fsio.read_bytes(f"{plan.path}.shp")
         records = core.parse_shp(data, plan.shp_options) \
             .records[fid_start - 1:fid_end - 1]
@@ -503,12 +503,10 @@ def _split_geometry(plan: ShapefilePlan, fid_start: int, fid_end: int,
         if keep is not None:
             records = [r for r, k in zip(records, keep) if k]
         return _records_geometry(records), n, keep
-    buf, rel = _read_split_shp(plan, fid_start, fid_end) or \
-        (b"", np.zeros(0, np.int64))
+    buf, rel = span
     n = counted(len(rel))
-    if bbox_filters:
-        bkeep = _bbox_keep(buf, rel, bbox_filters)
-        keep = bkeep if keep is None else keep & bkeep
+    if bbox_keep is not None:
+        keep = bbox_keep if keep is None else keep & bbox_keep
     ords = _parse_points_vectorized(buf, rel, plan.shape_type, fid_start,
                                     fid_start + n)
     if ords is not None:   # whole split: faster than a selective decode
@@ -713,26 +711,36 @@ def read_split(plan: ShapefilePlan, fid_start: int, fid_end: int,
 
     The attributes decode once (:func:`_attr_arrays`) and
     ``attr_filters`` mask them before any geometry decode.
-    ``bbox_filters`` are tested against the record headers before decode
-    where the file range-reads, or on the built bbox column where it
-    cannot.  The kept records' geometry comes from one decoder
-    (:func:`_split_geometry`) and becomes columns through one function
-    (:func:`_geometry_columns`): ``shape_type``/``geometry``/``bbox``,
-    or with ``flat`` the ``x``/``y``[/``z``]/[``m``] columns (no filters:
-    their predicates are codegen'd in Spark).  A read schema that prunes
-    or reorders columns selects them by name."""
+    ``bbox_filters`` are tested against the record headers before any
+    decode where the file range-reads (a split they empty skips its DBF
+    too), or on the built bbox column where it cannot.  The kept records'
+    geometry comes from one decoder (:func:`_split_geometry`) and
+    becomes columns through one function (:func:`_geometry_columns`):
+    ``shape_type``/``geometry``/``bbox``, or with ``flat`` the
+    ``x``/``y``[/``z``]/[``m``] columns (no filters: their predicates
+    are codegen'd in Spark).  A read schema that prunes or reorders
+    columns selects them by name."""
     full = to_arrow_schema(flat_points_schema(plan) if flat
                            else features_schema(plan))
+    span = _read_split_shp(plan, fid_start, fid_end) \
+        if _range_reads(plan) else None
+    bbox_keep = _bbox_keep(*span, bbox_filters) \
+        if bbox_filters and span is not None else None
+    if bbox_keep is not None and not bbox_keep.any():
+        # no DBF decode, but a DBF too short for the split still fails
+        if plan.has_dbf and fsio.getsize(f"{plan.path}.dbf") < (
+                plan.dbf_header_size + (fid_end - 1) * plan.dbf_record_size):
+            raise core.ShapefileError("unexpected EOF")
+        return pa.RecordBatch.from_pylist([], arrow_schema)
     members = _zip_members(plan.path, plan.basename) if plan.is_zip else {}
     attrs = _attr_arrays(plan, fid_start, fid_end - fid_start,
                          members.get("dbf", (None, None))[1], full)
     keep = _attr_keep(attrs, attr_filters) \
         if attrs is not None and attr_filters else None
-    pretest = bool(bbox_filters) and _range_reads(plan)
     geom, n, keep = _split_geometry(
         plan, fid_start, fid_end, members.get("shp", (None, None))[1],
-        None if attrs is None else len(attrs["deleted"]), keep,
-        bbox_filters if pretest else ())
+        None if attrs is None else len(attrs["deleted"]), keep, span,
+        bbox_keep)
     fids = np.arange(fid_start, fid_start + n, dtype=np.int64)
     if keep is not None:
         fids = fids[keep]
@@ -746,7 +754,7 @@ def read_split(plan: ShapefilePlan, fid_start: int, fid_end: int,
                     _geometry_columns(geom, len(fids), ords)))
     rb = pa.RecordBatch.from_arrays([cols[f.name] for f in full],
                                     schema=full)
-    if bbox_filters and not pretest:
+    if bbox_filters and span is None:
         rb = _bbox_postfilter(rb, bbox_filters)
     return rb.select(arrow_schema.names).cast(arrow_schema)
 

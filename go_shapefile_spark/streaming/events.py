@@ -127,20 +127,19 @@ def streaming_audio_dedup_counts(spark: SparkSession, source_dir: str,
     noise against the watermark, which after the first batch would
     silently drop nearly every new row as late — r5 review.)
     """
-    import pandas as pd
-
+    from ..operators.local import map_arrow
     from ..operators.multimodal import fingerprint_batch
 
     def fp(batches):
-        for pdf in batches:
-            yield pd.DataFrame({"audio_id": pdf["audio_id"],
-                                "fmt": pdf["fmt"],
-                                "ahash": pdf["ahash"],
-                                "afp": fingerprint_batch(pdf)})
+        for rb in batches:
+            yield {"audio_id": rb.column("audio_id"),
+                   "fmt": rb.column("fmt"),
+                   "ahash": rb.column("ahash"),
+                   "afp": fingerprint_batch(rb)}
 
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    sig = stream.mapInPandas(
-        fp, "audio_id string, fmt string, ahash long, afp long")
+    sig = map_arrow(stream, fp,
+                    "audio_id string, fmt string, ahash long, afp long")
     sig = sig.withColumn("ts", F.current_timestamp())
     return (sig.withWatermark("ts", watermark)
             .dropDuplicatesWithinWatermark(["afp"])

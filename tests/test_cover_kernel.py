@@ -179,9 +179,9 @@ def _assert_frames_identical(got: pd.DataFrame, exp: pd.DataFrame):
 
 
 def _assert_covers_identical(polygons, res):
-    got = SJ.join_cover(polygons, res)
+    got = pd.DataFrame(SJ.join_cover(polygons, res))
     with mock.patch.object(SJ, "_cover_arrays", _reference_cover_arrays):
-        exp = SJ.join_cover(polygons, res)
+        exp = pd.DataFrame(SJ.join_cover(polygons, res))
     _assert_frames_identical(got, exp)
 
 

@@ -411,6 +411,54 @@ _FIELDS = [("NAME", "C", 8), ("AREA", "N", 12, 3), ("EAS_ID", "N", 6)]
 _WINDOW = (2.5, 0.5, 7.5, 1.5)
 
 
+def test_bbox_miss_decodes_no_dbf(tmp_path, monkeypatch):
+    """A split whose record headers all miss the pushed bbox filters,
+    while the file-header bounds pass them, is empty before its DBF
+    decodes; a filter that keeps a record decodes the DBF once.  A DBF
+    cut short of the split still fails that read, filter or not."""
+    import go_shapefile_spark.sources.shapefile as sf
+    from go_shapefile_spark.sources.shapefile_core import ShapefileError
+    from go_shapefile_spark.sources.shapefile_writer import write_polygons
+
+    base = str(tmp_path / "gap")
+    # unit squares at x 0..1 and 9..10: the header spans x 0..10
+    write_polygons(
+        base, [{"coords": [x, 0, x, 1, x + 1, 1, x + 1, 0, x, 0],
+                "ends": [10]} for x in (0, 9)],
+        fields=[("NAME", "C", 4)], rows=[["a"], ["b"]])
+    plan = plan_shapefile(base)
+    decodes = []
+    orig = sf._read_split_dbf
+
+    def counting(*a, **k):
+        decodes.append(a[1:3])
+        return orig(*a, **k)
+
+    monkeypatch.setattr(sf, "_read_split_dbf", counting)
+    for filters, n_rows in (
+            ([GreaterThan(("bbox", "xmax"), 4.0),
+              LessThan(("bbox", "xmin"), 6.0)], 0),
+            ([GreaterThan(("bbox", "xmax"), 4.0)], 1)):
+        assert not sf._header_prunes(plan.header_bounds, filters)
+        decodes.clear()
+        r = ShapefileReader(plan, features_schema(plan),
+                            records_per_split=100)
+        assert list(r.pushFilters(filters)) == []
+        [part] = r.partitions()
+        assert sum(b.num_rows for b in r.read(part)) == n_rows
+        assert decodes == ([(1, 2)] if n_rows else []), filters
+    with open(base + ".dbf", "r+b") as f:
+        f.truncate(os.path.getsize(base + ".dbf") - 3)
+    for filters in ([], [GreaterThan(("bbox", "xmax"), 4.0),
+                         LessThan(("bbox", "xmin"), 6.0)]):
+        r = ShapefileReader(plan_shapefile(base), features_schema(plan),
+                            records_per_split=100)
+        list(r.pushFilters(filters))
+        [part] = r.partitions()
+        with pytest.raises(ShapefileError, match="unexpected EOF"):
+            list(r.read(part))
+
+
 def _write_rects(base, n, x0, name):
     from go_shapefile_spark.sources.shapefile_writer import write_polygons
 
@@ -524,13 +572,14 @@ def test_read_shapefile_dir_is_one_scan_stage(ds_spark, parity_corpus):
     """The directory scan is one ``mapInArrow`` over ``spark.range``: no
     Python planning stage and no shuffle below it, and counting it runs
     at most two jobs."""
-    from go_shapefile_spark.plans.audit import executed_plan
+    from go_shapefile_spark.plans.audit import PYTHON_NODES, executed_plan
     from go_shapefile_spark.sources.shapefile import read_shapefile_dir
 
     df = read_shapefile_dir(ds_spark, str(parity_corpus))
     plan = executed_plan(df.groupBy().count())
     below = plan[plan.index("MapInArrow"):]
-    assert "Exchange" not in below and "MapInPandas" not in below, plan
+    assert "Exchange" not in below, plan
+    assert sum(plan.count(m) for m in PYTHON_NODES) == 1, plan
     sc = ds_spark.sparkContext
     sc.setJobGroup("dir-count", "dir-count")
     try:

@@ -120,16 +120,18 @@ def test_jvm_export_byte_equal_on_countries(spark, ref_testdata):
     """The JVM fast path must be BYTE-identical to the Python exporter
     on the full ne_110m corpus (no props — ASCII-only content)."""
     from go_shapefile_spark.functions.geojson import features_to_geojson_jvm
+    from go_shapefile_spark.plans.audit import PYTHON_NODES, executed_plan
 
     df = read_shapefile_df(
         spark, os.path.join(ref_testdata, "110m-admin-0-countries.zip"))
     py = {r.fid: r.geojson for r in features_to_geojson(df).collect()}
     jvm = {r.fid: r.geojson for r in features_to_geojson_jvm(df).collect()}
     assert jvm == py and len(jvm) == 177
-    # and the plan carries no Python worker nodes
-    plan = features_to_geojson_jvm(df) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan and "PythonUDF" not in plan
+    # and the plan carries no Python worker nodes beyond the shapefile
+    # scan's own
+    plan = executed_plan(features_to_geojson_jvm(df))
+    assert sum(plan.count(m) for m in PYTHON_NODES) \
+        == sum(executed_plan(df).count(m) for m in PYTHON_NODES), plan
 
 
 def test_jvm_export_props_and_unicode_parse_equal(spark, ref_testdata):

@@ -152,13 +152,14 @@ def test_neardup_pair_engine_pins_hash_build(spark):
     """The shared banded pair engine references its signature relation
     four times (ranked, identical-hash join, both band sides); without
     a pin Spark inlines the decode+hash Python stage per reference
-    (measured: 4 MapInPandas nodes).  The pair plan must contain ZERO
+    (measured: 4 Python map nodes).  The pair plan must contain ZERO
     Python stages — the hash build lives behind a pinned leaf — and no
     nested-loop/cartesian join anywhere."""
     from collections import Counter
 
     from go_shapefile_spark.operators.multimodal import (
         audio_neardup_pairs, image_neardup_pairs)
+    from go_shapefile_spark.plans.audit import PYTHON_NODES
     from go_shapefile_spark.sources.audio import generate_audio_batch
     from go_shapefile_spark.sources.images import (IMAGES_SCHEMA,
                                                    generate_batch)
@@ -183,8 +184,7 @@ def test_neardup_pair_engine_pins_hash_build(spark):
                                 schema=IMAGES_SCHEMA)
     for pairs in (audio_neardup_pairs(aud), image_neardup_pairs(img)):
         c = nodes(pairs)
-        assert c.get("MapInPandas", 0) == 0, dict(c)
-        assert c.get("ArrowEvalPython", 0) == 0, dict(c)
+        assert not any(c.get(m) for m in PYTHON_NODES), dict(c)
         assert c.get("Scan ExistingRDD", 0) >= 1, dict(c)
         assert c.get("BroadcastNestedLoopJoin", 0) == 0, dict(c)
         assert c.get("CartesianProduct", 0) == 0, dict(c)

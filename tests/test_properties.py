@@ -2,6 +2,7 @@
 input, not just fixtures."""
 
 import numpy as np
+import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from go_shapefile_spark.functions import cells as C
@@ -111,7 +112,7 @@ def test_cover_classification_sound_property(ring, points, res):
     Points exactly on the boundary are excluded — there the assignment
     is convention-dependent by design (either side is acceptable)."""
     poly = {"fid": 1, "coords": ring, "ends": [len(ring)]}
-    cover = join_cover([poly], res)
+    cover = pd.DataFrame(join_cover([poly], res))
     lon = np.array([p[0] for p in points])
     lat = np.array([p[1] for p in points])
     off = ~_on_boundary(lon, lat, ring)

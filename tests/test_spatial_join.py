@@ -35,7 +35,7 @@ def _points(n=4000, seed=5):
 
 
 def test_cell_cover_classification(countries):
-    cover = join_cover(countries[:20], res=6)
+    cover = pd.DataFrame(join_cover(countries[:20], res=6))
     assert len(cover) > 0
     assert cover["_sj_full"].any() or True  # small polygons may be all-partial
     # full cells: their centers must be inside their polygon
@@ -238,7 +238,7 @@ def _pairs(df, cols=("idx", "polygon_fid")):
 def test_small_polygon_side_covers_on_driver(spark, local_caps):
     """Within local.COVER_FEATURES, from_features builds the cover on the
     driver: the join relation is a bare LocalRelation (columns named in
-    pandas, no Project to plan through on every join), and the join
+    the Arrow table, no Project to plan through on every join), and the join
     equals the distributed build's."""
     from go_shapefile_spark.operators.geotag import with_lonlat_jvm
     from go_shapefile_spark.operators.spatial_join import (
@@ -277,7 +277,7 @@ def test_split_cover_matches_bruteforce(spark):
     res = 4
     polys = [{"fid": 99, "coords": _ring(), "ends": [482]},
              {"fid": 5, "coords": _ring(40.3, 20.1, 6.0, 90), "ends": [182]}]
-    cover_pdf = join_cover(polys, res)
+    cover_pdf = pd.DataFrame(join_cover(polys, res))
     assert np.isfinite(cover_pdf["_sj_x0"]).any()      # some cell split
     assert cover_pdf["_sj_edges"].isna().all()         # none hit the cap
 
@@ -313,7 +313,7 @@ def test_split_reference_off_edges(spark):
 
     stairs = _staircase()
     polys = [{"fid": 6, "coords": stairs, "ends": [len(stairs)]}]
-    cover_pdf = join_cover(polys, 4)
+    cover_pdf = pd.DataFrame(join_cover(polys, 4))
     assert (cover_pdf["_sj_x1"] == 11.25).any()       # the cell split
     on_edge = (cover_pdf["_sj_rx"] == 5.625) & (cover_pdf["_sj_ry"] == 2.8125)
     assert not on_edge.any()

@@ -122,7 +122,7 @@ def main() -> None:
     sections.append(("Parquet pushdown/pruning", checks, formatted(li)))
 
     # distributed-cover join: same predicate shape, cover built via
-    # mapInPandas (no driver collect), then broadcast — forced, since
+    # mapInArrow (no driver collect), then broadcast — forced, since
     # 177 countries are within local.COVER_FEATURES
     from go_shapefile_spark.operators import local
     from go_shapefile_spark.operators.spatial_join import (
@@ -181,7 +181,7 @@ def main() -> None:
                      "(record-header bounds before decode)",
                      checks, formatted(ds_bb)))
 
-    # distributed rasterize: past the (cached, mapInPandas) cover build
+    # distributed rasterize: past the (cached, mapInArrow) cover build
     # the pixel stages are JVM, and the partial rows' crossing Filter
     # runs compiled in methods HotSpot JITs
     from go_shapefile_spark.operators.tiles import rasterize_polygons
@@ -270,7 +270,7 @@ def main() -> None:
                      checks, formatted(sk)))
 
     # flat-point scan: Arrow-direct batches (one mapInArrow stage, no
-    # pandas conversion) — the billions-of-points read path
+    # other Python stage) — the billions-of-points read path
     from go_shapefile_spark.sources.shapefile_writer import write_points
     flat_base = os.path.join("/tmp", "audit_flatpts")
     if not os.path.exists(flat_base + ".shp"):
@@ -283,7 +283,8 @@ def main() -> None:
     checks = [
         ("Arrow-batched map stage (MapInArrow), not row-at-a-time",
          "MapInArrow" in plan or "PythonMapInArrow" in plan),
-        ("no pandas eval nodes", "MapInPandas" not in plan),
+        ("no other Python stage",
+         sum(plan.count(m) for m in audit.PYTHON_NODES) == 1),
     ]
     sections.append(("Flat-point shapefile scan (Arrow-direct batches)",
                      checks, formatted(flat)))
@@ -318,7 +319,8 @@ def main() -> None:
     plan = audit.executed_plan(apairs)
     checks = [
         ("decode+fingerprint pinned (no Python stage in the pair plan)",
-         "MapInPandas" not in plan and "Scan ExistingRDD" in plan),
+         not any(m in plan for m in audit.PYTHON_NODES)
+         and "Scan ExistingRDD" in plan),
         ("banded equi-join, no CartesianProduct/BNLJ",
          "CartesianProduct" not in plan
          and "BroadcastNestedLoopJoin" not in plan),
@@ -464,8 +466,8 @@ def main() -> None:
     hh = heavy_hitters(toks, col="tok", capacity=64)
     plan = audit.executed_plan(hh)
     checks = [
-        ("recount scan is JVM-only (no MapInPandas/BatchEvalPython)",
-         "MapInPandas" not in plan and "BatchEvalPython" not in plan),
+        ("recount scan is JVM-only (no Python stage)",
+         not any(m in plan for m in audit.PYTHON_NODES)),
         ("map-side partial aggregation", "HashAggregate" in plan),
     ]
     sections.append(("Heavy hitters (Misra-Gries sketch + exact "

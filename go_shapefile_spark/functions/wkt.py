@@ -11,6 +11,7 @@ not string-wise, to avoid cross-language formatting trivia.
 
 from __future__ import annotations
 
+import math
 import re
 
 import numpy as np
@@ -24,7 +25,10 @@ from ..sources.shapefile_core import (
 def _fmt(x: float) -> str:
     """Shortest round-trip float formatting, Go %v style: 1e+39 → '-1E+39'
     is matched case-insensitively by the numeric comparator; we emit
-    Python's shortest repr with integral values undecorated."""
+    Python's shortest repr with integral values undecorated, and the
+    non-finite values as Go's strconv spells them."""
+    if not math.isfinite(x):
+        return "NaN" if math.isnan(x) else ("+Inf" if x > 0 else "-Inf")
     if x == int(x) and abs(x) < 1e15:
         return str(int(x))
     return repr(x)
@@ -122,7 +126,7 @@ def wkt_from_struct(shape_type: int, layout: str | None, coords, ends,
     return to_wkt(rec)
 
 
-_NUM = re.compile(r"[-+]?\d*\.?\d+(?:[eE][-+]?\d+)?")
+_NUM = re.compile(r"[-+]?(?:\d*\.?\d+(?:[eE][-+]?\d+)?|Inf|NaN)")
 
 
 def parse_wkt(s: str):

@@ -136,7 +136,7 @@ core_labels AS (SELECT src AS id, MIN(node) AS label FROM reach GROUP BY src),
 
 
 def dbscan(points: DataFrame, eps: float, min_pts: int,
-           pin: str | None = None, slot: str | None = None) -> DataFrame:
+           slot: str | None = None) -> DataFrame:
     """DBSCAN over ``points(id, lon, lat)`` -> ``(id, cluster, role)``.
 
     ``cluster`` is the smallest core-point id in the cluster (BIGINT;
@@ -151,7 +151,7 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
     from .pinning import fresh_pins, pin_ctes
 
     spark = points.sparkSession
-    pinf = fresh_pins(spark, slot, strategy=pin)
+    pinf = fresh_pins(spark, slot)
 
     # r6 optimization: generate each unordered candidate pair ONCE —
     # same-cell pairs with id order, cross-cell pairs through the four
@@ -195,7 +195,7 @@ JOIN cores ca ON u.a = ca.id JOIN cores cb ON u.b = cb.id""",
         pts=points.selectExpr("id", "lon", "lat"))
     # up is distinct with a < b by construction, so the core-core edge
     # set is already normalized — CC can skip its dedup shuffle
-    cc = connected_components(core_edges, pin=pin,
+    cc = connected_components(core_edges,
                               slot=None if slot is None else f"{slot}_cc",
                               assume_normalized=True)
     # isolated cores never appear in an edge: they are their own
@@ -355,7 +355,6 @@ def _minplus_local_df(spark, cols: dict, offsets, rounds: int,
 
 
 def grid_distance_transform(points: DataFrame, rounds: int = 8,
-                            pin: str | None = None,
                             slot: str | None = None) -> DataFrame:
     """Multi-source BFS distance over the occupied pixel grid:
     ``points(lon, lat, is_src)`` → ``(x, y, dist)`` for every cell
@@ -376,13 +375,13 @@ def grid_distance_transform(points: DataFrame, rounds: int = 8,
     (no count(), no convergence collect).
     """
     return _grid_minplus(
-        points, rounds, pin, slot, "dist",
+        points, rounds, slot, "dist",
         [(-1, -1, 1), (-1, 0, 1), (-1, 1, 1), (0, -1, 1),
          (0, 1, 1), (1, -1, 1), (1, 0, 1), (1, 1, 1)])
 
 
-def _grid_minplus(points: DataFrame, rounds: int, pin: str | None,
-                  slot: str | None, out_col: str, offsets) -> DataFrame:
+def _grid_minplus(points: DataFrame, rounds: int, slot: str | None,
+                  out_col: str, offsets) -> DataFrame:
     """Shared runner of the distance transform and the cost distance:
     ``rounds`` min-plus rounds over the occupied grid with weighted
     queen ``offsets`` ``(dx, dy, w)`` — driver-local when the grid is
@@ -405,7 +404,7 @@ def _grid_minplus(points: DataFrame, rounds: int, pin: str | None,
         # passes
         return _minplus_local_df(spark, cols, offsets, rounds, out_col)
     # materialize dbase once, edges once
-    pinf = fresh_pins(spark, slot, strategy=pin)
+    pinf = fresh_pins(spark, slot)
     base = pinf(base)
     vals = ",".join(f"({dx},{dy},{w})" for dx, dy, w in offsets)
     edges = pinf(pin_ctes(spark, f"""
@@ -463,7 +462,6 @@ FROM blabels GROUP BY blob"""
 
 
 def label_blobs(pixels: DataFrame, tau: int,
-                pin: str | None = None,
                 slot: str | None = None) -> DataFrame:
     """Raster region labeling (the map-algebra "polygonize-labels" /
     blob-detection primitive): threshold ``pixels(x, y, v)`` at
@@ -487,9 +485,9 @@ def label_blobs(pixels: DataFrame, tau: int,
     edges, p = pin_ctes(
         spark, f"WITH {blob_base_cte(tau).lstrip()} "
         "SELECT ea AS src, eb AS dst FROM bedges",
-        ["bhot"], fresh_pins(spark, slot, strategy=pin),
+        ["bhot"], fresh_pins(spark, slot),
         bpix=pixels.selectExpr("x", "y", "CAST(v AS BIGINT) AS v"))
-    cc = connected_components(edges, pin=pin)
+    cc = connected_components(edges)
     # isolated hot cells never enter an edge: they are their own region
     return pin_ctes(spark, """
 WITH blabels AS (
@@ -578,8 +576,7 @@ def _flow_local_df(spark, cols: dict, rounds: int, k: int) -> DataFrame:
 
 
 def grid_flow_accumulation(points: DataFrame, rounds: int = 8,
-                           k: int = 50, pin: str | None = None,
-                           slot: str | None = None) -> DataFrame:
+                           k: int = 50, slot: str | None = None) -> DataFrame:
     """D8 uphill flow accumulation over the occupied 1-degree grid:
     ``points(lon, lat)`` → top-``k`` ``(x, y, n, acc, rk)`` — the
     runner twin of queries.flow_acc_sql (identical integer algebra,
@@ -612,7 +609,7 @@ def grid_flow_accumulation(points: DataFrame, rounds: int = 8,
         # driver (see the bounded-grid section comment) — the dirs
         # relation is never built distributively
         return _flow_local_df(spark, cols, rounds, k)
-    pinf = fresh_pins(spark, slot, strategy=pin)
+    pinf = fresh_pins(spark, slot)
     grid = pinf(grid)
     # the neighbor coordinates are PRECOMPUTED in a subquery before
     # the b join: with `b.n > a.n` written directly against the
@@ -701,7 +698,6 @@ SELECT x, y, CAST(MIN(d) AS BIGINT) AS cost FROM walk GROUP BY x, y"""
 
 
 def grid_cost_distance(points: DataFrame, rounds: int = 8,
-                       pin: str | None = None,
                        slot: str | None = None) -> DataFrame:
     """Weighted (chamfer 2-3) cost distance: ``points(lon, lat,
     is_src)`` → ``(x, y, cost)`` = min path weight from any source
@@ -721,13 +717,12 @@ def grid_cost_distance(points: DataFrame, rounds: int = 8,
     min over ≤R-edge paths — the oracle's definition, unchanged.
     Every relation is grid-bounded; no per-round driver action."""
     return _grid_minplus(
-        points, rounds, pin, slot, "cost",
+        points, rounds, slot, "cost",
         [(-1, -1, 3), (-1, 0, 2), (-1, 1, 3), (0, -1, 2),
          (0, 1, 2), (1, -1, 3), (1, 0, 2), (1, 1, 3)])
 
 
 def kmeans_lloyd(points: DataFrame, k: int = 8, rounds: int = 3,
-                 pin: str | None = None,
                  slot: str | None = None) -> DataFrame:
     """Planar Lloyd k-means over ``points(id, x, y)`` (non-negative
     integer coords) → per-cluster ``(ck, n, cx, cy, inertia_e6)`` with
@@ -752,7 +747,7 @@ def kmeans_lloyd(points: DataFrame, k: int = 8, rounds: int = 3,
     from .pinning import fresh_pins, pin_ctes
 
     spark = points.sparkSession
-    pts = fresh_pins(spark, slot, strategy=pin)(
+    pts = fresh_pins(spark, slot)(
         points.selectExpr("id", "x", "y"))
 
     def km_sql(sql):

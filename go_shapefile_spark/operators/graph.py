@@ -12,8 +12,9 @@ propagation, whose round count grows with the graph diameter.
 
 Scale posture: each iteration shuffles the current edge set on its
 node keys (no all-pairs anything); iterates are pinned through
-operators/pinning.py (anonymous per-call slot — ``pin="storage"`` for
-durable multi-hour runs), so lineage stays one round deep and the
+operators/pinning.py (anonymous per-call slot; the
+``spark.graft.pin.strategy=storage`` conf makes them durable for
+multi-hour runs), so lineage stays one round deep and the
 convergence probe piggybacks on the pin job.  Convergence is detected
 by an order-independent checksum of the edge set (count + sum of
 per-edge hashes), not by comparing materialized sets.
@@ -141,7 +142,6 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
 
 def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst", max_iter: int = 25,
-                         pin: str | None = None,
                          slot: str | None = None,
                          assume_normalized: bool = False) -> DataFrame:
     """Undirected edge list → (node, component) with component = the
@@ -185,7 +185,7 @@ def connected_components(edges: DataFrame, src: str = "src",
     # immediately followed by a _checksum action, which fuses the
     # checkpoint materialization into the checksum job (one job per
     # iteration instead of two)
-    pinf = rolling_pins(spark, pin, lazy=True)
+    pinf = rolling_pins(spark, lazy=True)
     norm = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not assume_normalized:
         # callers that PROVE distinct loop-free edges (dbscan's
@@ -200,7 +200,7 @@ def connected_components(edges: DataFrame, src: str = "src",
     # at 3 so the star loop's O(log n) guarantee still carries the
     # worst case.  The convergence checksum doubles as the pass's
     # shrink measurement — no extra jobs.
-    hookf = fresh_pins(spark, slot, strategy=pin)
+    hookf = fresh_pins(spark, slot)
     m_total = None
     prev = _checksum(cur)
     for _ in range(3):
@@ -345,12 +345,11 @@ def triangle_counts_local(edges: DataFrame):
 
 
 def dedup_keep_representatives(edges: DataFrame, src: str = "src",
-                               dst: str = "dst",
-                               pin: str | None = None) -> DataFrame:
+                               dst: str = "dst") -> DataFrame:
     """The pipeline verb on top of components: (node, component,
     is_representative) — keep rows where is_representative, drop the
     rest.  The representative is the component minimum (deterministic
     across runs and partitionings)."""
-    cc = connected_components(edges, src, dst, pin=pin)
+    cc = connected_components(edges, src, dst)
     return cc.withColumn("is_representative",
                          F.col("node") == F.col("component"))

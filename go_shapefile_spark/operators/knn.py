@@ -252,8 +252,8 @@ def _terminal_topk(points: DataFrame, remaining: DataFrame, k: int,
 
 def knn_exact(points: DataFrame, queries: DataFrame, k: int,
               id_col: str = "id", lon_col: str = "lon", lat_col: str = "lat",
-              start_res: int = 6, max_rounds: int | None = None,
-              pin: str | None = None) -> DataFrame:
+              start_res: int = 6, max_rounds: int | None = None
+              ) -> DataFrame:
     """Exact (unbounded) kNN via progressive neighbor-ring expansion.
 
     Round r runs radius-bounded kNN with radius = the ring-coverage
@@ -268,8 +268,9 @@ def knn_exact(points: DataFrame, queries: DataFrame, k: int,
     (plan-tested), no single-partition funnel.
 
     The surviving-queries frontier is pinned each round
-    (operators/pinning.py; ``pin`` selects the strategy — executor-local
-    checkpoint by default, ``"storage"`` for durable multi-hour runs):
+    (operators/pinning.py; the ``spark.graft.pin.strategy`` conf selects
+    executor-local checkpoints by default, ``storage`` for durable
+    multi-hour runs):
     lineage stays one round deep (no stacked anti-join recompute), and
     the pin job doubles as the emptiness probe, so the driver issues
     exactly one extra action per round regardless of data size.  Rounds
@@ -278,7 +279,7 @@ def knn_exact(points: DataFrame, queries: DataFrame, k: int,
     pytest.
     """
     from .pinning import fresh_pins
-    pinf = fresh_pins(points.sparkSession, None, pin)  # per-call slot
+    pinf = fresh_pins(points.sparkSession, None)  # per-call slot
     rounds = start_res + 1 if max_rounds is None else min(max_rounds,
                                                           start_res + 1)
     remaining = queries

@@ -8,7 +8,9 @@ self-join compositions (round-4 finding — ``isCached()`` lies while the
 planned tree re-inlines the subtree per reference).  A pinned relation
 is a plan LEAF, so references physically cannot recompute it.
 
-Two strategies, selected per call or globally:
+Two strategies, chosen per session by the ``spark.graft.pin.strategy``
+conf (``local`` when unset) — a deployment setting, so no operator
+takes a per-call strategy:
 
 ``local`` (default)
     ``DataFrame.localCheckpoint()`` — executor-local block storage.
@@ -31,9 +33,11 @@ Two strategies, selected per call or globally:
     is preferred here because the scan-back re-enters Catalyst as a
     columnar source (pushdown/pruning still apply downstream).
 
-Strategy resolution order: explicit ``strategy=`` argument, then the
-``SPARK_GRAFT_PIN`` environment variable, then the
-``spark.graft.pin.strategy`` conf, then ``local``.
+This module is the only code in the package that materializes a
+relation (no ``.cache()``/``.persist()`` elsewhere; a test parses the
+package to keep it so): the distributed join cover and the raster cover
+pin here too, so :func:`release_pins` frees them and a ``storage``
+deployment makes them durable.
 
 Pins are recycled per (session, slot): a fresh :func:`fresh_pins` call
 releases the PREVIOUS call's blocks/files for that slot — without this,
@@ -70,9 +74,8 @@ _PINS: dict[tuple[int, str], list[Callable[[], None]]] = {}
 _ANON = [0]      # counter for anonymous (per-call, non-recycled) slots
 
 
-def pin_strategy(spark: SparkSession, strategy: str | None = None) -> str:
-    s = (strategy or os.environ.get("SPARK_GRAFT_PIN")
-         or spark.conf.get(PIN_STRATEGY_CONF, "local"))
+def pin_strategy(spark: SparkSession) -> str:
+    s = spark.conf.get(PIN_STRATEGY_CONF, "local")
     if s not in ("local", "storage"):
         raise ValueError(f"unknown pin strategy {s!r} "
                          "(expected 'local' or 'storage')")
@@ -83,20 +86,44 @@ def pin_dir(spark: SparkSession) -> str:
     """Root directory for ``storage`` pins.  On a cluster this MUST be
     shared storage (set ``spark.graft.pin.dir``); the temp-dir fallback
     is only correct for local mode."""
-    base = (os.environ.get("SPARK_GRAFT_PIN_DIR")
-            or spark.conf.get(PIN_DIR_CONF, None))
-    if not base:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            f"spark-graft-pins-{spark.sparkContext.applicationId}")
-    return base
+    return spark.conf.get(PIN_DIR_CONF, None) or os.path.join(
+        tempfile.gettempdir(),
+        f"spark-graft-pins-{spark.sparkContext.applicationId}")
 
 
-def fresh_pins(spark: SparkSession, slot: str | None,
-               strategy: str | None = None) -> Callable[[DataFrame],
-                                                        DataFrame]:
+def _anon_slot() -> str:
+    _ANON[0] += 1
+    return f"anon_{_ANON[0]}"
+
+
+def _materialize(spark: SparkSession, df: DataFrame, strategy: str,
+                 name: str, eager: bool = True
+                 ) -> tuple[DataFrame, Callable[[], None]]:
+    """Pin ``df`` under ``strategy``: the pinned DataFrame and the call
+    that frees it.  ``name`` is the parquet directory of a ``storage``
+    pin; ``eager=False`` defers a ``local`` checkpoint to the next
+    action over the result."""
+    if strategy == "local":
+        out = df.localCheckpoint(eager=eager)
+        jrdd = out._jdf.queryExecution().analyzed().rdd()
+        return out, lambda: jrdd.unpersist(False)
+    path = posixpath.join(pin_dir(spark), name)
+    df.write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path), lambda: fsio.rmtree(path)
+
+
+def _release(releases: list[Callable[[], None]]) -> None:
+    for release in releases:
+        try:
+            release()
+        except Exception:
+            pass   # session restarted / executor gone — nothing to free
+
+
+def fresh_pins(spark: SparkSession, slot: str | None
+               ) -> Callable[[DataFrame], DataFrame]:
     """Release any previous pins for (session, ``slot``) and return a
-    ``pin(df) -> df`` that materializes a DataFrame under the resolved
+    ``pin(df) -> df`` that materializes a DataFrame under the session's
     strategy.
 
     Release happens at FACTORY time, never between pins of the same
@@ -112,34 +139,22 @@ def fresh_pins(spark: SparkSession, slot: str | None,
     slots are for runners whose previous result is one-shot by
     construction (the gate/bench harness): the recycle releases it.
     Anonymous pins live until session stop or :func:`release_pins`."""
-    s = pin_strategy(spark, strategy)
+    s = pin_strategy(spark)
     if slot is None:
-        _ANON[0] += 1
-        slot = f"anon_{_ANON[0]}"
+        slot = _anon_slot()
     key = (id(spark), slot)
-    for release in _PINS.pop(key, []):
-        try:
-            release()
-        except Exception:
-            pass   # session restarted / executor gone — nothing to free
+    _release(_PINS.pop(key, []))
     handles = _PINS.setdefault(key, [])
 
     def pin(df: DataFrame) -> DataFrame:
-        if s == "local":
-            ck = df.localCheckpoint()
-            jrdd = ck._jdf.queryExecution().analyzed().rdd()
-            handles.append(lambda: jrdd.unpersist(False))
-            return ck
-        path = posixpath.join(pin_dir(spark), f"{slot}_{len(handles)}")
-        df.write.mode("overwrite").parquet(path)
-        handles.append(lambda: fsio.rmtree(path))
-        return spark.read.parquet(path)
+        out, release = _materialize(spark, df, s, f"{slot}_{len(handles)}")
+        handles.append(release)
+        return out
 
     return pin
 
 
 def rolling_pins(spark: SparkSession,
-                 strategy: str | None = None,
                  lazy: bool = False) -> Callable[[DataFrame], DataFrame]:
     """Pin factory for loops where ONLY the newest iterate is ever read
     again (connected-components contraction): each pin materializes the
@@ -155,24 +170,16 @@ def rolling_pins(spark: SparkSession,
     the checkpoint job and the probe job into one (r6; the probe's
     first pass computes AND persists the blocks).  Only safe when the
     caller guarantees such an action before the following pin."""
-    s = pin_strategy(spark, strategy)
-    _ANON[0] += 1
-    slot = f"anon_{_ANON[0]}"
+    s = pin_strategy(spark)
+    slot = _anon_slot()
     key = (id(spark), slot)
     counter = [0]
 
     def pin(df: DataFrame) -> DataFrame:
         n = counter[0]
         counter[0] += 1
-        if s == "local":
-            out = df.localCheckpoint(eager=not lazy)
-            jrdd = out._jdf.queryExecution().analyzed().rdd()
-            release = (lambda: jrdd.unpersist(False))
-        else:
-            path = posixpath.join(pin_dir(spark), f"{slot}_r{n}")
-            df.write.mode("overwrite").parquet(path)
-            out = spark.read.parquet(path)
-            release = (lambda: fsio.rmtree(path))
+        out, release = _materialize(spark, df, s, f"{slot}_r{n}",
+                                    eager=not lazy)
         prev = _PINS.pop(key, [])
         if s == "local" and lazy:
             # the new pin has NOT materialized yet and its plan reads
@@ -183,11 +190,7 @@ def rolling_pins(spark: SparkSession,
             prev = prev[:-1]
         else:
             _PINS[key] = [release]
-        for rel in prev:
-            try:
-                rel()
-            except Exception:
-                pass
+        _release(prev)
         return out
 
     def release_slot() -> None:
@@ -197,11 +200,7 @@ def rolling_pins(spark: SparkSession,
         relation per invocation until session stop.  Loops whose result
         DataFrame reads the final pin (connected_components) must NOT
         call this."""
-        for rel in _PINS.pop(key, []):
-            try:
-                rel()
-            except Exception:
-                pass
+        _release(_PINS.pop(key, []))
 
     pin.release = release_slot
     return pin
@@ -215,11 +214,7 @@ def release_pins(spark: SparkSession, slot: str | None = None) -> None:
     keys = [k for k in _PINS
             if k[0] == sid and (slot is None or k[1] == slot)]
     for k in keys:
-        for release in _PINS.pop(k):
-            try:
-                release()
-            except Exception:
-                pass
+        _release(_PINS.pop(k))
 
 
 _SPACE = re.compile(r"(?:\s+|--[^\n]*|/\*.*?\*/)*", re.S)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cells as C
 from . import local
+from .pinning import fresh_pins
 from .spatial_join import (
     JOIN_SCHEMA, UNROLL_K, _map_polygons, aggregate_crossings_sql, join_cover,
     parity_sql, unrolled_crossings_sql)
@@ -240,8 +241,7 @@ def parent_cell_sql(cell: str) -> str:
 
 def tile_pyramid(points: DataFrame, max_res: int, min_res: int = 0,
                  lon_col: str = "lon", lat_col: str = "lat",
-                 extra_sums: list[str] | None = None,
-                 pin: str | None = None) -> DataFrame:
+                 extra_sums: list[str] | None = None) -> DataFrame:
     """Multi-resolution tile pyramid: per-cell counts at every resolution
     in [min_res, max_res], SCANNING THE POINTS ONCE.
 
@@ -254,22 +254,22 @@ def tile_pyramid(points: DataFrame, max_res: int, min_res: int = 0,
     to one cell per level and parents partition their children.
 
     Each level is materialized once (operators/pinning.py — index-build
-    semantics, computed at call time; ``pin`` selects executor-local
-    checkpoint [default] or durable ``"storage"`` materialization):
-    without it the returned union would re-run the base aggregation
-    once per level branch (Spark does not reuse the exchanges here —
-    measured 4 scans for 4 levels).  At production scale, committing
-    the levels to the snapshot table is exactly ``pin="storage"`` with
-    the pin directory on shared storage.
+    semantics, computed at call time; the ``spark.graft.pin.strategy``
+    conf selects executor-local checkpoints [default] or durable
+    ``storage`` materialization): without it the returned union would
+    re-run the base aggregation once per level branch (Spark does not
+    reuse the exchanges here — measured 4 scans for 4 levels).  At
+    production scale, committing the levels to the snapshot table is
+    exactly the ``storage`` strategy with ``spark.graft.pin.dir`` on
+    shared storage.
 
     Returns (res int, cell long, n long [, sum_<col>...]).
     """
-    from .pinning import fresh_pins
     if not 0 <= min_res <= max_res <= C.MAX_RES:
         raise ValueError(
             f"need 0 <= min_res <= max_res <= {C.MAX_RES}, "
             f"got [{min_res}, {max_res}]")
-    pinf = fresh_pins(points.sparkSession, None, pin)  # per-call slot
+    pinf = fresh_pins(points.sparkSession, None)  # per-call slot
     sums = list(extra_sums or [])
     base_aggs = [F.count(F.lit(1)).alias("n")] + \
         [F.sum(c).alias(f"sum_{c}") for c in sums]
@@ -331,9 +331,10 @@ def rasterize_features(features: DataFrame, res: int,
     The cover is the spatial join's (``raster_cover`` over
     ``join_cover``), built DISTRIBUTED — each task covers its share of
     the polygon corpus, nothing about it lands on the driver — and
-    cached, so repeated actions over the raster (rasterize→vectorize
-    pipelines, bench re-counts) don't re-run the Python build.  Past
-    it, every stage is JVM:
+    pinned in an anonymous per-call slot (operators/pinning.py;
+    ``release_pins`` frees it), so repeated actions over the raster
+    (rasterize→vectorize pipelines, bench re-counts) don't re-run the
+    Python build.  Past it, every stage is JVM:
 
     * full cells explode their whole T×T block, no geometry;
     * a partial row explodes only the pixels of its sub-rectangle and
@@ -347,9 +348,8 @@ def rasterize_features(features: DataFrame, res: int,
     t = tile_px
     n = 1 << res
     w, h = 360.0 / n, 180.0 / n
-    cover = _map_polygons(
-        features, lambda polys: raster_cover(polys, res, t),
-        RASTER_SCHEMA).cache()
+    cover = fresh_pins(features.sparkSession, None)(_map_polygons(
+        features, lambda polys: raster_cover(polys, res, t), RASTER_SCHEMA))
 
     def centre(c0: str, p: str, size: float) -> str:
         # the float ops of ``_pixel_span``, in its order; coalesce makes

@@ -534,14 +534,13 @@ def zoom_eps(z: int, eps_fraction: float = 1.0 / 256) -> float:
 
 
 def _pyramid(features: DataFrame, min_res: int, max_res: int,
-             eps_fraction: float, pin: str | None, slot: str | None,
-             clip) -> DataFrame:
+             eps_fraction: float, slot: str | None, clip) -> DataFrame:
     from .geometry import simplify_features
     from .pinning import fresh_pins
 
     if not 0 <= min_res <= max_res:
         raise ValueError(f"bad zoom range [{min_res}, {max_res}]")
-    pinf = fresh_pins(features.sparkSession, slot, strategy=pin)
+    pinf = fresh_pins(features.sparkSession, slot)
     feats = pinf(features.select("fid", "shape_type", "geometry"))
     out = None
     for z in range(min_res, max_res + 1):
@@ -553,7 +552,6 @@ def _pyramid(features: DataFrame, min_res: int, max_res: int,
 
 def vector_tile_pyramid(features: DataFrame, min_res: int, max_res: int,
                         eps_fraction: float = 1.0 / 256,
-                        pin: str | None = None,
                         slot: str | None = None) -> DataFrame:
     """Multi-zoom vector tiles (the tippecanoe pipeline): per zoom ``z``
     the corpus is Douglas–Peucker-simplified at one tile-pixel of
@@ -566,19 +564,18 @@ def vector_tile_pyramid(features: DataFrame, min_res: int, max_res: int,
     zoom; that is the point of the pyramid) but never re-parse/re-scan
     the source.  Each level stays a shuffle-free mapInArrow chain.
     """
-    return _pyramid(features, min_res, max_res, eps_fraction, pin, slot,
+    return _pyramid(features, min_res, max_res, eps_fraction, slot,
                     vector_tiles)
 
 
 def vector_tile_pyramid_lines(features: DataFrame, min_res: int,
                               max_res: int,
                               eps_fraction: float = 1.0 / 256,
-                              pin: str | None = None,
                               slot: str | None = None) -> DataFrame:
     """Polyline twin of :func:`vector_tile_pyramid`: per zoom, DP-
     simplify at one tile-pixel tolerance then clip to that zoom's
     tiles; parse pinned once, levels unioned."""
-    return _pyramid(features, min_res, max_res, eps_fraction, pin, slot,
+    return _pyramid(features, min_res, max_res, eps_fraction, slot,
                     vector_tiles_lines)
 
 

@@ -33,7 +33,7 @@ _REGISTERED: dict[int, str] = {}  # id(session) -> sf_dir last registered
 
 # Pinned-relation seam (operators/pinning.py): gates default to the
 # executor-local strategy; a multi-hour cluster run sets
-# SPARK_GRAFT_PIN=storage / spark.graft.pin.strategy for durable pins.
+# spark.graft.pin.strategy=storage for durable pins.
 from .operators.pinning import fresh_pins as _fresh_checkpoints  # noqa: E402
 from .operators.pinning import pin_ctes  # noqa: E402
 
@@ -1294,6 +1294,21 @@ rects AS (
 )"""
 
 
+def _nation_polygons(spark: SparkSession, where: str = "") -> list[dict]:
+    """The nation rectangles (``nation_rects_cte``, optionally filtered
+    by a ``where`` condition) as closed CW ring polygon dicts (outer per
+    reference winding, shp.go:246-256)."""
+    import numpy as np
+
+    sql = f"WITH {nation_rects_cte(SPARK)} SELECT * FROM rects"
+    return [{"fid": int(r.polygon_fid),
+             "coords": np.array([r.x0, r.y0, r.x0, r.y1, r.x1, r.y1,
+                                 r.x1, r.y0, r.x0, r.y0]),
+             "ends": [10]}
+            for r in spark.sql(f"{sql} WHERE {where}" if where else sql)
+            .collect()]
+
+
 def q_grid_spatial_join_oracle(dialect: str) -> str:
     return f"""
 WITH {geotagged_events_cte(dialect)},
@@ -1307,20 +1322,11 @@ FROM pts p JOIN rects r
 def grid_spatial_join_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark side runs the REAL engine path: rectangles as ring polygons →
     cell cover → broadcast join → PIP refine (E4/E5/E6)."""
-    import numpy as np
-
     from .operators.spatial_join import spatial_join
 
     register_tables(spark, sf_dir)
     pts = spark.sql(f"WITH {geotagged_events_cte(SPARK)} SELECT * FROM pts")
-    rect_rows = spark.sql(
-        f"WITH {nation_rects_cte(SPARK)} SELECT * FROM rects").collect()
-    polygons = []
-    for r in rect_rows:
-        # closed CW ring (outer per reference winding, shp.go:246-256)
-        ring = [r.x0, r.y0, r.x0, r.y1, r.x1, r.y1, r.x1, r.y0, r.x0, r.y0]
-        polygons.append({"fid": int(r.polygon_fid),
-                         "coords": np.array(ring), "ends": [10]})
+    polygons = _nation_polygons(spark)
     return spatial_join(spark, pts, polygons, res=5,
                         keep_cols=["id", "polygon_fid"])
 
@@ -1331,22 +1337,13 @@ def spatial_antijoin_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cover + PIP refine) against a 9-rect subset of the nation grid,
     then left-anti joins the matches back; the oracle is the NOT
     EXISTS containment twin."""
-    import numpy as np
-
     from pyspark.sql import functions as F
 
     from .operators.spatial_join import spatial_join
 
     register_tables(spark, sf_dir)
     pts = spark.sql(f"WITH {geotagged_events_cte(SPARK)} SELECT * FROM pts")
-    rect_rows = spark.sql(
-        f"WITH {nation_rects_cte(SPARK)} SELECT * FROM rects "
-        f"WHERE polygon_fid % 3 = 0").collect()
-    polygons = []
-    for r in rect_rows:
-        ring = [r.x0, r.y0, r.x0, r.y1, r.x1, r.y1, r.x1, r.y0, r.x0, r.y0]
-        polygons.append({"fid": int(r.polygon_fid),
-                         "coords": np.array(ring), "ends": [10]})
+    polygons = _nation_polygons(spark, where="polygon_fid % 3 = 0")
     joined = spatial_join(spark, pts, polygons, res=5, keep_cols=["id"])
     return (pts.join(joined.select("id").distinct(), "id", "left_anti")
             .groupBy("event_type")
@@ -1628,21 +1625,13 @@ def lineage_resume_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger is snapshot-keyed on the events input, so re-runs resume (and
     input changes invalidate); the rollup must equal the oracle's
     single-shot join."""
-    import numpy as np
-
     from .operators.lineage import input_snapshot_id
     from .pipeline import pipeline_rollup, spatial_pipeline
 
     register_tables(spark, sf_dir)
     pts = spark.sql(
         f"WITH {geotagged_events_cte(SPARK)} SELECT id, lon, lat FROM pts")
-    rect_rows = spark.sql(
-        f"WITH {nation_rects_cte(SPARK)} SELECT * FROM rects").collect()
-    polygons = []
-    for r in rect_rows:
-        ring = [r.x0, r.y0, r.x0, r.y1, r.x1, r.y1, r.x1, r.y0, r.x0, r.y0]
-        polygons.append({"fid": int(r.polygon_fid),
-                         "coords": np.array(ring), "ends": [10]})
+    polygons = _nation_polygons(spark)
 
     events_path = os.path.join(sf_dir, "events.parquet")
     snap = input_snapshot_id([events_path])
@@ -1916,7 +1905,6 @@ def zonal_image_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one Arrow-batched pass, no shuffle); the zone cover broadcasts; the
     only shuffle is the final tiny per-zone aggregate — the same plan
     shape at 10^12 images."""
-    import numpy as np
     from pyspark.sql import functions as F
 
     from .operators.multimodal import image_pixel_sums
@@ -1927,13 +1915,7 @@ def zonal_image_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     imgs = spark.read.parquet(_ensure_images_gate(spark))
     pts = (geotag_images(imgs.select("image_id", "phash", "fmt"))
            .join(image_pixel_sums(imgs), "image_id"))
-    rect_rows = spark.sql(
-        f"WITH {nation_rects_cte(SPARK)} SELECT * FROM rects").collect()
-    polygons = []
-    for r in rect_rows:
-        ring = [r.x0, r.y0, r.x0, r.y1, r.x1, r.y1, r.x1, r.y0, r.x0, r.y0]
-        polygons.append({"fid": int(r.polygon_fid),
-                         "coords": np.array(ring), "ends": [10]})
+    polygons = _nation_polygons(spark)
     joined = spatial_join(spark, pts, polygons, res=5,
                           keep_cols=["image_id", "polygon_fid", "fmt",
                                      "pix_sum", "n_px"])
@@ -2060,19 +2042,12 @@ def tiles_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     the analytically derived pixel count the oracle computes from the
     global pixel grid — so both directions are checked against
     independent SQL, not against each other."""
-    import numpy as np
     from pyspark.sql import functions as F
 
     from .operators.tiles import rasterize_polygons, vectorize_raster
 
     register_tables(spark, sf_dir)
-    rect_rows = spark.sql(
-        f"WITH {nation_rects_cte(SPARK)} SELECT * FROM rects").collect()
-    polygons = []
-    for r in rect_rows:
-        ring = [r.x0, r.y0, r.x0, r.y1, r.x1, r.y1, r.x1, r.y0, r.x0, r.y0]
-        polygons.append({"fid": int(r.polygon_fid),
-                         "coords": np.array(ring), "ends": [10]})
+    polygons = _nation_polygons(spark)
     raster = rasterize_polygons(spark, polygons, res=TILE_GATE_RES,
                                 tile_px=TILE_GATE_PX)
     rects = vectorize_raster(raster, tile_px=TILE_GATE_PX)
@@ -2186,20 +2161,12 @@ def streaming_spatial_join_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    import numpy as np
-
     from .operators.spatial_join import PreparedCover
     from .streaming.events import (
         run_available_now, streaming_spatial_join_counts)
 
     register_tables(spark, sf_dir)
-    rect_rows = spark.sql(
-        f"WITH {nation_rects_cte(SPARK)} SELECT * FROM rects").collect()
-    polygons = []
-    for r in rect_rows:
-        ring = [r.x0, r.y0, r.x0, r.y1, r.x1, r.y1, r.x1, r.y0, r.x0, r.y0]
-        polygons.append({"fid": int(r.polygon_fid),
-                         "coords": np.array(ring), "ends": [10]})
+    polygons = _nation_polygons(spark)
     prepared = PreparedCover(spark, polygons, res=5)
     src = os.path.join(sf_dir, "events.parquet")
     schema = spark.read.parquet(src).schema

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -50,3 +51,24 @@ def local_caps(monkeypatch):
         for name, cap in caps.items():
             monkeypatch.setattr(local, name, cap)
     return set_caps
+
+
+@pytest.fixture
+def pin_strategy_conf(spark):
+    """``with pin_strategy_conf("storage"):`` runs its block under that
+    ``spark.graft.pin.strategy`` and then restores the session's own
+    setting (unset stays unset)."""
+    from go_shapefile_spark.operators.pinning import PIN_STRATEGY_CONF
+
+    @contextlib.contextmanager
+    def use(strategy):
+        old = spark.conf.get(PIN_STRATEGY_CONF, None)
+        spark.conf.set(PIN_STRATEGY_CONF, strategy)
+        try:
+            yield
+        finally:
+            if old is None:
+                spark.conf.unset(PIN_STRATEGY_CONF)
+            else:
+                spark.conf.set(PIN_STRATEGY_CONF, old)
+    return use

@@ -1,5 +1,6 @@
 """Python stages take and yield Arrow batches: no pandas stage in the
-package, and a NaN a stage or a driver-local finish emits stays NaN."""
+package, and a NaN a stage or a driver-local finish emits stays NaN.
+Relations materialize only through ``operators/pinning.py``."""
 
 import ast
 import math
@@ -13,6 +14,7 @@ PANDAS_STAGES = {"mapInPandas", "applyInPandas", "pandas_udf"}
 # pyspark has no Arrow stateful API: the stateful streaming operators
 # keep applyInPandasWithState
 STATEFUL = {"sessions.py", "trajectory.py", "funnel.py"}
+MATERIALIZE = {"cache", "persist", "localCheckpoint", "checkpoint"}
 
 
 def _names(node) -> list[str]:
@@ -34,6 +36,24 @@ def test_no_pandas_python_stages():
         for node in ast.walk(ast.parse(path.read_text())):
             found += [f"{path.relative_to(root)}:{node.lineno} {n}"
                       for n in _names(node) if n in PANDAS_STAGES]
+    assert not found, found
+
+
+def test_only_pinning_materializes():
+    """No ``.cache()``, ``.persist()`` or checkpoint call outside the pin
+    seam, so ``release_pins`` frees every materialized relation and the
+    ``storage`` strategy reaches each of them."""
+    root = Path(go_shapefile_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel == Path("operators", "pinning.py"):
+            continue
+        found += [f"{rel}:{node.lineno} {node.func.attr}"
+                  for node in ast.walk(ast.parse(path.read_text()))
+                  if isinstance(node, ast.Call)
+                  and isinstance(node.func, ast.Attribute)
+                  and node.func.attr in MATERIALIZE]
     assert not found, found
 
 

@@ -34,9 +34,9 @@ def _sig_df(spark):
                     .alias("sig")))
 
 
-def test_storage_pin_survives_block_loss(spark):
-    pin = fresh_pins(spark, "t_storage_loss", strategy="storage")
-    pinned = pin(_sig_df(spark))
+def test_storage_pin_survives_block_loss(spark, pin_strategy_conf):
+    with pin_strategy_conf("storage"):
+        pinned = fresh_pins(spark, "t_storage_loss")(_sig_df(spark))
     before = sorted(r.sig for r in pinned.collect())
     _destroy_all_persisted_blocks(spark)
     after = sorted(r.sig for r in pinned.collect())   # re-reads parquet
@@ -47,71 +47,62 @@ def test_storage_pin_survives_block_loss(spark):
     assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
 
 
-def test_local_pin_is_rdd_leaf(spark):
-    pin = fresh_pins(spark, "t_local_leaf", strategy="local")
-    pinned = pin(_sig_df(spark))
+def test_local_pin_is_rdd_leaf(spark, pin_strategy_conf):
+    with pin_strategy_conf("local"):
+        pinned = fresh_pins(spark, "t_local_leaf")(_sig_df(spark))
     plan = pinned._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in plan     # physically cannot re-inline/recompute
 
 
-def test_storage_pins_recycle_previous_call(spark):
-    pin = fresh_pins(spark, "t_recycle", strategy="storage")
-    first = pin(spark.range(0, 10))
-    path0 = os.path.join(pin_dir(spark), "t_recycle_0")
-    assert first.count() == 10 and os.path.isdir(path0)
-    # a NEW factory for the same slot deletes the previous call's files
-    # at creation time (the slot's path numbering then restarts at _0)
-    pin2 = fresh_pins(spark, "t_recycle", strategy="storage")
-    assert not os.path.exists(path0)
-    second = pin2(spark.range(0, 5))
-    assert second.count() == 5
+def test_storage_pins_recycle_previous_call(spark, pin_strategy_conf):
+    with pin_strategy_conf("storage"):
+        first = fresh_pins(spark, "t_recycle")(spark.range(0, 10))
+        path0 = os.path.join(pin_dir(spark), "t_recycle_0")
+        assert first.count() == 10 and os.path.isdir(path0)
+        # a NEW factory for the same slot deletes the previous call's
+        # files at creation time (the slot's path numbering then
+        # restarts at _0)
+        pin2 = fresh_pins(spark, "t_recycle")
+        assert not os.path.exists(path0)
+        second = pin2(spark.range(0, 5))
+        assert second.count() == 5
 
 
-def test_intra_call_pins_chain(spark):
+def test_intra_call_pins_chain(spark, pin_strategy_conf):
     """Iterative operators chain pins (round N reads round N-1) and the
     final consumer reads ALL rounds — pins of one call must all stay
     alive until the slot's next invocation."""
-    pin = fresh_pins(spark, "t_chain", strategy="storage")
-    lv0 = pin(spark.range(0, 16).select(F.col("id"),
-                                        (F.col("id") % 4).alias("b")))
-    lv1 = pin(lv0.groupBy("b").agg(F.sum("id").alias("s")))
+    with pin_strategy_conf("storage"):
+        pin = fresh_pins(spark, "t_chain")
+        lv0 = pin(spark.range(0, 16).select(F.col("id"),
+                                            (F.col("id") % 4).alias("b")))
+        lv1 = pin(lv0.groupBy("b").agg(F.sum("id").alias("s")))
     total = lv1.agg(F.sum("s")).collect()[0][0]
     assert total == 120
     assert lv0.count() == 16    # round-0 pin still readable
 
 
-def test_strategy_resolution_order(spark):
-    assert pin_strategy(spark, "storage") == "storage"
-    old = os.environ.get("SPARK_GRAFT_PIN")
-    try:
-        os.environ["SPARK_GRAFT_PIN"] = "storage"
+def test_strategy_resolution_order(spark, pin_strategy_conf):
+    """The session conf is the only way to choose: ``local`` when
+    unset, the conf's value when set, ValueError on an unknown one."""
+    assert pin_strategy(spark) == "local"
+    with pin_strategy_conf("storage"):
         assert pin_strategy(spark) == "storage"
-        os.environ["SPARK_GRAFT_PIN"] = "bogus"
+    with pin_strategy_conf("bogus"):
         with pytest.raises(ValueError, match="pin strategy"):
             pin_strategy(spark)
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_PIN", None)
-        else:
-            os.environ["SPARK_GRAFT_PIN"] = old
     assert pin_strategy(spark) == "local"
 
 
-def test_minhash_gate_identical_under_storage_pins(spark, sf_dir):
+def test_minhash_gate_identical_under_storage_pins(spark, sf_dir,
+                                                   pin_strategy_conf):
     """The dedup gate's rows must be identical under either strategy —
     the pin is a materialization detail, never a semantics change."""
     import __spark_entry__ as entry
     q = entry.queries()["dedup_minhash_lsh"]
     local_rows = sorted(map(tuple, q(spark, sf_dir).collect()))
-    old = os.environ.get("SPARK_GRAFT_PIN")
-    try:
-        os.environ["SPARK_GRAFT_PIN"] = "storage"
+    with pin_strategy_conf("storage"):
         storage_rows = sorted(map(tuple, q(spark, sf_dir).collect()))
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_PIN", None)
-        else:
-            os.environ["SPARK_GRAFT_PIN"] = old
     assert storage_rows == local_rows and len(local_rows) > 0
 
 
@@ -138,17 +129,44 @@ def test_operator_results_survive_repeat_calls(spark):
 def test_release_pins_frees_session(spark):
     from go_shapefile_spark.operators.pinning import (_PINS, fresh_pins,
                                                       release_pins)
-    pin = fresh_pins(spark, None, "local")
+    pin = fresh_pins(spark, None)
     pin(spark.range(5))
     assert any(k[0] == id(spark) for k in _PINS)
     release_pins(spark)
     assert not any(k[0] == id(spark) for k in _PINS)
 
 
+def test_release_pins_frees_covers_and_rasters(spark, local_caps):
+    """The distributed join cover and the raster pin through the seam:
+    after ``release_pins`` the session holds no persisted RDD."""
+    from go_shapefile_spark.operators.pinning import release_pins
+    from go_shapefile_spark.operators.spatial_join import (
+        PreparedCover, spatial_join_prepared)
+    from go_shapefile_spark.operators.tiles import rasterize_features
+
+    release_pins(spark)
+    _destroy_all_persisted_blocks(spark)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    square = [0.0, 0.0, 0.0, 10.0, 10.0, 10.0, 10.0, 0.0, 0.0, 0.0]
+    features = spark.createDataFrame(
+        [(1, {"layout": "XY", "coords": square, "ends": [10]})],
+        "fid long, geometry struct<layout:string, coords:array<double>, "
+        "ends:array<int>>")
+    local_caps(COVER_FEATURES=0)    # one feature would cover on the driver
+    cover = PreparedCover.from_features(features, res=4)
+    pts = spark.createDataFrame([(5.0, 5.0), (50.0, 5.0)],
+                                "lon double, lat double")
+    assert spatial_join_prepared(pts, cover).count() == 1
+    assert rasterize_features(features, res=4).count() > 0
+    assert len(persisted()) >= 2
+    release_pins(spark)
+    assert len(persisted()) == 0, list(persisted().keys())
+
+
 def _recording_pin(spark):
     """A local pin factory that also records each pinned relation's
     rows, in pin order."""
-    pin = fresh_pins(spark, None, "local")
+    pin = fresh_pins(spark, None)
     seen = []
 
     def rec(df):

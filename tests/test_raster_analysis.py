@@ -493,7 +493,9 @@ def test_grid_runners_driver_iterate_matches_distributed(spark,
         assert a == b and a, op.__name__
 
 
-def test_new_runners_identical_under_storage_pinning(spark, tmp_path):
+def test_new_runners_identical_under_storage_pinning(spark, tmp_path,
+                                                    pin_strategy_conf,
+                                                    local_caps):
     """grid_flow_accumulation / grid_cost_distance / kmeans_lloyd are
     row-identical under the executor-local (default) and storage-backed
     pin strategies — the durable-pinning seam covers the new runners."""
@@ -510,18 +512,21 @@ def test_new_runners_identical_under_storage_pinning(spark, tmp_path):
     pdf["is_src"] = (rng.random(4000) < 0.02).astype(int)
     pts = spark.createDataFrame(pdf)
 
+    local_caps(GRID_CELLS=0)    # a bounded grid runs on the driver, unpinned
     for op, args in ((grid_flow_accumulation, {"rounds": 4, "k": 20}),
                      (grid_cost_distance, {"rounds": 4})):
-        a = sorted(map(tuple, op(pts, pin="local", **args).collect()))
-        b = sorted(map(tuple, op(pts, pin="storage", **args).collect()))
+        with pin_strategy_conf("local"):
+            a = sorted(map(tuple, op(pts, **args).collect()))
+        with pin_strategy_conf("storage"):
+            b = sorted(map(tuple, op(pts, **args).collect()))
         assert a == b and a, op.__name__
 
     kpts = spark.createDataFrame(pd.DataFrame({
         "id": np.arange(2000, dtype=np.int64),
         "x": rng.integers(0, 3 * 10 ** 8, 2000),
         "y": rng.integers(0, 18 * 10 ** 7, 2000)}))
-    a = sorted(map(tuple, kmeans_lloyd(kpts, k=5, rounds=2,
-                                       pin="local").collect()))
-    b = sorted(map(tuple, kmeans_lloyd(kpts, k=5, rounds=2,
-                                       pin="storage").collect()))
+    with pin_strategy_conf("local"):
+        a = sorted(map(tuple, kmeans_lloyd(kpts, k=5, rounds=2).collect()))
+    with pin_strategy_conf("storage"):
+        b = sorted(map(tuple, kmeans_lloyd(kpts, k=5, rounds=2).collect()))
     assert a == b and len(a) == 5

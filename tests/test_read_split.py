@@ -259,6 +259,30 @@ def test_nan_ordinate_reads_back_nan(ds_spark, nan_corpus, case):
             assert math.isnan(row.bbox.xmin)
 
 
+def test_nan_ordinate_renders_wkt(spark, tmp_path):
+    """A polygon with a NaN x renders to WKT from its geometry struct
+    (the ``shapefile_poly`` gate's digest input) and parses back NaN;
+    ±Inf render and parse as Go's strconv spells them."""
+    from go_shapefile_spark.functions.wkt import parse_wkt, wkt_from_struct
+
+    base = str(tmp_path / "poly")
+    write_polygons(base, [{"coords": [0.0, 0.0, math.nan, 1.0, 1.0, 1.0,
+                                      1.0, 0.0, 0.0, 0.0], "ends": [10]}])
+    [row] = read_shapefile_df(spark, base).collect()
+    g = row.geometry
+    text = wkt_from_struct(row.shape_type, g.layout, g.coords, g.ends,
+                           g.rings)
+    kind, _, polys = parse_wkt(text)
+    ring = polys[0][0]
+    assert kind == "MULTIPOLYGON" and "NaN" in text
+    assert ring[0] == [0.0, 0.0] and math.isnan(ring[1][0])
+    assert ring[1][1] == 1.0 and ring[2:] == [[1.0, 1.0], [1.0, 0.0],
+                                              [0.0, 0.0]]
+    text = wkt_from_struct(1, "XY", [math.inf, -math.inf], [], [])
+    assert text == "POINT (+Inf -Inf)"
+    assert parse_wkt(text)[2] == [math.inf, -math.inf]
+
+
 def test_read_schema_selects_columns_by_name(ds_spark, tmp_path):
     """A read schema that prunes and reorders the columns."""
     base = str(tmp_path / "named")

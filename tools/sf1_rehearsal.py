@@ -138,16 +138,17 @@ def ensure_sf1_tables(spark) -> None:
 def main() -> None:
     skip_images = "--skip-images" in sys.argv
     skip_points = "--skip-points" in sys.argv
-    # The recorded rehearsal protocol runs on STORAGE pins (BENCH.md:
-    # at 50k docs the executor-local checkpoint pin OOMs an 8 GiB JVM —
-    # reproduced r5 — while the parquet scan-back completes); make the
-    # harness self-contained instead of relying on the caller's env.
-    os.environ.setdefault("SPARK_GRAFT_PIN", "storage")
     from bench import build_cover, ensure_images, ensure_points, headline_job
+    from go_shapefile_spark.operators.pinning import PIN_STRATEGY_CONF
     from go_shapefile_spark.session import get_spark
 
     spark = get_spark(app_name="sf1-rehearsal", cores=32,
                       max_partition_bytes="64m")
+    # The recorded rehearsal protocol runs on STORAGE pins (BENCH.md:
+    # at 50k docs the executor-local checkpoint pin OOMs an 8 GiB JVM —
+    # reproduced r5 — while the parquet scan-back completes); the
+    # harness sets the strategy on its own session.
+    spark.conf.set(PIN_STRATEGY_CONF, "storage")
     out: dict = {"sf": 1.0, "cores": 32}
 
     if not skip_points:
